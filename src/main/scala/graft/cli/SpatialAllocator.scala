@@ -214,19 +214,15 @@ object SpatialAllocator {
               "OUTPUT_POLY", "Polygon")
             .withColumnRenamed(
               cfg.getOrElse("OUTPUT_POLY_ATTRS", "out_id"), "out_id")
-          val srgFull = cfg.getOrElse("WEIGHT_FILE_TYPE", "Polygon") match {
-            case "Point" | "PointFile" =>
-              Surrogate.pointSurrogateToPolys(w, counties, outPolys,
-                domain, zres, code, weight, thr, keepSkipped = true)
-            case "Line" =>
-              Surrogate.lineSurrogateToPolys(w, counties, outPolys,
-                domain, zres, code, weight, thr,
-                curved = cfg.getOrElse("USE_CURVED_LINES", "NO") == "YES",
-                keepSkipped = true)
-            case _ =>
-              Surrogate.polySurrogateToPolys(w, counties, outPolys,
-                domain, zres, code, weight, thr, keepSkipped = true)
-          }
+          val srgFull = Surrogate.byKind(cfg.getOrElse("WEIGHT_FILE_TYPE", "Polygon"))(
+            point = Surrogate.pointSurrogateToPolys(w, counties, outPolys,
+              domain, zres, code, weight, thr, keepSkipped = true),
+            line = Surrogate.lineSurrogateToPolys(w, counties, outPolys,
+              domain, zres, code, weight, thr,
+              curved = cfg.getOrElse("USE_CURVED_LINES", "NO") == "YES",
+              keepSkipped = true),
+            poly = Surrogate.polySurrogateToPolys(w, counties, outPolys,
+              domain, zres, code, weight, thr, keepSkipped = true))
           val srg = srgFull.where(col("denom") >= thr)
           cfg.get("SURROGATE_FILE").foreach { out =>
             // Polygon output needs no grid: without OUTPUT_GRID_NAME the
@@ -284,19 +280,15 @@ object SpatialAllocator {
             Surrogate.surrogateToCellPolys(w, counties, vargrid.get._2,
               domain, zres, code, kind = wkind, weight, thr,
               curved = curved, keepSkipped = true)
-          else wkind match {
-            case "Point" | "PointFile" =>
-              Surrogate.pointSurrogate(w, counties, grid(), domain, zres,
-                code, weight, thr, keepSkipped = true)
-            case "Line" =>
-              // USE_CURVED_LINES=YES switches every length measure to
-              // great-circle (polyops.c:440-447, SA_ch03_vector.md:316)
-              Surrogate.lineSurrogate(w, counties, grid(), domain, zres,
-                code, weight, thr, curved = curved, keepSkipped = true)
-            case _ =>
-              Surrogate.polySurrogate(w, counties, grid(), domain, zres,
-                code, weight, thr, keepSkipped = true)
-          }
+          else Surrogate.byKind(wkind)(
+            point = Surrogate.pointSurrogate(w, counties, grid(), domain,
+              zres, code, weight, thr, keepSkipped = true),
+            // USE_CURVED_LINES=YES switches every length measure to
+            // great-circle (polyops.c:440-447, SA_ch03_vector.md:316)
+            line = Surrogate.lineSurrogate(w, counties, grid(), domain,
+              zres, code, weight, thr, curved = curved, keepSkipped = true),
+            poly = Surrogate.polySurrogate(w, counties, grid(), domain,
+              zres, code, weight, thr, keepSkipped = true))
         val srg = srgFull.where(col("denom") >= thr)
         cfg.get("SURROGATE_FILE").foreach { out =>
           // header tag tracks OUTPUT_FILE_TYPE (allocate.c:765-779); the

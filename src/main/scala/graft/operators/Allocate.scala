@@ -118,12 +118,7 @@ object Allocate {
                  polyId: String, valueCol: String,
                  groupCols: Seq[String]): DataFrame = {
     val cellArea = grid.xcell * grid.ycell
-    val cover = polys
-      .withColumn("__cellid", explode(polyGridCoverCells(col("geom"), grid)))
-      .withColumn("__carea", polyCellClipArea(col("geom"), col("__cellid"), grid))
-      .where(col("__carea") > 0)
-      .withColumn("col", (col("__cellid") % grid.ncols).cast("int") + 1)
-      .withColumn("row", (col("__cellid") / grid.ncols).cast("int") + 1)
+    val cover = Surrogate.polyCellClip(polys, "geom", grid)
       .select(Seq(col(polyId), col("col"), col("row"), col("__carea")): _*)
     cover.join(gridded, Seq("col", "row"))
       .groupBy((polyId +: groupCols).map(col): _*)
@@ -138,12 +133,7 @@ object Allocate {
   def areaPercent(input: DataFrame, categoryCol: String,
                   grid: GridSpec): DataFrame = {
     val cellArea = grid.xcell * grid.ycell
-    input
-      .withColumn("__cellid", explode(polyGridCoverCells(col("geom"), grid)))
-      .withColumn("__carea", polyCellClipArea(col("geom"), col("__cellid"), grid))
-      .where(col("__carea") > 0)
-      .withColumn("col", (col("__cellid") % grid.ncols).cast("int") + 1)
-      .withColumn("row", (col("__cellid") / grid.ncols).cast("int") + 1)
+    Surrogate.polyCellClip(input, "geom", grid)
       .groupBy(col("col"), col("row"), col(categoryCol).as("category"))
       .agg((sum("__carea") / cellArea).as("pct"))
   }

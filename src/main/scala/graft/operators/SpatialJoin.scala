@@ -97,64 +97,30 @@ object SpatialJoin {
     // bboxes once per ROW; the per-PAIR canonical test is column arithmetic
     val aE = a.withColumn("__abb", polyBBoxUdf(col(aGeom)))
       .withColumn("__cell", explode(polyCoverCells(col(aGeom), domain, res)))
-    val bE0 = b.withColumn("__bbb", polyBBoxUdf(col(bGeom)))
+    val bE = b.withColumn("__bbb", polyBBoxUdf(col(bGeom)))
       .withColumn("__cell", explode(polyCoverCells(col(bGeom), domain, res)))
-    val bE = if (broadcastB) broadcast(bE0) else bE0
-    val paired = aE.join(bE, Seq("__cell"))
-      // reference-point rule: keep each (a,b) pair in exactly one cell
-      .where(isCanonicalCellBB(col("__abb"), col("__bbb"), col("__cell"), domain, res))
-      .drop("__cell", "__abb", "__bbb")
-    val withFrag = paired
-      .withColumn("frag_geom", polyClipGeomUdf(col(aGeom), col(bGeom)))
-      .where(size(col("frag_geom")) > 0)
-      .withColumn("frag_area", polygonAreaUdf(col("frag_geom")))
-      .where(col("frag_area") > 0)
-    val res1 = withFrag.drop(bGeom)
-    if (keepFragGeom) res1 else res1.drop("frag_geom")
+    val paired = cellPairs(aE, bE, broadcastB,
+        isCanonicalCellBB(col("__abb"), col("__bbb"), col("__cell"), domain, res))
+      .drop("__abb", "__bbb")
+    polyClip(paired, aGeom, bGeom, keepFragGeom)
   }
 
   /** Multi-resolution poly×poly fragments for MIXED-SIZE layers: each side
-    * emits its adaptive cover; the A side additionally probes ancestors.
-    * Direction 1 (A probes levels ≤ its own, B builds at its own level)
-    * catches every pair where B is coarser-or-equal; direction 2 (B probes
-    * STRICT ancestors, A builds) catches B-finer pairs — no double count.
-    * Reference-point dedup runs at the matched cell's own resolution.
-    * Output schema matches polyPolyFragments. */
+    * emits its adaptive cover (see adaptivePairs). Output schema matches
+    * polyPolyFragments. */
   def polyPolyFragmentsAdaptive(a: DataFrame, b: DataFrame,
                                 domain: CellDomain, maxRes: Int,
                                 aGeom: String = "geom", bGeom: String = "bgeom",
                                 maxCells: Int = 4,
                                 broadcastB: Boolean = true,
                                 keepFragGeom: Boolean = true): DataFrame = {
-    val aBB = a.withColumn("__abb", polyBBoxUdf(col(aGeom)))
-    val bBB = b.withColumn("__bbb", polyBBoxUdf(col(bGeom)))
-
-    def side(df: DataFrame, geom: String, probe: Boolean, below: Int) =
-      df.withColumn("__cell", explode(
-        if (probe) adaptiveCoverAncestors(col(geom), domain, maxRes, maxCells, below)
-        else polyAdaptiveCoverCells(col(geom), domain, maxRes, maxCells)))
-
-    def direction(aE: DataFrame, bE0: DataFrame) = {
-      val bE = if (broadcastB) broadcast(bE0) else bE0
-      aE.join(bE, Seq("__cell"))
-        .where(isCanonicalCellBBAtCellRes(col("__abb"), col("__bbb"),
-          col("__cell"), domain))
-        .drop("__cell")
-    }
-
-    val paired = direction(side(aBB, aGeom, probe = true, below = 0),
-                           side(bBB, bGeom, probe = false, below = 0))
-      .unionByName(direction(side(aBB, aGeom, probe = false, below = 0),
-                             side(bBB, bGeom, probe = true, below = 1)))
-      .drop("__abb", "__bbb")
-
-    val withFrag = paired
-      .withColumn("frag_geom", polyClipGeomUdf(col(aGeom), col(bGeom)))
-      .where(size(col("frag_geom")) > 0)
-      .withColumn("frag_area", polygonAreaUdf(col("frag_geom")))
-      .where(col("frag_area") > 0)
-    val res1 = withFrag.drop(bGeom)
-    if (keepFragGeom) res1 else res1.drop("frag_geom")
+    val paired = adaptivePairs(
+      a.withColumn("__abb", polyBBoxUdf(col(aGeom))),
+      polyAdaptiveKeys(aGeom, domain, maxRes, maxCells),
+      b.withColumn("__bbb", polyBBoxUdf(col(bGeom))),
+      polyAdaptiveKeys(bGeom, domain, maxRes, maxCells),
+      "__abb", "__bbb", domain, broadcastB)
+    polyClip(paired, aGeom, bGeom, keepFragGeom)
   }
 
   /** Line×polygon join with clipped sub-segments (intersect.c:274-512).
@@ -168,27 +134,16 @@ object SpatialJoin {
                         curved: Boolean = false): DataFrame = {
     val lE = lines.withColumn("__lbb", lineBBoxUdf(col(lineCol)))
       .withColumn("__cell", explode(lineCoverCells(col(lineCol), domain, res)))
-    val pE0 = polys.withColumn("__pbb", polyBBoxUdf(col(geom)))
+    val pE = polys.withColumn("__pbb", polyBBoxUdf(col(geom)))
       .withColumn("__cell", explode(polyCoverCells(col(geom), domain, res)))
-    val pE = if (broadcastPolys) broadcast(pE0) else pE0
-    val paired = lE.join(pE, Seq("__cell"))
-      .where(isCanonicalCellBB(col("__lbb"), col("__pbb"), col("__cell"), domain, res))
-      .drop("__cell", "__lbb", "__pbb")
-    paired
-      .withColumn("frag_line", linePolyClipSegsUdf(col(lineCol), col(geom)))
-      .where(size(col("frag_line")) > 0)
-      .withColumn("frag_len",
-        aggregate(transform(col("frag_line"), s => lineLengthCol(s, curved)),
-                  lit(0.0), (acc, v) => acc + v))
-      .where(col("frag_len") > 0)
-      .drop(geom)
+    val paired = cellPairs(lE, pE, broadcastPolys,
+        isCanonicalCellBB(col("__lbb"), col("__pbb"), col("__cell"), domain, res))
+      .drop("__lbb", "__pbb")
+    lineClip(paired, lineCol, geom, curved)
   }
 
   /** Multi-resolution line×polygon fragments for MIXED-SIZE polygon layers
-    * (same two-direction scheme as polyPolyFragmentsAdaptive: lines probing
-    * ancestors catch coarser-or-equal polygons, polygons probing STRICT
-    * ancestors catch finer ones — no double count; reference-point dedup
-    * at the matched cell's own resolution). Output schema matches
+    * (lines are the A side of adaptivePairs). Output schema matches
     * linePolyFragments. */
   def linePolyFragmentsAdaptive(lines: DataFrame, polys: DataFrame,
                                 domain: CellDomain, maxRes: Int,
@@ -196,30 +151,69 @@ object SpatialJoin {
                                 maxCells: Int = 4,
                                 broadcastPolys: Boolean = true,
                                 curved: Boolean = false): DataFrame = {
-    val lBB = lines.withColumn("__lbb", lineBBoxUdf(col(lineCol)))
-    val pBB = polys.withColumn("__pbb", polyBBoxUdf(col(geom)))
+    val paired = adaptivePairs(
+      lines.withColumn("__lbb", lineBBoxUdf(col(lineCol))),
+      (probe, below) =>
+        if (probe) lineAdaptiveCoverAncestors(col(lineCol), domain, maxRes, maxCells, below)
+        else lineAdaptiveCoverCells(col(lineCol), domain, maxRes, maxCells),
+      polys.withColumn("__pbb", polyBBoxUdf(col(geom))),
+      polyAdaptiveKeys(geom, domain, maxRes, maxCells),
+      "__lbb", "__pbb", domain, broadcastPolys)
+    lineClip(paired, lineCol, geom, curved)
+  }
 
-    def lineSide(probe: Boolean, below: Int) = lBB.withColumn("__cell", explode(
-      if (probe) lineAdaptiveCoverAncestors(col(lineCol), domain, maxRes, maxCells, below)
-      else lineAdaptiveCoverCells(col(lineCol), domain, maxRes, maxCells)))
-    def polySide(probe: Boolean, below: Int) = pBB.withColumn("__cell", explode(
-      if (probe) adaptiveCoverAncestors(col(geom), domain, maxRes, maxCells, below)
-      else polyAdaptiveCoverCells(col(geom), domain, maxRes, maxCells)))
+  /** Candidate pairs of two sides exploded on `__cell`: the equi-join
+    * (B broadcast when asked), kept only where `canonical` holds — the
+    * reference-point rule keeps each pair in exactly one cell. */
+  private def cellPairs(aE: DataFrame, bE0: DataFrame, broadcastB: Boolean,
+                        canonical: Column): DataFrame = {
+    val bE = if (broadcastB) broadcast(bE0) else bE0
+    aE.join(bE, Seq("__cell")).where(canonical).drop("__cell")
+  }
 
-    def direction(lE: DataFrame, pE0: DataFrame) = {
-      val pE = if (broadcastPolys) broadcast(pE0) else pE0
-      lE.join(pE, Seq("__cell"))
-        .where(isCanonicalCellBBAtCellRes(col("__lbb"), col("__pbb"),
-          col("__cell"), domain))
-        .drop("__cell")
-    }
+  /** Adaptive cover keys of the polygon in `geom`: its own cells, or with
+    * `probe` their ancestors (below=1: strict ancestors only). */
+  private def polyAdaptiveKeys(geom: String, domain: CellDomain, maxRes: Int,
+                               maxCells: Int)(probe: Boolean, below: Int): Column =
+    if (probe) adaptiveCoverAncestors(col(geom), domain, maxRes, maxCells, below)
+    else polyAdaptiveCoverCells(col(geom), domain, maxRes, maxCells)
 
-    val paired = direction(lineSide(probe = true, below = 0),
-                           polySide(probe = false, below = 0))
-      .unionByName(direction(lineSide(probe = false, below = 0),
-                             polySide(probe = true, below = 1)))
-      .drop("__lbb", "__pbb")
+  /** Two-direction multi-level pairing. Direction 1 (A probes levels ≤ its
+    * own, B builds at its own level) catches every pair where B is
+    * coarser-or-equal; direction 2 (B probes STRICT ancestors, A builds)
+    * catches B-finer pairs — no double count. Reference-point dedup runs at
+    * the matched cell's own resolution. a/b carry their bbox columns
+    * `aBB`/`bBB`; `aKeys`/`bKeys(probe, below)` are their `__cell` keys,
+    * where `below` counts only when probing. */
+  private def adaptivePairs(a: DataFrame, aKeys: (Boolean, Int) => Column,
+                            b: DataFrame, bKeys: (Boolean, Int) => Column,
+                            aBB: String, bBB: String, domain: CellDomain,
+                            broadcastB: Boolean): DataFrame = {
+    def direction(aProbes: Boolean) =
+      cellPairs(a.withColumn("__cell", explode(aKeys(aProbes, 0))),
+        b.withColumn("__cell", explode(bKeys(!aProbes, 1))), broadcastB,
+        isCanonicalCellBBAtCellRes(col(aBB), col(bBB), col("__cell"), domain))
+    direction(aProbes = true).unionByName(direction(aProbes = false))
+      .drop(aBB, bBB)
+  }
 
+  /** Exact polygon clip of candidate pairs: `frag_geom` and `frag_area`,
+    * empty fragments dropped; B's geometry leaves the output. */
+  private def polyClip(paired: DataFrame, aGeom: String, bGeom: String,
+                       keepFragGeom: Boolean): DataFrame = {
+    val frags = paired
+      .withColumn("frag_geom", polyClipGeomUdf(col(aGeom), col(bGeom)))
+      .where(size(col("frag_geom")) > 0)
+      .withColumn("frag_area", polygonAreaUdf(col("frag_geom")))
+      .where(col("frag_area") > 0)
+      .drop(bGeom)
+    if (keepFragGeom) frags else frags.drop("frag_geom")
+  }
+
+  /** Exact line clip of candidate pairs: `frag_line` pieces and their
+    * summed `frag_len`, empty results dropped; the polygon leaves. */
+  private def lineClip(paired: DataFrame, lineCol: String, geom: String,
+                       curved: Boolean): DataFrame =
     paired
       .withColumn("frag_line", linePolyClipSegsUdf(col(lineCol), col(geom)))
       .where(size(col("frag_line")) > 0)
@@ -228,7 +222,6 @@ object SpatialJoin {
                   lit(0.0), (acc, v) => acc + v))
       .where(col("frag_len") > 0)
       .drop(geom)
-  }
 
   /** OVERLAY mode (mims_spatial.c:468-565): semi-join of inputs against a
     * mask region — output is input attributes only (overlay.c:21-250). */
@@ -236,18 +229,7 @@ object SpatialJoin {
                     domain: CellDomain, res: Int,
                     x: String = "x", y: String = "y", geom: String = "geom",
                     cellIdGrid: Option[graft.grid.GridSpec] = None): DataFrame = {
-    val maskE = broadcast(
-      mask.select(col(geom).as("__mgeom"))
-        .withColumn("__cell", explode(polyCoverCells(col("__mgeom"), domain, res))))
-    val ptsE = points.withColumn("__cell", cellEncode(col(x), col(y), domain, res))
-    // true EXISTS semantics: left_semi with the exact test in the join
-    // condition — no post-join dedup shuffle even when a point hits
-    // several mask polygons
-    val out = ptsE.join(maskE,
-        ptsE("__cell") === maskE("__cell") &&
-          containsPoint(ptsE(x), ptsE(y), maskE("__mgeom")),
-        "left_semi")
-      .drop("__cell")
+    val out = maskJoin(points, mask, domain, res, x, y, geom, "left_semi")
     // OVERLAY_OUT_CELLID=YES (overlay.c:155-190): append the output grid's
     // COL/ROW of each surviving input — closed-form column arithmetic
     cellIdGrid.fold(out) { g =>
@@ -258,14 +240,22 @@ object SpatialJoin {
 
   /** NOT-EXISTS twin of [[overlayPoints]]: the points OUTSIDE every mask
     * polygon (the reference's exclusion-filter reading of an overlay,
-    * `overlay.c` with the predicate inverted). Same broadcast cell-cover
-    * plan with `left_anti` — a point whose cell holds no mask candidate
-    * survives without ever evaluating the exact test, and a multi-polygon
-    * hit needs no dedup because anti-join semantics already collapse it. */
+    * `overlay.c` with the predicate inverted). A point whose cell holds no
+    * mask candidate survives without ever evaluating the exact test. */
   def overlayPointsAnti(points: DataFrame, mask: DataFrame,
                         domain: CellDomain, res: Int,
                         x: String = "x", y: String = "y",
-                        geom: String = "geom"): DataFrame = {
+                        geom: String = "geom"): DataFrame =
+    maskJoin(points, mask, domain, res, x, y, geom, "left_anti")
+
+  /** Points against the broadcast cell cover of a mask, with the exact
+    * test in the join condition: `joinType` left_semi is true EXISTS,
+    * left_anti NOT EXISTS — no post-join dedup shuffle even when a point
+    * hits several mask polygons. */
+  private def maskJoin(points: DataFrame, mask: DataFrame,
+                       domain: CellDomain, res: Int,
+                       x: String, y: String, geom: String,
+                       joinType: String): DataFrame = {
     val maskE = broadcast(
       mask.select(col(geom).as("__mgeom"))
         .withColumn("__cell", explode(polyCoverCells(col("__mgeom"), domain, res))))
@@ -273,17 +263,10 @@ object SpatialJoin {
     ptsE.join(maskE,
         ptsE("__cell") === maskE("__cell") &&
           containsPoint(ptsE(x), ptsE(y), maskE("__mgeom")),
-        "left_anti")
+        joinType)
       .drop("__cell")
   }
 
-  /** OVERLAY for polygon/line inputs. The reference UNIONS the mask's
-    * polygons into one region and tests every input against it
-    * (polyUnion, mims_spatial.c:491) — masks are dimension-sized by
-    * contract, so the region ships to executors inside the filter closure
-    * (a broadcast scalar, no join, no shuffle); a bbox pretest guards the
-    * exact kernel. Output = input rows (attributes) only, like
-    * reportOverlays. */
   /** Masks are dimension-sized by contract (a handful of overlay regions) —
     * enforce it rather than discover a driver OOM; bigger "masks" should go
     * through the cell-join paths (pointInPoly/polyPolyFragments). The limit
@@ -298,6 +281,13 @@ object SpatialJoin {
         .map(_.toArray).toArray)
   }
 
+  /** OVERLAY for polygon/line inputs. The reference UNIONS the mask's
+    * polygons into one region and tests every input against it
+    * (polyUnion, mims_spatial.c:491) — masks are dimension-sized by
+    * contract, so the region ships to executors inside the filter closure
+    * (a broadcast scalar, no join, no shuffle); a bbox pretest guards the
+    * exact kernel. Output = input rows (attributes) only, like
+    * reportOverlays. */
   def overlayPolys(polys: DataFrame, mask: DataFrame,
                    domain: CellDomain, res: Int,
                    geom: String = "geom"): DataFrame = {

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.grid.GridSpec
+import graft.spark.GeoFunctions.{cellIdCol, cellIdRow}
 
 /** Non-parquet layer sources of the reference, re-expressed as Spark reads
   * or generated Datasets (PolyReader.c:50-150 dispatch). Shapefile binary
@@ -56,8 +57,8 @@ object Sources {
     * polygons; point→cell assignment should use closed-form GeoFunctions. */
   def regularGrid(spark: SparkSession, g: GridSpec): DataFrame =
     spark.range(g.nCells).toDF("cell_id")
-      .withColumn("col", (col("cell_id") % g.ncols).cast("int") + 1)
-      .withColumn("row", (col("cell_id") / g.ncols).cast("int") + 1)
+      .withColumn("col", cellIdCol(col("cell_id"), g))
+      .withColumn("row", cellIdRow(col("cell_id"), g))
       .withColumn("x0", lit(g.xorig) + (col("col") - 1) * g.xcell)
       .withColumn("y0", lit(g.yorig) + (col("row") - 1) * g.ycell)
       .withColumn("geom", array(array(
@@ -71,10 +72,11 @@ object Sources {
     * (c, r) is a diamond centered on a staggered lattice; odd rows offset by
     * dx/2 (the E-grid stagger). Generated, like regularGrid. */
   def eGrid(spark: SparkSession, name: String, xorig: Double, yorig: Double,
-            dx: Double, dy: Double, ncols: Int, nrows: Int): DataFrame =
-    spark.range(ncols.toLong * nrows).toDF("cell_id")
-      .withColumn("col", (col("cell_id") % ncols).cast("int") + 1)
-      .withColumn("row", (col("cell_id") / ncols).cast("int") + 1)
+            dx: Double, dy: Double, ncols: Int, nrows: Int): DataFrame = {
+    val g = GridSpec(name, xorig, yorig, dx, dy, ncols, nrows)
+    spark.range(g.nCells).toDF("cell_id")
+      .withColumn("col", cellIdCol(col("cell_id"), g))
+      .withColumn("row", cellIdRow(col("cell_id"), g))
       .withColumn("cx",
         lit(xorig) + (col("col") - 1) * dx +
           when(col("row") % 2 === 0, dx / 2).otherwise(lit(0.0)))
@@ -85,6 +87,7 @@ object Sources {
         col("cx"), col("cy") + dy / 2,
         col("cx") - dx / 2, col("cy"))))
       .drop("cx", "cy")
+  }
 
   /** Fractional-vegetation source (fractionalVegReader.c, dispatch
     * PolyReader.c:97): delimited landuse-fraction text keyed by (x, y) —

@@ -40,10 +40,6 @@ object GeoFunctions {
   def inGrid(c: Column, r: Column, g: GridSpec): Column =
     c.between(1, g.ncols) && r.between(1, g.nrows)
 
-  /** 0-based dense cell id (row-1)*ncols+(col-1). */
-  def gridCellId(c: Column, r: Column, g: GridSpec): Column =
-    (r.cast("long") - 1) * g.ncols + (c.cast("long") - 1)
-
   // --------------------------------------------- hierarchical cell index
 
   private def exprCol(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
@@ -195,10 +191,6 @@ object GeoFunctions {
     Array(cx, cy)
   })
 
-  /** Area of polygon ∩ polygon (JTS-backed, covered-by shortcut). */
-  val polyClipAreaUdf = udf((a: Seq[Seq[Double]], b: Seq[Seq[Double]]) =>
-    Clip.polyPolyClipArea(a.map(_.toArray).toArray, b.map(_.toArray).toArray))
-
   /** Clipped geometry of polygon ∩ polygon as rings (for fragment rows). */
   val polyClipGeomUdf = udf((a: Seq[Seq[Double]], b: Seq[Seq[Double]]) =>
     Clip.polyPolyClip(a.map(_.toArray).toArray, b.map(_.toArray).toArray))
@@ -223,10 +215,6 @@ object GeoFunctions {
     val f = udf((l: Seq[Double]) => g.coverCells(Geo.bboxOfRing(l.toArray)))
     f(line)
   }
-
-  /** Length of polyline ∩ polygon (reference line_clip algorithm). */
-  val linePolyClipLenUdf = udf((l: Seq[Double], rings: Seq[Seq[Double]]) =>
-    Clip.linePolyClipLength(l.toArray, rings.map(_.toArray).toArray))
 
   /** Polyline ∩ polygon as clipped sub-segments (flat polyline pieces). */
   val linePolyClipSegsUdf = udf((l: Seq[Double], rings: Seq[Seq[Double]]) =>
@@ -276,16 +264,4 @@ object GeoFunctions {
                         d: CellDomain, res: Int): Column =
     cellEncode(greatest(aBB.getItem(0), bBB.getItem(0)),
                greatest(aBB.getItem(1), bBB.getItem(1)), d, res) === cell
-
-  /** Ring-scanning variant kept for call sites without bbox columns. */
-  def isCanonicalCell(aGeom: Column, bGeom: Column, cell: Column,
-                      d: CellDomain, res: Int): Column = {
-    val f = udf((a: Seq[Seq[Double]], b: Seq[Seq[Double]], c: Long) => {
-      val ba = Geo.bboxOfPolygon(a.map(_.toArray).toArray)
-      val bb = Geo.bboxOfPolygon(b.map(_.toArray).toArray)
-      CellIndex.encode(math.max(ba.xmin, bb.xmin), math.max(ba.ymin, bb.ymin),
-                       d, res) == c
-    })
-    f(aGeom, bGeom, cell)
-  }
 }

@@ -1,0 +1,105 @@
+package graft.operators
+
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{GenerateExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.datasources.v2.V2TableWriteExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.BeforeAndAfterAll
+import graft.fixtures.TpchGeo
+
+/** Plan-shape gate for the three grid surrogates: the executed plan of
+  * each, written to the noop sink, keeps its count of shuffle exchanges,
+  * broadcast exchanges, explodes and cached-relation scans. Persists and
+  * exchanges are where the surrogate's cost lives, so a refactor that
+  * moves one shows up here. */
+class SurrogatePlanSpec extends AnyFunSuite with BeforeAndAfterAll {
+  import SurrogatePlanSpec._
+
+  private var spark: SparkSession = _
+  private val captured = new LinkedBlockingQueue[QueryExecution]()
+
+  override def beforeAll(): Unit = {
+    spark = SparkSession.builder().master("local[4]")
+      .config("spark.sql.shuffle.partitions", 4)
+      .config("spark.ui.enabled", "false")
+      .appName("surrogate-plan-spec").getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    spark.listenerManager.register(new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = captured.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    })
+  }
+
+  override def afterAll(): Unit = {
+    graft.spark.PersistTracker.drain()
+    if (spark != null) spark.stop()
+  }
+
+  /** Every node of an executed plan, pre-order, through adaptive wrappers,
+    * query stages, reused exchanges and the plans of cached relations. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => q +: nodes(q.plan)
+    case r: ReusedExchangeExec => r +: nodes(r.child)
+    case m: InMemoryTableScanExec => m +: nodes(m.relation.cachedPlan)
+    case other => other +: other.children.flatMap(nodes)
+  }
+
+  /** Counts of the plan that writes `build` to the noop sink. The cache is
+    * cleared first, so the persists `build` makes are the only ones. */
+  private def shape(build: => DataFrame): Shape = {
+    graft.spark.PersistTracker.drain()
+    spark.catalog.clearCache()
+    build.write.format("noop").mode("overwrite").save()
+    var qe = captured.poll(30, TimeUnit.SECONDS)
+    while (qe != null && !qe.executedPlan.isInstanceOf[V2TableWriteExec])
+      qe = captured.poll(30, TimeUnit.SECONDS)
+    assert(qe != null, "the noop write's plan was not captured")
+    val ns = nodes(qe.executedPlan)
+    Shape(ns.count(_.isInstanceOf[ShuffleExchangeExec]),
+      ns.count(_.isInstanceOf[BroadcastExchangeExec]),
+      ns.count(_.isInstanceOf[GenerateExec]),
+      ns.count(_.isInstanceOf[InMemoryTableScanExec]))
+  }
+
+  private def counties = TpchGeo.counties(spark)
+  private val (g, d, z) = (TpchGeo.grid, TpchGeo.domain, TpchGeo.zres)
+
+  test("pointSurrogate keeps its exchanges, explodes and persists") {
+    val got = shape(Surrogate.pointSurrogate(
+      TpchGeo.points(spark, SfDir), counties, g, d, z, srgCode = 1))
+    assert(got == PointShape)
+  }
+
+  test("polySurrogate keeps its exchanges, explodes and persists") {
+    val got = shape(Surrogate.polySurrogate(
+      TpchGeo.tracts(spark, SfDir), counties, g, d, z, srgCode = 2,
+      weight = Some("p_size")))
+    assert(got == PolyShape)
+  }
+
+  test("lineSurrogate keeps its exchanges, explodes and persists") {
+    val got = shape(Surrogate.lineSurrogate(
+      TpchGeo.roads(spark, SfDir), counties, g, d, z, srgCode = 3))
+    assert(got == LineShape)
+  }
+}
+
+object SurrogatePlanSpec {
+  /** TESTDATA.md's sf0.001 tables. */
+  val SfDir = "/root/testdata/sf0.001"
+
+  final case class Shape(shuffles: Int, broadcasts: Int, generates: Int,
+                         cacheScans: Int)
+
+  // Each cached relation's plan is walked once per scan of it, so the
+  // exchanges inside a persisted intermediate count once per consumer.
+  val PointShape = Shape(shuffles = 5, broadcasts = 3, generates = 2, cacheScans = 2)
+  val PolyShape = Shape(shuffles = 4, broadcasts = 3, generates = 5, cacheScans = 2)
+  val LineShape = Shape(shuffles = 4, broadcasts = 3, generates = 6, cacheScans = 2)
+}
