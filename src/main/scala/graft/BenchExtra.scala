@@ -14,7 +14,8 @@ import org.apache.spark.sql.SparkSession
   * Env knobs:
   *   SPARK_GRAFT_REPS   — repetitions per query (default 1); every rep
   *                        drains persists + clears the cache first, same
-  *                        isolation discipline as Bench.
+  *                        isolation discipline as Bench. A rep that throws
+  *                        prints `FAIL` in its column.
   *   SPARK_GRAFT_PLANS  — if set, writes <dir>/<query>.txt with the
   *                        explain("formatted") output of each query.
   *
@@ -47,7 +48,7 @@ object BenchExtra {
           try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
           catch { case e: Throwable =>
             System.err.println(s"[benchextra] $name failed: $e"); false }
-        if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+        Option.when(ok)((System.nanoTime() - t0) / 1e9)
       }
       plansDir.foreach { d =>
         graft.spark.PersistTracker.drain()
@@ -65,7 +66,7 @@ object BenchExtra {
     }
     out.foreach { case (n, ts) =>
       println(f"[benchextra] $n%-28s " +
-        ts.map(t => f"$t%8.3f").mkString(" "))
+        ts.map(_.fold(f"${"FAIL"}%8s")(t => f"$t%8.3f")).mkString(" "))
     }
     graft.spark.PersistTracker.drain()
     spark.stop()

@@ -48,8 +48,9 @@ object Hits {
     // runtime against the ACTUAL max (inside rescale), not against the
     // pessimistic Scale²·totW static bound, which would reject any graph
     // with total weight above ~9223 at Scale=1e6.
-    val totW = ew.agg(sum(col("w"))).head().getLong(0)
-    require(totW > 0 && totW <= Long.MaxValue / Scale,
+    val totW = scalar(ew.agg(sum(col("w"))))
+    require(totW > 0, s"degenerate graph: total edge weight $totW <= 0")
+    require(totW <= Long.MaxValue / Scale,
       s"Scale=$Scale x total edge weight $totW would overflow Long" +
         " — lower Scale or pre-bucket edge weights")
 
@@ -59,7 +60,7 @@ object Hits {
     // its join+sum job twice (once for the max action, once downstream)
     def rescale(scores: DataFrame, c: String): DataFrame = {
       val raw = scores.localCheckpoint(true)
-      val mx = raw.agg(max(col(c))).head().getLong(0)
+      val mx = scalar(raw.agg(max(col(c))))
       require(mx > 0, s"degenerate $c vector: max <= 0")
       require(mx <= Long.MaxValue / Scale,
         s"rescale overflow: max($c)=$mx x Scale=$Scale exceeds Long range")
@@ -93,5 +94,13 @@ object Hits {
     nodes.join(auth, Seq("domain"), "left").join(hub, Seq("domain"), "left")
       .select(col("domain"), coalesce(col("a"), lit(0L)).as("auth"),
         coalesce(col("h"), lit(0L)).as("hub"))
+  }
+
+  /** A one-row long aggregate (sum / max) read as nullable: an empty input
+    * yields NULL, read here as 0 so the caller's `require` names the
+    * degenerate graph instead of `getLong` throwing an NPE. */
+  private def scalar(agg: DataFrame): Long = {
+    val r = agg.head()
+    if (r.isNullAt(0)) 0L else r.getLong(0)
   }
 }

@@ -16,7 +16,11 @@ import graft.spark.GeoFunctions._
   *      join of the literature, and exactly what the PG formulation's GIST
   *      index join achieves on one node
   *      (pg_srgtools/pgscripts/template_polygon_noFF_withWA.csh:39-49).
-  *   2. EXACT: run the precise kernel (ray-cast PIP / clip) per candidate.
+  *   2. EXACT: run the precise kernel (ray-cast PIP / clip) per candidate;
+  *      a clip runs once per canonical candidate, in a Project above the
+  *      join — its single-evaluation fence (GeoFunctions header) keeps it
+  *      out of the join condition, which holds only the reference-point
+  *      test of step 3.
   *   3. DEDUP: polygon×polygon pairs sharing several cells are kept exactly
   *      once via the reference-point rule (no dropDuplicates shuffle).
   *

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Column}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{UserDefinedFunction, Window}
 import graft.cells.CellDomain
 import graft.grid.GridSpec
 import graft.spark.GeoFunctions._
@@ -146,18 +146,23 @@ object Surrogate {
   }
 
   /** Fragment county stage (line and polygon weights): drop zero weights,
-    * measure each feature into `base`, drop empty ones, and clip them to
-    * the counties with `clip`. The W∩D fragments are persisted — the
+    * measure each `feature` with `size` into `base`, drop empty ones, and
+    * clip them to the counties with `clip`. `base` is both filtered and
+    * projected, so `size` runs behind a local single-evaluation fence
+    * (GeoFunctions header) — once per feature, not again in the scan-side
+    * filter; the shared measure stays deterministic for its other callers.
+    * The W∩D fragments are persisted — the
     * denominator and every target's numerator consume them, and the
     * reference materializes this same grid-independent intermediate
     * (SAVE_DW_FILE/USE_DW_FILE, data_weight.c:19-160). A piece of measure
     * m contributes val·m/base, or m itself when no weight is given. */
   private def fragCounty(features: DataFrame, weight: Option[String],
-                         base: String, size: Column, fragMeasure: String)
+                         base: String, size: UserDefinedFunction,
+                         feature: String, fragMeasure: String)
                         (clip: DataFrame => DataFrame): County = {
     val wts = features
       .where(weight.map(c => col(c).cast("double") =!= 0.0).getOrElse(lit(true)))
-      .withColumn(base, size)
+      .withColumn(base, size.asNondeterministic()(col(feature)))
       .where(col(base) > 0)
       .withColumn("__wval",
         weight.map(col(_).cast("double")).getOrElse(lit(0.0)))
@@ -174,7 +179,7 @@ object Surrogate {
   private def polyCounty(weights: DataFrame, counties: DataFrame,
                          domain: CellDomain, res: Int,
                          weight: Option[String]): County =
-    fragCounty(weights, weight, "__warea", polygonAreaUdf(col("geom")),
+    fragCounty(weights, weight, "__warea", polygonAreaUdf, "geom",
         "frag_area") { w =>
       SpatialJoin.polyPolyFragments(
         w, counties.withColumnRenamed("geom", "bgeom"), domain, res)
@@ -185,7 +190,8 @@ object Surrogate {
   private def lineCounty(lines: DataFrame, counties: DataFrame,
                          domain: CellDomain, res: Int, weight: Option[String],
                          curved: Boolean): County =
-    fragCounty(lines, weight, "__wlen", lineLengthCol(col("line"), curved),
+    fragCounty(lines, weight, "__wlen",
+        if (curved) greatCircleLengthUdf else lineLengthUdf, "line",
         "frag_len") { l =>
       SpatialJoin.linePolyFragments(l, counties, domain, res, curved = curved)
     }

@@ -16,6 +16,22 @@ import graft.grid.GridSpec
   *   - exact geometry kernels (PIP, clip areas/lengths, cell cover) are Scala
   *     UDFs over flat ring arrays (array<array<double>>). These sit AFTER the
   *     cell-cover equi-join prefilter, so they run on candidate pairs only.
+  *
+  * Every UDF carries a name (`withName`), so plans and `plans/` dumps show
+  * which kernel runs in which operator instead of anonymous `UDF(...)`.
+  *
+  * Single-evaluation fence: an exact kernel whose result is both filtered
+  * (empty or zero-measure pieces dropped) and projected is marked
+  * `asNondeterministic()` — the rationale on TextHash.jaccardVerifyUdf.
+  * Left deterministic, Catalyst pushes the filter through the projection
+  * into the cell-join condition, where the clip runs AHEAD of the cheap
+  * reference-point test on every candidate — twice when two filters read
+  * it — and then once more in the projection. Fenced, it runs once per
+  * canonical candidate, or once per (fragment, cell) row, in a Project
+  * above the join or explode. The kernels are pure; only the optimizer's
+  * freedom to copy and push them changes. The shared area/length measures
+  * stay deterministic, so filters over them still push down to the scan;
+  * a caller that filters and projects one fences its own copy.
   */
 object GeoFunctions {
 
@@ -63,6 +79,7 @@ object GeoFunctions {
   /** UDF twin of cellEncode, kept for cross-checking the native expression. */
   def cellEncodeUdf(x: Column, y: Column, d: CellDomain, res: Int): Column = {
     val f = udf((px: Double, py: Double) => CellIndex.encode(px, py, d, res))
+      .withName("cell_encode_udf")
     f(x, y)
   }
 
@@ -76,6 +93,7 @@ object GeoFunctions {
   def lineCoverCells(line: Column, d: CellDomain, res: Int): Column = {
     val f = udf((l: Seq[Double]) =>
       CellIndex.coverCells(Geo.bboxOfRing(l.toArray), d, res))
+      .withName("line_cover_cells")
     f(line)
   }
 
@@ -87,13 +105,14 @@ object GeoFunctions {
     val f = udf((rings: Seq[Seq[Double]]) =>
       CellIndex.adaptiveCover(
         Geo.bboxOfPolygon(rings.map(_.toArray).toArray), d, maxRes, maxCells))
+      .withName("poly_adaptive_cover_cells")
     f(geom)
   }
 
   /** A point's cell id at every resolution 0..maxRes (multi-res probe keys). */
   def cellAncestors(x: Column, y: Column, d: CellDomain, maxRes: Int): Column = {
     val f = udf((px: Double, py: Double) =>
-      CellIndex.ancestors(px, py, d, maxRes))
+      CellIndex.ancestors(px, py, d, maxRes)).withName("cell_ancestors")
     f(x, y)
   }
 
@@ -125,7 +144,7 @@ object GeoFunctions {
                              maxCells: Int, below: Int): Column = {
     val f = udf((rings: Seq[Seq[Double]]) =>
       bboxCoverAncestors(Geo.bboxOfPolygon(rings.map(_.toArray).toArray),
-        d, maxRes, maxCells, below))
+        d, maxRes, maxCells, below)).withName("poly_adaptive_cover_ancestors")
     f(geom)
   }
 
@@ -135,6 +154,7 @@ object GeoFunctions {
                              maxCells: Int = 4): Column = {
     val f = udf((l: Seq[Double]) =>
       CellIndex.adaptiveCover(Geo.bboxOfRing(l.toArray), d, maxRes, maxCells))
+      .withName("line_adaptive_cover_cells")
     f(line)
   }
 
@@ -144,6 +164,7 @@ object GeoFunctions {
                                  maxCells: Int, below: Int): Column = {
     val f = udf((l: Seq[Double]) =>
       bboxCoverAncestors(Geo.bboxOfRing(l.toArray), d, maxRes, maxCells, below))
+      .withName("line_adaptive_cover_ancestors")
     f(line)
   }
 
@@ -153,7 +174,7 @@ object GeoFunctions {
                                  d: CellDomain): Column = {
     val f = udf((a: Seq[Double], b: Seq[Double], c: Long) =>
       CellIndex.encode(math.max(a(0), b(0)), math.max(a(1), b(1)),
-        d, CellIndex.resolutionOf(c)) == c)
+        d, CellIndex.resolutionOf(c)) == c).withName("is_canonical_cell_at_cell_res")
     f(aBB, bBB, cell)
   }
 
@@ -169,18 +190,21 @@ object GeoFunctions {
   /** UDF twin of pipStatus, kept for cross-checking the native expression. */
   val pipStatusUdf = udf((px: Double, py: Double, rings: Seq[Seq[Double]]) =>
     Geo.pointInPolygon(px, py, rings.map(_.toArray).toArray))
+    .withName("pip_status_udf")
 
   def containsPoint(x: Column, y: Column, geom: Column): Column =
     pipStatus(x, y, geom) === Geo.IN
 
   val polygonAreaUdf = udf((rings: Seq[Seq[Double]]) =>
-    Geo.polygonArea(rings.map(_.toArray).toArray))
+    Geo.polygonArea(rings.map(_.toArray).toArray)).withName("poly_area")
 
   val lineLengthUdf = udf((l: Seq[Double]) => Geo.lineLength(l.toArray))
+    .withName("line_len")
 
   /** Great-circle polyline length over lon/lat degrees — USE_CURVED_LINES
     * mode (polyops.c:440-474). */
   val greatCircleLengthUdf = udf((l: Seq[Double]) => Geo.greatCircleLength(l.toArray))
+    .withName("great_circle_len")
 
   /** Length measure selected by the USE_CURVED_LINES env contract. */
   def lineLengthCol(line: Column, curved: Boolean): Column =
@@ -189,16 +213,20 @@ object GeoFunctions {
   val centroidUdf = udf((rings: Seq[Seq[Double]]) => {
     val (cx, cy) = Geo.vertexMeanCentroid(rings.map(_.toArray).toArray)
     Array(cx, cy)
-  })
+  }).withName("poly_centroid")
 
-  /** Clipped geometry of polygon ∩ polygon as rings (for fragment rows). */
+  /** Clipped geometry of polygon ∩ polygon as rings (for fragment rows).
+    * Fenced: runs once per canonical candidate (see header). */
   val polyClipGeomUdf = udf((a: Seq[Seq[Double]], b: Seq[Seq[Double]]) =>
     Clip.polyPolyClip(a.map(_.toArray).toArray, b.map(_.toArray).toArray))
+    .withName("poly_clip_geom").asNondeterministic()
 
-  /** Area of polygon ∩ one grid cell (rect fast path, exact). */
+  /** Area of polygon ∩ one grid cell (rect fast path, exact). Fenced: runs
+    * once per (fragment, cell) row. */
   def polyCellClipArea(geom: Column, cellId: Column, g: GridSpec): Column = {
     val f = udf((rings: Seq[Seq[Double]], id: Long) =>
       Clip.polygonRectClipArea(rings.map(_.toArray).toArray, g.cellBBox(id)))
+      .withName("poly_cell_clip_area").asNondeterministic()
     f(geom, cellId)
   }
 
@@ -208,27 +236,34 @@ object GeoFunctions {
   def polyGridCoverCells(geom: Column, g: GridSpec): Column = {
     val f = udf((rings: Seq[Seq[Double]]) =>
       g.coverCells(Geo.bboxOfPolygon(rings.map(_.toArray).toArray)))
+      .withName("poly_grid_cover_cells")
     f(geom)
   }
 
   def lineGridCoverCells(line: Column, g: GridSpec): Column = {
     val f = udf((l: Seq[Double]) => g.coverCells(Geo.bboxOfRing(l.toArray)))
+      .withName("line_grid_cover_cells")
     f(line)
   }
 
-  /** Polyline ∩ polygon as clipped sub-segments (flat polyline pieces). */
+  /** Polyline ∩ polygon as clipped sub-segments (flat polyline pieces).
+    * Fenced: runs once per canonical candidate (see header). */
   val linePolyClipSegsUdf = udf((l: Seq[Double], rings: Seq[Seq[Double]]) =>
     Clip.linePolyClipSegments(l.toArray, rings.map(_.toArray).toArray))
+    .withName("line_clip_segs").asNondeterministic()
 
-  /** Length of polyline ∩ one grid cell (Liang–Barsky fast path). */
+  /** Length of polyline ∩ one grid cell (Liang–Barsky fast path). Fenced:
+    * runs once per (piece, cell) row. */
   def lineCellClipLength(line: Column, cellId: Column, g: GridSpec): Column = {
     val f = udf((l: Seq[Double], id: Long) =>
       Clip.lineRectClipLength(l.toArray, g.cellBBox(id)))
+      .withName("line_cell_clip_len").asNondeterministic()
     f(line, cellId)
   }
 
   /** Great-circle length of polyline ∩ one grid cell: clip geometrically
-    * (exact endpoints), measure each span with haversine. */
+    * (exact endpoints), measure each span with haversine. Fenced like
+    * lineCellClipLength. */
   def lineCellClipLengthCurved(line: Column, cellId: Column, g: GridSpec): Column = {
     val f = udf((l: Seq[Double], id: Long) => {
       val segs = Clip.lineRectClipSegs(l.toArray, g.cellBBox(id))
@@ -236,7 +271,7 @@ object GeoFunctions {
       var i = 0
       while (i < segs.length) { s += Geo.greatCircleLength(segs(i)); i += 1 }
       s
-    })
+    }).withName("line_cell_clip_len_curved").asNondeterministic()
     f(line, cellId)
   }
 
@@ -244,13 +279,13 @@ object GeoFunctions {
   val polyBBoxUdf = udf((rings: Seq[Seq[Double]]) => {
     val b = Geo.bboxOfPolygon(rings.map(_.toArray).toArray)
     Array(b.xmin, b.ymin, b.xmax, b.ymax)
-  })
+  }).withName("poly_bbox")
 
   /** bbox column of a polyline. */
   val lineBBoxUdf = udf((l: Seq[Double]) => {
     val b = Geo.bboxOfRing(l.toArray)
     Array(b.xmin, b.ymin, b.xmax, b.ymax)
-  })
+  }).withName("line_bbox")
 
   /** Reference-point pair dedup for cell-cover joins: true only in the one
     * canonical cell containing (max(xmins), max(ymins)) of the two bboxes —

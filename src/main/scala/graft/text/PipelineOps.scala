@@ -1114,6 +1114,12 @@ object PipelineOps {
                               ps: Seq[Int]): DataFrame = {
     require(ps.nonEmpty && ps.forall(p => p >= 1 && p <= 100),
       s"percentiles must be in 1..100, got $ps")
+    // the histogram keys on the value cast to long: a fractional column
+    // would be silently truncated, so only integral types are accepted
+    import org.apache.spark.sql.types.{ByteType, ShortType, IntegerType, LongType}
+    val vt = df.select(col(valCol)).schema.head.dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(vt),
+      s"$valCol must be an integral type, got ${vt.simpleString}")
     val hist = df.select(col(valCol).cast("long").as("v"))
       .groupBy("v").agg(count(lit(1)).as("c"))
       .transform(graft.spark.PersistTracker.persist) // cum pass + total

@@ -97,4 +97,18 @@ class HitsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got("c") == Hits.Scale)
     assert(got.values.forall(v => v >= 0 && v <= Hits.Scale))
   }
+
+  test("an empty or weightless graph fails its require, not with an NPE") {
+    val s = spark
+    import s.implicits._
+    val empty = Seq.empty[(String, String, Long)]
+      .toDF("src_domain", "dst_domain", "n_links")
+    // NULL link counts sum to NULL, like the empty graph's total
+    val weightless = Seq(("a", "b", Option.empty[Long]))
+      .toDF("src_domain", "dst_domain", "n_links")
+    for (g <- Seq(empty, weightless)) {
+      val e = intercept[IllegalArgumentException](Hits.hits(g, 2))
+      assert(e.getMessage.contains("degenerate graph"), e.getMessage)
+    }
+  }
 }

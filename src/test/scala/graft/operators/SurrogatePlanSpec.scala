@@ -40,16 +40,6 @@ class SurrogatePlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     if (spark != null) spark.stop()
   }
 
-  /** Every node of an executed plan, pre-order, through adaptive wrappers,
-    * query stages, reused exchanges and the plans of cached relations. */
-  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-    case q: QueryStageExec => q +: nodes(q.plan)
-    case r: ReusedExchangeExec => r +: nodes(r.child)
-    case m: InMemoryTableScanExec => m +: nodes(m.relation.cachedPlan)
-    case other => other +: other.children.flatMap(nodes)
-  }
-
   /** Counts of the plan that writes `build` to the noop sink. The cache is
     * cleared first, so the persists `build` makes are the only ones. */
   private def shape(build: => DataFrame): Shape = {
@@ -93,6 +83,16 @@ class SurrogatePlanSpec extends AnyFunSuite with BeforeAndAfterAll {
 object SurrogatePlanSpec {
   /** TESTDATA.md's sf0.001 tables. */
   val SfDir = "/root/testdata/sf0.001"
+
+  /** Every node of an executed plan, pre-order, through adaptive wrappers,
+    * query stages, reused exchanges and the plans of cached relations. */
+  def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => q +: nodes(q.plan)
+    case r: ReusedExchangeExec => r +: nodes(r.child)
+    case m: InMemoryTableScanExec => m +: nodes(m.relation.cachedPlan)
+    case other => other +: other.children.flatMap(nodes)
+  }
 
   final case class Shape(shuffles: Int, broadcasts: Int, generates: Int,
                          cacheScans: Int)

@@ -47,6 +47,17 @@ class PerplexityCutSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("value-histogram percentiles reject a fractional value column") {
+    val s = spark
+    import s.implicits._
+    // the histogram keys on the value cast to long; 1.5 and 1.75 would
+    // silently share the key 1
+    val df = Seq((0L, 1.5), (1L, 1.75), (2L, 3.0)).toDF("id", "v")
+    val e = intercept[IllegalArgumentException](
+      PipelineOps.exactPercentilesByValue(df, "v", Seq(50)))
+    assert(e.getMessage.contains("integral"), e.getMessage)
+  }
+
   test("bucketNtile equals ntile(3) over (avg_unll, id) on any multiset") {
     import org.apache.spark.sql.expressions.{Window => W}
     import org.apache.spark.sql.functions._
