@@ -144,7 +144,7 @@ object EntryRound4 {
     "q85_warc_extract" -> ((s, dir) => {
       import graft.sources.Warc
       Warc.responses(Pages.warcFiles(s, dir), "warc")
-        .select(regexp_extract(col("uri"), "(\\d+)$", 1).cast("long").as("doc_id"),
+        .select(Pages.urlId(col("uri")).as("doc_id"),
           col("uri"), col("warc_epoch"), col("http_status"), col("content_type"),
           length(col("body")).cast("long").as("n_bytes"),
           md5(col("body")).as("body_md5"))
@@ -220,8 +220,7 @@ object EntryRound4 {
     // — the oracle predicts loc/lastmod/priority without touching XML
     "q92_sitemap" -> ((s, dir) =>
       graft.sources.Sitemaps.entries(Pages.sitemaps(s, dir), "sitemap_xml")
-        .select(regexp_extract(col("loc"), "(\\d+)$", 1).cast("long")
-            .as("doc_id"),
+        .select(Pages.urlId(col("loc")).as("doc_id"),
           col("domain"), col("loc"), col("lastmod_day"), col("priority"))
         .orderBy("doc_id")),
 

@@ -167,8 +167,7 @@ object EntryRound4b {
         .select(Warc.wetBuildUdf(col("file_id"), col("arr.uri"),
           col("arr.warc_epoch"), col("arr.wtext")).as("wet"))
       Warc.conversions(wet, "wet")
-        .select(regexp_extract(col("uri"), "(\\d+)$", 1).cast("long")
-            .as("doc_id"),
+        .select(Pages.urlId(col("uri")).as("doc_id"),
           col("uri"), col("wet_epoch"),
           length(decode(col("text"), "UTF-8")).cast("long").as("n_chars"),
           md5(col("text")).as("text_md5"))
@@ -223,8 +222,7 @@ object EntryRound4b {
         StructField("content_length", LongType),
         StructField("links", ArrayType(StringType))))
       Warc.metadataRecords(wat, "wat")
-        .select(regexp_extract(col("uri"), "(\\d+)$", 1).cast("long")
-            .as("doc_id"),
+        .select(Pages.urlId(col("uri")).as("doc_id"),
           col("uri"), col("wat_epoch"),
           from_json(col("json"), schema).as("m"))
         .select(col("doc_id"), col("uri"), col("wat_epoch"),
@@ -283,8 +281,7 @@ object EntryRound4b {
       val outlinks = crawledPages
         .select(explode(expr(
           "regexp_extract_all(html, '<a href=\"([^\"]+)\"', 1)")).as("t"))
-        .select(regexp_extract(col("t"), "(\\d+)$", 1).cast("long")
-            .as("tgt_id"),
+        .select(Pages.urlId(col("t")).as("tgt_id"),
           regexp_extract(col("t"), "^https://([^/]+)", 1).as("tgt_domain"))
       val crawled = s.read.parquet(s"$dir/documents.parquet")
         .where(col("doc_id") % 5 =!= 0).select(col("doc_id"))
@@ -301,8 +298,7 @@ object EntryRound4b {
     "q119_pyramid_delta" -> ((s, dir) => {
       import graft.cells.TilePyramid
       val pts = Pages.geotag(Pages.pages(s, dir))
-        .select(regexp_extract(col("url"), "(\\d+)$", 1).cast("long")
-            .as("pid"),
+        .select(Pages.urlId(col("url")).as("pid"),
           col("x").cast("long").as("xi"), col("y").cast("long").as("yi"))
         .localCheckpoint(true)
       val v1 = pts.where(col("pid") % 11 =!= 3)
@@ -371,8 +367,7 @@ object EntryRound4b {
       val mem = MemoryStream[String](s)
       val qname = s"q122_decay_${streamSeq.incrementAndGet()}"
       val pts = Pages.geotag(mem.toDF().toDF("url"))
-        .withColumn("pid",
-          regexp_extract(col("url"), "(\\d+)$", 1).cast("long"))
+        .withColumn("pid", Pages.urlId(col("url")))
         .select((col("x") / 512).cast("long").as("ix"),
           (col("y") / 512).cast("long").as("iy"),
           expr("(1610000000L - (1600000000L + pid * 137L)) div 86400")

@@ -33,7 +33,7 @@ object EntryRound4c {
     "q125_sitemap_coverage" -> ((s, dir) => {
       val listed = Sitemaps.entries(Pages.sitemaps(s, dir), "sitemap_xml")
         .select(col("domain"),
-          regexp_extract(col("loc"), "(\\d+)$", 1).cast("long").as("doc_id"))
+          Pages.urlId(col("loc")).as("doc_id"))
       val captured = s.read.parquet(s"$dir/documents.parquet")
         .where(col("doc_id") % 3 =!= 1)
         .select(col("doc_id"), lit(1L).as("cap"))
@@ -78,7 +78,7 @@ object EntryRound4c {
         explode(expr(
           "regexp_extract_all(html, '<a href=\"([^\"]+)\"', 1)")).as("t"))
         .select(col("src_domain"),
-          regexp_extract(col("t"), "(\\d+)$", 1).cast("long").as("tgt_id"))
+          Pages.urlId(col("t")).as("tgt_id"))
       val captured = s.read.parquet(s"$dir/documents.parquet")
         .where(col("doc_id") % 5 =!= 0)
         .select(col("doc_id").as("tgt_id"), lit(1L).as("cap"))

@@ -92,8 +92,7 @@ object EntryRound5 {
       val mem = MemoryStream[String](s)
       val qname = s"q139_decayu_${streamSeq.incrementAndGet()}"
       val pts = Pages.geotag(mem.toDF().toDF("url"))
-        .withColumn("pid",
-          regexp_extract(col("url"), "(\\d+)$", 1).cast("long"))
+        .withColumn("pid", Pages.urlId(col("url")))
         .withColumn("ts", lit(1600000000L) + col("pid") * 137L)
         .withColumn("age_days",
           expr("(1610000000L - ts) div 86400"))

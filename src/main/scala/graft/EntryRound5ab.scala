@@ -34,8 +34,7 @@ object EntryRound5ab {
 
     "q225_ripley_k" -> ((s, dir) => {
       val pts = Pages.geotag(Pages.pages(s, dir))
-        .select(regexp_extract(col("url"), "(\\d+)$", 1).cast("long")
-          .as("id"), col("x"), col("y"))
+        .select(Pages.urlId(col("url")).as("id"), col("x"), col("y"))
       graft.cells.RipleyK.k(pts, "id", "x", "y",
         radii = Seq(250L, 500L, 1000L), maxR = 1000L,
         area = 8000L * 8000L)

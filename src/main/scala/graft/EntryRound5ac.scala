@@ -74,8 +74,7 @@ object EntryRound5ac {
       val root = SparkEntry.scratch(s, s"q229_${seq.incrementAndGet()}", dir)
       val t = new SnapshotTable(root)
       val pts = Pages.geotag(Pages.pages(s, dir))
-        .select(regexp_extract(col("url"), "(\\d+)$", 1).cast("long")
-            .as("id"),
+        .select(Pages.urlId(col("url")).as("id"),
           (col("x") / 250).cast("long").as("cx"),
           (col("y") / 250).cast("long").as("cy"))
       val base = pts.where(col("id") % 10 =!= 0)

@@ -28,8 +28,7 @@ object EntryRound5ae {
 
     "q236_knox" -> ((s, dir) => {
       val pts = Pages.geotag(Pages.pages(s, dir))
-        .select(regexp_extract(col("url"), "(\\d+)$", 1).cast("long")
-            .as("id"), col("x"), col("y"),
+        .select(Pages.urlId(col("url")).as("id"), col("x"), col("y"),
           expr("unix_timestamp(warc_ts) div 86400").as("day"))
       graft.cells.RipleyK.knox(pts, "id", "x", "y", "day",
         r = 500L, tau = 2L, maxR = 500L)

@@ -81,6 +81,14 @@ object EntryRound5au {
         .withColumn("m", TextHash.overlapVerifyUdf(col("__sa"), col("__sb")))
         .select(col("id_a"), col("id_b"), col("m"),
           size(col("__sb")).as("n_late"))
+        // The 0.8 threshold compares counts of 64-bit FNV-1a trigram
+        // hashes, not trigram strings. Two distinct trigrams with one hash
+        // merge inside a doc (n_late drops by one) or match across docs
+        // (m rises by one); either can flip a pair that sits on the
+        // boundary. The odds are about 2⁻⁶⁴ per trigram pair. q156
+        // (Containment.containmentPairs, tauMilli = 800) shares this class.
+        // Both are oracle-checked against the string-side DuckDB SQL;
+        // re-certify at the largest SF whenever the corpus grows.
         .where(col("m") * 10 >= col("n_late") * 8)
         .withColumn("src_host", col("id_a") % 97)
         .withColumn("dst_host", col("id_b") % 97)

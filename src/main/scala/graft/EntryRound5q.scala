@@ -72,7 +72,7 @@ object EntryRound5q {
       // both consume the html-extraction output — without this the
       // extraction expressions run twice over every page
       val extracted = pages.select(
-          regexp_extract(col("url"), "(\\d+)$", 1).cast("long").as("doc_id"),
+          Pages.urlId(col("url")).as("doc_id"),
           col("lang"), Html.extractText(col("html")).as("text"))
         .transform(graft.spark.PersistTracker.persist)
       val gaz = Bpe.wordDict(extracted, "text")

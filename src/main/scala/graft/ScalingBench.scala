@@ -242,7 +242,7 @@ object ScalingBench {
       // exchange keys on (pid, term) and the dictionary partial-aggregates
       // the zipf head map-side
       spark.read.parquet(tableDir)
-        .select(regexp_extract(col("url"), "(\\d+)$", 1).cast("long").as("pid"),
+        .select(Pages.urlId(col("url")).as("pid"),
           col("text"))
         .select(col("pid"), explode(split(col("text"), " ")).as("w"))
         .groupBy("pid", "w").agg(count(lit(1)).as("tf"))
@@ -250,7 +250,7 @@ object ScalingBench {
     case "clean" =>
       PipelineOps.cleanCorpusAuditWith(
         spark.read.parquet(tableDir)
-          .select(regexp_extract(col("url"), "(\\d+)$", 1).cast("long").as("pid"),
+          .select(Pages.urlId(col("url")).as("pid"),
             col("text")),
         "pid", "text",
         evalSet.get,

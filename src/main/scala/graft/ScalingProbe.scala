@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.fixtures.TextFixtures
+import graft.fixtures.{Pages, TextFixtures}
 import graft.text.PipelineOps
 
 /** Diagnostic (not a benchmark surface): decompose the `clean` scaling
@@ -34,7 +34,7 @@ object ScalingProbe {
       spark.sparkContext.setLogLevel("ERROR")
       try {
         def docs = spark.read.parquet(tableDir)
-          .select(regexp_extract(col("url"), "(\\d+)$", 1).cast("long").as("pid"),
+          .select(Pages.urlId(col("url")).as("pid"),
             col("text"))
         def bench = TextFixtures.benchmarkNgrams(spark, sfDir)
 

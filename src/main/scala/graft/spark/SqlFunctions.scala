@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Cast, CreateArray, Expression,
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, Decimal, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
-import graft.spark.expressions.{CellEncodeExpr, CoverCellsExpr, GeohashExpr, LuhnValid, MultiPatternCounts, NfcNormalize, PointInPolygonStatus}
+import graft.spark.expressions.{CellEncodeExpr, CoverCellsExpr, GeohashExpr, LuhnValid, MultiPatternCounts, NfcNormalize, PointInPolygonStatus, TrailingDigits}
 
 /** SQL surface for the engine's native kernels: registers the codegen'd
   * Catalyst expressions as SQL functions so `spark.sql("SELECT
@@ -120,6 +120,13 @@ object SqlFunctions {
     ("graft_multi_pattern_counts", classOf[MultiPatternCounts],
       multiPatternCounts),
     ("graft_luhn_valid", classOf[LuhnValid], luhnValid),
+    // graft_trailing_digits(s): the native twin of
+    // regexp_extract(s, '(\\d+)$', 1), the page-id parse of Pages.urlId
+    ("graft_trailing_digits", classOf[TrailingDigits],
+      (args: Seq[Expression]) => {
+        require(args.length == 1, "graft_trailing_digits(s)")
+        TrailingDigits(args(0))
+      }),
     ("graft_nfc", classOf[NfcNormalize],
       (args: Seq[Expression]) => {
         require(args.length == 1, "graft_nfc(s)")

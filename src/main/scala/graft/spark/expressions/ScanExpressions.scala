@@ -1,9 +1,9 @@
 package graft.spark.expressions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.text.AhoCorasick
 
@@ -71,6 +71,64 @@ case class LuhnValid(child: Expression) extends UnaryExpression {
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, s =>
       s"graft.spark.expressions.LuhnKernel.valid($s)")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** Byte-level twin of `regexp_extract(s, "(\\d+)$", 1)`. Java's `\d` is
+  * ASCII `[0-9]`, and a non-multiline `$` matches at the end of the input
+  * or just before one final line terminator (`\n`, `\r`, `\r\n`, U+0085,
+  * U+2028, U+2029). So the match is the maximal ASCII digit run ending at
+  * that anchor, and "" when there is none. The regex runs on the decoded
+  * String, where invalid UTF-8 becomes U+FFFD; the decoder never folds an
+  * ASCII byte or a terminator's lead byte (C2, E2) into a malformed
+  * sequence, so the digits and terminator it sees are the bytes seen here. */
+object TrailingDigitsKernel {
+  def extract(s: UTF8String): UTF8String = {
+    val end = anchor(s)
+    var start = end
+    while (start > 0 && isDigit(s.getByte(start - 1))) start -= 1
+    if (start == end) UTF8String.EMPTY_UTF8
+    else s.copyUTF8String(start, end - 1)
+  }
+
+  private def isDigit(b: Byte): Boolean = b >= '0' && b <= '9'
+
+  /** Byte offset where `$` can close a digit run: before a final line
+    * terminator if there is one, else the end of the input. */
+  private def anchor(s: UTF8String): Int = {
+    val n = s.numBytes
+    def at(i: Int): Int = if (i >= 0) s.getByte(i) & 0xff else -1
+    at(n - 1) match {
+      case 0x0a => if (at(n - 2) == 0x0d) n - 2 else n - 1     // \r\n, \n
+      case 0x0d => n - 1                                        // \r
+      case 0x85 if at(n - 2) == 0xc2 => n - 2                   // U+0085
+      case 0xa8 | 0xa9 if at(n - 2) == 0x80 && at(n - 3) == 0xe2 =>
+        n - 3                                                   // U+2028/9
+      case _ => n
+    }
+  }
+}
+
+/** trailing_digits(s): String — the page-id parse, `regexp_extract(s,
+  * "(\\d+)$", 1)` without `java.util.regex`: no String conversion and no
+  * Matcher per row. Null-intolerant like the regex, so a filter over it
+  * still infers `isnotnull(s)`. */
+case class TrailingDigits(child: Expression)
+    extends UnaryExpression with ImplicitCastInputTypes {
+
+  override def inputTypes: Seq[DataType] = Seq(StringType)
+  override def dataType: DataType = StringType
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "trailing_digits"
+
+  override protected def nullSafeEval(s: Any): Any =
+    TrailingDigitsKernel.extract(s.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, s =>
+      s"graft.spark.expressions.TrailingDigitsKernel.extract($s)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

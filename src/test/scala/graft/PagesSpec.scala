@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, functions => F}
+import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import graft.fixtures.{Pages, TpchGeo}
@@ -42,6 +42,30 @@ class PagesSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(java.util.Arrays.equals(r.getAs[Array[Byte]](2), h0),
         s"html bytes mutated for $url")
     }
+  }
+
+  test("geotag parses the id natively and tags the same rows as the regex") {
+    val pages = Pages.pages(spark, sfDir)
+    val tagged = Pages.geotag(pages)
+    tagged.select("url", "x", "y").collect()
+    val plan = tagged.queryExecution.executedPlan.toString
+    assert(plan.contains("trailing_digits"), plan)
+    assert(!plan.contains("regexp_extract"), plan)
+
+    // the formulation geotag replaced, with java.util.regex
+    val byRegex = pages
+      .withColumn("__id",
+        F.regexp_extract(F.col("url"), "(\\d+)$", 1).cast("long"))
+      .withColumn("xi", F.expr("(__id * 48271) % 8000"))
+      .withColumn("yi", F.expr("(__id * 16807) % 8000"))
+      .where(F.expr("xi % 500 != 0 AND yi % 500 != 0"))
+      .select(F.col("url"), F.col("xi").cast("double").as("x"),
+        F.col("yi").cast("double").as("y"))
+    def rows(df: DataFrame) =
+      df.select("url", "x", "y").collect().map(_.toString).sorted.toSeq
+    val expected = rows(byRegex)
+    assert(expected.nonEmpty)
+    assert(rows(tagged) == expected)
   }
 
   test("pages surrogate is deterministic across runs and fracs sum to 1 per county") {

@@ -1,9 +1,11 @@
 package graft.spark
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import graft.cells.{CellDomain, CellIndex}
+import graft.fixtures.Pages
 
 /** The SQL front door must plan the SAME kernels as the DataFrame API:
   * value parity with CellIndex/Geo on deterministic points, literal-arg
@@ -104,6 +106,25 @@ class SqlFunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().head
     assert(got.getString(0) === "ezs42")
     assert(got.getString(1) === "s")
+  }
+
+  test("graft_trailing_digits agrees with the Pages.urlId builder") {
+    val s = spark
+    import s.implicits._
+    val urls = (0 until 200).map(i => s"https://host${i % 97}.example.org/doc/$i") ++
+      Seq("https://host1.example.org/doc/0042", "doc/7\n", "doc/8\r\n", "9" * 18)
+    urls.toDF("url").createOrReplaceTempView("urls_sqlfn")
+    val viaSql = s.sql(
+      "SELECT url, CAST(graft_trailing_digits(url) AS BIGINT) FROM urls_sqlfn")
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val viaBuilder = s.table("urls_sqlfn")
+      .select(col("url"), Pages.urlId(col("url")))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(viaSql == viaBuilder)
+    assert(viaSql("doc/8\r\n") == 8L && viaSql("https://host1.example.org/doc/0042") == 42L)
+    assert(s.sql("SELECT graft_trailing_digits('doc/12x'), " +
+      "graft_trailing_digits(CAST(NULL AS STRING))").collect().head.toSeq ==
+      Seq("", null))
   }
 
   test("graft_nfc composes decomposed accents from SQL") {
