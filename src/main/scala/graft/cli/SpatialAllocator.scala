@@ -511,8 +511,8 @@ object SpatialAllocator {
         val out = inType match {
           case "Point" | "PointFile" =>
             SpatialJoin.overlayPoints(input, mask, domain, zres)
-          case "Line" => SpatialJoin.overlayLines(input, mask, domain, zres)
-          case _ => SpatialJoin.overlayPolys(input, mask, domain, zres)
+          case "Line" => SpatialJoin.overlayLines(input, mask)
+          case _ => SpatialJoin.overlayPolys(input, mask)
         }
         // OVERLAY_OUT_CELLID (overlay.c:155-190): append grid COL/ROW
         val withCell =

@@ -116,68 +116,6 @@ object GeoFunctions {
     f(x, y)
   }
 
-  /** Ancestor expansion of an adaptive bbox cover (shared by the polygon
-    * and line multi-level joins). below=0 includes the cells themselves;
-    * below=1 strict ancestors only. */
-  private def bboxCoverAncestors(b: graft.geom.Geo.BBox, d: CellDomain,
-                                 maxRes: Int, maxCells: Int,
-                                 below: Int): Array[Long] = {
-    val cover = CellIndex.adaptiveCover(b, d, maxRes, maxCells)
-    val out = scala.collection.mutable.LinkedHashSet.empty[Long]
-    cover.foreach { c =>
-      val lvl = CellIndex.resolutionOf(c)
-      val (cx, cy) = CellIndex.cellCoords(c)
-      var r = 0
-      while (r <= lvl - below) {
-        out += (r.toLong << 58) |
-          CellIndex.interleave(cx >> (lvl - r), cy >> (lvl - r))
-        r += 1
-      }
-    }
-    out.toArray
-  }
-
-  /** All ancestors (levels `lo`..cell's own level − `below`) of every cell in
-    * an adaptive cover — the probe keys of a multi-level polygon join.
-    * below=0 includes the cells themselves; below=1 strict ancestors only. */
-  def adaptiveCoverAncestors(geom: Column, d: CellDomain, maxRes: Int,
-                             maxCells: Int, below: Int): Column = {
-    val f = udf((rings: Seq[Seq[Double]]) =>
-      bboxCoverAncestors(Geo.bboxOfPolygon(rings.map(_.toArray).toArray),
-        d, maxRes, maxCells, below)).withName("poly_adaptive_cover_ancestors")
-    f(geom)
-  }
-
-  /** Adaptive cover of a polyline's bbox (line twin of
-    * polyAdaptiveCoverCells). */
-  def lineAdaptiveCoverCells(line: Column, d: CellDomain, maxRes: Int,
-                             maxCells: Int = 4): Column = {
-    val f = udf((l: Seq[Double]) =>
-      CellIndex.adaptiveCover(Geo.bboxOfRing(l.toArray), d, maxRes, maxCells))
-      .withName("line_adaptive_cover_cells")
-    f(line)
-  }
-
-  /** Ancestor probe keys of a polyline's adaptive cover (line twin of
-    * adaptiveCoverAncestors). */
-  def lineAdaptiveCoverAncestors(line: Column, d: CellDomain, maxRes: Int,
-                                 maxCells: Int, below: Int): Column = {
-    val f = udf((l: Seq[Double]) =>
-      bboxCoverAncestors(Geo.bboxOfRing(l.toArray), d, maxRes, maxCells, below))
-      .withName("line_adaptive_cover_ancestors")
-    f(line)
-  }
-
-  /** Reference-point dedup at the MATCHED CELL'S OWN level (multi-level
-    * joins): true only in the canonical cell at that cell's resolution. */
-  def isCanonicalCellBBAtCellRes(aBB: Column, bBB: Column, cell: Column,
-                                 d: CellDomain): Column = {
-    val f = udf((a: Seq[Double], b: Seq[Double], c: Long) =>
-      CellIndex.encode(math.max(a(0), b(0)), math.max(a(1), b(1)),
-        d, CellIndex.resolutionOf(c)) == c).withName("is_canonical_cell_at_cell_res")
-    f(aBB, bBB, cell)
-  }
-
   // --------------------------------------------- exact kernels (UDF tier)
 
   /** Reference-semantics point-in-polygon (EDGE in, VTX excluded, hole

@@ -1,11 +1,11 @@
 package graft.spark
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Cast, CreateArray, Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Cast, CreateArray, Expression, Literal}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, Decimal, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+import graft.cells.CellIndex
 import graft.spark.expressions.{CellEncodeExpr, CoverCellsExpr, GeohashExpr, LuhnValid, MultiPatternCounts, NfcNormalize, PointInPolygonStatus, TrailingDigits}
 
 /** SQL surface for the engine's native kernels: registers the codegen'd
@@ -34,12 +34,25 @@ object SqlFunctions {
       s"$fn: domain argument must be a numeric literal, got $other")
   }
 
-  private def litInt(e: Expression, fn: String): Int = e match {
-    case Literal(v: Int, _)  => v
-    case Literal(v: Long, _) => v.toInt
-    case other => throw new IllegalArgumentException(
-      s"$fn: resolution argument must be an integer literal, got $other")
+  /** An integer literal within [lo, hi]: a BIGINT literal is not narrowed,
+    * and a value outside the kernel's range fails at analysis instead of
+    * aliasing (cell ids of two resolutions collide above MaxRes) or
+    * failing mid-task. */
+  private def litInt(e: Expression, fn: String, what: String,
+                     lo: Int, hi: Int): Int = {
+    val v = e match {
+      case Literal(v: Int, _)  => v.toLong
+      case Literal(v: Long, _) => v
+      case other => throw new IllegalArgumentException(
+        s"$fn: $what argument must be an integer literal, got $other")
+    }
+    if (v < lo || v > hi) throw new IllegalArgumentException(
+      s"$fn: $what argument must be in [$lo, $hi], got $v")
+    v.toInt
   }
+
+  private def litRes(e: Expression, fn: String): Int =
+    litInt(e, fn, "resolution", 0, CellIndex.MaxRes)
 
   private def d(e: Expression): Expression = Cast(e, DoubleType)
   private val ringsType = ArrayType(ArrayType(DoubleType))
@@ -54,7 +67,7 @@ object SqlFunctions {
       litDouble(args(3), "graft_cell_encode"),
       litDouble(args(4), "graft_cell_encode"),
       litDouble(args(5), "graft_cell_encode"),
-      litInt(args(6), "graft_cell_encode"))
+      litRes(args(6), "graft_cell_encode"))
   }
 
   /** graft_pip_status(x, y, rings) → INT 0 OUT / 1 IN (edges contained) /
@@ -74,13 +87,14 @@ object SqlFunctions {
       litDouble(args(2), "graft_cover_cells"),
       litDouble(args(3), "graft_cover_cells"),
       litDouble(args(4), "graft_cover_cells"),
-      litInt(args(5), "graft_cover_cells"))
+      litRes(args(5), "graft_cover_cells"))
   }
 
   /** graft_geohash(lon, lat, precision) → STRING base-32 geohash. */
   val geohash: Seq[Expression] => Expression = { args =>
     require(args.length == 3, "graft_geohash(lon, lat, precision)")
-    GeohashExpr(d(args(0)), d(args(1)), litInt(args(2), "graft_geohash"))
+    GeohashExpr(d(args(0)), d(args(1)),
+      litInt(args(2), "graft_geohash", "precision", 1, 12))
   }
 
   private def litStrings(e: Expression, fn: String): Seq[String] = e match {
@@ -111,43 +125,29 @@ object SqlFunctions {
     LuhnValid(Cast(args(0), StringType))
   }
 
-  /** (name, class-for-doc, builder) rows — one per SQL function. */
-  val all: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
-    ("graft_cell_encode", classOf[CellEncodeExpr], cellEncode),
-    ("graft_pip_status", classOf[PointInPolygonStatus], pipStatus),
-    ("graft_cover_cells", classOf[CoverCellsExpr], coverCells),
-    ("graft_geohash", classOf[GeohashExpr], geohash),
-    ("graft_multi_pattern_counts", classOf[MultiPatternCounts],
-      multiPatternCounts),
-    ("graft_luhn_valid", classOf[LuhnValid], luhnValid),
+  /** (name, builder) rows — one per SQL function. */
+  val all: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    ("graft_cell_encode", cellEncode),
+    ("graft_pip_status", pipStatus),
+    ("graft_cover_cells", coverCells),
+    ("graft_geohash", geohash),
+    ("graft_multi_pattern_counts", multiPatternCounts),
+    ("graft_luhn_valid", luhnValid),
     // graft_trailing_digits(s): the native twin of
     // regexp_extract(s, '(\\d+)$', 1), the page-id parse of Pages.urlId
-    ("graft_trailing_digits", classOf[TrailingDigits],
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "graft_trailing_digits(s)")
-        TrailingDigits(args(0))
-      }),
-    ("graft_nfc", classOf[NfcNormalize],
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "graft_nfc(s)")
-        NfcNormalize(Cast(args(0), StringType))
-      }))
-
-  def info(name: String, cls: Class[_]): ExpressionInfo =
-    new ExpressionInfo(cls.getCanonicalName, name)
+    ("graft_trailing_digits", (args: Seq[Expression]) => {
+      require(args.length == 1, "graft_trailing_digits(s)")
+      TrailingDigits(args(0))
+    }),
+    ("graft_nfc", (args: Seq[Expression]) => {
+      require(args.length == 1, "graft_nfc(s)")
+      NfcNormalize(Cast(args(0), StringType))
+    }))
 
   /** Register on an already-built session (temp functions; idempotent). */
   def register(spark: SparkSession): Unit =
-    all.foreach { case (name, _, builder) =>
+    all.foreach { case (name, builder) =>
       spark.sessionState.functionRegistry
         .createOrReplaceTempFunction(name, builder, "built-in")
-    }
-
-  /** Extension-point descriptions for [[graft.spark.rules.GraftExtensions]]
-    * (`spark.sql.extensions` sessions get the functions at build time). */
-  def descriptions: Seq[(FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression)] =
-    all.map { case (name, cls, builder) =>
-      (FunctionIdentifier(name), info(name, cls), builder)
     }
 }

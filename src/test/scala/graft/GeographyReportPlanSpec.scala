@@ -24,7 +24,7 @@ class GeographyReportPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("q300 broadcasts the county cover and keeps pip native") {
     val df = EntryRound5bb.queries("q300_geography_report")(
-      spark, "/root/testdata/sf0.001")
+      spark, graft.TestData.sf("0.001"))
     val plan = df.queryExecution.executedPlan.toString
     graft.spark.PersistTracker.drain()
     assert(plan.contains("BroadcastHashJoin"),

@@ -12,7 +12,7 @@ import graft.operators.SpatialJoin
   * the DuckDB oracle performs. */
 class PagesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private val sfDir = "/root/testdata/sf0.001"
+  private val sfDir = graft.TestData.sf("0.001")
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", 4)

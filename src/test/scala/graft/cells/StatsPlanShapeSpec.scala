@@ -12,7 +12,7 @@ import org.scalatest.BeforeAndAfterAll
 class StatsPlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
-  private val dir = "/root/testdata/sf0.001"
+  private val dir = graft.TestData.sf("0.001")
 
   override def beforeAll(): Unit = {
     spark = SparkSession.builder().master("local[4]")

@@ -11,7 +11,7 @@ import graft.fixtures.TpchGeo
   * SurrogateTool meta-pipeline (SrgTool) on fixture layers. */
 class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private val sfDir = "/root/testdata/sf0.001"
+  private val sfDir = graft.TestData.sf("0.001")
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]").config("spark.sql.shuffle.partitions", 4)
     .config("spark.ui.enabled", "false").appName("cli-spec").getOrCreate()

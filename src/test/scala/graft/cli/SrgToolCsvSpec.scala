@@ -16,7 +16,7 @@ import graft.sources.Shapefile
   * → SMOKE files + SRGDESC, like SurrogateTool.java end-to-end. */
 class SrgToolCsvSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private val sfDir = "/root/testdata/sf0.001"
+  private val sfDir = graft.TestData.sf("0.001")
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]").config("spark.sql.shuffle.partitions", 4)
     .config("spark.ui.enabled", "false").appName("srgtoolcsv-spec").getOrCreate()

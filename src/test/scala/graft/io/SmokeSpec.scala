@@ -119,7 +119,7 @@ class SmokeSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("distributed writeParts round-trips through Smoke.parse") {
     import spark.implicits._
     val srg = graft.operators.Surrogate.pointSurrogate(
-      graft.fixtures.TpchGeo.points(spark, "/root/testdata/sf0.001"),
+      graft.fixtures.TpchGeo.points(spark, graft.TestData.sf("0.001")),
       graft.fixtures.TpchGeo.counties(spark),
       graft.fixtures.TpchGeo.grid, graft.fixtures.TpchGeo.domain,
       graft.fixtures.TpchGeo.zres, 100)
@@ -175,7 +175,7 @@ class SmokeSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("#SKIPPED rows flow end-to-end from the pipeline (surrogate.c:434-452)") {
     import graft.fixtures.TpchGeo
     import graft.operators.Surrogate
-    val sf = "/root/testdata/sf0.001"
+    val sf = graft.TestData.sf("0.001")
     // pick a threshold strictly between the smallest and largest county
     // point count so the run has BOTH skipped and kept counties
     val counts = graft.operators.SpatialJoin

@@ -64,7 +64,7 @@ class KMeansIntSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("one step over the quantized embeddings fixture is deterministic across partitionings") {
     val s = spark
     val q = Quantize.int8(
-      s.read.parquet("/root/testdata/sf0.001/embeddings.parquet"),
+      s.read.parquet(graft.TestData.sf("0.001") + "/embeddings.parquet"),
       "vec_id", "embedding").localCheckpoint(true)
     import org.apache.spark.sql.functions._
     val cents = q.where(col("id") < 8)

@@ -9,7 +9,7 @@ import org.scalatest.BeforeAndAfterAll
   * recall must clear a floor on the driver-generated embeddings. */
 class SimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private val sfDir = "/root/testdata/sf0.01"
+  private val sfDir = graft.TestData.sf("0.01")
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]").config("spark.sql.shuffle.partitions", 4)
     .config("spark.ui.enabled", "false").appName("sim-spec").getOrCreate()

@@ -17,7 +17,7 @@ class MultimodalSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def media() = {
     import spark.implicits._
-    spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    spark.read.parquet(graft.TestData.sf("0.001") + "/documents.parquet")
       .select(col("doc_id"), encode(col("text"), "UTF-8").as("media"))
   }
 

@@ -7,11 +7,12 @@ import org.scalatest.BeforeAndAfterAll
 import graft.fixtures.TpchGeo
 import graft.operators.Surrogate
 
-/** Join-strategy invariants: salting and broadcast-vs-shuffle must never
-  * change results — only the physical plan. */
+/** Join invariants: hot-cell salting and the multi-resolution point join
+  * must give the fixed-resolution results (only the physical plan moves),
+  * and the overlays keep exactly the inputs that meet the mask. */
 class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private val sfDir = "/root/testdata/sf0.001"
+  private val sfDir = graft.TestData.sf("0.001")
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]").config("spark.sql.shuffle.partitions", 4)
     .config("spark.ui.enabled", "false").appName("sjoin-spec").getOrCreate()
@@ -26,18 +27,6 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("hot-cell salting (saltFactor 4) is result-identical to unsalted") {
     assert(srg(1) == srg(4))
-  }
-
-  test("shuffle-hash path (broadcastPolys=false) matches broadcast path") {
-    val pts = TpchGeo.points(spark, sfDir)
-    val polys = TpchGeo.counties(spark)
-    val a = SpatialJoin.pointInPoly(pts, polys, TpchGeo.domain, TpchGeo.zres,
-        broadcastPolys = true)
-      .select("o_orderkey", "fips").collect().map(_.toString).sorted.toSeq
-    val b = SpatialJoin.pointInPoly(pts, polys, TpchGeo.domain, TpchGeo.zres,
-        broadcastPolys = false)
-      .select("o_orderkey", "fips").collect().map(_.toString).sorted.toSeq
-    assert(a == b && a.nonEmpty)
   }
 
   test("adaptive multi-resolution join matches fixed-res and bounds explode") {
@@ -65,25 +54,6 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"fixed=$nFixed adaptive=$nAdaptive")
   }
 
-  test("adaptive poly×poly fragments match fixed-res on a mixed-size layer") {
-    import spark.implicits._
-    val tracts = TpchGeo.tracts(spark, sfDir)
-    // mixed B side: 16 counties + one huge polygon + one tiny one
-    val mixed = TpchGeo.counties(spark).unionByName(Seq(
-        ("BIG",  Seq(Seq(0.0, 0, 8000, 0, 8000, 8000, 0, 8000))),
-        ("TINY", Seq(Seq(700.0, 700, 790, 700, 790, 790, 700, 790))))
-      .toDF("fips", "geom"))
-      .withColumnRenamed("geom", "bgeom")
-    def key(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("p_partkey"), col("fips"), col("frag_area"))
-      .collect().map(_.toString).sorted.toSeq
-    val fixed = key(SpatialJoin.polyPolyFragments(
-      tracts, mixed, TpchGeo.domain, TpchGeo.zres, keepFragGeom = false))
-    val adaptive = key(SpatialJoin.polyPolyFragmentsAdaptive(
-      tracts, mixed, TpchGeo.domain, TpchGeo.zres, keepFragGeom = false))
-    assert(adaptive == fixed && adaptive.nonEmpty)
-  }
-
   test("overlayPolys / overlayLines semi-join semantics") {
     import spark.implicits._
     val mask = Seq(Tuple1(Seq(Seq(500.0, 500, 2500, 500, 2500, 2500, 500, 2500))))
@@ -94,7 +64,7 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
       ("overlap", Seq(Seq(2400.0, 2400, 2600, 2400, 2600, 2600, 2400, 2600))),
       ("out",     Seq(Seq(4000.0, 4000, 4200, 4000, 4200, 4200, 4000, 4200)))
     ).toDF("pid", "geom")
-    val hits = SpatialJoin.overlayPolys(polys, mask, TpchGeo.domain, TpchGeo.zres)
+    val hits = SpatialJoin.overlayPolys(polys, mask)
       .select("pid").collect().map(_.getString(0)).sorted.toSeq
     assert(hits == Seq("in", "overlap"))
 
@@ -102,9 +72,32 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
       ("cross", Seq(0.0, 1000, 3000, 1000)),
       ("miss",  Seq(0.0, 4000, 3000, 4000))
     ).toDF("lid", "line")
-    val lhits = SpatialJoin.overlayLines(lines, mask, TpchGeo.domain, TpchGeo.zres)
+    val lhits = SpatialJoin.overlayLines(lines, mask)
       .select("lid").collect().map(_.getString(0)).toSeq
     assert(lhits == Seq("cross"))
+  }
+
+  test("overlay mask scan: past a bbox miss, and bbox hits the kernel rejects") {
+    import spark.implicits._
+    // mask 0: a square far from every input below; mask 1: an L whose
+    // bbox (4000..6000)² holds a notch (x > 4500 and y > 4500) outside it
+    val mask = Seq(
+      Tuple1(Seq(Seq(500.0, 500, 1500, 500, 1500, 1500, 500, 1500))),
+      Tuple1(Seq(Seq(4000.0, 4000, 6000, 4000, 6000, 4500, 4500, 4500,
+        4500, 6000, 4000, 6000)))
+    ).toDF("geom")
+    val polys = Seq(
+      ("arm",   Seq(Seq(4100.0, 4100, 4300, 4100, 4300, 4300, 4100, 4300))),
+      ("notch", Seq(Seq(5000.0, 5000, 5500, 5000, 5500, 5500, 5000, 5500)))
+    ).toDF("pid", "geom")
+    assert(SpatialJoin.overlayPolys(polys, mask)
+      .select("pid").collect().map(_.getString(0)).toSeq == Seq("arm"))
+    val lines = Seq(
+      ("arm",   Seq(3800.0, 4200, 4400, 4200)),
+      ("notch", Seq(5000.0, 5000, 5800, 5800))
+    ).toDF("lid", "line")
+    assert(SpatialJoin.overlayLines(lines, mask)
+      .select("lid").collect().map(_.getString(0)).toSeq == Seq("arm"))
   }
 
   test("overlay mask guard rejects fact-table-sized masks") {
@@ -117,23 +110,8 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
         " CAST(id+1 AS DOUBLE), 1.0D, CAST(id AS DOUBLE), 1.0D))").as("geom"))
     val polys = Seq(Seq(Seq(0.0, 0, 4, 0, 4, 4, 0, 4))).toDF("geom")
     val ex = intercept[IllegalArgumentException] {
-      SpatialJoin.overlayPolys(polys, huge, graft.fixtures.TpchGeo.domain, 4)
+      SpatialJoin.overlayPolys(polys, huge)
     }
     assert(ex.getMessage.contains("cell-join"))
-  }
-
-  test("adaptive line-poly fragments match the fixed-resolution join exactly") {
-    import graft.fixtures.TpchGeo
-    val roads = TpchGeo.roads(spark, sfDir)
-    val counties = TpchGeo.counties(spark)
-    def keys(df: org.apache.spark.sql.DataFrame) =
-      df.select("s_suppkey", "fips", "frag_len").collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet
-    val fixed = keys(SpatialJoin.linePolyFragments(
-      roads, counties, TpchGeo.domain, TpchGeo.zres))
-    val adaptive = keys(SpatialJoin.linePolyFragmentsAdaptive(
-      roads, counties, TpchGeo.domain, TpchGeo.zres))
-    assert(fixed.nonEmpty && adaptive == fixed,
-      s"missing=${(fixed -- adaptive).take(3)} extra=${(adaptive -- fixed).take(3)}")
   }
 }

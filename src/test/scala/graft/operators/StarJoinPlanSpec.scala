@@ -23,7 +23,7 @@ class StarJoinPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("q280 plans 3 broadcast joins and no sort-merge join") {
     val df = graft.EntryRound5au.queries("q280_star_join")(
-      spark, "/root/testdata/sf0.001")
+      spark, graft.TestData.sf("0.001"))
     val plan = df.queryExecution.executedPlan.toString
     val nBroadcast = "BroadcastHashJoin".r.findAllIn(plan).size
     assert(nBroadcast == 3, s"expected 3 broadcast joins in:\n$plan")

@@ -82,7 +82,7 @@ class SurrogatePlanSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SurrogatePlanSpec {
   /** TESTDATA.md's sf0.001 tables. */
-  val SfDir = "/root/testdata/sf0.001"
+  val SfDir = graft.TestData.sf("0.001")
 
   /** Every node of an executed plan, pre-order, through adaptive wrappers,
     * query stages, reused exchanges and the plans of cached relations. */

@@ -22,7 +22,7 @@ class PartitionPruningSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("tile-partitioned layer scans only the tiles the query touches") {
     val dir = Files.createTempDirectory("tiles").toString
     // tracts partitioned by a 4×4 tile id derived from their origin
-    TpchGeo.tracts(spark, "/root/testdata/sf0.001")
+    TpchGeo.tracts(spark, graft.TestData.sf("0.001"))
       .withColumn("tile",
         (floor(col("geom").getItem(0).getItem(1) / 2048) * 4 +
          floor(col("geom").getItem(0).getItem(0) / 2048)).cast("int"))
@@ -47,7 +47,7 @@ class PartitionPruningSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("q45 BELD allocate's scan carries the tile partition filter") {
     val df = graft.SparkEntry.queries("q45_beld_allocate")(
-      spark, "/root/testdata/sf0.001")
+      spark, graft.TestData.sf("0.001"))
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.matches("(?s).*PartitionFilters: \\[tile#\\d+ IN \\(0,1,4,5\\)\\].*"),
       s"tile IN filter not pushed to partitions:\n$plan")

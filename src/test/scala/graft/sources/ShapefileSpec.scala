@@ -185,7 +185,7 @@ class ShapefileSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("polySurrogate fed from a .shp/.dbf pair matches the in-memory path") {
     import graft.fixtures.TpchGeo
-    val sf = "/root/testdata/sf0.001"
+    val sf = graft.TestData.sf("0.001")
     val tracts = TpchGeo.tracts(spark, sf)
     val base = tmpBase("tracts")
     Shapefile.writePolygons(tracts, base, "geom",

@@ -70,12 +70,29 @@ class SqlFunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("non-literal domain arguments are rejected with a clear error") {
     val s = spark
-    val e = intercept[Exception] {
-      s.sql("SELECT graft_cell_encode(1.0D, 1.0D, 0.0D, 0.0D, " +
-        "CAST(rand() * 10 AS DOUBLE), 8000.0D, 4)").collect()
+    def rejected(call: String): String =
+      intercept[Exception](s.sql(s"SELECT $call").collect()).getMessage
+    val e = rejected("graft_cell_encode(1.0D, 1.0D, 0.0D, 0.0D, " +
+      "CAST(rand() * 10 AS DOUBLE), 8000.0D, 4)")
+    assert(e.contains("numeric literal") || e.toLowerCase.contains("literal"))
+    // literals outside the kernel's range; 4294967300 = 2^32 + 4 must not
+    // narrow to res 4, and res > MaxRes would alias ids across resolutions
+    val ring = "array(array(1.0D, 1.0D, 2.0D, 1.0D, 2.0D, 2.0D))"
+    Seq(
+      "graft_cell_encode(1.0D, 1.0D, 0.0D, 0.0D, 8.0D, 8.0D, 4294967300)",
+      s"graft_cell_encode(1.0D, 1.0D, 0.0D, 0.0D, 8.0D, 8.0D, ${CellIndex.MaxRes + 1})",
+      "graft_cell_encode(1.0D, 1.0D, 0.0D, 0.0D, 8.0D, 8.0D, -1)",
+      s"graft_cover_cells($ring, 0.0D, 0.0D, 8.0D, 8.0D, ${CellIndex.MaxRes + 1})",
+      "graft_geohash(1.0D, 1.0D, 0)",
+      "graft_geohash(1.0D, 1.0D, 13)"
+    ).foreach { call =>
+      val m = rejected(call)
+      assert(m.contains("argument must be in ["), s"$call: $m")
     }
-    assert(e.getMessage.contains("numeric literal") ||
-      e.getMessage.toLowerCase.contains("literal"))
+    // the bounds themselves are accepted
+    assert(s.sql("SELECT graft_cell_encode(1.0D, 1.0D, 0.0D, 0.0D, 8.0D, 8.0D, " +
+      s"${CellIndex.MaxRes}), graft_geohash(1.0D, 1.0D, 12), " +
+      s"graft_cover_cells($ring, 0.0D, 0.0D, 8.0D, 8.0D, 0)").collect().length == 1)
   }
 
   test("SQL path stays inside whole-stage codegen") {

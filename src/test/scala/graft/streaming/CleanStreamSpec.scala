@@ -16,7 +16,7 @@ import graft.fixtures.TextFixtures
   * decontamination — are the documented batch/complete-mode path.) */
 class CleanStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private val sfDir = "/root/testdata/sf0.001"
+  private val sfDir = graft.TestData.sf("0.001")
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]").config("spark.sql.shuffle.partitions", 4)
     .config("spark.ui.enabled", "false").appName("clean-stream-spec").getOrCreate()

@@ -12,7 +12,7 @@ import graft.fixtures.{Pages, TpchGeo}
   * with identical results — plus byte-identity of text through the stream. */
 class PagesStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private val sfDir = "/root/testdata/sf0.001"
+  private val sfDir = graft.TestData.sf("0.001")
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]").config("spark.sql.shuffle.partitions", 4)
     .config("spark.ui.enabled", "false").appName("pstream-spec").getOrCreate()

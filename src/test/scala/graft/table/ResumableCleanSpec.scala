@@ -15,7 +15,7 @@ import graft.fixtures.TextFixtures
   * metrics in its manifest. */
 class ResumableCleanSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private val sfDir = "/root/testdata/sf0.001"
+  private val sfDir = graft.TestData.sf("0.001")
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]").config("spark.sql.shuffle.partitions", 4)
     .config("spark.ui.enabled", "false").appName("resumable-clean-spec").getOrCreate()

@@ -13,7 +13,7 @@ import graft.operators.{SpatialJoin, Surrogate}
   * table is identical. */
 class ResumablePipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private val sfDir = "/root/testdata/sf0.001"
+  private val sfDir = graft.TestData.sf("0.001")
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]").config("spark.sql.shuffle.partitions", 4)
     .config("spark.ui.enabled", "false").appName("resume-spec").getOrCreate()

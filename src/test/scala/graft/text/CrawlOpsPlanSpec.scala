@@ -22,7 +22,7 @@ class CrawlOpsPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def docs = spark.read
-    .parquet("/root/testdata/sf0.001/documents.parquet")
+    .parquet(graft.TestData.sf("0.001") + "/documents.parquet")
 
   test("boilerplateChunks: no exchange carries document text or tokens") {
     val plan = CrawlOps.boilerplateChunks(
@@ -75,7 +75,7 @@ class CrawlOpsPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("q133 trending terms: vocabulary rank is salted — the first window " +
        "partitions by salt, no full-vocab single-partition sort") {
     val out = graft.SparkEntry.queries("q133_trending_terms")(
-      spark, "/root/testdata/sf0.001")
+      spark, graft.TestData.sf("0.001"))
     val plan = out.queryExecution.executedPlan.toString
     val windows = plan.split("\n").filter(_.contains("windowspecdefinition"))
     assert(windows.nonEmpty)

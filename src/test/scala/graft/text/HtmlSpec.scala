@@ -76,7 +76,7 @@ class HtmlSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("byte-identity invariant: escape-wrap then extract is the identity on fixture pages") {
-    val p = graft.fixtures.Pages.htmlPages(spark, "/root/testdata/sf0.001")
+    val p = graft.fixtures.Pages.htmlPages(spark, graft.TestData.sf("0.001"))
     val bad = p.select(
         (md5(Html.extractText(col("html"))) === md5(col("text"))).as("ok"))
       .where(!col("ok")).count()

@@ -37,7 +37,7 @@ class NgramLmSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("scores are invariant under repartitioning (exact integer sums)") {
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val docs = spark.read.parquet(graft.TestData.sf("0.001") + "/documents.parquet")
     val (lm, oov) = NgramLm.trainUnigram(
       docs.where(col("doc_id") % 2 === 0), "text")
     val a = NgramLm.score(docs, "doc_id", "text", lm, oov)
@@ -57,7 +57,7 @@ class NgramLmSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("score plan: document text never enters an exchange (only tokens and integer scores move)") {
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val docs = spark.read.parquet(graft.TestData.sf("0.001") + "/documents.parquet")
     val (lm, oov) = NgramLm.trainUnigram(
       docs.where(col("doc_id") % 2 === 0), "text")
     val plan = NgramLm.score(docs, "doc_id", "text", lm, oov)
@@ -70,7 +70,7 @@ class NgramLmSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("ppl separates clean text from shuffled-vocab noise") {
     import spark.implicits._
-    val train = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val train = spark.read.parquet(graft.TestData.sf("0.001") + "/documents.parquet")
     val (lm, oov) = NgramLm.trainUnigram(train, "text")
     val probe = Seq(
       (1L, train.select("text").head().getString(0)), // in-distribution

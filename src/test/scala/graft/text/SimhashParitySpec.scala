@@ -11,7 +11,7 @@ import graft.fixtures.TextFixtures
   * (q16 is rows-only in the driver — this spec is its correctness gate.) */
 class SimhashParitySpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private val sfDir = "/root/testdata/sf0.001"
+  private val sfDir = graft.TestData.sf("0.001")
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]").config("spark.sql.shuffle.partitions", 4)
     .config("spark.ui.enabled", "false").appName("simhash-spec").getOrCreate()
