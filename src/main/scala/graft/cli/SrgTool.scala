@@ -2,8 +2,6 @@ package graft.cli
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import scala.concurrent.{Await, Future, ExecutionContext}
-import scala.concurrent.duration.Duration
 import graft.cells.CellDomain
 import graft.grid.GridSpec
 import graft.operators.{Surrogate, PostOps}
@@ -11,10 +9,12 @@ import graft.io.Smoke
 
 /** The Java SurrogateTool meta-pipeline (SurrogateTool.java:33;
   * SA_ch05_surrogate.md:94-138) as a library driver: a catalog of surrogate
-  * specs runs CONCURRENTLY on the Spark scheduler (the reference forks one
-  * srgcreate process per core — here each spec is a job submitted from its
-  * own thread; fair scheduling interleaves them), then merge / gapfill /
-  * normalize / QA post-passes, SMOKE files and an SRGDESC index. */
+  * specs, then merge / gapfill / normalize / QA post-passes, SMOKE files and
+  * an SRGDESC index. Like the reference, which writes each srgcreate result
+  * to a file that the post-pass tools then read, every generated and every
+  * normalized table is materialized once (`localCheckpoint`, at most
+  * counties × cells rows): the post-passes and sinks read those tables, so
+  * none of them re-runs a surrogate's lineage. */
 object SrgTool {
 
   sealed trait WeightKind
@@ -49,29 +49,37 @@ object SrgTool {
           denomThreshold: Double = 1e-5,
           proj: Smoke.ProjInfo = Smoke.ProjInfo()): Result = {
 
-    // generation: one Spark job chain per spec, submitted concurrently.
-    // keepSkipped: below-threshold counties ride along so the SMOKE sink
-    // can render their #SKIPPED rows (surrogate.c:434-452); post-passes
-    // and Result.srg see only live counties (the reference's downstream
-    // tools parse the text files and skip '#' comment lines)
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val generatedFull: Map[Int, DataFrame] = Await.result(
-      Future.traverse(specs) { s =>
-        Future {
-          val df = s.kind match {
-            case PointW => Surrogate.pointSurrogate(s.weights, counties,
-              grid, domain, res, s.code, s.weightAttr, denomThreshold,
-              keepSkipped = true)
-            case LineW => Surrogate.lineSurrogate(s.weights, counties,
-              grid, domain, res, s.code, s.weightAttr, denomThreshold,
-              keepSkipped = true)
-            case PolyW => Surrogate.polySurrogate(s.weights, counties,
-              grid, domain, res, s.code, s.weightAttr, denomThreshold,
-              keepSkipped = true)
-          }
-          s.code -> df
-        }
-      }, Duration.Inf).toMap
+    // a repeated output code would silently keep only the last table;
+    // a gapfill may reuse a spec's, merge's or concat's code (a gapfill over
+    // its own merge or spec), but not another gapfill's
+    val outCodes = specs.map(_.code) ++ merges.map(_.outCode) ++
+      concats.map(_.outCode)
+    val fillCodes = gapfills.map(_.outCode)
+    val dups = (outCodes.diff(outCodes.distinct) ++
+      fillCodes.diff(fillCodes.distinct)).distinct.sorted
+    require(dups.isEmpty, s"surrogate code(s) ${dups.mkString(", ")} " +
+      "defined more than once across specs, merges and concats, or by two gapfills")
+
+    // generation, materialized once per spec. keepSkipped: below-threshold
+    // counties ride along so the SMOKE sink can render their #SKIPPED rows
+    // (surrogate.c:434-452); post-passes and Result.srg see only live
+    // counties (the reference's downstream tools parse the text files and
+    // skip '#' comment lines). ordered = false here and below: normalize's
+    // window re-partitions the rows and Smoke.write sorts each county.
+    val generatedFull: Map[Int, DataFrame] = specs.map { s =>
+      val df = s.kind match {
+        case PointW => Surrogate.pointSurrogate(s.weights, counties,
+          grid, domain, res, s.code, s.weightAttr, denomThreshold,
+          ordered = false, keepSkipped = true)
+        case LineW => Surrogate.lineSurrogate(s.weights, counties,
+          grid, domain, res, s.code, s.weightAttr, denomThreshold,
+          keepSkipped = true)
+        case PolyW => Surrogate.polySurrogate(s.weights, counties,
+          grid, domain, res, s.code, s.weightAttr, denomThreshold,
+          ordered = false, keepSkipped = true)
+      }
+      s.code -> df.localCheckpoint()
+    }.toMap
     val generated: Map[Int, DataFrame] = generatedFull.map { case (c, df) =>
       c -> df.where(col("denom") >= denomThreshold)
     }
@@ -92,7 +100,8 @@ object SrgTool {
     val merged = merges.map { m =>
       m.outCode -> PostOps.merge(
         resolve(generated, m.a, "merge", m.name),
-        resolve(generated, m.b, "merge", m.name), m.fa, m.fb, m.outCode)
+        resolve(generated, m.b, "merge", m.name), m.fa, m.fb, m.outCode,
+        ordered = false)
     }.toMap
     val concatenated = concats.map { c =>
       c.outCode -> c.parts.map(resolve(generated, _, "concat", c.name))
@@ -102,30 +111,32 @@ object SrgTool {
     val all0 = generated ++ merged ++ concatenated
     val filled = gapfills.map { g =>
       g.outCode -> PostOps.gapfill(
-        g.cascade.map(resolve(all0, _, "gapfill", g.name)), g.outCode)
+        g.cascade.map(resolve(all0, _, "gapfill", g.name)), g.outCode,
+        ordered = false)
     }.toMap
     val all = all0 ++ filled
 
     val normalized = all.map { case (code, df) =>
-      code -> PostOps.normalize(df, normalizeTol)
+      code -> PostOps.normalize(df, normalizeTol).localCheckpoint()
     }
 
     // QA over every table that has frac
     val union = normalized.values
       .map(_.select("srg_code", "fips", "col", "row", "frac"))
       .reduce(_ unionByName _)
-    val qaSum = PostOps.qaSummary(union)
+    val qaSum = PostOps.qaSummary(union, all.keys.toSeq.sorted)
     val qaNot1 = PostOps.qaNot1(union)
+
+    // SRGDESC names; a gapfill that reuses a code keeps that code's name
+    val names: Map[Int, String] = (gapfills.map(g => g.outCode -> g.name) ++
+      concats.map(c => c.outCode -> c.name) ++
+      merges.map(m => m.outCode -> m.name) ++
+      specs.map(s => s.code -> s.name)).toMap
 
     // sinks: SMOKE per code + SRGDESC index (SA_ch05_surrogate.md:688)
     val descRows = outDir.map { dir =>
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
       normalized.toSeq.sortBy(_._1).map { case (code, df) =>
-        val name = specs.find(_.code == code).map(_.name)
-          .orElse(merges.find(_.outCode == code).map(_.name))
-          .orElse(concats.find(_.outCode == code).map(_.name))
-          .orElse(gapfills.find(_.outCode == code).map(_.name))
-          .getOrElse(s"srg_$code")
         val path = s"$dir/srg_$code.txt"
         // gapfilled/merged tables may lack QA fields — write plain rows then
         // (the reference's no-QA output mode, surrogate.c:476-519)
@@ -140,9 +151,9 @@ object SrgTool {
           .map(sk => full.unionByName(sk)).getOrElse(full)
         Smoke.write(sinkDf, grid, proj, path, withQa = hasQa,
           denomThreshold = denomThreshold)
-        (code, name, path)
+        (code, names(code), path)
       }
-    }.getOrElse(normalized.keys.toSeq.sorted.map(c => (c, s"srg_$c", "")))
+    }.getOrElse(normalized.keys.toSeq.sorted.map(c => (c, names(c), "")))
 
     outDir.foreach { dir =>
       val lines = "#SRGDESC" +: descRows.map { case (c, n, p) => s"$c,$n,$p" }
@@ -152,8 +163,8 @@ object SrgTool {
 
     // release the per-surrogate cached intermediates (W∩D fragments,
     // per-cell matrices) — a catalog run generates many; without this the
-    // cached DISK blocks accumulate for the whole session. Returned
-    // DataFrames stay valid (they recompute if re-used after the drain).
+    // cached DISK blocks accumulate for the whole session. Nothing reads
+    // them again: the returned tables are the normalized checkpoints.
     if (outDir.isDefined) graft.spark.PersistTracker.drain()
 
     Result(normalized, qaSum, qaNot1, descRows)
