@@ -78,20 +78,17 @@ object EntryAlloc {
     }),
 
     // QA threshold report (qa/Threshold.java:9): rows with frac ≥ 0.5.
-    // ordered = false on the internal build: the QA report re-sorts itself
     "q36_qa_threshold" -> ((s, dir) =>
       PostOps.qaThreshold(
         Surrogate.pointSurrogate(TpchGeo.points(s, dir), TpchGeo.counties(s),
-          grid, domain, zres, 100, ordered = false), t = 0.05)),
+          grid, domain, zres, 100), t = 0.05)),
 
-    // diffsurr: srg120 vs merged(500) — missing sides + out-of-tol rows;
-    // the diff is relational, so the internal builds skip their sorts
+    // diffsurr: srg120 vs merged(500) — missing sides + out-of-tol rows
     "q33_diffsurr" -> ((s, dir) => {
       val a = Surrogate.polySurrogate(TpchGeo.tracts(s, dir),
-        TpchGeo.counties(s), grid, domain, zres, 120, Some("p_size"),
-        ordered = false)
+        TpchGeo.counties(s), grid, domain, zres, 120, Some("p_size"))
       val b = Surrogate.pointSurrogate(TpchGeo.points(s, dir),
-        TpchGeo.counties(s), grid, domain, zres, 100, ordered = false)
+        TpchGeo.counties(s), grid, domain, zres, 100)
       PostOps.diffSurr(a, b, tol = 1e-5)
     })
   )

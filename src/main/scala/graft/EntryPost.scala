@@ -21,20 +21,14 @@ object EntryPost {
   // whole upstream surrogate pipeline (spatial join + aggregation) twice.
   // Eager localCheckpoint materializes through the codegen path once per
   // query call; the county-bounded tables are small.
-  // ordered = false: every consumer here (merge/gapfill/normalize/QA) is
-  // relational — windows define their own (row, col) order per county —
-  // so the surrogate-internal global range-sort (sampling pass + wide
-  // exchange per build, ratio()'s `ordered`) bought nothing; each QUERY's
-  // own sink keeps its explicit orderBy
   private def srg100(s: SparkSession, dir: String): DataFrame =
     Surrogate.pointSurrogate(TpchGeo.points(s, dir), TpchGeo.counties(s),
-      grid, domain, zres, srgCode = 100, ordered = false)
+      grid, domain, zres, srgCode = 100)
       .localCheckpoint(true)
 
   private def srg120(s: SparkSession, dir: String): DataFrame =
     Surrogate.polySurrogate(TpchGeo.tracts(s, dir), TpchGeo.counties(s),
-      grid, domain, zres, srgCode = 120, weight = Some("p_size"),
-      ordered = false)
+      grid, domain, zres, srgCode = 120, weight = Some("p_size"))
       .localCheckpoint(true)
 
   // f1 + f2 = 0.875 ≠ 1 on purpose: the merged table is the normalize /

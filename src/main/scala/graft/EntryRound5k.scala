@@ -85,14 +85,11 @@ object EntryRound5k {
       // both certification sides persisted: each feeds two exceptAll
       // branches (and delta the output) — without the persists the two
       // surrogate pipelines execute ~5x per run
-      // ordered = false: exceptAll is order-insensitive and the output
-      // re-sorts explicitly below — the surrogate-internal global sorts
-      // were pure overhead
       val delta = Surrogate.pointSurrogate(w2, affCounties,
-          grid, domain, zres, srgCode = 100, ordered = false)
+          grid, domain, zres, srgCode = 100)
         .transform(graft.spark.PersistTracker.persist)
       val full = Surrogate.pointSurrogate(w2, TpchGeo.counties(s),
-          grid, domain, zres, srgCode = 100, ordered = false)
+          grid, domain, zres, srgCode = 100)
         .join(broadcast(aff), "fips")
         .select(delta.columns.map(col): _*)
         .transform(graft.spark.PersistTracker.persist)

@@ -5,40 +5,36 @@ import org.apache.spark.sql.functions._
 import graft.fixtures.TpchGeo
 import graft.fixtures.TpchGeo.{grid, domain, zres}
 
-/** Round-5 thirteenth batch: a salting-invariance certificate for the
-  * skew machinery the north rule names explicitly, exact integer
-  * second-moment accumulation over quantized embeddings (the PCA/
-  * whitening prep pass), and a tokenizer-coverage audit — each gated by
-  * a closed-form DuckDB oracle. */
+/** Round-5 thirteenth batch: a partitioning-invariance certificate for
+  * the point surrogate, exact integer second-moment accumulation over
+  * quantized embeddings (the PCA/whitening prep pass), and a
+  * tokenizer-coverage audit — each gated by a closed-form DuckDB oracle. */
 object EntryRound5m {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
-    // skew salting certificate: the SAME point surrogate computed with
-    // saltFactor=8 (hot cells split 8 ways before the county join, the
-    // AQE-independent skew valve) must be row-identical to the unsalted
-    // plan — the in-query require proves the salt is a pure partitioning
-    // change, the oracle re-certifies the salted output end to end
+    // partitioning-invariance certificate: the SAME point surrogate over
+    // the points hash-repartitioned 8 ways must be row-identical to the
+    // surrogate over the points as read — the in-query require proves the
+    // result does not depend on how the input is partitioned, the oracle
+    // re-certifies the repartitioned output end to end
     "q187_salted_srg_parity" -> ((s, dir) => {
       import graft.operators.Surrogate
       // both parity sides persisted: each feeds two exceptAll branches
-      // (and salted the output) — without this the two surrogate
-      // pipelines execute ~5x per run
-      // ordered = false: exceptAll is order-insensitive and the output
-      // re-sorts explicitly below
-      val salted = Surrogate.pointSurrogate(TpchGeo.points(s, dir),
-          TpchGeo.counties(s), grid, domain, zres, srgCode = 100,
-          saltFactor = 8, ordered = false)
+      // (and `shuffled` is also the output) — without this the two
+      // surrogate pipelines execute ~5x per run
+      val shuffled = Surrogate.pointSurrogate(
+          TpchGeo.points(s, dir).repartition(8, xxhash64(col("x"), col("y"))),
+          TpchGeo.counties(s), grid, domain, zres, srgCode = 100)
         .transform(graft.spark.PersistTracker.persist)
-      val unsalted = Surrogate.pointSurrogate(TpchGeo.points(s, dir),
-          TpchGeo.counties(s), grid, domain, zres, srgCode = 100,
-          ordered = false)
+      val asRead = Surrogate.pointSurrogate(TpchGeo.points(s, dir),
+          TpchGeo.counties(s), grid, domain, zres, srgCode = 100)
         .transform(graft.spark.PersistTracker.persist)
-      require(salted.exceptAll(unsalted).isEmpty &&
-          unsalted.exceptAll(salted).isEmpty,
-        "saltFactor=8 changed the surrogate output — salting must be a " +
-          "pure partitioning decision")
-      salted.orderBy("fips", "row", "col")
+      require(shuffled.exceptAll(asRead).isEmpty &&
+          asRead.exceptAll(shuffled).isEmpty,
+        "repartitioning the points changed the surrogate output — the " +
+          "surrogate must not depend on the input's partitioning")
+      shuffled.orderBy("fips", "row", "col")
     }),
 
     // exact second-moment matrix over int8-quantized embeddings — the

@@ -260,7 +260,6 @@ object ScalingBench {
       Surrogate.pointSurrogate(
         Pages.geotag(spark.read.parquet(tableDir)),
         TpchGeo.counties(spark),
-        TpchGeo.grid, TpchGeo.domain, TpchGeo.zres, srgCode = 300,
-        ordered = false) // a parquet sink needs no global sort
+        TpchGeo.grid, TpchGeo.domain, TpchGeo.zres, srgCode = 300)
   }
 }

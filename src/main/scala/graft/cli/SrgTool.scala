@@ -59,24 +59,26 @@ object SrgTool {
       fillCodes.diff(fillCodes.distinct)).distinct.sorted
     require(dups.isEmpty, s"surrogate code(s) ${dups.mkString(", ")} " +
       "defined more than once across specs, merges and concats, or by two gapfills")
+    // merges, concats and gapfills only combine generated tables
+    require(specs.nonEmpty, "empty catalog: no surrogate spec to generate")
 
     // generation, materialized once per spec. keepSkipped: below-threshold
     // counties ride along so the SMOKE sink can render their #SKIPPED rows
     // (surrogate.c:434-452); post-passes and Result.srg see only live
     // counties (the reference's downstream tools parse the text files and
-    // skip '#' comment lines). ordered = false here and below: normalize's
-    // window re-partitions the rows and Smoke.write sorts each county.
+    // skip '#' comment lines). No table is sorted: Smoke.write sorts the
+    // lines it writes.
     val generatedFull: Map[Int, DataFrame] = specs.map { s =>
       val df = s.kind match {
         case PointW => Surrogate.pointSurrogate(s.weights, counties,
           grid, domain, res, s.code, s.weightAttr, denomThreshold,
-          ordered = false, keepSkipped = true)
+          keepSkipped = true)
         case LineW => Surrogate.lineSurrogate(s.weights, counties,
           grid, domain, res, s.code, s.weightAttr, denomThreshold,
           keepSkipped = true)
         case PolyW => Surrogate.polySurrogate(s.weights, counties,
           grid, domain, res, s.code, s.weightAttr, denomThreshold,
-          ordered = false, keepSkipped = true)
+          keepSkipped = true)
       }
       s.code -> df.localCheckpoint()
     }.toMap
@@ -100,8 +102,7 @@ object SrgTool {
     val merged = merges.map { m =>
       m.outCode -> PostOps.merge(
         resolve(generated, m.a, "merge", m.name),
-        resolve(generated, m.b, "merge", m.name), m.fa, m.fb, m.outCode,
-        ordered = false)
+        resolve(generated, m.b, "merge", m.name), m.fa, m.fb, m.outCode)
     }.toMap
     val concatenated = concats.map { c =>
       c.outCode -> c.parts.map(resolve(generated, _, "concat", c.name))
@@ -111,8 +112,7 @@ object SrgTool {
     val all0 = generated ++ merged ++ concatenated
     val filled = gapfills.map { g =>
       g.outCode -> PostOps.gapfill(
-        g.cascade.map(resolve(all0, _, "gapfill", g.name)), g.outCode,
-        ordered = false)
+        g.cascade.map(resolve(all0, _, "gapfill", g.name)), g.outCode)
     }.toMap
     val all = all0 ++ filled
 

@@ -210,6 +210,8 @@ object SrgToolCsv {
     // one data (county) layer per run — the reference's per-row variation is
     // a multi-domain feature our single-domain engine scopes out
     val nonMerge = toRun.filter(_.mergeFunction.isEmpty)
+    require(nonMerge.nonEmpty, "empty catalog: no GENERATE=YES row of the " +
+      "generation control file names a surrogate to generate (merges need one)")
     val dataNames = nonMerge.map(_.dataShapefile).distinct
     require(dataNames.size == 1,
       s"all generated surrogates must share one DATA SHAPEFILE (got $dataNames)")

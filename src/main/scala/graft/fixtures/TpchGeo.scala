@@ -33,8 +33,6 @@ object TpchGeo {
 
   val COUNTY = 2000 // county tile edge
   val TRACT = 512   // tract edge (power of two → exact area ratios)
-  val TRACT_OFF = 256
-  val TRACT_AREA = TRACT.toDouble * TRACT // 262144 = 2^18
 
   // ----------------------------------------------------------- Spark side
 

@@ -47,12 +47,6 @@ final case class GridSpec(
          xorig + c * xcell, yorig + r * ycell)
   }
 
-  /** Cell polygon (CCW ring) for when clipping genuinely needs geometry. */
-  def cellRings(id: Long): Array[Array[Double]] = {
-    val b = cellBBox(id)
-    Array(Array(b.xmin, b.ymin, b.xmax, b.ymin, b.xmax, b.ymax, b.xmin, b.ymax))
-  }
-
   /** Ids of all cells overlapping a bbox — the candidate enumeration the
     * reference does per data polygon (sumpoly.c:385-423). Clamped to the
     * grid; empty when disjoint. */

@@ -9,22 +9,18 @@ import org.apache.spark.sql.expressions.Window
   * re-expressed as DataFrame passes over the standard surrogate-row schema
   * (srg_code, fips, col, row, frac[, numer, denom, qasum]).
   *
-  * Every op takes `ordered` (default true, the reference's text-file
-  * semantics). Pass false for parquet/table sinks: the global sort is a
-  * sampling pass + range exchange the columnar sink doesn't need (same
-  * flag as Surrogate.ratio).
+  * No op sorts its output: row order is the sink's job (Smoke.write sorts
+  * the body it collects into the reference's file order), and a global
+  * sort would cost a sampling pass and a range exchange per call.
   */
 object PostOps {
-
-  private def maybeSort(df: DataFrame, ordered: Boolean, cols: String*): DataFrame =
-    if (ordered) df.orderBy(cols.map(col): _*) else df
 
   /** MERGE (merge/MergeCounties.java:26-141): out = f1·srg1 + f2·srg2 over
     * the UNION of (fips,col,row) cells, a missing side contributing 0
     * (one-sided copy, :117-141). Counties absent from EITHER input are
     * dropped entirely (docs SA_ch05_surrogate.md:427-438). */
   def merge(a: DataFrame, b: DataFrame, f1: Double, f2: Double,
-            outCode: Int, ordered: Boolean = true): DataFrame = {
+            outCode: Int): DataFrame = {
     val al = a.select(col("fips"), col("col"), col("row"), col("frac").as("__fa"))
     val bl = b.select(col("fips"), col("col"), col("row"), col("frac").as("__fb"))
     val joined = al.join(bl, Seq("fips", "col", "row"), "full_outer")
@@ -40,15 +36,13 @@ object PostOps {
       .withColumn("srg_code", lit(outCode))
       .withColumn("qasum", sum("frac").over(w))
       .select("srg_code", "fips", "col", "row", "frac", "qasum")
-      .transform(maybeSort(_, ordered, "fips", "row", "col"))
   }
 
   /** GAPFILL (gapfill/Gapfilling.java:24-43): county-level COALESCE down a
     * priority list of surrogates — a county takes ALL its rows from the
     * first surrogate in the cascade that has it. Output records which code
     * filled each county (the output-comment semantics of the tool). */
-  def gapfill(cascade: Seq[DataFrame], outCode: Int,
-              ordered: Boolean = true): DataFrame = {
+  def gapfill(cascade: Seq[DataFrame], outCode: Int): DataFrame = {
     require(cascade.nonEmpty)
     // rank each county by the first cascade position that covers it
     val tagged = cascade.zipWithIndex.map { case (df, i) =>
@@ -59,7 +53,6 @@ object PostOps {
     tagged.join(broadcast(best), Seq("fips", "__prio"))
       .withColumn("srg_code", lit(outCode))
       .select("srg_code", "fips", "col", "row", "frac", "filled_from")
-      .transform(maybeSort(_, ordered, "fips", "row", "col"))
   }
 
   /** Deterministic per-county Σfrac: computed as the LAST value of a running
@@ -93,61 +86,51 @@ object PostOps {
     * kind ∈ summary | not1 | threshold | nodata. Passing the known
     * surrogate `codes` skips the pivot's distinct-values job (one less
     * pass over the union — same parameter as qaGapfill). */
-  def qaSummary(srg: DataFrame, codes: Seq[Int] = Nil,
-                ordered: Boolean = true): DataFrame = {
+  def qaSummary(srg: DataFrame, codes: Seq[Int] = Nil): DataFrame = {
     val p = srg.withColumn("__sum", countySum)
     val piv = if (codes.isEmpty) p.groupBy("fips").pivot("srg_code")
               else p.groupBy("fips").pivot("srg_code", codes)
-    maybeSort(piv.agg(round(first("__sum"), 8)), ordered, "fips")
+    piv.agg(round(first("__sum"), 8))
   }
 
   /** Counties whose Σfrac deviates from 1 by more than tol
     * (qa/SurrogateNot1Report.java). */
-  def qaNot1(srg: DataFrame, tol: Double = 1e-5,
-             ordered: Boolean = true): DataFrame =
+  def qaNot1(srg: DataFrame, tol: Double = 1e-5): DataFrame =
     srg.withColumn("__sum", countySum)
       .groupBy("srg_code", "fips").agg(first("__sum").as("sum_frac"))
       .where(abs(col("sum_frac") - 1.0) > tol)
-      .transform(maybeSort(_, ordered, "srg_code", "fips"))
 
   /** Gapfill report (qa/QAReports.java gapfill pivot): per county × output
     * surrogate code, WHICH source code filled it — input is gapfilled
     * tables (PostOps.gapfill output carrying `filled_from`), unioned.
     * Passing the known output `codes` skips the pivot's distinct-values
     * job (one less pass over the union). */
-  def qaGapfill(filled: DataFrame, codes: Seq[Int] = Nil,
-                ordered: Boolean = true): DataFrame = {
+  def qaGapfill(filled: DataFrame, codes: Seq[Int] = Nil): DataFrame = {
     val p = if (codes.isEmpty) filled.groupBy("fips").pivot("srg_code")
             else filled.groupBy("fips").pivot("srg_code", codes)
     // filled_from is constant per (fips, code); min = deterministic
-    maybeSort(p.agg(min("filled_from")), ordered, "fips")
+    p.agg(min("filled_from"))
   }
 
   /** Rows with frac ≥ t (default 0.5, qa/Threshold.java:9). */
-  def qaThreshold(srg: DataFrame, t: Double = 0.5,
-                  ordered: Boolean = true): DataFrame =
+  def qaThreshold(srg: DataFrame, t: Double = 0.5): DataFrame =
     srg.where(col("frac") >= t)
       .select("srg_code", "fips", "col", "row", "frac")
-      .transform(maybeSort(_, ordered, "srg_code", "fips", "row", "col"))
 
   /** Counties present in `universe` but missing from the surrogate
     * (qa/SurrogateNoDataReport.java). */
-  def qaNoData(srg: DataFrame, universe: DataFrame,
-               ordered: Boolean = true): DataFrame =
+  def qaNoData(srg: DataFrame, universe: DataFrame): DataFrame =
     universe.select("fips").distinct()
       .join(srg.select("fips").distinct(), Seq("fips"), "left_anti")
-      .transform(maybeSort(_, ordered, "fips"))
 
   /** diffsurr (diffsurr.c:45-234): align two surrogate tables on
     * (fips, col, row) and report rows where |frac_a − frac_b| > tol or one
     * side is missing — also the engine's own regression harness. */
-  def diffSurr(a: DataFrame, b: DataFrame, tol: Double = 1e-5,
-               ordered: Boolean = true): DataFrame = {
+  def diffSurr(a: DataFrame, b: DataFrame, tol: Double = 1e-5): DataFrame = {
     val al = a.select(col("fips"), col("col"), col("row"), col("frac").as("frac_a"))
     val bl = b.select(col("fips"), col("col"), col("row"), col("frac").as("frac_b"))
     al.join(bl, Seq("fips", "col", "row"), "full_outer")
       .where(col("frac_a").isNull || col("frac_b").isNull ||
              abs(col("frac_a") - col("frac_b")) > tol)
-      .transform(maybeSort(_, ordered, "fips", "row", "col"))
   }
 }

@@ -26,35 +26,24 @@ import graft.spark.GeoFunctions._
   *   3. DEDUP: polygon×polygon pairs sharing several cells are kept exactly
   *      once via the reference-point rule (no dropDuplicates shuffle).
   *
-  * Skew: pages pile into hot cells (dense urban cells at web scale). The
-  * point side can be salted: polygons are exploded ×saltFactor and points
-  * pick a deterministic salt from the url/id hash, splitting a hot cell's
-  * rows across saltFactor reducers. AQE skew-join handles residual skew.
+  * Skew: pages pile into hot cells (dense urban cells at web scale), but
+  * every join here broadcasts its polygon side, and a broadcast hash join
+  * never shuffles its probe side: each task probes the rows it scanned,
+  * so no hot-cell reducer exists for a salted key to split. Skew handling
+  * belongs to a join that partitions both sides, should one be added.
   */
 object SpatialJoin {
 
   /** points(x,y,...) ⋈ polys(geom,...) on exact containment; the polygon
-    * geometry leaves the output.
-    *
-    * @param saltFactor >1 splits each (cell) key into that many subkeys
-    *   for the point side; polygons replicate. Use for hot-cell skew.
-    */
+    * geometry leaves the output. The equi-join key is the single `Long`
+    * cell id, so Spark builds its long-keyed broadcast hash table. */
   def pointInPoly(points: DataFrame, polys: DataFrame,
-                  domain: CellDomain, res: Int,
-                  saltFactor: Int = 1): DataFrame = {
-    val polysE0 = polys.withColumn("__cell", explode(polyCoverCells(col("geom"), domain, res)))
-    val polysE =
-      if (saltFactor <= 1) polysE0.withColumn("__salt", lit(0))
-      else polysE0.withColumn("__salt",
-        explode(sequence(lit(0), lit(saltFactor - 1))))
-    val ptsE = points
-      .withColumn("__cell", cellEncode(col("x"), col("y"), domain, res))
-      .withColumn("__salt",
-        if (saltFactor <= 1) lit(0)
-        else pmod(xxhash64(col("x"), col("y")), lit(saltFactor)).cast("int"))
-    ptsE.join(broadcast(polysE), Seq("__cell", "__salt"))
+                  domain: CellDomain, res: Int): DataFrame = {
+    val polysE = polys.withColumn("__cell", explode(polyCoverCells(col("geom"), domain, res)))
+    val ptsE = points.withColumn("__cell", cellEncode(col("x"), col("y"), domain, res))
+    ptsE.join(broadcast(polysE), Seq("__cell"))
       .where(containsPoint(col("x"), col("y"), col("geom")))
-      .drop("__cell", "__salt", "geom")
+      .drop("__cell", "geom")
   }
 
   /** Multi-resolution variant of pointInPoly for MIXED-SIZE polygon layers

@@ -41,7 +41,8 @@ import graft.spark.GeoFunctions._
   * closed-form column arithmetic for points, bbox-cover explode for
   * fragments. Denominators re-join numerators broadcast (one row per
   * county). The only wide exchanges are the two groupBys, both keyed
-  * (fips[,cell]) — minimal for the semantics.
+  * (fips[,cell]) — minimal for the semantics. Output rows come in no
+  * particular order; the SMOKE sinks sort what they write.
   */
 object Surrogate {
 
@@ -65,9 +66,9 @@ object Surrogate {
   /** Grid tail: numerators ⋈ denominators → frac, threshold skip, qasum.
     * numer: (fips, col, row, numer); denom: (fips, denom). */
   def ratio(numer: DataFrame, denom: DataFrame, srgCode: Int,
-            denomThreshold: Double = 1e-5, ordered: Boolean = true,
+            denomThreshold: Double = 1e-5,
             keepSkipped: Boolean = false): DataFrame =
-    ratioTail(numer, denom, srgCode, denomThreshold, ordered, keepSkipped,
+    ratioTail(numer, denom, srgCode, denomThreshold, keepSkipped,
       Seq(col("row"), col("col")), OUT_COLS)
 
   /** Tail for OUTPUT_FILE_TYPE=Polygon surrogates (surrogate.c:455-470
@@ -79,15 +80,14 @@ object Surrogate {
     * the total the #REMAINDER rule needs.
     * numer: (fips, out_id, numer); denom: (fips, denom). */
   def ratioPoly(numer: DataFrame, denom: DataFrame, srgCode: Int,
-                denomThreshold: Double = 1e-5, ordered: Boolean = true,
+                denomThreshold: Double = 1e-5,
                 keepSkipped: Boolean = false): DataFrame =
-    ratioTail(numer, denom, srgCode, denomThreshold, ordered, keepSkipped,
+    ratioTail(numer, denom, srgCode, denomThreshold, keepSkipped,
       Seq(col("out_id").cast("string")), POLY_OUT_COLS)
 
   private def ratioTail(numer: DataFrame, denom: DataFrame, srgCode: Int,
-                        denomThreshold: Double, ordered: Boolean,
-                        keepSkipped: Boolean, order: Seq[Column],
-                        outCols: Seq[String]): DataFrame = {
+                        denomThreshold: Double, keepSkipped: Boolean,
+                        order: Seq[Column], outCols: Seq[String]): DataFrame = {
     // #SKIPPED semantics (surrogate.c:434-452): below-threshold counties
     // normally never emit rows; with keepSkipped they flow through — frac
     // and all — so Smoke.toLines can render them with the `#SKIPPED `
@@ -101,14 +101,13 @@ object Surrogate {
       .withColumn("frac", col("numer") / col("denom"))
     val w = Window.partitionBy("fips").orderBy(order: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val out = joined
+    // no global sort: row order is the sink's job (Smoke.write and
+    // writePoly sort the body they collect), and a range sort here would
+    // cost a sampling job and a wide exchange on every call
+    joined
       .withColumn("qasum", sum("frac").over(w))
       .withColumn("srg_code", lit(srgCode))
       .select(outCols.map(col): _*)
-    // global sort only when the sink needs it (SMOKE text); at 10^9 rows an
-    // unneeded range-partition + sort is pure overhead (sampling pass + wide
-    // exchange) — the qasum window has already sorted within counties
-    if (ordered) out.orderBy(col("fips") +: order: _*) else out
   }
 
   // ------------------------------------------------------- county stages
@@ -124,11 +123,10 @@ object Surrogate {
 
   /** Points tagged with their county; weight `__w`. */
   private def pointTag(points: DataFrame, counties: DataFrame,
-                       domain: CellDomain, res: Int, weight: Option[String],
-                       saltFactor: Int = 1): DataFrame = {
+                       domain: CellDomain, res: Int,
+                       weight: Option[String]): DataFrame = {
     val w = weight.map(col(_).cast("double")).getOrElse(lit(1.0))
-    SpatialJoin.pointInPoly(points, counties, domain, res,
-        saltFactor = saltFactor)
+    SpatialJoin.pointInPoly(points, counties, domain, res)
       // zero-weight features skip all geometry math (sumpoly.c:189,206)
       .where(w =!= 0.0)
       .select(col("fips"), col("x"), col("y"), w.as("__w"))
@@ -225,7 +223,6 @@ object Surrogate {
                      grid: GridSpec, domain: CellDomain, res: Int,
                      srgCode: Int, weight: Option[String] = None,
                      denomThreshold: Double = 1e-5,
-                     saltFactor: Int = 1, ordered: Boolean = true,
                      keepSkipped: Boolean = false): DataFrame = {
     // ONE pass over the (huge) point table: aggregate per (fips, cell) with
     // a NULL cell for off-grid points. The denominator — every point in its
@@ -236,14 +233,14 @@ object Surrogate {
     // persist the sparse (county × cell) matrix — the reference materializes
     // it too (PolyIntStruct, sumpoly.c:283-334); without it the broadcast
     // branch of the numer⋈denom join would re-run the full input scan
-    val perCell = pointTag(points, counties, domain, res, weight, saltFactor)
+    val perCell = pointTag(points, counties, domain, res, weight)
       .withColumn("col", when(onGrid, gridCol(col("x"), grid)))
       .withColumn("row", when(onGrid, gridRow(col("y"), grid)))
       .groupBy("fips", "col", "row").agg(sum("__w").as("numer"))
       .transform(graft.spark.PersistTracker.persist)
     val denom = perCell.groupBy("fips").agg(sum("numer").as("denom"))
     val numer = perCell.where(col("col").isNotNull && col("row").isNotNull)
-    ratio(numer, denom, srgCode, denomThreshold, ordered, keepSkipped)
+    ratio(numer, denom, srgCode, denomThreshold, keepSkipped)
   }
 
   /** Polygon-weight surrogate (census tracts): area mode when weight None.
@@ -252,13 +249,11 @@ object Surrogate {
                     grid: GridSpec, domain: CellDomain, res: Int,
                     srgCode: Int, weight: Option[String] = None,
                     denomThreshold: Double = 1e-5,
-                    ordered: Boolean = true,
                     keepSkipped: Boolean = false): DataFrame = {
     val c = polyCounty(weights, counties, domain, res, weight)
     val numer = c.numer(polyCellClip(c.rows, "frag_geom", grid),
       col("__carea"), "fips", "col", "row")
-    ratio(numer, c.denom, srgCode, denomThreshold, ordered = ordered,
-      keepSkipped = keepSkipped)
+    ratio(numer, c.denom, srgCode, denomThreshold, keepSkipped = keepSkipped)
   }
 
   /** Line-weight surrogate (roads): length mode when weight None.

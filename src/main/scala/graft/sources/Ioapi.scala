@@ -215,8 +215,6 @@ object Ioapi {
 
   // ------------------------------------------------------------------ read
 
-  def readHeader(path: String): Header = headerOf(NetCDF.read(path))
-
   /** FDESC3 header of an already-parsed file — public so callers that
     * need header-then-maybe-data (tile pruning) parse the bytes ONCE. */
   def headerOf(f: NcFile): Header = {

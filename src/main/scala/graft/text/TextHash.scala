@@ -191,56 +191,6 @@ object TextHash {
     out
   }
 
-  /** Winnowing fingerprints (Schleimer et al. MOSS): Karp–Rabin rolling
-    * hash over char k-grams, keep the min hash of each sliding window
-    * (rightmost-min rule), dedup. */
-  def winnow(text: String, k: Int, window: Int): Array[Long] = {
-    if (text.length < k) return Array.emptyLongArray
-    val n = text.length - k + 1
-    val grams = new Array[Long](n)
-    // polynomial rolling hash base 257 mod 2^61-1 (Mersenne)
-    val M = (1L << 61) - 1
-    val B = 257L
-    def mulmod(a: Long, b: Long): Long = {
-      // 61-bit Mersenne multiply via 128-bit split
-      val hi = Math.multiplyHigh(a, b)
-      val lo = a * b
-      val r = (lo & M) + ((lo >>> 61) | (hi << 3))
-      if (r >= M) r - M else r
-    }
-    var pw = 1L
-    var i = 0
-    while (i < k - 1) { pw = mulmod(pw, B); i += 1 }
-    var h = 0L
-    i = 0
-    while (i < k) { h = (mulmod(h, B) + text.charAt(i)) % M; i += 1 }
-    grams(0) = mix64(h)
-    i = 1
-    while (i < n) {
-      h = (h + M - mulmod(text.charAt(i - 1), pw) % M) % M
-      h = (mulmod(h, B) + text.charAt(i + k - 1)) % M
-      grams(i) = mix64(h)
-      i += 1
-    }
-    if (n <= window) return Array(grams.min)
-    val out = new java.util.LinkedHashSet[java.lang.Long]()
-    var w = 0
-    while (w <= n - window) {
-      var minIdx = w
-      var j = w
-      while (j < w + window) {
-        if (grams(j) <= grams(minIdx)) minIdx = j // rightmost min
-        j += 1
-      }
-      out.add(grams(minIdx))
-      w += 1
-    }
-    val res = new Array[Long](out.size)
-    val it = out.iterator(); var m = 0
-    while (it.hasNext) { res(m) = it.next(); m += 1 }
-    res
-  }
-
   // --------------------------------------------------- span n-gram hashes
 
   private def fnv1aRange(bytes: Array[Byte], from: Int, until: Int): Long = {

@@ -48,24 +48,11 @@ object TextOps {
       .groupBy("text_hash")
       .agg(min(idCol).as("rep_id"), count(lit(1)).as("dup_count"))
 
-  /** Keep one representative row per distinct text (the min-id row). */
-  def dedupExact(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val reps = exactDedupGroups(df, idCol, textCol)
-      .select(col("rep_id").as(idCol))
-    df.join(reps, idCol)
-  }
-
   // ------------------------------------------------------------ tokenizing
 
   def tokens(textCol: Column): Column = split(textCol, " ")
 
   def tokenCount(textCol: Column): Column = size(tokens(textCol))
-
-  /** BPE-ish subword proxy: count of word-piece boundaries via a regex that
-    * splits on transitions (letters/digits/punct) — a cheap deterministic
-    * stand-in for tokenizer costs at scale. */
-  def subwordCount(textCol: Column): Column =
-    size(split(textCol, "(?<=[a-z])(?=[0-9])|(?<=[0-9])(?=[a-z])|\\s+|(?=[^a-z0-9\\s])"))
 
   // ------------------------------------------------------------ quality
 
@@ -107,25 +94,12 @@ object TextOps {
     array_max(array(entries: _*)).getField("lang")
   }
 
-  val defaultProfiles: Seq[(String, Seq[String])] = Seq(
-    "en" -> Seq("the", "a", "of", "and", "is"),
-    "de" -> Seq("der", "die", "das", "und", "ist"),
-    "es" -> Seq("el", "la", "los", "y", "es"),
-    "fr" -> Seq("le", "la", "les", "et", "est"),
-    "zh" -> Seq("de5", "shi4", "le5", "he2", "zai4"))
-
   // ------------------------------------------------------------ fingerprints
 
   /** Content fingerprint: first 64 bits of md5 as hex — cross-engine
     * checkable. */
   def contentFingerprint(textCol: Column): Column =
     substring(md5(textCol), 1, 16)
-
-  /** Winnowing fingerprint (rolling Karp–Rabin over char k-grams, window
-    * minima — Schleimer et al.): local computation per doc, returns the
-    * set of selected hash values. Engine-side only (not SQL-expressible). */
-  def winnowFingerprintUdf(k: Int = 8, window: Int = 16) =
-    udf((text: String) => TextHash.winnow(text, k, window))
 
   // ------------------------------------------------------------ shingles
 

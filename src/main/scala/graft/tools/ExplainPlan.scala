@@ -27,7 +27,7 @@ object ExplainPlan {
         Surrogate.pointSurrogate(
           Pages.geotag(spark.read.parquet(dir)),
           TpchGeo.counties(spark),
-          TpchGeo.grid, TpchGeo.domain, TpchGeo.zres, 300, ordered = false)
+          TpchGeo.grid, TpchGeo.domain, TpchGeo.zres, 300)
           .explain("formatted")
     }
     spark.stop()

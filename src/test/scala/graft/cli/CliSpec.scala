@@ -40,8 +40,8 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
     val direct = graft.operators.Surrogate.pointSurrogate(
       TpchGeo.points(spark, sfDir), TpchGeo.counties(spark),
       TpchGeo.grid, TpchGeo.domain, TpchGeo.zres, 100)
-    assert(out.collect().map(_.toString).toSeq ==
-           direct.collect().map(_.toString).toSeq)
+    assert(out.collect().map(_.toString).sorted.toSeq ==
+           direct.collect().map(_.toString).sorted.toSeq)
 
     val lines = Files.readAllLines(java.nio.file.Paths.get(smoke))
     assert(lines.get(0).startsWith("#GRID\tTEST8"))
@@ -286,8 +286,8 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
     val direct = graft.operators.Surrogate.surrogateToCellPolys(
       TpchGeo.points(spark, sfDir), TpchGeo.counties(spark), cells,
       TpchGeo.domain, TpchGeo.zres, 190, kind = "Point")
-    assert(out.collect().map(_.toString).toSeq ==
-           direct.collect().map(_.toString).toSeq)
+    assert(out.collect().map(_.toString).sorted.toSeq ==
+           direct.collect().map(_.toString).sorted.toSeq)
     import scala.jdk.CollectionConverters._
     val lines = Files.readAllLines(java.nio.file.Paths.get(smoke)).asScala
     // header carries the DOT-lattice dims (8x8 cells), named by the grid
@@ -333,8 +333,8 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
       TpchGeo.points(spark, sfDir), TpchGeo.counties(spark),
       graft.grid.GridSpec("EG", 0, 0, 1000, 1000, 9, 17),
       TpchGeo.domain, TpchGeo.zres, 180, kind = "Point")
-    assert(out.collect().map(_.toString).toSeq ==
-           direct.collect().map(_.toString).toSeq)
+    assert(out.collect().map(_.toString).sorted.toSeq ==
+           direct.collect().map(_.toString).sorted.toSeq)
     assert(out.count() > 0)
     import scala.jdk.CollectionConverters._
     val lines = Files.readAllLines(java.nio.file.Paths.get(smoke)).asScala
@@ -379,8 +379,8 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
       graft.operators.Reproject.polygons(TpchGeo.countiesLL(spark), from, to, 0),
       gridM, dom, TpchGeo.zres, 100)
     assert(out.count() > 0)
-    assert(out.collect().map(_.toString).toSeq ==
-           direct.collect().map(_.toString).toSeq)
+    assert(out.collect().map(_.toString).sorted.toSeq ==
+           direct.collect().map(_.toString).sorted.toSeq)
   }
 
   test("SURROGATE OUTPUT_FILE_TYPE=Polygon writes out_poly_id lines (#POLYGON)") {
@@ -410,8 +410,8 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
       TpchGeo.tracts(spark, sfDir), TpchGeo.counties(spark),
       spark.read.parquet(s"$dir/outpolys"),
       TpchGeo.domain, TpchGeo.zres, 170)
-    assert(out.collect().map(_.toString).toSeq ==
-           direct.collect().map(_.toString).toSeq)
+    assert(out.collect().map(_.toString).sorted.toSeq ==
+           direct.collect().map(_.toString).sorted.toSeq)
 
     import scala.jdk.CollectionConverters._
     val lines = Files.readAllLines(java.nio.file.Paths.get(smoke)).asScala

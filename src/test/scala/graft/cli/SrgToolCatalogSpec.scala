@@ -79,7 +79,7 @@ class SrgToolCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
       merges = Seq(SrgTool.MergeSpec(500, "pop_mix", 100, 0.5, 120, 0.5)),
       gapfills = Seq(SrgTool.GapfillSpec(600, "filled", Seq(240, 100))),
       outDir = Some(outDir)))
-    // 54 jobs when each table runs once; the bound stays below half the
+    // 52 jobs when each table runs once; the bound stays below half the
     // lazy-plan driver's 159
     assert(jobs <= 64, s"SrgTool.run started $jobs jobs")
     assert(r.srg.keySet == parentDigests.keySet)
@@ -102,6 +102,13 @@ class SrgToolCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
       gapfills = Seq(SrgTool.GapfillSpec(600, "fill_a", Seq(100)),
         SrgTool.GapfillSpec(600, "fill_b", Seq(100)))))
     assert(g.getMessage.contains("600"), g.getMessage)
+  }
+
+  test("an empty catalog is rejected as empty") {
+    val e = intercept[IllegalArgumentException](SrgTool.run(spark,
+      TpchGeo.counties(spark), TpchGeo.grid, TpchGeo.domain, TpchGeo.zres,
+      Nil))
+    assert(e.getMessage.contains("empty catalog"), e.getMessage)
   }
 
   test("srgdesc names the spec, merge and gapfill codes without an outDir") {

@@ -225,4 +225,44 @@ class SrgToolCsvSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"cells differ: ${(a.keySet diff b.keySet) ++ (b.keySet diff a.keySet)}")
     a.foreach { case (k, v) => assert(math.abs(v - b(k)) < 1e-9, s"$k: $v vs ${b(k)}") }
   }
+
+  test("a generation list with every row at GENERATE=NO is rejected as empty") {
+    val dir = Files.createTempDirectory("srgtoolcsv_empty")
+    def write(name: String, text: String): Unit =
+      Files.write(dir.resolve(name), text.getBytes("UTF-8"))
+    write("control_variables.csv",
+      """VARIABLE,VALUE,DESCRIPTION
+        |GENERATION CONTROL FILE,./surrogate_generation.csv,gen list
+        |SURROGATE SPECIFICATION FILE,./surrogate_specification.csv,spec
+        |SHAPEFILE CATALOG,./shapefile_catalog.csv,catalog
+        |SURROGATE CODE FILE,./surrogate_codes.csv,codes
+        |OUTPUT_GRID_NAME,TEST8,grid
+        |GRIDDESC,./GRIDDESC.txt,griddesc
+        |""".stripMargin)
+    write("shapefile_catalog.csv",
+      """SHAPEFILE NAME,DIRECTORY,ELLIPSOID,PROJECTION,DESCRIPTION
+        |counties,.,,,counties
+        |points,.,,,points
+        |""".stripMargin)
+    write("surrogate_codes.csv", "#CODE,NAME\n#SRGDESC=100,Population\n")
+    write("surrogate_specification.csv",
+      """REGION,SURROGATE,SURROGATE CODE,DATA SHAPEFILE,DATA ATTRIBUTE,WEIGHT SHAPEFILE,WEIGHT ATTRIBUTE,WEIGHT FUNCTION,FILTER FUNCTION,MERGE FUNCTION,SECONDARY SURROGATE,TERTIARY SURROGATE,QUARTERNARY SURROGATE,DETAILS
+        |USA,Population,100,counties,fips,points,NONE,,,,,,,page count
+        |""".stripMargin)
+    write("surrogate_generation.csv",
+      """REGION,SURROGATE,SURROGATE CODE,GENERATE,QUALITY ASSURANCE
+        |USA,Population,100,NO,YES
+        |""".stripMargin)
+    write("GRIDDESC.txt",
+      """! coords
+        |'LAM'
+        |2, 33, 45, -97, -97, 40
+        |' '
+        |'TEST8'
+        |'LAM', 0, 0, 1000, 1000, 8, 8, 1
+        |' '""".stripMargin)
+    val e = intercept[IllegalArgumentException](SrgToolCsv.run(spark,
+      dir.resolve("control_variables.csv").toString, TpchGeo.domain, TpchGeo.zres))
+    assert(e.getMessage.contains("empty catalog"), e.getMessage)
+  }
 }

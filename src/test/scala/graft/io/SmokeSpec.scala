@@ -32,9 +32,11 @@ class SmokeSpec extends AnyFunSuite with BeforeAndAfterAll {
     val numer = Seq(("A", 10, 1.0), ("A", 2, 3.0)).toDF("fips", "out_id", "numer")
     val denom = Seq(("A", 4.0)).toDF("fips", "denom")
     val srg = graft.operators.Surrogate.ratioPoly(numer, denom, 170)
+    // rows sorted by numeric id; the qasum values carry the string order
     val rows = srg.collect().map(r =>
       (r.getAs[Int]("out_id"), r.getAs[Double]("frac"), r.getAs[Double]("qasum")))
-    assert(rows.toSeq == Seq((10, 0.25, 0.25), (2, 0.75, 1.0)))
+      .sortBy(_._1)
+    assert(rows.toSeq == Seq((2, 0.75, 1.0), (10, 0.25, 0.25)))
     val lines = Smoke.toLinesPoly(srg).collect()
     assert(!lines.exists(_.startsWith("#REMAINDER")), lines.mkString("\n"))
   }
@@ -157,6 +159,48 @@ class SmokeSpec extends AnyFunSuite with BeforeAndAfterAll {
     val lastData47001 = body.lastIndexWhere(l => !l.startsWith("#") && l.contains("47001"))
     assert(remIdx > lastData47001, body.mkString("\n"))
     assert(remIdx < body.indexWhere(_.contains("47002")))
+  }
+
+  test("write and writePoly own the row order: scrambled input, same bytes") {
+    import org.apache.spark.sql.functions.desc
+    val s = spark
+    import s.implicits._
+    def bytes(path: String) = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
+    def tmp(name: String) = java.nio.file.Files.createTempFile(name, ".txt").toString
+    def scramble(df: org.apache.spark.sql.DataFrame, cols: String*) =
+      df.repartition(5).sortWithinPartitions(cols.map(desc): _*)
+    // 47001: Σfrac 0.75 → #REMAINDER; 47003: denominator below the
+    // threshold → #SKIPPED; 47002 sums to 1
+    val grid = Seq(
+      (100, "47001", 1, 1, 0.25, 1.0, 4.0, 0.25),
+      (100, "47001", 2, 1, 0.25, 1.0, 4.0, 0.5),
+      (100, "47001", 1, 2, 0.25, 1.0, 4.0, 0.75),
+      (100, "47002", 3, 3, 0.5, 2.0, 4.0, 0.5),
+      (100, "47002", 2, 4, 0.5, 2.0, 4.0, 1.0),
+      (100, "47003", 5, 5, 0.5, 1e-7, 2e-7, 0.5),
+      (100, "47003", 6, 5, 0.5, 1e-7, 2e-7, 1.0)
+    ).toDF("srg_code", "fips", "col", "row", "frac", "numer", "denom", "qasum")
+    val (g1, g2) = (tmp("srg-in"), tmp("srg-scrambled"))
+    Smoke.write(grid, GridCatalog.TEST8, Smoke.ProjInfo(), g1)
+    Smoke.write(scramble(grid, "fips", "row"), GridCatalog.TEST8, Smoke.ProjInfo(), g2)
+    val gl = new String(bytes(g1), "UTF-8")
+    assert(gl.contains("#REMAINDER") && gl.contains("#SKIPPED"), gl)
+    assert(bytes(g1).sameElements(bytes(g2)), gl)
+
+    val poly = Seq(
+      (170, "47001", "2", 0.25, 1.0, 4.0, 0.5),
+      (170, "47001", "10", 0.25, 1.0, 4.0, 0.25),
+      (170, "47002", "7", 1.0, 4.0, 4.0, 1.0),
+      (170, "47003", "12", 0.5, 1e-7, 2e-7, 0.5),
+      (170, "47003", "3", 0.5, 1e-7, 2e-7, 1.0)
+    ).toDF("srg_code", "fips", "out_id", "frac", "numer", "denom", "qasum")
+    val (p1, p2) = (tmp("srgpoly-in"), tmp("srgpoly-scrambled"))
+    Smoke.writePoly(poly, GridCatalog.TEST8, Smoke.ProjInfo(), p1)
+    Smoke.writePoly(scramble(poly, "fips", "out_id"), GridCatalog.TEST8,
+      Smoke.ProjInfo(), p2)
+    val pl = new String(bytes(p1), "UTF-8")
+    assert(pl.contains("#REMAINDER") && pl.contains("#SKIPPED"), pl)
+    assert(bytes(p1).sameElements(bytes(p2)), pl)
   }
 
   test("write produces a deterministically ordered file") {

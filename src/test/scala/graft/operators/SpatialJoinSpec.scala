@@ -5,11 +5,11 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import graft.fixtures.TpchGeo
-import graft.operators.Surrogate
 
-/** Join invariants: hot-cell salting and the multi-resolution point join
-  * must give the fixed-resolution results (only the physical plan moves),
-  * and the overlays keep exactly the inputs that meet the mask. */
+/** Join invariants: the point join keys on the cell id alone, the
+  * multi-resolution point join must give the fixed-resolution results
+  * (only the physical plan moves), and the overlays keep exactly the
+  * inputs that meet the mask. */
 class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val sfDir = graft.TestData.sf("0.001")
@@ -19,14 +19,18 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  private def srg(salt: Int) =
-    Surrogate.pointSurrogate(TpchGeo.points(spark, sfDir),
-        TpchGeo.counties(spark), TpchGeo.grid, TpchGeo.domain, TpchGeo.zres,
-        srgCode = 100, saltFactor = salt)
-      .collect().map(_.toString).toSeq
-
-  test("hot-cell salting (saltFactor 4) is result-identical to unsalted") {
-    assert(srg(1) == srg(4))
+  test("pointInPoly's broadcast hash join has one LongType key") {
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.types.LongType
+    val df = SpatialJoin.pointInPoly(TpchGeo.points(spark, sfDir),
+      TpchGeo.counties(spark), TpchGeo.domain, TpchGeo.zres)
+    df.write.format("noop").mode("overwrite").save()
+    val joins = SurrogatePlanSpec.nodes(df.queryExecution.executedPlan)
+      .collect { case j: BroadcastHashJoinExec => j }
+    assert(joins.size == 1, joins.mkString("\n"))
+    assert(joins.head.leftKeys.map(_.dataType) == Seq(LongType) &&
+      joins.head.rightKeys.map(_.dataType) == Seq(LongType),
+      joins.head.toString)
   }
 
   test("adaptive multi-resolution join matches fixed-res and bounds explode") {

@@ -42,7 +42,7 @@ class ResumablePipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
         Surrogate.pointSurrogate(geotagged, TpchGeo.counties(spark),
           TpchGeo.grid, TpchGeo.domain, TpchGeo.zres, 300)
       }
-      srg.collect().map(_.toString).toSeq
+      srg.collect().map(_.toString).sorted.toSeq
     }
 
     val first = runPipeline()
