@@ -2,7 +2,7 @@ package graft.cli
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.cells.CellDomain
+import graft.cells.{CellDomain, CellIndex}
 import graft.grid.{GridSpec, Proj}
 import graft.operators._
 import graft.functions.WeightExpr
@@ -45,11 +45,22 @@ object SpatialAllocator {
     def req(k: String): String = cfg.getOrElse(k,
       throw new IllegalArgumentException(s"required env $k not set"))
 
+    // the cell index's own bounds (SqlFunctions.litRes checks the same
+    // resolution range): a zero-width domain divides by zero in the cell
+    // math, and ids of two resolutions collide above MaxRes
     val domain = cfg.get("CELL_DOMAIN").map { s =>
-      val Array(a, b, c, d) = s.split(",").map(_.trim.toDouble)
-      CellDomain(a, b, c, d)
+      val v = s.split(",").map(_.trim.toDoubleOption.getOrElse(Double.NaN))
+      require(v.length == 4 && v(2) > v(0) && v(3) > v(1),
+        s"CELL_DOMAIN must be xmin,ymin,xmax,ymax with xmax > xmin and " +
+          s"ymax > ymin, got '$s'")
+      CellDomain(v(0), v(1), v(2), v(3))
     }.getOrElse(CellDomain(0, 0, 8192, 8192))
-    val zres = cfg.getOrElse("CELL_RES", "4").toInt
+    val zres = cfg.get("CELL_RES").fold(4) { s =>
+      val r = s.trim.toIntOption.filter(r => r >= 0 && r <= CellIndex.MaxRes)
+      require(r.isDefined,
+        s"CELL_RES must be an integer in [0, ${CellIndex.MaxRes}], got '$s'")
+      r.get
+    }
 
     // the GRIDDESC catalog parses ONCE per run (reprojection, sinks and
     // grid lookups all consult it)
@@ -230,9 +241,10 @@ object SpatialAllocator {
             val haveGrid = cfg.contains("OUTPUT_GRID_NAME")
             val g = if (haveGrid) grid() else GridSpec("NOGRID", 0, 0, 0, 0, 0, 0)
             val p = if (haveGrid) projInfo() else Smoke.ProjInfo()
-            Smoke.writePoly(srgFull, g, p, out,
+            Smoke.write(srgFull, g, p, out,
               withQa = qaFields.any, denomThreshold = thr,
-              fields = qaFields, writeHeader = hdrOn && haveGrid)
+              headerTag = "#POLYGON", fields = qaFields,
+              writeHeader = hdrOn && haveGrid)
           }
           Some(srg)
         } else {

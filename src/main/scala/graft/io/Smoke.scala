@@ -16,6 +16,11 @@ import graft.grid.GridSpec
   *                       (surrogate.c:434-452)
   *   #REMAINDER %5d\t%s\t    0\t    0\t%10.8f[…]     per county when
   *                       |1−Σfrac| > 1e-5 and Σfrac > 1e-5 (surrogate.c:291-360)
+  *
+  * Polygon output (#POLYGON, surrogate.c:455-470) is the same format with
+  * the out_poly_id string where the grid has `col row`, and `0` where the
+  * grid remainder has `0 0`. One renderer serves both: the table's
+  * `out_id` column says which shape it is. The sink owns the row order.
   */
 object Smoke {
 
@@ -71,178 +76,109 @@ object Smoke {
       (if (f.denominator) "\t%f".formatLocal(Locale.US, den) else "") +
       (if (f.qasum) "\t%f".formatLocal(Locale.US, qs) else "")
 
-  private def dataLine(code: Int, fips: String, c: Int, r: Int, frac: Double,
-                       qa: Option[(Double, Double, Double)],
-                       prefix: String = "", fields: QaFields = QaFields.All): String = {
-    val base = "%s%5d\t%s\t%5d\t%5d\t%10.8f".formatLocal(
-      Locale.US, prefix, code, fips, c, r, frac)
-    qa match {
-      case Some((num, den, qs)) => base + qaSuffix(num, den, qs, fields)
-      case None => base
-    }
+  /** Each county's SMOKE lines in file order, with its (srg_code, fips)
+    * key: the data rows, then the #REMAINDER row when
+    * |1−Σfrac| > 1e-5 and Σfrac > 1e-5 (surrogate.c:291-360); a county
+    * below `denomThreshold` renders every row `#SKIPPED ` and no remainder
+    * (surrogate.c:434-452). An `out_id` column marks polygon output
+    * (surrogate.c:455-470): its rows order by the id string (the ratioPoly
+    * qasum order), the id is the target field and the remainder's is "0"
+    * (surrogate.c:326-334).
+    * Grid rows order by (row, col) with target `col row` and remainder
+    * target `0 0`. Input schema: (srg_code, fips, col, row | out_id, frac,
+    * numer, denom, qasum). One in-memory group per county: counties are
+    * small (≤ cells-per-county rows). */
+  private def countyLines(srg: DataFrame, denomThreshold: Double,
+                          fields: QaFields): Dataset[(Int, String, Seq[String])] = {
+    val spark = srg.sparkSession
+    import spark.implicits._
+    val poly = srg.columns.contains("out_id")
+    def target(c: Int, r: Int, id: String): String =
+      if (poly) id else "%5d\t%5d".formatLocal(Locale.US, c, r)
+    // one sort key for both shapes: a polygon's (0, 0, id), a cell's (row, col, "")
+    val key =
+      if (poly) Seq(lit(0), lit(0), col("out_id").cast("string"))
+      else Seq(col("row").cast("int"), col("col").cast("int"), lit(""))
+    srg.select(Seq(col("srg_code").cast("int"), col("fips").cast("string")) ++
+        key ++ Seq(col("frac").cast("double"), col("numer").cast("double"),
+        col("denom").cast("double"), col("qasum").cast("double")): _*)
+      .as[(Int, String, Int, Int, String, Double, Double, Double, Double)]
+      .groupByKey(t => (t._1, t._2))
+      .mapGroups { (k: (Int, String),
+                    it: Iterator[(Int, String, Int, Int, String, Double, Double, Double, Double)]) =>
+        val (code, fips) = k
+        val rows = it.toVector.sortBy(t => (t._3, t._4, t._5))
+        def line(prefix: String, tgt: String, frac: Double, num: Double,
+                 den: Double, qs: Double): String =
+          "%s%5d\t%s\t%s\t%10.8f".formatLocal(Locale.US, prefix, code, fips,
+            tgt, frac) + qaSuffix(num, den, qs, fields)
+        val den = rows.head._8
+        val qasum = rows.last._9
+        val skipped = den < denomThreshold
+        val prefix = if (skipped) "#SKIPPED " else ""
+        val lines = rows.map { case (_, _, r, c, id, frac, num, d, qs) =>
+          line(prefix, target(c, r, id), frac, num, d, qs)
+        }
+        val rem =
+          if (!skipped && math.abs(1.0 - qasum) > 1e-5 && qasum > 1e-5)
+            Seq(line("#REMAINDER ", if (poly) "0" else target(0, 0, ""),
+              1.0 - qasum, den - rows.iterator.map(_._7).sum, den, 1.0 - qasum))
+          else Seq.empty
+        (code, fips, lines ++ rem)
+      }
   }
 
-  /** Surrogate table → SMOKE lines. Input schema: (srg_code, fips, col, row,
-    * frac, numer, denom, qasum). Distributed: one in-memory group per county
-    * (counties are small — ≤ cells-per-county rows), counties stream through
-    * flatMapGroups; remainder rows injected at each county's end.
+  /** Surrogate table → SMOKE lines, county by county (see `countyLines`).
     *
-    * @param withQa     append the `! numer denom qasum` comment fields
-    * @param denomThreshold counties below it render as #SKIPPED rows */
-  def toLines(srg: DataFrame, withQa: Boolean = true,
-              denomThreshold: Double = 1e-5,
+    * @param denomThreshold counties below it render as #SKIPPED rows
+    * @param fields the `! numer denom qasum` comment fields to append */
+  def toLines(srg: DataFrame, denomThreshold: Double = 1e-5,
               fields: QaFields = QaFields.All): Dataset[String] = {
     val spark = srg.sparkSession
     import spark.implicits._
-    srg.select(col("srg_code").cast("int"), col("fips").cast("string"),
-        col("col").cast("int"), col("row").cast("int"),
-        col("frac").cast("double"), col("numer").cast("double"),
-        col("denom").cast("double"), col("qasum").cast("double"))
-      .as[(Int, String, Int, Int, Double, Double, Double, Double)]
-      .groupByKey { case (code, fips, _, _, _, _, _, _) => (code, fips) }
-      .flatMapGroups { (key: (Int, String),
-                        it: Iterator[(Int, String, Int, Int, Double, Double, Double, Double)]) =>
-        val (code, fips) = key
-        val rows = it.toVector.sortBy { case (_, _, c, r, _, _, _, _) => (r, c) }
-        val skipped = rows.headOption.exists(_._7 < denomThreshold)
-        val prefix = if (skipped) "#SKIPPED " else ""
-        val lines = rows.map { case (_, _, c, r, frac, num, den, qs) =>
-          dataLine(code, fips, c, r, frac,
-            if (withQa) Some((num, den, qs)) else None, prefix, fields)
-        }
-        val qasum = rows.lastOption.map(_._8).getOrElse(0.0)
-        val den = rows.headOption.map(_._7).getOrElse(0.0)
-        val sumNum = rows.iterator.map(_._6).sum
-        // remainder rule: surrogate.c:297 (|1-qasum|>1e-5 && qasum>1e-5)
-        val rem =
-          if (!skipped && math.abs(1.0 - qasum) > 1e-5 && qasum > 1e-5)
-            Seq(dataLine(code, fips, 0, 0, 1.0 - qasum,
-              if (withQa) Some((den - sumNum, den, 1.0 - qasum)) else None,
-              "#REMAINDER ", fields))
-          else Seq.empty
-        lines ++ rem
-      }
+    countyLines(srg, denomThreshold, fields).flatMap(_._3)
   }
 
-  /** Polygon-output data line (surrogate.c:455-470): `code fips out_id
-    * frac` — the out_poly_id string replaces the col/row pair. */
-  private def polyLine(code: Int, fips: String, outId: String, frac: Double,
-                       qa: Option[(Double, Double, Double)],
-                       prefix: String = "", fields: QaFields = QaFields.All): String = {
-    val base = "%s%5d\t%s\t%s\t%10.8f".formatLocal(
-      Locale.US, prefix, code, fips, outId, frac)
-    qa match {
-      case Some((num, den, qs)) => base + qaSuffix(num, den, qs, fields)
-      case None => base
-    }
-  }
-
-  /** OUTPUT_FILE_TYPE=Polygon surrogate lines. Input schema: (srg_code,
-    * fips, out_id, frac, numer, denom, qasum). Same distributed county
-    * grouping, #SKIPPED and #REMAINDER rules as `toLines`; the remainder
-    * row's out_poly_id is "0" (surrogate.c:326-334). */
-  def toLinesPoly(srg: DataFrame, withQa: Boolean = true,
-                  denomThreshold: Double = 1e-5,
-                  fields: QaFields = QaFields.All): Dataset[String] = {
-    val spark = srg.sparkSession
-    import spark.implicits._
-    srg.select(col("srg_code").cast("int"), col("fips").cast("string"),
-        col("out_id").cast("string"), col("frac").cast("double"),
-        col("numer").cast("double"), col("denom").cast("double"),
-        col("qasum").cast("double"))
-      .as[(Int, String, String, Double, Double, Double, Double)]
-      .groupByKey { case (code, fips, _, _, _, _, _) => (code, fips) }
-      .flatMapGroups { (key: (Int, String),
-                        it: Iterator[(Int, String, String, Double, Double, Double, Double)]) =>
-        val (code, fips) = key
-        val rows = it.toVector.sortBy(_._3)
-        val skipped = rows.headOption.exists(_._6 < denomThreshold)
-        val prefix = if (skipped) "#SKIPPED " else ""
-        val lines = rows.map { case (_, _, outId, frac, num, den, qs) =>
-          polyLine(code, fips, outId, frac,
-            if (withQa) Some((num, den, qs)) else None, prefix, fields)
-        }
-        val qasum = rows.lastOption.map(_._7).getOrElse(0.0)
-        val den = rows.headOption.map(_._6).getOrElse(0.0)
-        val sumNum = rows.iterator.map(_._5).sum
-        val rem =
-          if (!skipped && math.abs(1.0 - qasum) > 1e-5 && qasum > 1e-5)
-            Seq(polyLine(code, fips, "0", 1.0 - qasum,
-              if (withQa) Some((den - sumNum, den, 1.0 - qasum)) else None,
-              "#REMAINDER ", fields))
-          else Seq.empty
-        lines ++ rem
-      }
-  }
-
-  /** Write a complete OUTPUT_FILE_TYPE=Polygon SMOKE file: #POLYGON
-    * header + county-ordered body (lexicographic out_poly_id — the
-    * ratioPoly qasum order), remainder rows last per county. */
-  def writePoly(srg: DataFrame, g: GridSpec, p: ProjInfo, path: String,
-                withQa: Boolean = true,
-                denomThreshold: Double = 1e-5,
-                fields: QaFields = QaFields.All,
-                writeHeader: Boolean = true): Unit = {
-    val body = toLinesPoly(srg, withQa, denomThreshold, fields).collect()
-      .sortBy { l =>
-        val t = l.replaceAll("^#(SKIPPED|REMAINDER) ", "").split("\t")
-        val isRemainder = if (l.startsWith("#REMAINDER")) 1 else 0
-        (t(0).trim.toInt, t(1), isRemainder, t(2))
-      }
-    writeFile(body, g, p, path, "#POLYGON", writeHeader)
-  }
-
-  /** Single-file assembly shared by write/writePoly: optional header line
-    * + pre-sorted body. */
-  private def writeFile(body: Seq[String], g: GridSpec, p: ProjInfo,
-                        path: String, tag: String,
-                        writeHeader: Boolean): Unit = {
-    val all = if (writeHeader) header(g, p, tag) +: body else body
-    java.nio.file.Files.write(java.nio.file.Paths.get(path),
-      all.mkString("", "\n", "\n").getBytes("UTF-8"))
-  }
-
-  /** Write a complete SMOKE file (header + ordered body). The single-file
-    * coalesce is for byte-exact parity at test scale; at 100 TB callers keep
-    * the Dataset[String] distributed (`toLines`) and write part files. */
+  /** Write a complete SMOKE file: header + body, grid or polygon output
+    * (see `countyLines`). Counties come in (srg_code, fips) order, each one's
+    * rows in the order `countyLines` gives them. The single-file collect is
+    * for byte-exact parity at test scale; at table scale `writeParts`
+    * keeps the body distributed.
+    *
+    * @param withQa false writes no comment fields, as `QaFields.None`
+    * @param headerTag #GRID for Regular/EGrid output, #VARIABLE_GRID,
+    *                  #POLYGON (allocate.c:765-779) */
   def write(srg: DataFrame, g: GridSpec, p: ProjInfo, path: String,
             withQa: Boolean = true, denomThreshold: Double = 1e-5,
             headerTag: String = "#GRID", fields: QaFields = QaFields.All,
             writeHeader: Boolean = true): Unit = {
-    val spark = srg.sparkSession
-    import spark.implicits._
-    val body = toLines(srg, withQa, denomThreshold, fields).collect()
-      .sortBy { l =>
-        val t = l.replaceAll("^#(SKIPPED|REMAINDER) ", "").split("\t")
-        // remainder rows carry col=row=0 but the reference flushes them
-        // AFTER the county's data lines (surrogate.c:291-360) — order last
-        val isRemainder = if (l.startsWith("#REMAINDER")) 1 else 0
-        (t(0).trim.toInt, t(1), isRemainder, t(3).trim.toInt, t(2).trim.toInt)
-      }
-    writeFile(body, g, p, path, headerTag, writeHeader)
+    val body = countyLines(srg, denomThreshold,
+        if (withQa) fields else QaFields.None)
+      .collect().sortBy(t => (t._1, t._2)).flatMap(_._3).toSeq
+    val all = if (writeHeader) header(g, p, headerTag) +: body else body
+    java.nio.file.Files.write(java.nio.file.Paths.get(path),
+      all.mkString("", "\n", "\n").getBytes("UTF-8"))
   }
 
-  /** Distributed SMOKE sink for table-scale output: county-grouped lines
-    * (remainder/skipped logic intact) written as text part files under
-    * `dir/body/`, header in `dir/HEADER`. Counties are range-partitioned so
-    * each part file holds whole counties in (code, fips) order; global file
-    * order across parts follows the partition ranges. Consumers (Smoke.parse,
-    * merge/gapfill tools) are order-independent. */
+  /** Distributed SMOKE sink for table-scale output: the same body as
+    * `write`, as text part files under `dir/body/` (one per default
+    * parallelism slot), header in `dir/HEADER`. Counties are
+    * range-partitioned and sorted within each part, so the part files read
+    * in name order hold `write`'s body. */
   def writeParts(srg: DataFrame, g: GridSpec, p: ProjInfo, dir: String,
-                 withQa: Boolean = true, numParts: Int = 0,
                  denomThreshold: Double = 1e-5,
                  headerTag: String = "#GRID",
-                 fields: QaFields = QaFields.All,
-                 writeHeader: Boolean = true): Unit = {
-    val parts = if (numParts > 0) numParts
-                else srg.sparkSession.sparkContext.defaultParallelism
-    val ranged = srg.repartitionByRange(parts, col("srg_code"), col("fips"))
-    toLines(ranged, withQa, denomThreshold, fields)
+                 fields: QaFields = QaFields.All): Unit = {
+    val spark = srg.sparkSession
+    import spark.implicits._
+    countyLines(srg, denomThreshold, fields)
+      .repartitionByRange(spark.sparkContext.defaultParallelism,
+        col("_1"), col("_2"))
+      .sortWithinPartitions("_1", "_2")
+      .flatMap(_._3)
       .write.mode("overwrite").text(s"$dir/body")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    if (writeHeader)
-      java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/HEADER"),
-        (header(g, p, headerTag) + "\n").getBytes("UTF-8"))
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/HEADER"),
+      (header(g, p, headerTag) + "\n").getBytes("UTF-8"))
   }
 
   /** SMOKE source: parse lines back to (srg_code, fips, col, row, frac

@@ -37,8 +37,8 @@ object Knn {
     import spark.implicits._
 
     val sitesC = sites
-      .withColumn("__cell", udf((x: Double, y: Double) =>
-        CellIndex.encode(x, y, domain, res)).apply(col("sx"), col("sy")))
+      .withColumn("__cell",
+        graft.spark.GeoFunctions.cellEncode(col("sx"), col("sy"), domain, res))
 
     val startRadius =
       if (initialRadius > 0) initialRadius

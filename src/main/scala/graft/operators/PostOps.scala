@@ -9,8 +9,9 @@ import org.apache.spark.sql.expressions.Window
   * re-expressed as DataFrame passes over the standard surrogate-row schema
   * (srg_code, fips, col, row, frac[, numer, denom, qasum]).
   *
-  * No op sorts its output: row order is the sink's job (Smoke.write sorts
-  * the body it collects into the reference's file order), and a global
+  * No op sorts its output: row order is the sink's job (Smoke.write
+  * renders each county in (row, col) order and orders the counties it
+  * collects by (code, fips), the reference's file order), and a global
   * sort would cost a sampling pass and a range exchange per call.
   */
 object PostOps {

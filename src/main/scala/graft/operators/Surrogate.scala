@@ -75,7 +75,7 @@ object Surrogate {
     * writes `code fips out_poly_id frac`). The qasum accumulation order is
     * the LEXICOGRAPHIC order of the output-poly id's STRING form — the one
     * deterministic order available for any id type, and the SAME order
-    * Smoke.toLinesPoly renders in (ids are strings in the file format), so
+    * Smoke renders polygon output in (ids are strings in the file format), so
     * the printed running sum is monotone and the county's last row carries
     * the total the #REMAINDER rule needs.
     * numer: (fips, out_id, numer); denom: (fips, denom). */
@@ -101,9 +101,10 @@ object Surrogate {
       .withColumn("frac", col("numer") / col("denom"))
     val w = Window.partitionBy("fips").orderBy(order: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // no global sort: row order is the sink's job (Smoke.write and
-    // writePoly sort the body they collect), and a range sort here would
-    // cost a sampling job and a wide exchange on every call
+    // no global sort: row order is the sink's job (Smoke.write orders the
+    // counties it collects, each rendered in this window's order), and a
+    // range sort here would cost a sampling job and a wide exchange on
+    // every call
     joined
       .withColumn("qasum", sum("frac").over(w))
       .withColumn("srg_code", lit(srgCode))

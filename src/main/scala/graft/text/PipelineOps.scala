@@ -153,41 +153,12 @@ object PipelineOps {
       .withColumn("contaminated", col("n_hits") > 0)
   }
 
-  /** Allocation-free decontamination — same contract as `decontaminate`,
-    * but doc n-grams are identified by 128-bit hashes computed over the
-    * text's UTF-8 byte SPANS (TextHash.spanNgramHashes): no gram string,
-    * token array, or substring is ever allocated on the corpus side. The
-    * string path allocates ~20 KB of gram strings per 200-token page —
-    * at crawl scale that allocation rate is the measured scaling limiter
-    * of the composite clean pass (memory bandwidth + young-gen churn),
-    * not CPU. Hash identity makes the hit count exact modulo an
-    * effective-128-bit collision (~1e-19 at 1e13 grams × 1e6 benchmark
-    * grams — the md5-exact-dedup argument); parity with the string path
-    * is spec-asserted on real corpora. */
-  def decontaminateHashed(docs: DataFrame, idCol: String, textCol: String,
-                          benchmark: DataFrame, n: Int): DataFrame = {
-    val spanUdf = udf((text: String) =>
-      TextHash.spanNgramHashes(text, n).map(p => (p(0), p(1))))
-    val pairUdf = udf((g: String) => {
-      val p = TextHash.ngramHashPair(g); (p(0), p(1))
-    })
-    val bench = benchmark.select(pairUdf(col("ngram")).as("hp")).distinct()
-    val grams = docs.select(col(idCol).as("id"),
-      explode(spanUdf(col(textCol))).as("hp"))
-    val hits = grams.join(broadcast(bench), Seq("hp"))
-      .groupBy("id").agg(count(lit(1)).as("__h"))
-    docs.select(col(idCol).as("id"))
-      .join(hits, Seq("id"), "left")
-      .select(col("id"), coalesce(col("__h"), lit(0L)).as("n_hits"))
-      .withColumn("contaminated", col("n_hits") > 0)
-  }
-
   /** Narrow EXACT decontamination: the eval-gram (h1, h2) identities are
     * collected once (guarded), packed into a sorted-array PairSet
     * (~16 B/gram — a 10M-gram eval suite is 160 MB, broadcast-sized), and
     * every document counts its matching distinct span grams in ONE
-    * doc-local probe. Output-identical to `decontaminate` /
-    * `decontaminateHashed` (DecontaminateSetSpec), but the plan is a
+    * doc-local probe. Output-identical to `decontaminate`
+    * (DecontaminateSetSpec), but the plan is a
     * single narrow projection: no gram explosion (the join formulation
     * pushes ~n_tokens rows per doc through a broadcast join — ~10⁹ rows
     * at 2M pages — then aggregates them back), no shuffle, no second
@@ -689,8 +660,8 @@ object PipelineOps {
     // branch (a naive formulation re-scans the corpus 20+ times; this
     // one scans ONCE — the decontamination leg was folded from a second
     // scan + gram-explosion broadcast join into the doc-local PairSet
-    // probe after ScalingProbe measured that leg as the clean pass's
-    // non-scaling Amdahl section)
+    // probe after a round-6 leg-by-leg timing of the clean pass at 4 and
+    // 16 cores found that leg to be its non-scaling Amdahl section)
     val text = col(textCol)
     // localCheckpoint, not persist(): building the in-memory CACHE of this
     // projection evaluates the expression stack on the cache writer's
@@ -758,12 +729,6 @@ object PipelineOps {
       .groupBy("stage").agg(count(lit(1)).as("n_docs"))
 
   // ------------------------------------------------------ clean-flags UDF
-
-  /** Diagnostic handle (ScalingProbe times the flags leg in isolation). */
-  def cleanFlagsProbe(langProfiles: Seq[(String, Seq[String])],
-                      stopwords: Seq[String], keepLang: String,
-                      minQuality: Double, maxDupFrac: Double) =
-    cleanFlagsUdf(langProfiles, stopwords, keepLang, minQuality, maxDupFrac)
 
   /** ONE-pass computation of every per-doc gate of the clean pass:
     * (lang_ok, quality_ok, rep_ok) from a single tokenize + single token

@@ -53,6 +53,17 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(back.count() == direct.count())
   }
 
+  test("CELL_RES and CELL_DOMAIN outside the cell index's range fail fast, naming the variable") {
+    // resolution in [0, CellIndex.MaxRes] like the SQL surface; a domain of
+    // four numbers with positive width and height
+    Seq("CELL_RES" -> "29", "CELL_RES" -> "-1", "CELL_DOMAIN" -> "0,0,0,10",
+        "CELL_DOMAIN" -> "0,0,10", "CELL_DOMAIN" -> "0,10,10,5").foreach { kv =>
+      val e = intercept[IllegalArgumentException](SpatialAllocator.run(spark,
+        Map("MIMS_PROCESSING" -> "SURROGATE", kv)))
+      assert(e.getMessage.contains(kv._1), s"$kv: ${e.getMessage}")
+    }
+  }
+
   test("SURROGATE threshold renders #SKIPPED rows; GRIDDESC projection reaches both sinks") {
     import graft.sources.Ioapi
     val dir = tmp("cli-skip")

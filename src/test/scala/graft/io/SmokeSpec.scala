@@ -37,7 +37,8 @@ class SmokeSpec extends AnyFunSuite with BeforeAndAfterAll {
       (r.getAs[Int]("out_id"), r.getAs[Double]("frac"), r.getAs[Double]("qasum")))
       .sortBy(_._1)
     assert(rows.toSeq == Seq((2, 0.75, 1.0), (10, 0.25, 0.25)))
-    val lines = Smoke.toLinesPoly(srg).collect()
+    // toLines renders polygon output when the table has an out_id column
+    val lines = Smoke.toLines(srg).collect()
     assert(!lines.exists(_.startsWith("#REMAINDER")), lines.mkString("\n"))
   }
 
@@ -51,7 +52,8 @@ class SmokeSpec extends AnyFunSuite with BeforeAndAfterAll {
       (170, "A", "34", 0.25, 1.0, 4.0, 0.75),
       (170, "B", "12", 1.0, 1e-7, 1e-7, 1.0)
     ).toDF("srg_code", "fips", "out_id", "frac", "numer", "denom", "qasum")
-    val lines = Smoke.toLinesPoly(srg).collect().sorted
+    // toLines renders polygon output when the table has an out_id column
+    val lines = Smoke.toLines(srg).collect().sorted
     assert(lines.exists(_.startsWith("  170\tA\t12\t0.50000000\t!")))
     assert(lines.exists(_.startsWith("#REMAINDER   170\tA\t0\t0.25000000\t!")))
     assert(lines.exists(_.startsWith("#SKIPPED   170\tB\t12\t1.00000000\t!")))
@@ -63,13 +65,14 @@ class SmokeSpec extends AnyFunSuite with BeforeAndAfterAll {
     val srg = Seq((100, "A", 1, 1, 0.5, 2.0, 4.0, 0.5))
       .toDF("srg_code", "fips", "col", "row", "frac", "numer", "denom", "qasum")
     def line(f: Smoke.QaFields) =
-      Smoke.toLines(srg, withQa = f.any, fields = f).collect().head
+      Smoke.toLines(srg, fields = f).collect().head
     assert(line(Smoke.QaFields.All).endsWith("\t!\t2.000000\t4.000000\t0.500000"))
     // qasum only: numerator/denominator fields are EMPTY, not zero
     assert(line(Smoke.QaFields(false, false, true)).endsWith("0.50000000\t!\t0.500000"))
     assert(line(Smoke.QaFields(true, false, false)).endsWith("0.50000000\t!\t2.000000"))
-    // all off via withQa=false: no comment at all
-    assert(Smoke.toLines(srg, withQa = false).collect().head.endsWith("0.50000000"))
+    // all off: no comment at all
+    assert(Smoke.toLines(srg, fields = Smoke.QaFields.None).collect().head
+      .endsWith("0.50000000"))
   }
 
   test("header tag tracks the output type; parseHeader accepts all three") {
@@ -161,7 +164,7 @@ class SmokeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(remIdx < body.indexWhere(_.contains("47002")))
   }
 
-  test("write and writePoly own the row order: scrambled input, same bytes") {
+  test("write owns the row order: scrambled input, same bytes") {
     import org.apache.spark.sql.functions.desc
     val s = spark
     import s.implicits._
@@ -187,20 +190,65 @@ class SmokeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(gl.contains("#REMAINDER") && gl.contains("#SKIPPED"), gl)
     assert(bytes(g1).sameElements(bytes(g2)), gl)
 
-    val poly = Seq(
+    val poly = polyTable
+    val (p1, p2) = (tmp("srgpoly-in"), tmp("srgpoly-scrambled"))
+    Smoke.write(poly, GridCatalog.TEST8, Smoke.ProjInfo(), p1, headerTag = "#POLYGON")
+    Smoke.write(scramble(poly, "fips", "out_id"), GridCatalog.TEST8,
+      Smoke.ProjInfo(), p2, headerTag = "#POLYGON")
+    val pl = new String(bytes(p1), "UTF-8")
+    assert(pl.contains("#REMAINDER") && pl.contains("#SKIPPED"), pl)
+    assert(bytes(p1).sameElements(bytes(p2)), pl)
+  }
+
+  // polygon output: 47001 sums to 0.5 → #REMAINDER with id 0; 47003's
+  // denominator is below the threshold → #SKIPPED; ids order as strings
+  private def polyTable = {
+    val s = spark
+    import s.implicits._
+    Seq(
       (170, "47001", "2", 0.25, 1.0, 4.0, 0.5),
       (170, "47001", "10", 0.25, 1.0, 4.0, 0.25),
       (170, "47002", "7", 1.0, 4.0, 4.0, 1.0),
       (170, "47003", "12", 0.5, 1e-7, 2e-7, 0.5),
       (170, "47003", "3", 0.5, 1e-7, 2e-7, 1.0)
     ).toDF("srg_code", "fips", "out_id", "frac", "numer", "denom", "qasum")
-    val (p1, p2) = (tmp("srgpoly-in"), tmp("srgpoly-scrambled"))
-    Smoke.writePoly(poly, GridCatalog.TEST8, Smoke.ProjInfo(), p1)
-    Smoke.writePoly(scramble(poly, "fips", "out_id"), GridCatalog.TEST8,
-      Smoke.ProjInfo(), p2)
-    val pl = new String(bytes(p1), "UTF-8")
-    assert(pl.contains("#REMAINDER") && pl.contains("#SKIPPED"), pl)
-    assert(bytes(p1).sameElements(bytes(p2)), pl)
+  }
+
+  private val polyBody = Seq(
+    "  170\t47001\t10\t0.25000000\t!\t1.000000\t4.000000\t0.250000",
+    "  170\t47001\t2\t0.25000000\t!\t1.000000\t4.000000\t0.500000",
+    "#REMAINDER   170\t47001\t0\t0.50000000\t!\t2.000000\t4.000000\t0.500000",
+    "  170\t47002\t7\t1.00000000\t!\t4.000000\t4.000000\t1.000000",
+    "#SKIPPED   170\t47003\t12\t0.50000000\t!\t0.000000\t0.000000\t0.500000",
+    "#SKIPPED   170\t47003\t3\t0.50000000\t!\t0.000000\t0.000000\t1.000000")
+
+  test("write renders a polygon table as #POLYGON lines (surrogate.c:455-470)") {
+    val f = java.nio.file.Files.createTempFile("srgpoly", ".txt").toString
+    Smoke.write(polyTable, GridCatalog.TEST8, Smoke.ProjInfo(), f,
+      headerTag = "#POLYGON")
+    val expected = (Smoke.header(GridCatalog.TEST8, Smoke.ProjInfo(), "#POLYGON")
+      +: polyBody).mkString("", "\n", "\n")
+    assert(new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(f)),
+      "UTF-8") == expected)
+  }
+
+  test("writeParts on a polygon table round-trips its data rows") {
+    val dir = java.nio.file.Files.createTempDirectory("smokepolyparts").toString
+    Smoke.writeParts(polyTable, GridCatalog.TEST8, Smoke.ProjInfo(), dir,
+      headerTag = "#POLYGON")
+    val parts = new java.io.File(s"$dir/body").listFiles()
+      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
+    val lines = parts.toSeq.flatMap(f => scala.jdk.CollectionConverters.ListHasAsScala(
+      java.nio.file.Files.readAllLines(f.toPath)).asScala)
+    // the part files in name order hold write's body
+    assert(lines == polyBody, lines.mkString("\n"))
+    val data = lines.filterNot(_.startsWith("#")).map(_.split("\t"))
+      .map(f => (f(0).trim.toInt, f(1), f(2), f(3).toDouble)).toSet
+    val live = polyTable.where("denom >= 1e-5").collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getDouble(3))).toSet
+    assert(data == live)
+    assert(new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"$dir/HEADER")), "UTF-8").startsWith("#POLYGON\tTEST8\t"))
   }
 
   test("write produces a deterministically ordered file") {

@@ -115,16 +115,21 @@ def strip_comments(src):
     return "".join(out)
 
 
-total = 0
-for path in sys.argv[1:]:
-    src = strip_comments(open(path).read())
-    offset = 0
-    for n, line in enumerate(src.split("\n"), 1):
-        m = DEF.match(line)
-        if m and "private" not in m.group(1):
-            names = defaults(src, offset + m.end())
-            if names:
-                print(f"{path}:{n} def {m.group(2)}: {len(names)} ({', '.join(names)})")
-                total += len(names)
-        offset += len(line) + 1
-print(f"total: {total}")
+def main(paths):
+    total = 0
+    for path in paths:
+        src = strip_comments(open(path).read())
+        offset = 0
+        for n, line in enumerate(src.split("\n"), 1):
+            m = DEF.match(line)
+            if m and "private" not in m.group(1):
+                names = defaults(src, offset + m.end())
+                if names:
+                    print(f"{path}:{n} def {m.group(2)}: {len(names)} ({', '.join(names)})")
+                    total += len(names)
+            offset += len(line) + 1
+    print(f"total: {total}")
+
+
+if __name__ == "__main__":
+    main(sys.argv[1:])

@@ -9,10 +9,14 @@ appears in no OTHER src/main file, with how often src/test and perfbench/src
 name it. A member with test=0 and perfbench=0 is reached only from its own
 file, if at all; one with only test counts is test-only code. Arguments
 restrict the listing to files under those prefixes. Names are matched as
-whole words, so an unrelated identifier with the same name counts as a use:
-the census under-reports, never over-reports, what is unreached.
+whole words of the code with `//` and `/* */` comments stripped (a comment
+that names a member does not reach it), so an unrelated identifier with the
+same name counts as a use: the census under-reports, never over-reports,
+what is unreached.
 """
 import collections, os, re, sys
+
+from knobs import strip_comments
 
 DECL = re.compile(r"^ {0,2}(?:(?:final|lazy|implicit|protected|private\[\w+\])\s+)*"
                   r"(def|val)\s+([A-Za-z_]\w*)")
@@ -26,8 +30,12 @@ def scala_files(root):
                 yield os.path.join(d, f)
 
 
+def code(path):
+    return strip_comments(open(path).read())
+
+
 def words(paths):
-    return {p: collections.Counter(WORD.findall(open(p).read())) for p in paths}
+    return {p: collections.Counter(WORD.findall(code(p))) for p in paths}
 
 
 main = words(scala_files("src/main"))
@@ -38,7 +46,7 @@ only = sys.argv[1:]
 for path in sorted(main):
     if only and not any(path.startswith(o) for o in only):
         continue
-    for n, line in enumerate(open(path), 1):
+    for n, line in enumerate(code(path).split("\n"), 1):
         m = DECL.match(line)
         if not m:
             continue
