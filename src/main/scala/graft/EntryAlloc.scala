@@ -51,7 +51,7 @@ object EntryAlloc {
     // hash-gates it since round 2.
     "q34_reproject" -> ((s, dir) => {
       import graft.grid.Proj
-      import graft.spark.GeoFunctions.polygonAreaUdf
+      import graft.spark.GeoFunctions.polygonArea
       val toLonLat = udf((rings: Seq[Seq[Double]]) =>
         rings.map(r => r.zipWithIndex.map { case (v, i) =>
           if (i % 2 == 0) -92.0 + v / 1000.0 * 0.5 else 33.0 + v / 1000.0 * 0.5
@@ -59,7 +59,7 @@ object EntryAlloc {
       val geo = TpchGeo.counties(s).withColumn("geom", toLonLat(col("geom")))
       Reproject.polygons(geo, Proj.LatLon, Proj.Lcc(33, 45, 40, -97), maxSeg = 0.1)
         .select(col("fips"),
-          round(polygonAreaUdf(col("geom")) / 1e6, 3).as("area_km2"))
+          round(polygonArea(col("geom")) / 1e6, 3).as("area_km2"))
         .orderBy("fips")
     }),
 
@@ -67,13 +67,13 @@ object EntryAlloc {
     // sharing an id merge into one multipolygon; per-feature ring count and
     // exact area (distinct disjoint rects → closed-form oracle)
     "q35_multipart" -> ((s, dir) => {
-      import graft.spark.GeoFunctions.polygonAreaUdf
+      import graft.spark.GeoFunctions.polygonArea
       TpchGeo.tracts(s, dir)
         .select(col("p_size"), col("geom").getItem(0).as("ring"))
         .groupBy("p_size")
         .agg(array_sort(collect_set(col("ring"))).as("geom"))
         .select(col("p_size"), size(col("geom")).as("n_rings"),
-          polygonAreaUdf(col("geom")).as("area"))
+          polygonArea(col("geom")).as("area"))
         .orderBy("p_size")
     }),
 

@@ -16,6 +16,13 @@ import graft.geom.Geo.BBox
   * Line-vs-general-polygon uses the reference's own algorithm
   * (intersect.c:274-512): endpoint in-tests + all seg-seg intersections
   * sorted along the segment + midpoint containment for each span.
+  *
+  * The surrogate and spatial-join paths reach these kernels through the
+  * native ring expressions (graft.spark.expressions.RingKernel), which
+  * call them on rings copied out of Spark's `ArrayData`. The rectangle
+  * clip runs once per (fragment, cell) row there, so its Sutherland–Hodgman
+  * passes work on two reused vertex buffers rather than building a ring
+  * per half-plane.
   */
 object Clip {
 
@@ -25,56 +32,72 @@ object Clip {
     * Works for any simple ring; winding is preserved so signed areas of
     * clipped holes still subtract. Returns the (possibly empty) clipped ring. */
   def clipRingRect(ring: Array[Double], r: BBox): Array[Double] = {
-    var cur = ring
-    // clip against each of the 4 half-planes in turn
-    cur = clipHalfPlane(cur, keep = (x, _) => x >= r.xmin,
-      inter = (x1, y1, x2, y2) => { val t = (r.xmin - x1) / (x2 - x1); (r.xmin, y1 + t * (y2 - y1)) })
-    if (cur.length < 6) return Array.emptyDoubleArray
-    cur = clipHalfPlane(cur, keep = (x, _) => x <= r.xmax,
-      inter = (x1, y1, x2, y2) => { val t = (r.xmax - x1) / (x2 - x1); (r.xmax, y1 + t * (y2 - y1)) })
-    if (cur.length < 6) return Array.emptyDoubleArray
-    cur = clipHalfPlane(cur, keep = (_, y) => y >= r.ymin,
-      inter = (x1, y1, x2, y2) => { val t = (r.ymin - y1) / (y2 - y1); (x1 + t * (x2 - x1), r.ymin) })
-    if (cur.length < 6) return Array.emptyDoubleArray
-    cur = clipHalfPlane(cur, keep = (_, y) => y <= r.ymax,
-      inter = (x1, y1, x2, y2) => { val t = (r.ymax - y1) / (y2 - y1); (x1 + t * (x2 - x1), r.ymax) })
-    if (cur.length < 6) Array.emptyDoubleArray else cur
-  }
-
-  private def clipHalfPlane(ring: Array[Double],
-                            keep: (Double, Double) => Boolean,
-                            inter: (Double, Double, Double, Double) => (Double, Double))
-      : Array[Double] = {
-    val n = ring.length / 2
-    if (n == 0) return ring
-    val out = new scala.collection.mutable.ArrayBuilder.ofDouble
-    var i = 0
-    while (i < n) {
-      val j = (i + 1) % n
-      val x1 = ring(2 * i); val y1 = ring(2 * i + 1)
-      val x2 = ring(2 * j); val y2 = ring(2 * j + 1)
-      val in1 = keep(x1, y1); val in2 = keep(x2, y2)
-      if (in1) { out += x1; out += y1 }
-      if (in1 != in2) {
-        val (ix, iy) = inter(x1, y1, x2, y2)
-        out += ix; out += iy
-      }
-      i += 1
-    }
-    out.result()
+    val c = new RectClipper
+    val n = c.clip(ring, r)
+    if (n < 3) Array.emptyDoubleArray else java.util.Arrays.copyOf(c.a, 2 * n)
   }
 
   /** Area of polygon ∩ rect; exact for integral-lattice inputs. Signed per
     * ring so holes subtract, |sum| at the end (polyops.c semantics). */
   def polygonRectClipArea(rings: Array[Array[Double]], r: BBox): Double = {
+    val c = new RectClipper
     var s = 0.0
     var i = 0
     while (i < rings.length) {
-      val c = clipRingRect(rings(i), r)
-      if (c.length >= 6) s += Geo.signedArea(c)
+      val n = c.clip(rings(i), r)
+      if (n >= 3) s += Geo.signedArea(c.a, n)
       i += 1
     }
     math.abs(s)
+  }
+
+  /** The two vertex buffers of a Sutherland–Hodgman clip, reused across the
+    * rings of one call: the ring being clipped is in `a`, and each
+    * half-plane pass writes `b` and swaps the two, so no pass allocates
+    * unless a buffer has to grow. */
+  private final class RectClipper {
+    var a: Array[Double] = new Array[Double](64)
+    private var b: Array[Double] = new Array[Double](64)
+
+    /** Clips `ring` against x ≥ xmin, x ≤ xmax, y ≥ ymin, y ≤ ymax in that
+      * order, stopping once fewer than 3 vertices are left; returns the
+      * number of vertices left in `a`. */
+    def clip(ring: Array[Double], r: BBox): Int = {
+      var n = ring.length / 2
+      if (a.length < 2 * n) a = new Array[Double](2 * n)
+      System.arraycopy(ring, 0, a, 0, 2 * n)
+      n = halfPlane(n, 0, r.xmin, keepAbove = true)
+      if (n >= 3) n = halfPlane(n, 0, r.xmax, keepAbove = false)
+      if (n >= 3) n = halfPlane(n, 1, r.ymin, keepAbove = true)
+      if (n >= 3) n = halfPlane(n, 1, r.ymax, keepAbove = false)
+      n
+    }
+
+    /** One pass over the n vertices in `a`, keeping coordinate `axis`
+      * (0 x, 1 y) ≥ `bound` when `keepAbove`, else ≤ it; a crossing edge
+      * adds its intersection with the line. Returns the count now in `a`. */
+    private def halfPlane(n: Int, axis: Int, bound: Double, keepAbove: Boolean): Int = {
+      // each vertex emits at most itself and one intersection
+      if (b.length < 4 * n) b = new Array[Double](4 * n)
+      val other = 1 - axis
+      var m = 0
+      var i = 0
+      while (i < n) {
+        val j = (i + 1) % n
+        val c1 = a(2 * i + axis); val o1 = a(2 * i + other)
+        val c2 = a(2 * j + axis); val o2 = a(2 * j + other)
+        val in1 = if (keepAbove) c1 >= bound else c1 <= bound
+        val in2 = if (keepAbove) c2 >= bound else c2 <= bound
+        if (in1) { b(2 * m + axis) = c1; b(2 * m + other) = o1; m += 1 }
+        if (in1 != in2) {
+          val t = (bound - c1) / (c2 - c1)
+          b(2 * m + axis) = bound; b(2 * m + other) = o1 + t * (o2 - o1); m += 1
+        }
+        i += 1
+      }
+      val t = a; a = b; b = t
+      m
+    }
   }
 
   // ------------------------------------------------- segment vs rectangle

@@ -2,6 +2,13 @@ package graft.geom
 
 /** Pure-Scala computational-geometry kernels (no Spark dependencies).
   *
+  * These are the engine's geometry arithmetic. The native Catalyst
+  * expressions of the query paths (graft.spark.expressions.RingKernel)
+  * read Spark's `ArrayData` and call these functions on the copied rings,
+  * or, where they read in place, repeat their arithmetic in the same order;
+  * either way their results are bit-identical to the functions here
+  * (RingKernelSpec), which stay the reference.
+  *
   * Geometry representation used throughout the engine:
   *   - point:   (x: Double, y: Double) pair of columns
   *   - line:    flat Array[Double] of x0,y0,x1,y1,... vertices
@@ -37,6 +44,11 @@ object Geo {
            math.max(xmax, o.xmax), math.max(ymax, o.ymax))
   }
 
+  /** The bbox of nothing (min above max): it intersects no bbox and covers
+    * no cell. An empty ring has it, and so does a polygon with no rings. */
+  val EmptyBBox: BBox =
+    BBox(Double.MaxValue, Double.MaxValue, Double.MinValue, Double.MinValue)
+
   def bboxOfRing(ring: Array[Double]): BBox = {
     var xmin = Double.MaxValue; var ymin = Double.MaxValue
     var xmax = Double.MinValue; var ymax = Double.MinValue
@@ -52,14 +64,16 @@ object Geo {
 
   def bboxOfPolygon(rings: Array[Array[Double]]): BBox =
     // holes are inside the outer ring; ring 0 suffices
-    bboxOfRing(rings(0))
+    if (rings.isEmpty) EmptyBBox else bboxOfRing(rings(0))
 
   // ---------------------------------------------------------------- area
 
   /** Signed shoelace area of one ring: CCW positive. The ring need not be
     * explicitly closed (last vertex == first is tolerated). */
-  def signedArea(ring: Array[Double]): Double = {
-    val n = ring.length / 2
+  def signedArea(ring: Array[Double]): Double = signedArea(ring, ring.length / 2)
+
+  /** Signed shoelace area of the ring in the first n vertices of `ring`. */
+  def signedArea(ring: Array[Double], n: Int): Double = {
     if (n < 3) return 0.0
     var s = 0.0
     var i = 0

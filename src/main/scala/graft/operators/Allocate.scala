@@ -38,7 +38,7 @@ object Allocate {
                modes: Seq[(String, Mode)],
                domain: CellDomain, res: Int,
                outId: String = "out_id"): DataFrame = {
-    val inp = input.withColumn("__iarea", polygonAreaUdf(col("geom")))
+    val inp = input.withColumn("__iarea", polygonArea(col("geom")))
     val out = output.withColumnRenamed("geom", "bgeom")
     // persisted: consumed once per aggregation mode (the reference likewise
     // feeds every allocate mode from one polyIsect result, allocate.c:367)
@@ -48,7 +48,7 @@ object Allocate {
     val needArea = modes.exists(_._2 == Average)
     val outAreas =
       if (needArea) output.select(col(outId),
-        polygonAreaUdf(col("geom")).as("__oarea"))
+        polygonArea(col("geom")).as("__oarea"))
       else null
 
     val contribOf: String => Column = a =>

@@ -75,16 +75,16 @@ object SpatialJoin {
                         aGeom: String = "geom", bGeom: String = "bgeom",
                         keepFragGeom: Boolean = true): DataFrame = {
     // bboxes once per ROW; the per-PAIR canonical test is column arithmetic
-    val aE = a.withColumn("__abb", polyBBoxUdf(col(aGeom)))
+    val aE = a.withColumn("__abb", polyBBox(col(aGeom)))
       .withColumn("__cell", explode(polyCoverCells(col(aGeom), domain, res)))
-    val bE = b.withColumn("__bbb", polyBBoxUdf(col(bGeom)))
+    val bE = b.withColumn("__bbb", polyBBox(col(bGeom)))
       .withColumn("__cell", explode(polyCoverCells(col(bGeom), domain, res)))
     val frags = cellPairs(aE, bE,
         isCanonicalCellBB(col("__abb"), col("__bbb"), col("__cell"), domain, res))
       .drop("__abb", "__bbb")
-      .withColumn("frag_geom", polyClipGeomUdf(col(aGeom), col(bGeom)))
+      .withColumn("frag_geom", polyClipGeom(col(aGeom), col(bGeom)))
       .where(size(col("frag_geom")) > 0)
-      .withColumn("frag_area", polygonAreaUdf(col("frag_geom")))
+      .withColumn("frag_area", polygonArea(col("frag_geom")))
       .where(col("frag_area") > 0)
       .drop(bGeom)
     if (keepFragGeom) frags else frags.drop("frag_geom")
@@ -99,17 +99,17 @@ object SpatialJoin {
                         domain: CellDomain, res: Int,
                         lineCol: String = "line",
                         curved: Boolean = false): DataFrame = {
-    val lE = lines.withColumn("__lbb", lineBBoxUdf(col(lineCol)))
+    val lE = lines.withColumn("__lbb", lineBBox(col(lineCol)))
       .withColumn("__cell", explode(lineCoverCells(col(lineCol), domain, res)))
-    val pE = polys.withColumn("__pbb", polyBBoxUdf(col("geom")))
+    val pE = polys.withColumn("__pbb", polyBBox(col("geom")))
       .withColumn("__cell", explode(polyCoverCells(col("geom"), domain, res)))
     cellPairs(lE, pE,
         isCanonicalCellBB(col("__lbb"), col("__pbb"), col("__cell"), domain, res))
       .drop("__lbb", "__pbb")
-      .withColumn("frag_line", linePolyClipSegsUdf(col(lineCol), col("geom")))
+      .withColumn("frag_line", lineClipSegs(col(lineCol), col("geom")))
       .where(size(col("frag_line")) > 0)
       .withColumn("frag_len",
-        aggregate(transform(col("frag_line"), s => lineLengthCol(s, curved)),
+        aggregate(transform(col("frag_line"), s => lineLength(s, curved)),
                   lit(0.0), (acc, v) => acc + v))
       .where(col("frag_len") > 0)
       .drop("geom")

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Column}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.{UserDefinedFunction, Window}
+import org.apache.spark.sql.expressions.Window
 import graft.cells.CellDomain
 import graft.grid.GridSpec
 import graft.spark.GeoFunctions._
@@ -149,19 +149,19 @@ object Surrogate {
     * clip them to the counties with `clip`. `base` is both filtered and
     * projected, so `size` runs behind a local single-evaluation fence
     * (GeoFunctions header) — once per feature, not again in the scan-side
-    * filter; the shared measure stays deterministic for its other callers.
+    * filter; the shared measure stays unfenced for its other callers.
     * The W∩D fragments are persisted — the
     * denominator and every target's numerator consume them, and the
     * reference materializes this same grid-independent intermediate
     * (SAVE_DW_FILE/USE_DW_FILE, data_weight.c:19-160). A piece of measure
     * m contributes val·m/base, or m itself when no weight is given. */
   private def fragCounty(features: DataFrame, weight: Option[String],
-                         base: String, size: UserDefinedFunction,
+                         base: String, size: Column => Column,
                          feature: String, fragMeasure: String)
                         (clip: DataFrame => DataFrame): County = {
     val wts = features
       .where(weight.map(c => col(c).cast("double") =!= 0.0).getOrElse(lit(true)))
-      .withColumn(base, size.asNondeterministic()(col(feature)))
+      .withColumn(base, fence(size(col(feature))))
       .where(col(base) > 0)
       .withColumn("__wval",
         weight.map(col(_).cast("double")).getOrElse(lit(0.0)))
@@ -178,7 +178,7 @@ object Surrogate {
   private def polyCounty(weights: DataFrame, counties: DataFrame,
                          domain: CellDomain, res: Int,
                          weight: Option[String]): County =
-    fragCounty(weights, weight, "__warea", polygonAreaUdf, "geom",
+    fragCounty(weights, weight, "__warea", polygonArea, "geom",
         "frag_area") { w =>
       SpatialJoin.polyPolyFragments(
         w, counties.withColumnRenamed("geom", "bgeom"), domain, res)
@@ -190,7 +190,7 @@ object Surrogate {
                          domain: CellDomain, res: Int, weight: Option[String],
                          curved: Boolean): County =
     fragCounty(lines, weight, "__wlen",
-        if (curved) greatCircleLengthUdf else lineLengthUdf, "line",
+        lineLength(_, curved), "line",
         "frag_len") { l =>
       SpatialJoin.linePolyFragments(l, counties, domain, res, curved = curved)
     }
@@ -272,8 +272,7 @@ object Surrogate {
     // per clipped piece × cell: Liang–Barsky length inside the cell
     val pieces = c.rows.withColumn("__piece", explode(col("frag_line")))
     val cells = cellClip(pieces, lineGridCoverCells(col("__piece"), grid),
-      id => if (curved) lineCellClipLengthCurved(col("__piece"), id, grid)
-            else lineCellClipLength(col("__piece"), id, grid),
+      lineCellClipLength(col("__piece"), _, grid, curved),
       "__clen", grid)
     val numer = c.numer(cells, col("__clen"), "fips", "col", "row")
     ratio(numer, c.denom, srgCode, denomThreshold, keepSkipped = keepSkipped)

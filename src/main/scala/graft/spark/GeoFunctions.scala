@@ -2,36 +2,39 @@ package graft.spark
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import graft.geom.{Geo, Clip}
+import graft.geom.Geo
 import graft.cells.{CellDomain, CellIndex}
 import graft.grid.GridSpec
+import graft.spark.expressions._
 
 /** Column-level geometry functions.
   *
-  * Two tiers, chosen deliberately for scale:
-  *   - regular-grid math (point→col/row/cell, in-grid tests) is PURE COLUMN
-  *     ARITHMETIC (`floor`, `cast`, `pmod`) — whole-stage-codegen'd, no UDF,
-  *     no grid table materialized, mirroring the closed-form id math of the
-  *     reference (surrogate.c:425-431, regularGridReader.c:191-296);
-  *   - exact geometry kernels (PIP, clip areas/lengths, cell cover) are Scala
-  *     UDFs over flat ring arrays (array<array<double>>). These sit AFTER the
-  *     cell-cover equi-join prefilter, so they run on candidate pairs only.
-  *
-  * Every UDF carries a name (`withName`), so plans and `plans/` dumps show
-  * which kernel runs in which operator instead of anonymous `UDF(...)`.
+  * Regular-grid math (point→col/row/cell, in-grid tests) is plain column
+  * arithmetic (`floor`, `cast`, `pmod`): no grid table is materialized,
+  * mirroring the closed-form id math of the reference (surrogate.c:425-431,
+  * regularGridReader.c:191-296). Every geometry kernel of the surrogate and
+  * spatial-join paths (PIP, cell covers, bboxes, areas and lengths, clips) is
+  * a native Catalyst expression (`spark/expressions`): it reads the rings
+  * from Tungsten `ArrayData` without boxing them, its generated code is one
+  * static call into PipKernel / CellKernel / RingKernel, and plans name it
+  * by its kernel (`poly_clip_geom`, `line_len`, …). The exact kernels sit
+  * after the cell-cover equi-join prefilter, so they run on candidate pairs
+  * only. The five Scala UDFs left are two twins kept to cross-check a
+  * native expression and the adaptive-cover, ancestor and centroid helpers
+  * off those paths.
   *
   * Single-evaluation fence: an exact kernel whose result is both filtered
-  * (empty or zero-measure pieces dropped) and projected is marked
-  * `asNondeterministic()` — the rationale on TextHash.jaccardVerifyUdf.
-  * Left deterministic, Catalyst pushes the filter through the projection
-  * into the cell-join condition, where the clip runs AHEAD of the cheap
-  * reference-point test on every candidate — twice when two filters read
-  * it — and then once more in the projection. Fenced, it runs once per
-  * canonical candidate, or once per (fragment, cell) row, in a Project
-  * above the join or explode. The kernels are pure; only the optimizer's
-  * freedom to copy and push them changes. The shared area/length measures
-  * stay deterministic, so filters over them still push down to the scan;
-  * a caller that filters and projects one fences its own copy.
+  * (empty or zero-measure pieces dropped) and projected is wrapped in
+  * [[fence]] — the rationale on TextHash.jaccardVerifyUdf. Left bare,
+  * Catalyst pushes the filter through the projection into the cell-join
+  * condition, where the clip runs AHEAD of the cheap reference-point test
+  * on every candidate — twice when two filters read it — and then once
+  * more in the projection. Fenced, it runs once per canonical candidate,
+  * or once per (fragment, cell) row, in a Project above the join or
+  * explode. The kernels are pure; only the optimizer's freedom to copy and
+  * push them changes. The shared area/length measures stay unfenced, so
+  * filters over them still push down to the scan; a caller that filters
+  * and projects one fences its own copy.
   */
 object GeoFunctions {
 
@@ -66,14 +69,14 @@ object GeoFunctions {
   /** Point → Z-order cell id at resolution res (batched cell-encode stage).
     * Native codegen expression — stays inside WholeStageCodegen, no boxing. */
   def cellEncode(x: Column, y: Column, d: CellDomain, res: Int): Column =
-    exprCol(graft.spark.expressions.CellEncodeExpr(
+    exprCol(CellEncodeExpr(
       exprOf(x.cast("double")), exprOf(y.cast("double")),
       d.xmin, d.ymin, d.xmax, d.ymax, res))
 
   /** Base-32 geohash of (lon, lat) at a fixed precision — the lon-lat
     * sibling of cellEncode, same codegen discipline. */
   def geohash(lon: Column, lat: Column, precision: Int): Column =
-    exprCol(graft.spark.expressions.GeohashExpr(
+    exprCol(GeohashExpr(
       exprOf(lon.cast("double")), exprOf(lat.cast("double")), precision))
 
   /** UDF twin of cellEncode, kept for cross-checking the native expression. */
@@ -87,15 +90,10 @@ object GeoFunctions {
     * the equi-join key (the scalable replacement for OVERLAP2 bbox loops).
     * Native codegen expression over raw ArrayData. */
   def polyCoverCells(geom: Column, d: CellDomain, res: Int): Column =
-    exprCol(graft.spark.expressions.CoverCellsExpr(
-      exprOf(geom), d.xmin, d.ymin, d.xmax, d.ymax, res))
+    exprCol(CoverCellsExpr(exprOf(geom), polygon = true, d, res))
 
-  def lineCoverCells(line: Column, d: CellDomain, res: Int): Column = {
-    val f = udf((l: Seq[Double]) =>
-      CellIndex.coverCells(Geo.bboxOfRing(l.toArray), d, res))
-      .withName("line_cover_cells")
-    f(line)
-  }
+  def lineCoverCells(line: Column, d: CellDomain, res: Int): Column =
+    exprCol(CoverCellsExpr(exprOf(line), polygon = false, d, res))
 
   /** Adaptive (multi-resolution) cover of a polygon: few coarse cells for
     * huge geometries, maxRes cells for small ones — bounds the explode
@@ -116,13 +114,15 @@ object GeoFunctions {
     f(x, y)
   }
 
-  // --------------------------------------------- exact kernels (UDF tier)
+  // --------------------------------------------- exact kernels
+
+  /** The single-evaluation fence (header) around a kernel call. */
+  def fence(c: Column): Column = exprCol(Fence(exprOf(c)))
 
   /** Reference-semantics point-in-polygon (EDGE in, VTX excluded, hole
-    * parity; inpoly.c / sumpoly.c:184-187). Native codegen expression
-    * reading Tungsten ArrayData in place — no per-row ring materialization. */
+    * parity; inpoly.c / sumpoly.c:184-187). */
   def pipStatus(x: Column, y: Column, geom: Column): Column =
-    exprCol(graft.spark.expressions.PointInPolygonStatus(
+    exprCol(PointInPolygonStatus(
       exprOf(x.cast("double")), exprOf(y.cast("double")), exprOf(geom)))
 
   /** UDF twin of pipStatus, kept for cross-checking the native expression. */
@@ -133,20 +133,13 @@ object GeoFunctions {
   def containsPoint(x: Column, y: Column, geom: Column): Column =
     pipStatus(x, y, geom) === Geo.IN
 
-  val polygonAreaUdf = udf((rings: Seq[Seq[Double]]) =>
-    Geo.polygonArea(rings.map(_.toArray).toArray)).withName("poly_area")
+  /** Polygon area, holes subtracting (polyops.c:485-497). */
+  def polygonArea(geom: Column): Column = exprCol(PolyArea(exprOf(geom)))
 
-  val lineLengthUdf = udf((l: Seq[Double]) => Geo.lineLength(l.toArray))
-    .withName("line_len")
-
-  /** Great-circle polyline length over lon/lat degrees — USE_CURVED_LINES
-    * mode (polyops.c:440-474). */
-  val greatCircleLengthUdf = udf((l: Seq[Double]) => Geo.greatCircleLength(l.toArray))
-    .withName("great_circle_len")
-
-  /** Length measure selected by the USE_CURVED_LINES env contract. */
-  def lineLengthCol(line: Column, curved: Boolean): Column =
-    if (curved) greatCircleLengthUdf(line) else lineLengthUdf(line)
+  /** Polyline length: planar, or great-circle meters over lon/lat degrees
+    * when `curved` — the USE_CURVED_LINES env contract (polyops.c:421-474). */
+  def lineLength(line: Column, curved: Boolean): Column =
+    exprCol(LineLength(exprOf(line), curved))
 
   val centroidUdf = udf((rings: Seq[Seq[Double]]) => {
     val (cx, cy) = Geo.vertexMeanCentroid(rings.map(_.toArray).toArray)
@@ -155,75 +148,41 @@ object GeoFunctions {
 
   /** Clipped geometry of polygon ∩ polygon as rings (for fragment rows).
     * Fenced: runs once per canonical candidate (see header). */
-  val polyClipGeomUdf = udf((a: Seq[Seq[Double]], b: Seq[Seq[Double]]) =>
-    Clip.polyPolyClip(a.map(_.toArray).toArray, b.map(_.toArray).toArray))
-    .withName("poly_clip_geom").asNondeterministic()
+  def polyClipGeom(a: Column, b: Column): Column =
+    fence(exprCol(PolyClipGeom(exprOf(a), exprOf(b))))
 
   /** Area of polygon ∩ one grid cell (rect fast path, exact). Fenced: runs
     * once per (fragment, cell) row. */
-  def polyCellClipArea(geom: Column, cellId: Column, g: GridSpec): Column = {
-    val f = udf((rings: Seq[Seq[Double]], id: Long) =>
-      Clip.polygonRectClipArea(rings.map(_.toArray).toArray, g.cellBBox(id)))
-      .withName("poly_cell_clip_area").asNondeterministic()
-    f(geom, cellId)
-  }
+  def polyCellClipArea(geom: Column, cellId: Column, g: GridSpec): Column =
+    fence(exprCol(PolyCellClipArea(exprOf(geom), exprOf(cellId), g)))
 
   /** Grid cells covered by a polygon's bbox (closed-form; explode for the
     * fragment×cell stage — the reference's fillPolyIntInfo candidate
     * enumeration, sumpoly.c:385-423). */
-  def polyGridCoverCells(geom: Column, g: GridSpec): Column = {
-    val f = udf((rings: Seq[Seq[Double]]) =>
-      g.coverCells(Geo.bboxOfPolygon(rings.map(_.toArray).toArray)))
-      .withName("poly_grid_cover_cells")
-    f(geom)
-  }
+  def polyGridCoverCells(geom: Column, g: GridSpec): Column =
+    exprCol(GridCoverCells(exprOf(geom), g, polygon = true))
 
-  def lineGridCoverCells(line: Column, g: GridSpec): Column = {
-    val f = udf((l: Seq[Double]) => g.coverCells(Geo.bboxOfRing(l.toArray)))
-      .withName("line_grid_cover_cells")
-    f(line)
-  }
+  def lineGridCoverCells(line: Column, g: GridSpec): Column =
+    exprCol(GridCoverCells(exprOf(line), g, polygon = false))
 
   /** Polyline ∩ polygon as clipped sub-segments (flat polyline pieces).
     * Fenced: runs once per canonical candidate (see header). */
-  val linePolyClipSegsUdf = udf((l: Seq[Double], rings: Seq[Seq[Double]]) =>
-    Clip.linePolyClipSegments(l.toArray, rings.map(_.toArray).toArray))
-    .withName("line_clip_segs").asNondeterministic()
+  def lineClipSegs(line: Column, geom: Column): Column =
+    fence(exprCol(LineClipSegs(exprOf(line), exprOf(geom))))
 
-  /** Length of polyline ∩ one grid cell (Liang–Barsky fast path). Fenced:
-    * runs once per (piece, cell) row. */
-  def lineCellClipLength(line: Column, cellId: Column, g: GridSpec): Column = {
-    val f = udf((l: Seq[Double], id: Long) =>
-      Clip.lineRectClipLength(l.toArray, g.cellBBox(id)))
-      .withName("line_cell_clip_len").asNondeterministic()
-    f(line, cellId)
-  }
+  /** Length of polyline ∩ one grid cell (Liang–Barsky fast path); when
+    * `curved`, clip geometrically (exact endpoints) and measure each span
+    * with haversine. Fenced: runs once per (piece, cell) row. */
+  def lineCellClipLength(line: Column, cellId: Column, g: GridSpec,
+                         curved: Boolean): Column =
+    fence(exprCol(LineCellClipLength(exprOf(line), exprOf(cellId), g, curved)))
 
-  /** Great-circle length of polyline ∩ one grid cell: clip geometrically
-    * (exact endpoints), measure each span with haversine. Fenced like
-    * lineCellClipLength. */
-  def lineCellClipLengthCurved(line: Column, cellId: Column, g: GridSpec): Column = {
-    val f = udf((l: Seq[Double], id: Long) => {
-      val segs = Clip.lineRectClipSegs(l.toArray, g.cellBBox(id))
-      var s = 0.0
-      var i = 0
-      while (i < segs.length) { s += Geo.greatCircleLength(segs(i)); i += 1 }
-      s
-    }).withName("line_cell_clip_len_curved").asNondeterministic()
-    f(line, cellId)
-  }
+  /** [xmin, ymin, xmax, ymax] of a polygon (for reference-point dedup +
+    * pruning). */
+  def polyBBox(geom: Column): Column = exprCol(BBoxOf(exprOf(geom), polygon = true))
 
-  /** bbox struct column of a polygon (for reference-point dedup + pruning). */
-  val polyBBoxUdf = udf((rings: Seq[Seq[Double]]) => {
-    val b = Geo.bboxOfPolygon(rings.map(_.toArray).toArray)
-    Array(b.xmin, b.ymin, b.xmax, b.ymax)
-  }).withName("poly_bbox")
-
-  /** bbox column of a polyline. */
-  val lineBBoxUdf = udf((l: Seq[Double]) => {
-    val b = Geo.bboxOfRing(l.toArray)
-    Array(b.xmin, b.ymin, b.xmax, b.ymax)
-  }).withName("line_bbox")
+  /** [xmin, ymin, xmax, ymax] of a polyline. */
+  def lineBBox(line: Column): Column = exprCol(BBoxOf(exprOf(line), polygon = false))
 
   /** Reference-point pair dedup for cell-cover joins: true only in the one
     * canonical cell containing (max(xmins), max(ymins)) of the two bboxes —
@@ -231,7 +190,7 @@ object GeoFunctions {
     * shuffle (standard PBSM/reference-point technique).
     *
     * Takes PRECOMPUTED bbox columns ([xmin,ymin,xmax,ymax], one scan per
-    * ROW, via polyBBoxUdf) so the per-candidate-PAIR test is pure codegen
+    * ROW, via polyBBox) so the per-candidate-PAIR test is pure codegen
     * column arithmetic — no ring scans in the join's inner loop. */
   def isCanonicalCellBB(aBB: Column, bBB: Column, cell: Column,
                         d: CellDomain, res: Int): Column =

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Cast, CreateArray, Expression,
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, Decimal, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
-import graft.cells.CellIndex
+import graft.cells.{CellDomain, CellIndex}
 import graft.spark.expressions.{CellEncodeExpr, CoverCellsExpr, GeohashExpr, LuhnValid, MultiPatternCounts, NfcNormalize, PointInPolygonStatus, TrailingDigits}
 
 /** SQL surface for the engine's native kernels: registers the codegen'd
@@ -82,11 +82,11 @@ object SqlFunctions {
   val coverCells: Seq[Expression] => Expression = { args =>
     require(args.length == 6,
       "graft_cover_cells(rings, xmin, ymin, xmax, ymax, res)")
-    CoverCellsExpr(Cast(args(0), ringsType),
-      litDouble(args(1), "graft_cover_cells"),
-      litDouble(args(2), "graft_cover_cells"),
-      litDouble(args(3), "graft_cover_cells"),
-      litDouble(args(4), "graft_cover_cells"),
+    CoverCellsExpr(Cast(args(0), ringsType), polygon = true,
+      CellDomain(litDouble(args(1), "graft_cover_cells"),
+        litDouble(args(2), "graft_cover_cells"),
+        litDouble(args(3), "graft_cover_cells"),
+        litDouble(args(4), "graft_cover_cells")),
       litRes(args(5), "graft_cover_cells"))
   }
 

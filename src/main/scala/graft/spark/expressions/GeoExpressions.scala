@@ -110,50 +110,6 @@ object CellKernel {
   def encode(x: Double, y: Double, xmin: Double, ymin: Double,
              xmax: Double, ymax: Double, res: Int): Long =
     CellIndex.encode(x, y, CellDomain(xmin, ymin, xmax, ymax), res)
-
-  /** Cover cells of a polygon's bbox, reading rings as raw ArrayData. */
-  def coverCells(rings: ArrayData, xmin: Double, ymin: Double,
-                 xmax: Double, ymax: Double, res: Int): ArrayData = {
-    // bbox over the outer ring (holes are inside it)
-    val ring = rings.getArray(0)
-    val n = ring.numElements()
-    var bxmin = Double.MaxValue; var bymin = Double.MaxValue
-    var bxmax = Double.MinValue; var bymax = Double.MinValue
-    var i = 0
-    while (i < n - 1) {
-      val x = ring.getDouble(i); val y = ring.getDouble(i + 1)
-      if (x < bxmin) bxmin = x; if (x > bxmax) bxmax = x
-      if (y < bymin) bymin = y; if (y > bymax) bymax = y
-      i += 2
-    }
-    val cells = CellIndex.coverCells(
-      graft.geom.Geo.BBox(bxmin, bymin, bxmax, bymax),
-      CellDomain(xmin, ymin, xmax, ymax), res)
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(cells.toArray)
-  }
-}
-
-/** cover_cells(rings): Array[Long] — the covering Z-cells of a polygon's
-  * bbox (the explode side of the spatial-join prefilter). */
-case class CoverCellsExpr(child: Expression,
-                          xmin: Double, ymin: Double,
-                          xmax: Double, ymax: Double, res: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "cover_cells"
-
-  override protected def nullSafeEval(rings: Any): Any =
-    CellKernel.coverCells(rings.asInstanceOf[ArrayData],
-      xmin, ymin, xmax, ymax, res)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, r =>
-      s"graft.spark.expressions.CellKernel.coverCells($r, $xmin, $ymin, $xmax, $ymax, $res)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /** Geohash encode kernel — the classic interval-bisection algorithm

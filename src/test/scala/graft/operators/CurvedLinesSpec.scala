@@ -42,7 +42,7 @@ class CurvedLinesSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("curved great-circle lengths are plausible meters (0.512 deg ~ 50km)") {
     import spark.implicits._
     val one = Seq(Seq(1.0, 4.5005, 1.512, 4.5005)).toDF("l")
-    val m = one.select(graft.spark.GeoFunctions.greatCircleLengthUdf(col("l")))
+    val m = one.select(graft.spark.GeoFunctions.lineLength(col("l"), curved = true))
       .collect().head.getDouble(0)
     // R*radians(0.512)*cos(4.5deg) within 0.1%
     val expect = 6370997.0 * math.toRadians(0.512) * math.cos(math.toRadians(4.5005))

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, NamedLambdaVariable, ScalaUDF}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, NamedLambdaVariable}
 import org.apache.spark.sql.execution.{FilterExec, ProjectExec, SparkPlan}
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
@@ -43,15 +43,15 @@ class KernelOnceSpec extends AnyFunSuite with BeforeAndAfterAll {
     ns.zipWithIndex.collect { case (n, i) if ns.indexWhere(_ eq n) == i => n }
   }
 
-  /** Calls of kernel `k` in `e`. */
-  private def calls(k: String)(e: Expression): Seq[ScalaUDF] =
-    e.collect { case u: ScalaUDF if u.udfName.contains(k) => u }
+  /** Calls of kernel `k` in `e`, found by their pretty name. */
+  private def calls(k: String)(e: Expression): Seq[Expression] =
+    e.collect { case n if n.prettyName == k => n }
 
   /** A measure of a clipped piece (a `frag_*` column or an element of
     * one), as opposed to a measure of the weight feature itself. Pushed-
     * down filters inline the feature's own expression, so the feature is
     * recognised by what it is not. */
-  private def onPiece(u: ScalaUDF): Boolean = u.children.exists(_.exists {
+  private def onPiece(u: Expression): Boolean = u.children.exists(_.exists {
     case r: AttributeReference => r.name.startsWith("frag_")
     case _: NamedLambdaVariable => true
     case _ => false
@@ -128,7 +128,7 @@ class KernelOnceSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object KernelOnceSpec {
-  /** The fenced exact clip kernels, by their GeoFunctions UDF names. */
+  /** The fenced exact clip kernels, by their GeoFunctions kernel names. */
   val ClipKernels: Seq[String] = Seq("poly_clip_geom", "line_clip_segs",
     "poly_cell_clip_area", "line_cell_clip_len", "line_cell_clip_len_curved")
 }
