@@ -1,13 +1,12 @@
 package graft
 
 import org.apache.spark.sql.{SparkSession, DataFrame}
-import org.apache.spark.sql.functions._
-import graft.fixtures.TpchGeo
-import graft.fixtures.TpchGeo.{grid, domain, zres}
-import graft.operators._
+import graft.registry._
 
 /** Driver contract — one `queries` entry per implemented operator
   * (SURVEY.md §2), each with a DuckDB-equivalent oracle in `oracleSql`.
+  * Each query is declared once, as a `Q`, in the registry of its domain
+  * (`graft.registry`).
   *
   * Oracle-parity design: all geospatial layers are derived arithmetically
   * from the TPC-H tables on an integer lattice with power-of-two weight
@@ -22,23 +21,16 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q21_pages_srg")(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    baseQueries ++ EntryText.queries ++ EntryPages.queries ++
-      EntryPost.queries ++ EntryAlloc.queries ++ EntryPipeline.queries ++
-      EntryRound4.queries ++ EntryRound4b.queries ++ EntryRound4c.queries ++
-      EntryRound5.queries ++ EntryRound5b.queries ++ EntryRound5c.queries ++
-      EntryRound5d.queries ++ EntryRound5e.queries ++ EntryRound5f.queries ++
-      EntryRound5g.queries ++ EntryRound5h.queries ++ EntryRound5i.queries ++
-      EntryRound5j.queries ++ EntryRound5k.queries ++ EntryRound5l.queries ++ EntryRound5m.queries ++ EntryRound5n.queries ++ EntryRound5o.queries ++ EntryRound5p.queries ++ EntryRound5q.queries ++ EntryRound5r.queries ++ EntryRound5s.queries ++ EntryRound5t.queries ++ EntryRound5u.queries ++ EntryRound5v.queries ++ EntryRound5w.queries ++ EntryRound5x.queries ++ EntryRound5y.queries ++ EntryRound5z.queries ++ EntryRound5aa.queries ++ EntryRound5ab.queries ++ EntryRound5ac.queries ++ EntryRound5ad.queries ++ EntryRound5ae.queries ++ EntryRound5af.queries ++ EntryRound5ag.queries ++ EntryRound5ah.queries ++ EntryRound5ai.queries ++ EntryRound5aj.queries ++ EntryRound5ak.queries ++ EntryRound5al.queries ++ EntryRound5am.queries ++ EntryRound5an.queries ++ EntryRound5ao.queries ++ EntryRound5ap.queries ++ EntryRound5aq.queries ++ EntryRound5ar.queries ++ EntryRound5as.queries ++ EntryRound5at.queries ++ EntryRound5au.queries ++ EntryRound5av.queries ++ EntryRound5aw.queries ++ EntryRound5ax.queries ++ EntryRound5ay.queries ++ EntryRound5az.queries ++ EntryRound5ba.queries ++ EntryRound5bb.queries ++ EntryRound5bc.queries ++ EntryRound5bd.queries ++ EntryRound5be.queries
+  private lazy val registry: Map[String, Q] = Q.index(Seq(
+    SpatialQueries.all, PostOpsQueries.all, CellQueries.all, TextQueries.all,
+    CrawlQueries.all, GraphQueries.all, MlQueries.all, StreamingQueries.all,
+    TableQueries.all, SqlQueries.all).flatten)
 
-  def oracleSql: Map[String, String] =
-    baseOracles ++ EntryText.oracles ++ EntryPages.oracles ++
-      EntryPost.oracles ++ EntryAlloc.oracles ++ EntryPipeline.oracles ++
-      EntryRound4.oracles ++ EntryRound4b.oracles ++ EntryRound4c.oracles ++
-      EntryRound5.oracles ++ EntryRound5b.oracles ++ EntryRound5c.oracles ++
-      EntryRound5d.oracles ++ EntryRound5e.oracles ++ EntryRound5f.oracles ++
-      EntryRound5g.oracles ++ EntryRound5h.oracles ++ EntryRound5i.oracles ++
-      EntryRound5j.oracles ++ EntryRound5k.oracles ++ EntryRound5l.oracles ++ EntryRound5m.oracles ++ EntryRound5n.oracles ++ EntryRound5o.oracles ++ EntryRound5p.oracles ++ EntryRound5q.oracles ++ EntryRound5r.oracles ++ EntryRound5s.oracles ++ EntryRound5t.oracles ++ EntryRound5u.oracles ++ EntryRound5v.oracles ++ EntryRound5w.oracles ++ EntryRound5x.oracles ++ EntryRound5y.oracles ++ EntryRound5z.oracles ++ EntryRound5aa.oracles ++ EntryRound5ab.oracles ++ EntryRound5ac.oracles ++ EntryRound5ad.oracles ++ EntryRound5ae.oracles ++ EntryRound5af.oracles ++ EntryRound5ag.oracles ++ EntryRound5ah.oracles ++ EntryRound5ai.oracles ++ EntryRound5aj.oracles ++ EntryRound5ak.oracles ++ EntryRound5al.oracles ++ EntryRound5am.oracles ++ EntryRound5an.oracles ++ EntryRound5ao.oracles ++ EntryRound5ap.oracles ++ EntryRound5aq.oracles ++ EntryRound5ar.oracles ++ EntryRound5as.oracles ++ EntryRound5at.oracles ++ EntryRound5au.oracles ++ EntryRound5av.oracles ++ EntryRound5aw.oracles ++ EntryRound5ax.oracles ++ EntryRound5ay.oracles ++ EntryRound5az.oracles ++ EntryRound5ba.oracles ++ EntryRound5bb.oracles ++ EntryRound5bc.oracles ++ EntryRound5bd.oracles ++ EntryRound5be.oracles
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map { case (name, q) => name -> q.build }
+
+  lazy val oracleSql: Map[String, String] =
+    registry.map { case (name, q) => name -> q.oracleSql }
 
   /** Process-unique scratch path for the binary-envelope queries:
     * concurrent Verify/Bench runs over the same sfDir must not race on
@@ -46,1051 +38,4 @@ object SparkEntry {
   private[graft] def scratch(s: SparkSession, tag: String, dir: String): String =
     s"/tmp/graft_${tag}_${dir.replaceAll("[^A-Za-z0-9]", "_")}_" +
       s.sparkContext.applicationId
-
-  private def baseQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // --- scan/agg sanity (classic TPC-H-style shape)
-    "q01_lineitem_agg" -> ((s, dir) =>
-      s.read.parquet(s"$dir/lineitem.parquet")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(sum("l_quantity").as("sum_qty"), count(lit(1)).as("cnt"))
-        .orderBy("l_returnflag", "l_linestatus")),
-
-    // --- batched cell-encode / geotag stage (closed-form grid math)
-    "q02_geotag_cells" -> ((s, dir) => {
-      import graft.spark.GeoFunctions._
-      TpchGeo.points(s, dir)
-        .withColumn("col", gridCol(col("x"), grid))
-        .withColumn("row", gridRow(col("y"), grid))
-        .groupBy("col", "row").agg(count(lit(1)).as("n"))
-        .orderBy("row", "col")
-    }),
-
-    // --- srgcreate: point weights, count mode (sumpoly.c:224-228)
-    "q03_srg_point" -> ((s, dir) =>
-      Surrogate.pointSurrogate(TpchGeo.points(s, dir), TpchGeo.counties(s),
-        grid, domain, zres, srgCode = 100)),
-
-    // --- srgcreate: polygon weights, attribute mode (population analogue)
-    "q04_srg_area" -> ((s, dir) =>
-      Surrogate.polySurrogate(TpchGeo.tracts(s, dir), TpchGeo.counties(s),
-        grid, domain, zres, srgCode = 120, weight = Some("p_size"))),
-
-    // --- srgcreate: line weights, length mode (road miles analogue)
-    "q05_srg_line" -> ((s, dir) =>
-      Surrogate.lineSurrogate(TpchGeo.roads(s, dir), TpchGeo.counties(s),
-        grid, domain, zres, srgCode = 240)),
-
-    // --- allocate: Aggregate mode (allocate.c:212, sum1Poly)
-    "q06_allocate_agg" -> ((s, dir) =>
-      Allocate.allocate(TpchGeo.tracts(s, dir),
-          TpchGeo.counties(s).withColumnRenamed("fips", "out_id"),
-          Seq("p_size" -> Allocate.Aggregate), domain, zres)
-        .withColumnRenamed("out_id", "fips")
-        .withColumnRenamed("p_size", "p_size_alloc")
-        .orderBy("fips")),
-
-    // --- allocate: Average mode (avg1Poly density semantics)
-    "q07_allocate_avg" -> ((s, dir) =>
-      Allocate.allocate(TpchGeo.tracts(s, dir),
-          TpchGeo.counties(s).withColumnRenamed("fips", "out_id"),
-          Seq("p_size" -> Allocate.Average), domain, zres)
-        .withColumnRenamed("out_id", "fips")
-        .withColumnRenamed("p_size", "p_size_density")
-        .orderBy("fips")),
-
-    // --- OVERLAY mode: semi-join against a 2-polygon mask (overlay.c:21)
-    "q08_overlay" -> ((s, dir) => {
-      import s.implicits._
-      val mask = Seq(
-        Seq(Seq(500.0, 500, 2500, 500, 2500, 2500, 500, 2500)),
-        Seq(Seq(5000.0, 1000, 7000, 1000, 7000, 3000, 5000, 3000))
-      ).toDF("geom")
-      SpatialJoin.overlayPoints(TpchGeo.points(s, dir), mask, domain, zres)
-        .orderBy("o_orderkey")
-    }),
-
-    // --- FILTER_SHAPE: glob include/exclude + continuous range
-    "q09_filter" -> ((s, dir) =>
-      Filters.filterSpec(s.read.parquet(s"$dir/part.parquet"),
-        Seq(
-          Filters.AttrCond("p_brand", discrete = true,
-            include = Seq("Brand#3*"), exclude = Seq("Brand#33")),
-          Filters.AttrCond("p_size", discrete = false, include = Seq("10-40"))))
-        .select("p_partkey", "p_brand", "p_size")
-        .orderBy("p_partkey")),
-
-    // --- kNN: k-ring expansion (replaces ANN kd-tree)
-    "q10_knn" -> ((s, dir) =>
-      Knn.knnJoin(TpchGeo.knnQueries(s, dir), TpchGeo.knnSites(s, dir),
-          k = 5, domain, zres)
-        .orderBy("qid", "rank")),
-
-    // --- shapefile binary front door (PolyShapeReader.c/AttachDBFAttribute.c):
-    // tracts → .shp/.dbf bytes → binary read-back → polygon surrogate.
-    // Same oracle math as q04 at a distinct srg code — proves the binary
-    // round trip is lossless end-to-end (IEEE doubles + integer DBF attrs).
-    "q40_shapefile_srg" -> ((s, dir) => {
-      import graft.sources.Shapefile
-      val base = scratch(s, "shp", dir) + "/tracts"
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(base).getParent)
-      Shapefile.writePolygons(TpchGeo.tracts(s, dir), base, "geom",
-        Seq(Shapefile.DbfCol("p_partkey", 'N', 12), Shapefile.DbfCol("p_size", 'N', 8)))
-      Surrogate.polySurrogate(Shapefile.read(s, base), TpchGeo.counties(s),
-        grid, domain, zres, srgCode = 130, weight = Some("p_size"))
-    }),
-
-    // --- all remaining projection families (GRIDDESC types 4,5,7,8,9,10,11),
-    // quantized to integer meters: round() absorbs the few-ulp libm-vs-JVM
-    // trig differences, so the closed-form DuckDB oracle hash-matches the
-    // engine's Snyder implementations exactly on this CONUS lattice.
-    "q41_projections" -> ((s, dir) => {
-      import graft.grid.Proj
-      val fams: Seq[(String, Proj)] = Seq(
-        "aea" -> Proj.Aea(29.5, 45.5, 23, -96),
-        "laea" -> Proj.Laea(45, -100),
-        "lcc" -> Proj.Lcc(33, 45, 40, -97),
-        "merc2sp" -> Proj.Merc2SP(30, -90),
-        "polar" -> Proj.PolarStere(60, -100),
-        "sinu" -> Proj.Sinu(-90),
-        "stere" -> Proj.Stere(40, -97),
-        "tmerc" -> Proj.Tmerc(-97, 0.9996, 500000, 0, 40))
-      val pts = s.read.parquet(s"$dir/customer.parquet")
-        .where(col("c_custkey") <= 30)
-        .select(col("c_custkey").as("k"),
-          (lit(-120.0) + expr("(c_custkey * 7919) % 6000") / lit(100.0)).as("lon"),
-          (lit(25.0) + expr("(c_custkey * 104729) % 2400") / lit(100.0)).as("lat"))
-      fams.map { case (fam, p) =>
-        val fwd = udf((lon: Double, lat: Double) => {
-          val (x, y) = p.forward(lon, lat)
-          Array(math.round(x), math.round(y))
-        })
-        pts.withColumn("__xy", fwd(col("lon"), col("lat")))
-          .select(col("k"), lit(fam).as("family"),
-            element_at(col("__xy"), 1).as("x_m"),
-            element_at(col("__xy"), 2).as("y_m"))
-      }.reduce(_ unionByName _).orderBy("family", "k")
-    }),
-
-    // --- ellipsoidal projection families (GRS80), quantized to integer
-    // meters like q41: AEA (the NAD83 CONUS workhorse), LAEA, oblique and
-    // polar stereographic, Mercator-2SP — each against a DuckDB oracle
-    // that recomputes the full Snyder ellipsoidal series (q/t/m/χ kernels)
-    // from first principles.
-    "q54_proj_ellipsoidal" -> ((s, dir) => {
-      import graft.grid.{Ellipsoid, Ellipsoidal, Proj}
-      val g = Ellipsoid.GRS80
-      val fams: Seq[(String, Proj)] = Seq(
-        "aea_e" -> Ellipsoidal.AeaE(29.5, 45.5, 23, -96, g),
-        "laea_e" -> Ellipsoidal.LaeaE(45, -100, g),
-        "merc_e" -> Ellipsoidal.MercE.atTs(30, -90, g),
-        "polar_e" -> Ellipsoidal.PolarStereE(60, -100, g),
-        "sinu_e" -> Ellipsoidal.SinuE(-100, g),
-        "stere_e" -> Ellipsoidal.StereE(40, -97, g))
-      val pts = s.read.parquet(s"$dir/customer.parquet")
-        .where(col("c_custkey") <= 30)
-        .select(col("c_custkey").as("k"),
-          (lit(-120.0) + expr("(c_custkey * 7919) % 6000") / lit(100.0)).as("lon"),
-          (lit(25.0) + expr("(c_custkey * 104729) % 2400") / lit(100.0)).as("lat"))
-      fams.map { case (fam, p) =>
-        val fwd = udf((lon: Double, lat: Double) => {
-          val (x, y) = p.forward(lon, lat)
-          Array(math.round(x), math.round(y))
-        })
-        pts.withColumn("__xy", fwd(col("lon"), col("lat")))
-          .select(col("k"), lit(fam).as("family"),
-            element_at(col("__xy"), 1).as("x_m"),
-            element_at(col("__xy"), 2).as("y_m"))
-      }.reduce(_ unionByName _).orderBy("family", "k")
-    }),
-
-    // --- USE_CURVED_LINES line surrogate on the lon/lat twin fixture:
-    // every length (parent, county fragment, cell piece) is a great-circle
-    // haversine; quantization (frac×1e8, integer meters) absorbs libm/JVM
-    // trig ulps and cross-engine summation-order ulps, so the DuckDB
-    // haversine oracle hash-matches. Curved≠planar is asserted in
-    // CurvedLinesSpec.
-    "q42_srg_line_curved" -> ((s, dir) =>
-      Surrogate.lineSurrogate(TpchGeo.roadsLL(s, dir), TpchGeo.countiesLL(s),
-          TpchGeo.gridLL, TpchGeo.domainLL, zres, srgCode = 250, curved = true)
-        .select(col("srg_code"), col("fips"), col("col"), col("row"),
-          round(col("frac") * 1e8).cast("long").as("frac_q"),
-          round(col("numer")).cast("long").as("numer_m"),
-          round(col("denom")).cast("long").as("denom_m"))
-        // sub-meter numerators are clip-endpoint ulp artifacts (a piece
-        // endpoint lands ~1e-16° past a county edge) — below the quantum,
-        // excluded on both sides
-        .where(col("numer_m") >= 1)
-        .orderBy("fips", "row", "col")),
-
-    // --- EGrid (staggered WRF-NMM diamonds, EGridReader.c:36 +
-    // mims_spatial.c:282 EGrid ALLOCATE): points joined to diamond cells
-    // through the REAL cell-cover + ray-cast pipeline; the oracle is the
-    // closed diamond inequality |x−cx| + |y−cy| ≤ d/2 (edge points count
-    // into both adjacent diamonds — EDGE-in semantics on each).
-    "q43_egrid_overlay" -> ((s, dir) => {
-      val diamonds = graft.sources.Sources.eGrid(s, "EG", 0, 0, 1000, 1000, 9, 17)
-      SpatialJoin.pointInPoly(TpchGeo.points(s, dir), diamonds, domain, zres)
-        .groupBy("col", "row").agg(count(lit(1)).as("n"))
-        .orderBy("row", "col")
-    }),
-
-    // --- Variable grid (1-level nested refinement, variableGridReader.c:82):
-    // point counts per leaf cell (coarse cells + 4-way children).
-    "q44_vargrid_overlay" -> ((s, dir) => {
-      val vg = graft.sources.Sources.variableGrid(s,
-        graft.grid.GridSpec("VG", 0, 0, 2000, 2000, 4, 4), Set(0L, 5L, 10L, 15L))
-      SpatialJoin.pointInPoly(TpchGeo.points(s, dir), vg, domain, zres)
-        .groupBy("cell_id", "parent_id", "depth").agg(count(lit(1)).as("n"))
-        .orderBy("cell_id")
-    }),
-
-    // --- BELD-shaped end-to-end (beld3smk.c:40-629): a WIDE multi-variable
-    // landuse layer stored as TILE-PARTITIONED parquet; the query window
-    // touches 4 of 16 tiles (partition pruning — plan-asserted in
-    // PartitionPruningSpec) and every variable regrids onto cells in ONE
-    // fragment join (allocate Aggregate over 8 columns at once).
-    "q45_beld_allocate" -> ((s, dir) => {
-      val beldDir = scratch(s, "beld", dir)
-      val primes = Seq(3, 7, 11, 13, 17, 19, 23, 29)
-      val luCols = primes.zipWithIndex.map { case (p, i) =>
-        expr(s"CAST((p_partkey * $p) % 100 AS DOUBLE)").as(s"lu_$i") }
-      TpchGeo.tracts(s, dir)
-        .withColumn("tile",
-          (floor(col("geom").getItem(0).getItem(1) / 2048) * 4 +
-           floor(col("geom").getItem(0).getItem(0) / 2048)).cast("int"))
-        .select(Seq(col("p_partkey"), col("geom"), col("tile")) ++ luCols: _*)
-        .write.mode("overwrite").partitionBy("tile").parquet(beldDir)
-      val input = s.read.parquet(beldDir)
-        .where(col("tile").isin(0, 1, 4, 5)) // SW-quadrant window
-      val cells = graft.sources.Sources.regularGrid(s, grid)
-        .withColumnRenamed("cell_id", "out_id")
-      Allocate.allocate(input, cells,
-          (0 until 8).map(i => s"lu_$i" -> (Allocate.Aggregate: Allocate.Mode)),
-          domain, zres)
-        .withColumn("col", (pmod(col("out_id"), lit(8)) + 1).cast("int"))
-        .withColumn("row", (floor(col("out_id") / 8) + 1).cast("int"))
-        .select(Seq(col("col"), col("row")) ++ (0 until 8).map(i => col(s"lu_$i")): _*)
-        .orderBy("row", "col")
-    }),
-
-    // --- beld3smk 3-file merge at FULL 230-variable width (beld3smk.c:
-    // 40-629): per-tile _a (vars 0-119) / _b (120-229) / _tot (FOREST)
-    // wide tables merge across 3 tiles in ONE (col,row) hash agg each —
-    // width rides in columns, never rows. Output unpivots to long form
-    // only for the oracle compare. Var 229 tops every cell to exactly
-    // 100 (or 100.5 on the QA-failing diagonal), so q56 exercises the
-    // 100%-landuse warning path with real flagged cells.
-    "q55_beld_merge" -> ((s, dir) => {
-      val (a, b, tot) = beld230(s, dir)
-      val m = Beld.merge3(a, b, tot,
-        (0 to 119).map(i => s"v_$i"), (120 to 229).map(i => s"v_$i"))
-      val wide = m.a.join(m.b, Seq("col", "row"))
-      val stackArgs = (0 to 229).map(i => s"'v_$i', v_$i").mkString(", ")
-      wide.selectExpr("col", "row",
-          s"stack(230, $stackArgs) AS (var, value)")
-        .orderBy("var", "row", "col")
-    }),
-
-    // --- beld3smk QA report (beld3smk.c:496-509): cells whose summed
-    // landuse differs from 100% by > 0.01, with the merged FOREST total
-    "q56_beld_qa" -> ((s, dir) => {
-      val (a, b, tot) = beld230(s, dir)
-      val m = Beld.merge3(a, b, tot,
-        (0 to 119).map(i => s"v_$i"), (120 to 229).map(i => s"v_$i"))
-      m.qa.join(m.tot.withColumnRenamed("FOREST", "forest_tot"), Seq("col", "row"))
-        .orderBy("row", "col")
-    }),
-
-    // --- OVERLAY with OVERLAY_OUT_CELLID=YES (overlay.c:155-190): q08's
-    // semi-join plus the grid COL/ROW of each surviving point
-    "q50_overlay_cellid" -> ((s, dir) => {
-      import s.implicits._
-      val mask = Seq(
-        Seq(Seq(500.0, 500, 2500, 500, 2500, 2500, 500, 2500)),
-        Seq(Seq(5000.0, 1000, 7000, 1000, 7000, 3000, 5000, 3000))
-      ).toDF("geom")
-      SpatialJoin.overlayPoints(TpchGeo.points(s, dir), mask, domain, zres,
-          cellIdGrid = Some(grid))
-        .orderBy("o_orderkey")
-    }),
-
-    // --- NetCDF-3 I/O API BINARY round trip (IoapiInputReader.c:1-387 /
-    // allocateIoapi.c:151-989): a deterministic gridded table is written as
-    // a real .ncf (CDF classic + FDESC3 convention), read BACK through the
-    // binary parser, and regridded onto tract polygons. Values are integral
-    // doubles (exact in REAL storage), so the closed-form DuckDB oracle
-    // hash-matches — proving the whole binary envelope is lossless.
-    "q51_ncf_alloc" -> ((s, dir) => {
-      import s.implicits._
-      import graft.sources.Ioapi
-      val cells = graft.sources.Sources.regularGrid(s, grid)
-        .select(col("col"), col("row"))
-      val gridded = cells
-        .crossJoin(s.range(3).toDF("tstep"))
-        .crossJoin(Seq(1, 2).toDF("vk"))
-        .withColumn("var", concat(lit("W"), col("vk")))
-        .withColumn("value",
-          expr("CAST((vk * 41 + tstep * 13 + ((row - 1) * 8 + col)) % 45 AS DOUBLE)"))
-        .select("var", "tstep", "row", "col", "value")
-      val path = scratch(s, "ncf", dir) + ".ncf"
-      Ioapi.write(gridded, Ioapi.headerFor(grid,
-        Seq(Ioapi.VarDef("W1", "units1"), Ioapi.VarDef("W2", "units2"))), path)
-      val (_, back) = Ioapi.read(s, path, dropZeros = true)
-      Allocate.gridToPoly(back, grid,
-          TpchGeo.tracts(s, dir), "p_partkey", "value", Seq("var"))
-        .orderBy("p_partkey", "var")
-    }),
-
-    // --- diffioapi (diffioapi.c:9-298): two gridded files — the second
-    // with a closed-form +50% perturbation on every 5th diagonal — written
-    // to .ncf, read back, and diffed per cell at the C default 0.01%
-    // tolerance. orig=0 cells are never flagged (diffioapi.c:264).
-    "q52_diffioapi" -> ((s, dir) => {
-      import graft.sources.Ioapi
-      val cells = graft.sources.Sources.regularGrid(s, grid)
-        .select(col("col"), col("row"))
-      val base = cells
-        .crossJoin(s.range(2).toDF("tstep"))
-        .withColumn("var", lit("D1"))
-        .withColumn("layer", lit(1))
-        .withColumn("value",
-          expr("CAST((tstep * 17 + (row - 1) * 8 + col) % 30 AS DOUBLE)"))
-        .select("var", "tstep", "layer", "row", "col", "value")
-      val perturbed = base.withColumn("value",
-        when(pmod(col("row") + col("col") + col("tstep"), lit(5)) === 0,
-          col("value") * 1.5).otherwise(col("value")))
-      val pOrig = scratch(s, "diff_orig", dir) + ".ncf"
-      val pNew = scratch(s, "diff_new", dir) + ".ncf"
-      val hdr = Ioapi.headerFor(grid, Seq(Ioapi.VarDef("D1")))
-      Ioapi.write(base, hdr, pOrig)
-      Ioapi.write(perturbed, hdr, pNew)
-      val (hA, dfA) = Ioapi.read(s, pOrig)
-      val (hB, dfB) = Ioapi.read(s, pNew)
-      require(Ioapi.headerDiff(hA, hB, 2, 2).isEmpty, "headers must match")
-      Ioapi.diffCells(dfA, dfB, tolerance = 0.01)
-    }),
-
-    // --- srg2ncf (util/srg2ncf/convert_txt2ncf.f): the q03 point surrogate
-    // becomes a one-variable FRACTION gridded file (M3DBLE so the dyadic-
-    // free ratios stay bit-exact through the file), read back sparse.
-    // Cells nest inside counties on this lattice, so each cell carries
-    // exactly one county's frac — the accumulation is trivially exact.
-    "q53_srg2ncf" -> ((s, dir) => {
-      import graft.sources.Ioapi
-      val srg = Surrogate.pointSurrogate(TpchGeo.points(s, dir),
-        TpchGeo.counties(s), grid, domain, zres, srgCode = 100)
-      val path = scratch(s, "srg2ncf", dir) + ".ncf"
-      Ioapi.srg2ncf(srg, grid, path, vtype = graft.sources.NetCDF.NC_DOUBLE)
-      val (_, back) = Ioapi.read(s, path, dropZeros = true)
-      back.select("col", "row", "value").orderBy("row", "col")
-    }),
-
-    // --- OUTPUT_FILE_TYPE=Polygon surrogate (surrogate.c:455-470): county
-    // tract-area fractions onto four 3000-size OUTPUT POLYGONS that align
-    // with nothing (offset 1000) — a genuine second polygon clip of the
-    // W∩D fragments, qasum ordered by output-polygon id. Integer lattice
-    // → bit-exact vs the closed-form triple-rect-intersection oracle.
-    "q72_srg_poly_out" -> ((s, dir) => {
-      import s.implicits._
-      val outPolys = (for { qy <- 0 to 1; qx <- 0 to 1 } yield {
-        val x0 = 1000.0 + qx * 3000; val y0 = 1000.0 + qy * 3000
-        (1 + qx + qy * 2,
-          Seq(Seq(x0, y0, x0 + 3000, y0, x0 + 3000, y0 + 3000, x0, y0 + 3000)))
-      }).toDF("out_id", "geom")
-      Surrogate.polySurrogateToPolys(TpchGeo.tracts(s, dir),
-        TpchGeo.counties(s), outPolys, domain, zres, srgCode = 170)
-    }),
-
-    // --- OUTPUT_FILE_TYPE=VariableGrid surrogate (variableGridReader.c:
-    // 216-470): a WRF grid-dot CURVILINEAR grid — here a SHEARED lattice
-    // (XDOT = c·1000 + r·20, YDOT = r·1000, READ_XYDOT mode) so every
-    // cell is a genuine parallelogram, no rectilinear shortcut. Points
-    // sitting exactly on the sheared column boundaries ((50x − y) ≡ 0
-    // mod 50000) are filtered IDENTICALLY on both sides; the oracle
-    // inverts the affine lattice in closed form. Integer counts →
-    // bit-exact.
-    "q74_srg_vargrid_dots" -> ((s, dir) => {
-      val ys = for (r <- 0 until 9; _ <- 0 until 9) yield r * 1000.0
-      val xs = for (r <- 0 until 9; c <- 0 until 9) yield c * 1000.0 + r * 20.0
-      val dotText = "NCOLS = 9\nNROWS = 9\nYDOT =\n" + ys.mkString(",") +
-        "\nXDOT =\n" + xs.mkString(",") + "\n"
-      val (_, cells) = graft.sources.Sources.variableDotGrid(s, dotText,
-        (a, b) => (a, b), readXY = true)
-      val pts = TpchGeo.points(s, dir)
-        .where(expr("(50 * x - y) % 50000 != 0"))
-      Surrogate.surrogateToCellPolys(pts, TpchGeo.counties(s), cells,
-        domain, zres, srgCode = 190, kind = "Point")
-    }),
-
-    // --- OUTPUT_FILE_TYPE=EGrid surrogate (surrogate.c:389-432 derives
-    // COL/ROW from the diamond id): page-count fractions onto the q43
-    // staggered diamonds. Counts are integers and the denominators county
-    // point totals, so the closed diamond-inequality oracle hash-matches
-    // bit-exactly. Edge points (|dx|+|dy| = 500 exactly) count into BOTH
-    // adjacent diamonds in engine and oracle alike.
-    "q73_srg_egrid" -> ((s, dir) => {
-      val eg = graft.grid.GridSpec("EG", 0, 0, 1000, 1000, 9, 17)
-      Surrogate.surrogateToEGrid(TpchGeo.points(s, dir), TpchGeo.counties(s),
-        eg, domain, zres, srgCode = 180, kind = "Point")
-    }),
-
-    // --- snapshot-table checkpoint/resume as a DRIVER gate (the north
-    // rule's resumability requirement; SnapshotTable = the Iceberg-style
-    // atomic-pointer table, Resumable.stage = the checkpoint driver):
-    // two staged commits, then the same stages re-requested with a
-    // poisoned compute — resume MUST read the snapshots back instead of
-    // recomputing, and time-travel keeps both versions readable. Output
-    // is both versions' contents, hash-checked against DuckDB.
-    "q71_snapshot_resume" -> ((s, dir) => {
-      import graft.table.{SnapshotTable, Resumable}
-      val t = new SnapshotTable(scratch(s, "snap", dir))
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-        .select(col("doc_id"),
-          graft.text.TextOps.tokenCount(col("text")).cast("long").as("n_tokens"))
-      Resumable.stage(t, s, "tokens") { docs }
-      val v2 = Resumable.stage(t, s, "filtered") {
-        t.read(s).where(col("n_tokens") >= 25)
-      }
-      val v1Resumed = Resumable.stage(t, s, "tokens") {
-        throw new IllegalStateException("stage recomputed despite snapshot")
-      }
-      v1Resumed.withColumn("version", lit(1))
-        .unionByName(v2.withColumn("version", lit(2)))
-        .select("version", "doc_id", "n_tokens")
-        .orderBy("version", "doc_id")
-    }),
-
-    // --- OCEANfile AreaPercent through the BINARY envelope (allocateIoapi
-    // ALL_AREAPERCENT mode, SA_ch03_vector.md:887: "the only output format
-    // currently supported for this new mode is IoapiFile"): q31's per-cell
-    // category fractions become one M3DBLE variable per category, written
-    // as a real .ncf and read back sparse — the oracle is q31's own SQL,
-    // proving the format round trip is lossless on the fractions.
-    "q68_oceanfile" -> ((s, dir) => {
-      import graft.sources.{Ioapi, NetCDF}
-      val pct = Allocate.areaPercent(
-        TpchGeo.tracts(s, dir).withColumn("category",
-          substring(col("p_partkey").cast("string"), -1, 1)),
-        "category", grid)
-      val cats = pct.select("category").distinct().collect()
-        .map(_.getString(0)).sorted.toSeq
-      val long = pct
-        .withColumn("var", concat(lit("CAT_"), col("category")))
-        .withColumn("tstep", lit(0)).withColumn("layer", lit(1))
-        .select(col("var"), col("tstep"), col("layer"), col("row"),
-          col("col"), col("pct").as("value"))
-      val path = scratch(s, "ocean", dir) + ".ncf"
-      Ioapi.write(long, Ioapi.headerFor(grid,
-        cats.map(c => Ioapi.VarDef(s"CAT_$c", "fraction",
-          vtype = NetCDF.NC_DOUBLE))), path, numRecs = 1)
-      val (_, back) = Ioapi.read(s, path, dropZeros = true)
-      back.select(col("col"), col("row"),
-          substring(col("var"), 5, 1).as("category"),
-          col("value").as("pct"))
-        .orderBy("row", "col", "category")
-    }),
-
-    // --- I/O API-shaped gridded allocate (allocateIoapi.c, raster→vector):
-    // a (var, tstep, row, col, value) gridded table regrids onto the tract
-    // polygons — Σ value·overlap/cellArea per (tract, var), summed across
-    // timesteps. The gridded side is generated closed-form (deterministic),
-    // so the DuckDB oracle reproduces every value.
-    "q49_ioapi_alloc" -> ((s, dir) => {
-      import s.implicits._
-      val cells = graft.sources.Sources.regularGrid(s, grid)
-        .select(col("col"), col("row"))
-      val gridded = cells
-        .crossJoin(s.range(4).toDF("tstep"))
-        .crossJoin(Seq(1, 2).toDF("vk"))
-        .withColumn("var", concat(lit("V"), col("vk")))
-        .withColumn("value",
-          expr("CAST((vk * 31 + tstep * 7 + ((row - 1) * 8 + col)) % 50 AS DOUBLE)"))
-        .select("var", "tstep", "row", "col", "value")
-      Allocate.gridToPoly(gridded, grid,
-          TpchGeo.tracts(s, dir), "p_partkey", "value", Seq("var"))
-        .orderBy("p_partkey", "var")
-    })
-  )
-
-  /** Shared q55/q56 fixture: three per-tile BELD-shaped wide tables at the
-    * reference's full 230-variable width. Vars 0-228 are a sparse 0/2
-    * landuse pattern; var 229 (in tile 1) tops each cell's total to
-    * exactly 100, or 100.5 on the (col+row)%3 diagonal so the QA check
-    * has real failures. All values stay on the integer/half lattice —
-    * bit-exact under any summation order. */
-  private def beld230(s: SparkSession, dir: String) = {
-    import org.apache.spark.sql.expressions.Window
-    val base = graft.sources.Sources.regularGrid(s, grid)
-      .select(col("col"), col("row"))
-      .crossJoin(s.range(1, 4).toDF("tile"))
-      .withColumn("cellid", (col("row") - 1) * 8 + col("col"))
-    val v228 = (0 to 228).map(i => expr(
-      s"CAST(CASE WHEN (($i * 31) + tile * 5 + cellid) % 40 = 0 THEN 2.0 ELSE 0.0 END AS DOUBLE)"
-    ).as(s"v_$i"))
-    val wide = base.select(
-      Seq(col("tile"), col("col"), col("row"), col("cellid")) ++ v228: _*)
-    val rowSum = (0 to 228).map(i => col(s"v_$i")).reduce(_ + _)
-    val cellSum = sum(rowSum).over(Window.partitionBy("col", "row"))
-    val target = when(pmod(col("col") + col("row"), lit(3)) === 0, 100.5)
-      .otherwise(100.0)
-    val full = wide
-      .withColumn("v_229", when(col("tile") === 1, target - cellSum).otherwise(0.0))
-      .drop("cellid")
-    val a = full.select(
-      Seq(col("tile"), col("col"), col("row")) ++ (0 to 119).map(i => col(s"v_$i")): _*)
-    val b = full.select(
-      Seq(col("tile"), col("col"), col("row")) ++ (120 to 229).map(i => col(s"v_$i")): _*)
-    val tot = full.select(col("tile"), col("col"), col("row"),
-      col("v_0").as("FOREST"))
-    (a, b, tot)
-  }
-
-  /** DuckDB haversine of a constant-latitude span (the exact expression
-    * tree of Geo.haversine with dLat = 0). */
-  private def havSql(y: String, a: String, b: String): String =
-    s"2*6370997.0*asin(least(1.0, sqrt(cos(radians($y))*cos(radians($y))*pow(sin(radians(($b) - ($a))/2), 2))))"
-
-  /** DuckDB twins of the Snyder spherical forward projections used by q41
-    * (same formulas as grid.Proj; round() to meters absorbs ulp noise). */
-  private def projOracleSql: String = {
-    val R = "6370997.0"
-    def fam(name: String, x: String, y: String): String =
-      s"""SELECT k, '$name' AS family,
-         |  CAST(round($x) AS BIGINT) AS x_m, CAST(round($y) AS BIGINT) AS y_m
-         |FROM pts""".stripMargin
-    val aea = {
-      val n = "((sin(radians(29.5)) + sin(radians(45.5))) / 2)"
-      val C = s"(cos(radians(29.5))*cos(radians(29.5)) + 2*$n*sin(radians(29.5)))"
-      val rho0 = s"($R*sqrt($C - 2*$n*sin(radians(23)))/$n)"
-      val rho = s"($R*sqrt($C - 2*$n*sin(radians(lat)))/$n)"
-      val th = s"($n*(radians(lon) - radians(-96)))"
-      fam("aea", s"$rho*sin($th)", s"$rho0 - $rho*cos($th)")
-    }
-    val laea = {
-      val kp = "sqrt(2/(1 + sin(radians(45))*sin(radians(lat)) + cos(radians(45))*cos(radians(lat))*cos(radians(lon) - radians(-100))))"
-      fam("laea", s"$R*$kp*cos(radians(lat))*sin(radians(lon) - radians(-100))",
-        s"$R*$kp*(cos(radians(45))*sin(radians(lat)) - sin(radians(45))*cos(radians(lat))*cos(radians(lon) - radians(-100)))")
-    }
-    val lcc = {
-      val n = "(ln(cos(radians(33))/cos(radians(45))) / ln(tan(pi()/4 + radians(45)/2)/tan(pi()/4 + radians(33)/2)))"
-      val F = s"(cos(radians(33))*pow(tan(pi()/4 + radians(33)/2), $n)/$n)"
-      val rho0 = s"($R*$F/pow(tan(pi()/4 + radians(40)/2), $n))"
-      val rho = s"($R*$F/pow(tan(pi()/4 + radians(lat)/2), $n))"
-      val th = s"($n*(radians(lon) - radians(-97)))"
-      fam("lcc", s"$rho*sin($th)", s"$rho0 - $rho*cos($th)")
-    }
-    val merc2sp = fam("merc2sp",
-      s"$R*cos(radians(30))*(radians(lon) - radians(-90))",
-      s"$R*cos(radians(30))*ln(tan(pi()/4 + radians(lat)/2))")
-    val polar = {
-      val kp = "((1 + sin(radians(60)))/2)"
-      val rho = s"(2*$R*$kp*tan(pi()/4 - radians(lat)/2))"
-      fam("polar", s"$rho*sin(radians(lon) - radians(-100))",
-        s"-($rho)*cos(radians(lon) - radians(-100))")
-    }
-    val sinu = fam("sinu",
-      s"$R*(radians(lon) - radians(-90))*cos(radians(lat))", s"$R*radians(lat)")
-    val stere = {
-      val kk = "(2/(1 + sin(radians(40))*sin(radians(lat)) + cos(radians(40))*cos(radians(lat))*cos(radians(lon) - radians(-97))))"
-      fam("stere", s"$R*$kk*cos(radians(lat))*sin(radians(lon) - radians(-97))",
-        s"$R*$kk*(cos(radians(40))*sin(radians(lat)) - sin(radians(40))*cos(radians(lat))*cos(radians(lon) - radians(-97)))")
-    }
-    val tmerc = {
-      val b = "(cos(radians(lat))*sin(radians(lon) - radians(-97)))"
-      fam("tmerc", s"$R*0.9996/2*ln((1 + $b)/(1 - $b)) + 500000",
-        s"$R*0.9996*(atan2(tan(radians(lat)), cos(radians(lon) - radians(-97))) - radians(40))")
-    }
-    val unions = Seq(aea, laea, lcc, merc2sp, polar, sinu, stere, tmerc)
-      .mkString("\nUNION ALL ")
-    s"""WITH pts AS (
-       |  SELECT c_custkey AS k,
-       |    -120.0 + ((c_custkey * 7919) % 6000) / 100.0 AS lon,
-       |    25.0 + ((c_custkey * 104729) % 2400) / 100.0 AS lat
-       |  FROM customer WHERE c_custkey <= 30)
-       |$unions
-       |ORDER BY family, k""".stripMargin
-  }
-
-  /** DuckDB twins of the Snyder ELLIPSOIDAL forward projections used by
-    * q54 (GRS80; the q/t/m/χ kernels recomputed from first principles in
-    * SQL; round() to meters absorbs libm-vs-JVM ulps). */
-  private def projEllOracleSql: String = {
-    val a = "6378137.0"
-    // e² and e exactly as Ellipsoid computes them: f=(a−b)/a, e²=f(2−f)
-    val b = s"($a*(1.0 - 1.0/298.257222101))"
-    val f = s"(($a - $b)/$a)"
-    val e2 = s"($f*(2.0 - $f))"
-    val e = s"sqrt($e2)"
-    def mOf(phi: String) = s"(cos($phi)/sqrt(1.0 - $e2*sin($phi)*sin($phi)))"
-    def tOf(phi: String) =
-      s"(tan(pi()/4 - ($phi)/2) / pow((1.0 - $e*sin($phi))/(1.0 + $e*sin($phi)), $e/2))"
-    def qOf(phi: String) =
-      s"((1.0 - $e2)*(sin($phi)/(1.0 - $e2*sin($phi)*sin($phi)) - (1.0/(2.0*$e))*ln((1.0 - $e*sin($phi))/(1.0 + $e*sin($phi)))))"
-    def chiOf(phi: String) = s"(pi()/2 - 2*atan(${tOf(phi)}))"
-    def fam(name: String, x: String, y: String): String =
-      s"""SELECT k, '$name' AS family,
-         |  CAST(round($x) AS BIGINT) AS x_m, CAST(round($y) AS BIGINT) AS y_m
-         |FROM pts""".stripMargin
-    val phi = "radians(lat)"
-
-    val aea = {
-      val m1 = mOf("radians(29.5)"); val m2 = mOf("radians(45.5)")
-      val q1 = qOf("radians(29.5)"); val q2 = qOf("radians(45.5)")
-      val n = s"(($m1*$m1 - $m2*$m2)/($q2 - $q1))"
-      val cC = s"($m1*$m1 + $n*$q1)"
-      val rho0 = s"($a*sqrt($cC - $n*${qOf("radians(23)")})/$n)"
-      val rho = s"($a*sqrt($cC - $n*${qOf(phi)})/$n)"
-      val th = s"($n*(radians(lon) - radians(-96)))"
-      fam("aea_e", s"$rho*sin($th)", s"$rho0 - $rho*cos($th)")
-    }
-    val laea = {
-      val qp = qOf("radians(90)")
-      val beta = s"asin(${qOf(phi)}/$qp)"
-      val b0 = s"asin(${qOf("radians(45)")}/$qp)"
-      val rq = s"($a*sqrt($qp/2.0))"
-      val dD = s"($a*${mOf("radians(45)")}/($rq*cos($b0)))"
-      val dl = "(radians(lon) - radians(-100))"
-      val bB = s"($rq*sqrt(2.0/(1.0 + sin($b0)*sin($beta) + cos($b0)*cos($beta)*cos($dl))))"
-      fam("laea_e", s"$bB*$dD*cos($beta)*sin($dl)",
-        s"($bB/$dD)*(cos($b0)*sin($beta) - sin($b0)*cos($beta)*cos($dl))")
-    }
-    val merc = {
-      val k0 = mOf("radians(30)")
-      fam("merc_e", s"$a*$k0*(radians(lon) - radians(-90))",
-        s"-($a*$k0*ln(${tOf(phi)}))")
-    }
-    val polar = {
-      val rho = s"($a*${mOf("radians(60)")}*${tOf(phi)}/${tOf("radians(60)")})"
-      val dl = "(radians(lon) - radians(-100))"
-      fam("polar_e", s"$rho*sin($dl)", s"-($rho)*cos($dl)")
-    }
-    val stere = {
-      val x0 = chiOf("radians(40)"); val m0 = mOf("radians(40)")
-      val x = chiOf(phi)
-      val dl = "(radians(lon) - radians(-97))"
-      val aA = s"(2.0*$a*$m0/(cos($x0)*(1.0 + sin($x0)*sin($x) + cos($x0)*cos($x)*cos($dl))))"
-      fam("stere_e", s"$aA*cos($x)*sin($dl)",
-        s"$aA*(cos($x0)*sin($x) - sin($x0)*cos($x)*cos($dl))")
-    }
-    val sinu = {
-      // meridian arc M(φ) — the same Snyder 3-21 truncation as
-      // Ellipsoidal.meridianArc, so both sides agree to ulps
-      val arc =
-        s"""($a*((1.0 - $e2/4 - 3*$e2*$e2/64 - 5*$e2*$e2*$e2/256)*$phi
-           | - (3*$e2/8 + 3*$e2*$e2/32 + 45*$e2*$e2*$e2/1024)*sin(2*$phi)
-           | + (15*$e2*$e2/256 + 45*$e2*$e2*$e2/1024)*sin(4*$phi)
-           | - (35*$e2*$e2*$e2/3072)*sin(6*$phi)))""".stripMargin.replace("\n", "")
-      fam("sinu_e",
-        s"$a*(radians(lon) - radians(-100))*cos($phi)/sqrt(1.0 - $e2*sin($phi)*sin($phi))",
-        arc)
-    }
-    val unions = Seq(aea, laea, merc, polar, sinu, stere).mkString("\nUNION ALL ")
-    s"""WITH pts AS (
-       |  SELECT c_custkey AS k,
-       |    -120.0 + ((c_custkey * 7919) % 6000) / 100.0 AS lon,
-       |    25.0 + ((c_custkey * 104729) % 2400) / 100.0 AS lat
-       |  FROM customer WHERE c_custkey <= 30)
-       |$unions
-       |ORDER BY family, k""".stripMargin
-  }
-
-  // ------------------------------------------------------------- oracles
-
-  private[graft] def srgSelect(code: Int): String =
-    s"""SELECT CAST($code AS INT) AS srg_code, fips, col, "row",
-       |  numer/denom AS frac, numer, denom,
-       |  sum(numer/denom) OVER (PARTITION BY fips ORDER BY "row", col) AS qasum
-       |FROM num JOIN den USING (fips)
-       |WHERE denom >= 0.00001 AND numer <> 0
-       |ORDER BY fips, "row", col""".stripMargin
-
-  /** Full q03/q04 oracle statements, reusable as parenthesized subqueries
-    * by the post-op oracles (EntryPost). */
-  private[graft] lazy val srgPointStmt: String =
-    s"""WITH pts AS (${TpchGeo.pointsSql}),
-       |tagged AS (SELECT ${TpchGeo.fipsOfSql("x", "y")} AS fips,
-       |  CAST(floor(x/1000.0) AS INT)+1 AS col,
-       |  CAST(floor(y/1000.0) AS INT)+1 AS "row" FROM pts),
-       |num AS (SELECT fips, col, "row", CAST(count(*) AS DOUBLE) AS numer
-       |        FROM tagged GROUP BY 1, 2, 3),
-       |den AS (SELECT fips, CAST(count(*) AS DOUBLE) AS denom
-       |        FROM tagged GROUP BY 1)
-       |${srgSelect(100)}""".stripMargin
-
-  private[graft] lazy val srgAreaStmt: String = srgAreaStmtFor(120, "p_size")
-
-  /** Area-mode surrogate oracle with a pluggable weight SQL expression over
-    * the tract attributes (the USE_FUNCTION path). */
-  private[graft] def srgAreaStmtFor(code: Int, wexpr: String): String =
-    s"""WITH tr AS (${TpchGeo.tractsSql}),
-       |cn AS (${TpchGeo.countiesSql}),
-       |cl AS (${TpchGeo.cellsSql}),
-       |fr AS (
-       |  SELECT fips, p_size, tx0, ty0, cx0, cy0,
-       |    greatest(0, least(tx0+512, cx0+2000) - greatest(tx0, cx0)) *
-       |    greatest(0, least(ty0+512, cy0+2000) - greatest(ty0, cy0)) AS fa
-       |  FROM tr CROSS JOIN cn
-       |  WHERE greatest(0, least(tx0+512, cx0+2000) - greatest(tx0, cx0)) *
-       |        greatest(0, least(ty0+512, cy0+2000) - greatest(ty0, cy0)) > 0),
-       |den AS (SELECT fips, sum(($wexpr) * (fa / 262144.0)) AS denom
-       |        FROM fr GROUP BY 1),
-       |cf AS (
-       |  SELECT fips, col, "row", p_size,
-       |    greatest(0, least(tx0+512, cx0+2000, gx0+1000) - greatest(tx0, cx0, gx0)) *
-       |    greatest(0, least(ty0+512, cy0+2000, gy0+1000) - greatest(ty0, cy0, gy0)) AS ca
-       |  FROM fr CROSS JOIN cl),
-       |num AS (SELECT fips, col, "row", sum(($wexpr) * (ca / 262144.0)) AS numer
-       |        FROM cf WHERE ca > 0 GROUP BY 1, 2, 3)
-       |${srgSelect(code)}""".stripMargin
-
-  private def baseOracles: Map[String, String] = Map(
-    "q01_lineitem_agg" ->
-      """SELECT l_returnflag, l_linestatus, sum(l_quantity) AS sum_qty,
-        |  count(*) AS cnt
-        |FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q02_geotag_cells" ->
-      s"""WITH pts AS (${TpchGeo.pointsSql})
-         |SELECT CAST(floor(x/1000.0) AS INT)+1 AS col,
-         |  CAST(floor(y/1000.0) AS INT)+1 AS "row", count(*) AS n
-         |FROM pts GROUP BY 1, 2 ORDER BY "row", col""".stripMargin,
-
-    "q03_srg_point" -> srgPointStmt,
-
-    "q04_srg_area" -> srgAreaStmt,
-
-    "q40_shapefile_srg" -> srgAreaStmtFor(130, "p_size"),
-
-    "q41_projections" -> projOracleSql,
-
-    "q54_proj_ellipsoidal" -> projEllOracleSql,
-
-    "q42_srg_line_curved" ->
-      s"""WITH rd AS (${TpchGeo.roadsLLSql}),
-         |cn AS (${TpchGeo.countiesLLSql}),
-         |cl AS (${TpchGeo.cellsLLSql}),
-         |fr AS (
-         |  SELECT fips, y, greatest(x1, cx0) AS fa, least(x2, cx0 + 2.0) AS fb
-         |  FROM rd JOIN cn ON y > cy0 AND y < cy0 + 2.0
-         |  WHERE least(x2, cx0 + 2.0) > greatest(x1, cx0)),
-         |den AS (SELECT fips, sum(${havSql("y", "fa", "fb")}) AS denom
-         |        FROM fr GROUP BY 1),
-         |cf AS (
-         |  SELECT fips, col, "row", y,
-         |    greatest(fa, gx0) AS ca, least(fb, gx0 + 1.0) AS cb
-         |  FROM fr JOIN cl ON y > gy0 AND y < gy0 + 1.0
-         |  WHERE least(fb, gx0 + 1.0) > greatest(fa, gx0)),
-         |num AS (SELECT fips, col, "row", sum(${havSql("y", "ca", "cb")}) AS numer
-         |        FROM cf GROUP BY 1, 2, 3)
-         |SELECT CAST(250 AS INT) AS srg_code, fips, col, "row",
-         |  CAST(round(numer/denom*100000000.0) AS BIGINT) AS frac_q,
-         |  CAST(round(numer) AS BIGINT) AS numer_m,
-         |  CAST(round(denom) AS BIGINT) AS denom_m
-         |FROM num JOIN den USING (fips)
-         |WHERE denom >= 0.00001 AND numer <> 0
-         |  AND CAST(round(numer) AS BIGINT) >= 1
-         |ORDER BY fips, "row", col""".stripMargin,
-
-    "q43_egrid_overlay" ->
-      s"""WITH pts AS (${TpchGeo.pointsSql}),
-         |dm AS (SELECT CAST(id % 9 + 1 AS INT) AS col,
-         |  CAST(floor(id / 9.0) + 1 AS INT) AS "row",
-         |  CAST((id % 9) * 1000 +
-         |    (CASE WHEN (CAST(floor(id / 9.0) AS INT) + 1) % 2 = 0
-         |          THEN 500 ELSE 0 END) AS DOUBLE) AS cx,
-         |  CAST(CAST(floor(id / 9.0) AS INT) * 500 AS DOUBLE) AS cy
-         |FROM range(153) t(id))
-         |SELECT col, "row", count(*) AS n
-         |FROM dm JOIN pts ON abs(x - cx) + abs(y - cy) <= 500
-         |GROUP BY 1, 2 ORDER BY "row", col""".stripMargin,
-
-    "q44_vargrid_overlay" ->
-      s"""WITH pts AS (${TpchGeo.pointsSql}),
-         |base AS (SELECT i AS cell_id, i AS parent_id, 0 AS depth,
-         |    CAST((i % 4) * 2000 AS DOUBLE) AS x0,
-         |    CAST(CAST(floor(i / 4.0) AS INT) * 2000 AS DOUBLE) AS y0,
-         |    2000.0 AS sz
-         |  FROM range(16) t(i) WHERE i NOT IN (0, 5, 10, 15)),
-         |kids AS (SELECT i * 4 + k AS cell_id, i AS parent_id, 1 AS depth,
-         |    CAST((i % 4) * 2000 + (k % 2) * 1000 AS DOUBLE) AS x0,
-         |    CAST(CAST(floor(i / 4.0) AS INT) * 2000
-         |      + CAST(floor(k / 2.0) AS INT) * 1000 AS DOUBLE) AS y0,
-         |    1000.0 AS sz
-         |  FROM range(16) t(i) CROSS JOIN range(4) u(k) WHERE i IN (0, 5, 10, 15)),
-         |cells AS (SELECT * FROM base UNION ALL SELECT * FROM kids)
-         |SELECT cell_id, parent_id, CAST(depth AS INT) AS depth, count(*) AS n
-         |FROM cells JOIN pts
-         |  ON x > x0 AND x < x0 + sz AND y > y0 AND y < y0 + sz
-         |GROUP BY 1, 2, 3 ORDER BY cell_id""".stripMargin,
-
-    "q45_beld_allocate" -> {
-      val primes = Seq(3, 7, 11, 13, 17, 19, 23, 29)
-      val luDefs = primes.zipWithIndex.map { case (p, i) =>
-        s"CAST((p_partkey * $p) % 100 AS DOUBLE) AS lu_$i" }.mkString(",\n         |  ")
-      val luSums = (0 until 8).map(i =>
-        s"sum(lu_$i * (fa / 262144.0)) AS lu_$i").mkString(",\n         |  ")
-      s"""WITH tr AS (${TpchGeo.tractsSql}),
-         |wide AS (SELECT tx0, ty0,
-         |  CAST(floor(ty0 / 2048) * 4 + floor(tx0 / 2048) AS INT) AS tile,
-         |  $luDefs
-         |FROM tr),
-         |sel AS (SELECT * FROM wide WHERE tile IN (0, 1, 4, 5)),
-         |cl AS (${TpchGeo.cellsSql}),
-         |fr AS (
-         |  SELECT col, "row", ${(0 until 8).map(i => s"lu_$i").mkString(", ")},
-         |    greatest(0, least(tx0+512, gx0+1000) - greatest(tx0, gx0)) *
-         |    greatest(0, least(ty0+512, gy0+1000) - greatest(ty0, gy0)) AS fa
-         |  FROM sel CROSS JOIN cl)
-         |SELECT col, "row",
-         |  $luSums
-         |FROM fr WHERE fa > 0 GROUP BY 1, 2 ORDER BY "row", col""".stripMargin
-    },
-
-    "q55_beld_merge" ->
-      s"""WITH cl AS (${TpchGeo.cellsSql}),
-         |cc AS (SELECT col, "row", ("row" - 1) * 8 + col AS cellid FROM cl),
-         |v AS (SELECT col, "row", i,
-         |    sum(CASE WHEN (i * 31 + t * 5 + cellid) % 40 = 0 THEN 2.0 ELSE 0.0 END) AS value
-         |  FROM cc CROSS JOIN range(1, 4) r(t) CROSS JOIN range(229) vi(i)
-         |  GROUP BY 1, 2, 3),
-         |s AS (SELECT col, "row", sum(value) AS s228 FROM v GROUP BY 1, 2),
-         |v229 AS (SELECT col, "row", CAST(229 AS BIGINT) AS i,
-         |    (CASE WHEN (col + "row") % 3 = 0 THEN 100.5 ELSE 100.0 END) - s228 AS value
-         |  FROM s)
-         |SELECT 'v_' || CAST(i AS VARCHAR) AS var, col, "row", value
-         |FROM (SELECT * FROM v UNION ALL SELECT * FROM v229)
-         |ORDER BY var, "row", col""".stripMargin,
-
-    "q56_beld_qa" ->
-      s"""WITH cl AS (${TpchGeo.cellsSql}),
-         |cc AS (SELECT col, "row", ("row" - 1) * 8 + col AS cellid FROM cl),
-         |tot AS (SELECT col, "row",
-         |    sum(CASE WHEN (t * 5 + cellid) % 40 = 0 THEN 2.0 ELSE 0.0 END) AS forest_tot
-         |  FROM cc CROSS JOIN range(1, 4) r(t) GROUP BY 1, 2),
-         |q AS (SELECT col, "row",
-         |    CASE WHEN (col + "row") % 3 = 0 THEN 100.5 ELSE 100.0 END AS total
-         |  FROM cc)
-         |SELECT col, "row", total, total - 100.0 AS pctdiff, forest_tot
-         |FROM q JOIN tot USING (col, "row")
-         |WHERE abs(total - 100.0) > 0.01
-         |ORDER BY "row", col""".stripMargin,
-
-    "q50_overlay_cellid" ->
-      s"""WITH pts AS (${TpchGeo.pointsSql})
-         |SELECT o_orderkey, x, y,
-         |  CAST(floor(x/1000.0) AS INT)+1 AS col,
-         |  CAST(floor(y/1000.0) AS INT)+1 AS "row"
-         |FROM pts
-         |WHERE (x > 500 AND x < 2500 AND y > 500 AND y < 2500)
-         |   OR (x > 5000 AND x < 7000 AND y > 1000 AND y < 3000)
-         |ORDER BY o_orderkey""".stripMargin,
-
-    "q51_ncf_alloc" ->
-      s"""WITH tr AS (${TpchGeo.tractsSql}),
-         |cl AS (${TpchGeo.cellsSql}),
-         |g AS (SELECT 'W' || CAST(vk AS VARCHAR) AS var, tstep, "row", col,
-         |    CAST((vk * 41 + tstep * 13 + (("row" - 1) * 8 + col)) % 45 AS DOUBLE) AS value
-         |  FROM cl CROSS JOIN range(3) t(tstep) CROSS JOIN (VALUES (1), (2)) v(vk)),
-         |cov AS (
-         |  SELECT p_partkey, col, "row",
-         |    greatest(0, least(tx0+512, gx0+1000) - greatest(tx0, gx0)) *
-         |    greatest(0, least(ty0+512, gy0+1000) - greatest(ty0, gy0)) AS ca
-         |  FROM tr CROSS JOIN cl)
-         |SELECT p_partkey, var, sum(value * ca) / 1000000.0 AS alloc
-         |FROM cov JOIN g USING (col, "row")
-         |WHERE ca > 0 GROUP BY 1, 2 ORDER BY p_partkey, var""".stripMargin,
-
-    "q52_diffioapi" ->
-      s"""WITH cl AS (${TpchGeo.cellsSql}),
-         |base AS (SELECT 'D1' AS var, CAST(tstep AS INT) AS tstep,
-         |    1 AS layer, "row", col,
-         |    CAST((tstep * 17 + (("row" - 1) * 8 + col)) % 30 AS DOUBLE) AS orig_val
-         |  FROM cl CROSS JOIN range(2) t(tstep)),
-         |d AS (SELECT var, tstep, layer, "row", col, orig_val,
-         |    CASE WHEN ("row" + col + tstep) % 5 = 0 THEN orig_val * 1.5
-         |         ELSE orig_val END AS new_val
-         |  FROM base)
-         |SELECT var, tstep, layer, "row", col, orig_val, new_val,
-         |  100.0 * (new_val - orig_val) / orig_val AS pctdiff
-         |FROM d
-         |WHERE orig_val <> 0 AND abs(100.0 * (new_val - orig_val) / orig_val) > 0.01
-         |ORDER BY var, tstep, layer, "row", col""".stripMargin,
-
-    "q53_srg2ncf" ->
-      s"""SELECT col, "row", sum(frac) AS value
-         |FROM ($srgPointStmt)
-         |GROUP BY 1, 2 ORDER BY "row", col""".stripMargin,
-
-    "q74_srg_vargrid_dots" ->
-      s"""WITH pts AS (${TpchGeo.pointsSql}),
-         |p2 AS (SELECT x, y FROM pts WHERE (50 * x - y) % 50000 <> 0),
-         |tagged AS (SELECT ${TpchGeo.fipsOfSql("x", "y")} AS fips, x, y
-         |           FROM p2),
-         |cellv AS (SELECT fips,
-         |    CAST(floor((50 * x - y) / 50000) + 1 AS INT) AS col,
-         |    CAST(floor(y / 1000) + 1 AS INT) AS "row"
-         |  FROM tagged),
-         |den AS (SELECT fips, CAST(count(*) AS DOUBLE) AS denom
-         |        FROM tagged GROUP BY 1),
-         |num AS (SELECT fips, col, "row", CAST(count(*) AS DOUBLE) AS numer
-         |        FROM cellv
-         |        WHERE col BETWEEN 1 AND 8 AND "row" BETWEEN 1 AND 8
-         |        GROUP BY 1, 2, 3)
-         |${srgSelect(190)}""".stripMargin,
-
-    "q73_srg_egrid" ->
-      s"""WITH pts AS (${TpchGeo.pointsSql}),
-         |tagged AS (SELECT ${TpchGeo.fipsOfSql("x", "y")} AS fips, x, y
-         |           FROM pts),
-         |dm AS (SELECT CAST(id % 9 + 1 AS INT) AS col,
-         |  CAST(floor(id / 9.0) + 1 AS INT) AS "row",
-         |  CAST((id % 9) * 1000 +
-         |    (CASE WHEN (CAST(floor(id / 9.0) AS INT) + 1) % 2 = 0
-         |          THEN 500 ELSE 0 END) AS DOUBLE) AS cx,
-         |  CAST(CAST(floor(id / 9.0) AS INT) * 500 AS DOUBLE) AS cy
-         |FROM range(153) t(id)),
-         |den AS (SELECT fips, CAST(count(*) AS DOUBLE) AS denom
-         |        FROM tagged GROUP BY 1),
-         |num AS (SELECT fips, col, "row", CAST(count(*) AS DOUBLE) AS numer
-         |        FROM tagged JOIN dm ON abs(x - cx) + abs(y - cy) <= 500
-         |        GROUP BY 1, 2, 3)
-         |${srgSelect(180)}""".stripMargin,
-
-    "q72_srg_poly_out" ->
-      s"""WITH tr AS (${TpchGeo.tractsSql}),
-         |cn AS (${TpchGeo.countiesSql}),
-         |op AS (SELECT 1 + qx + qy * 2 AS out_id,
-         |         CAST(1000 + qx * 3000 AS DOUBLE) AS ox0,
-         |         CAST(1000 + qy * 3000 AS DOUBLE) AS oy0
-         |       FROM range(2) a(qx) CROSS JOIN range(2) b(qy)),
-         |fr AS (
-         |  SELECT fips, tx0, ty0, cx0, cy0,
-         |    greatest(0, least(tx0+512, cx0+2000) - greatest(tx0, cx0)) *
-         |    greatest(0, least(ty0+512, cy0+2000) - greatest(ty0, cy0)) AS fa
-         |  FROM tr CROSS JOIN cn
-         |  WHERE greatest(0, least(tx0+512, cx0+2000) - greatest(tx0, cx0)) *
-         |        greatest(0, least(ty0+512, cy0+2000) - greatest(ty0, cy0)) > 0),
-         |den AS (SELECT fips, sum(fa) AS denom FROM fr GROUP BY 1),
-         |pf AS (
-         |  SELECT fips, out_id,
-         |    greatest(0, least(tx0+512, cx0+2000, ox0+3000) - greatest(tx0, cx0, ox0)) *
-         |    greatest(0, least(ty0+512, cy0+2000, oy0+3000) - greatest(ty0, cy0, oy0)) AS pa
-         |  FROM fr CROSS JOIN op),
-         |num AS (SELECT fips, out_id, sum(pa) AS numer
-         |        FROM pf WHERE pa > 0 GROUP BY 1, 2)
-         |SELECT CAST(170 AS INT) AS srg_code, fips, out_id,
-         |  numer/denom AS frac, numer, denom,
-         |  sum(numer/denom) OVER (PARTITION BY fips
-         |    ORDER BY CAST(out_id AS VARCHAR)) AS qasum
-         |FROM num JOIN den USING (fips)
-         |WHERE denom >= 0.00001 AND numer <> 0
-         |ORDER BY fips, out_id""".stripMargin,
-
-    "q71_snapshot_resume" ->
-      """WITH t AS (SELECT doc_id,
-        |        CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-        |      FROM documents)
-        |SELECT 1 AS version, doc_id, n_tokens FROM t
-        |UNION ALL
-        |SELECT 2 AS version, doc_id, n_tokens FROM t WHERE n_tokens >= 25
-        |ORDER BY version, doc_id""".stripMargin,
-
-    "q68_oceanfile" ->
-      s"""WITH tr AS (${TpchGeo.tractsSql}),
-         |cl AS (${TpchGeo.cellsSql}),
-         |fr AS (
-         |  SELECT col, "row",
-         |    substr(CAST(p_partkey AS VARCHAR), -1, 1) AS category,
-         |    greatest(0, least(tx0+512, gx0+1000) - greatest(tx0, gx0)) *
-         |    greatest(0, least(ty0+512, gy0+1000) - greatest(ty0, gy0)) AS ca
-         |  FROM tr CROSS JOIN cl)
-         |SELECT col, "row", category, sum(ca) / 1000000.0 AS pct
-         |FROM fr WHERE ca > 0 GROUP BY 1, 2, 3
-         |ORDER BY "row", col, category""".stripMargin,
-
-    "q49_ioapi_alloc" ->
-      s"""WITH tr AS (${TpchGeo.tractsSql}),
-         |cl AS (${TpchGeo.cellsSql}),
-         |g AS (SELECT 'V' || CAST(vk AS VARCHAR) AS var, tstep, "row", col,
-         |    CAST((vk * 31 + tstep * 7 + (("row" - 1) * 8 + col)) % 50 AS DOUBLE) AS value
-         |  FROM cl CROSS JOIN range(4) t(tstep) CROSS JOIN (VALUES (1), (2)) v(vk)),
-         |cov AS (
-         |  SELECT p_partkey, col, "row",
-         |    greatest(0, least(tx0+512, gx0+1000) - greatest(tx0, gx0)) *
-         |    greatest(0, least(ty0+512, gy0+1000) - greatest(ty0, gy0)) AS ca
-         |  FROM tr CROSS JOIN cl)
-         |SELECT p_partkey, var, sum(value * ca) / 1000000.0 AS alloc
-         |FROM cov JOIN g USING (col, "row")
-         |WHERE ca > 0 GROUP BY 1, 2 ORDER BY p_partkey, var""".stripMargin,
-
-    "q05_srg_line" ->
-      s"""WITH rd AS (${TpchGeo.roadsSql}),
-         |cn AS (${TpchGeo.countiesSql}),
-         |cl AS (${TpchGeo.cellsSql}),
-         |fr AS (
-         |  SELECT fips, s_suppkey, x1, x2, y, cx0, cy0,
-         |    greatest(0, least(x2, cx0+2000) - greatest(x1, cx0)) AS flen
-         |  FROM rd JOIN cn ON y > cy0 AND y < cy0+2000
-         |  WHERE greatest(0, least(x2, cx0+2000) - greatest(x1, cx0)) > 0),
-         |den AS (SELECT fips, sum(flen) AS denom FROM fr GROUP BY 1),
-         |cf AS (
-         |  SELECT fips, col, "row",
-         |    greatest(0, least(x2, cx0+2000, gx0+1000) - greatest(x1, cx0, gx0)) AS clen
-         |  FROM fr JOIN cl ON y > gy0 AND y < gy0+1000),
-         |num AS (SELECT fips, col, "row", sum(clen) AS numer
-         |        FROM cf WHERE clen > 0 GROUP BY 1, 2, 3)
-         |${srgSelect(240)}""".stripMargin,
-
-    "q06_allocate_agg" ->
-      s"""WITH tr AS (${TpchGeo.tractsSql}),
-         |cn AS (${TpchGeo.countiesSql}),
-         |fr AS (
-         |  SELECT fips, p_size,
-         |    greatest(0, least(tx0+512, cx0+2000) - greatest(tx0, cx0)) *
-         |    greatest(0, least(ty0+512, cy0+2000) - greatest(ty0, cy0)) AS fa
-         |  FROM tr CROSS JOIN cn)
-         |SELECT fips, sum(p_size * (fa / 262144.0)) AS p_size_alloc
-         |FROM fr WHERE fa > 0 GROUP BY fips ORDER BY fips""".stripMargin,
-
-    "q07_allocate_avg" ->
-      s"""WITH tr AS (${TpchGeo.tractsSql}),
-         |cn AS (${TpchGeo.countiesSql}),
-         |fr AS (
-         |  SELECT fips, p_size,
-         |    greatest(0, least(tx0+512, cx0+2000) - greatest(tx0, cx0)) *
-         |    greatest(0, least(ty0+512, cy0+2000) - greatest(ty0, cy0)) AS fa
-         |  FROM tr CROSS JOIN cn)
-         |SELECT fips, sum(p_size * (fa / 262144.0)) / 4000000.0 AS p_size_density
-         |FROM fr WHERE fa > 0 GROUP BY fips ORDER BY fips""".stripMargin,
-
-    "q08_overlay" ->
-      s"""WITH pts AS (${TpchGeo.pointsSql})
-         |SELECT o_orderkey, x, y FROM pts
-         |WHERE (x > 500 AND x < 2500 AND y > 500 AND y < 2500)
-         |   OR (x > 5000 AND x < 7000 AND y > 1000 AND y < 3000)
-         |ORDER BY o_orderkey""".stripMargin,
-
-    "q09_filter" ->
-      """SELECT p_partkey, p_brand, p_size FROM part
-        |WHERE p_brand LIKE 'Brand#3%' AND p_brand <> 'Brand#33'
-        |  AND p_size BETWEEN 10 AND 40
-        |ORDER BY p_partkey""".stripMargin,
-
-    "q10_knn" ->
-      """WITH q AS (SELECT c_custkey AS qid,
-        |    CAST((c_custkey*32717) % 8000 AS DOUBLE) AS x,
-        |    CAST((c_custkey*11261) % 8000 AS DOUBLE) AS y
-        |  FROM customer WHERE c_custkey <= 20),
-        |s AS (SELECT s_suppkey AS sid,
-        |    CAST((s_suppkey*27179) % 8000 AS DOUBLE) AS sx,
-        |    CAST((s_suppkey*15101) % 8000 AS DOUBLE) AS sy
-        |  FROM supplier),
-        |d AS (SELECT qid, sid, (x-sx)*(x-sx)+(y-sy)*(y-sy) AS dist2
-        |      FROM q CROSS JOIN s),
-        |r AS (SELECT qid, sid, dist2,
-        |    CAST(row_number() OVER (PARTITION BY qid ORDER BY dist2, sid) AS INT) AS "rank"
-        |  FROM d)
-        |SELECT qid, sid, dist2, "rank" FROM r WHERE "rank" <= 5
-        |ORDER BY qid, "rank"""".stripMargin
-  )
 }

@@ -254,6 +254,8 @@ object Clip {
   // ------------------------------------------------- general polygon×polygon
 
   import org.locationtech.jts.geom.{Coordinate, GeometryFactory, LinearRing, Polygon => JtsPolygon, Geometry => JtsGeom}
+  import org.locationtech.jts.geom.util.GeometryFixer
+  import org.locationtech.jts.operation.overlayng.{OverlayNG, OverlayNGRobust}
 
   private val gf = new GeometryFactory()
 
@@ -319,10 +321,7 @@ object Clip {
     if (!ba.intersects(bb)) return 0.0
     if (isAxisRect(b, bb)) return polygonRectClipArea(a, bb)
     if (isAxisRect(a, ba)) return polygonRectClipArea(b, ba)
-    val ja = toJts(a); val jb = toJts(b)
-    if (jb.covers(ja)) ja.getArea
-    else if (ja.covers(jb)) jb.getArea
-    else ja.intersection(jb).getArea
+    jtsIntersection(a, b).getArea
   }
 
   /** A ∩ B as ring arrays (multipolygon flattened: each outer ring CCW
@@ -336,9 +335,20 @@ object Clip {
       return a.map(r => clipRingRect(r, bb)).filter(_.length >= 6)
     if (isAxisRect(a, ba))
       return b.map(r => clipRingRect(r, ba)).filter(_.length >= 6)
-    val ja = toJts(a); val jb = toJts(b)
-    val res = if (jb.covers(ja)) ja else if (ja.covers(jb)) jb else ja.intersection(jb)
-    fromJts(res)
+    fromJts(jtsIntersection(a, b))
+  }
+
+  /** A ∩ B of two non-rectangles through JTS: the covered-by shortcut, else
+    * the snap-rounding-robust OverlayNG. An invalid side (a hole crossing
+    * its shell, a self-intersecting ring) is first repaired by
+    * GeometryFixer; on such input any overlay throws "side location
+    * conflict". A valid side is used as it is. */
+  private def jtsIntersection(a: Array[Array[Double]], b: Array[Array[Double]]): JtsGeom = {
+    def valid(g: JtsPolygon): JtsGeom = if (g.isValid) g else GeometryFixer.fix(g)
+    val ja = valid(toJts(a)); val jb = valid(toJts(b))
+    if (jb.covers(ja)) ja
+    else if (ja.covers(jb)) jb
+    else OverlayNGRobust.overlay(ja, jb, OverlayNG.INTERSECTION)
   }
 
   /** JTS geometry → flat ring arrays; non-polygonal pieces (lines/points

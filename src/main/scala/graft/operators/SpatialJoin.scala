@@ -65,7 +65,9 @@ object SpatialJoin {
   /** Polygon×polygon join with clipped fragments — the reference's
     * polyIsect for two polygon layers (county×tract). Output: all columns of
     * both sides plus `frag_geom` (clipped rings) and `frag_area`; empty
-    * fragments drop, and B's geometry leaves the output.
+    * fragments drop, and B's geometry leaves the output. `frag_area` is
+    * filtered and projected, so it runs behind its own fence (GeoFunctions
+    * header): once per fragment.
     *
     * The exact kernel skips full clipping when one geometry covers the
     * other (the PG covered-by shortcut, template_polygon_noFF_withWA.csh:
@@ -84,7 +86,7 @@ object SpatialJoin {
       .drop("__abb", "__bbb")
       .withColumn("frag_geom", polyClipGeom(col(aGeom), col(bGeom)))
       .where(size(col("frag_geom")) > 0)
-      .withColumn("frag_area", polygonArea(col("frag_geom")))
+      .withColumn("frag_area", fence(polygonArea(col("frag_geom"))))
       .where(col("frag_area") > 0)
       .drop(bGeom)
     if (keepFragGeom) frags else frags.drop("frag_geom")
@@ -92,7 +94,8 @@ object SpatialJoin {
 
   /** Line×polygon join with clipped sub-segments (intersect.c:274-512).
     * Output: both sides' columns + `frag_line` pieces + their summed
-    * `frag_len`; empty results drop, and the polygon's `geom` leaves.
+    * `frag_len` (fenced like `frag_area`); empty results drop, and the
+    * polygon's `geom` leaves.
     * `curved` switches the length MEASURE of the (geometrically identical)
     * clipped pieces to great-circle (USE_CURVED_LINES, polyops.c:440-474). */
   def linePolyFragments(lines: DataFrame, polys: DataFrame,
@@ -108,9 +111,9 @@ object SpatialJoin {
       .drop("__lbb", "__pbb")
       .withColumn("frag_line", lineClipSegs(col(lineCol), col("geom")))
       .where(size(col("frag_line")) > 0)
-      .withColumn("frag_len",
+      .withColumn("frag_len", fence(
         aggregate(transform(col("frag_line"), s => lineLength(s, curved)),
-                  lit(0.0), (acc, v) => acc + v))
+                  lit(0.0), (acc, v) => acc + v)))
       .where(col("frag_len") > 0)
       .drop("geom")
   }

@@ -150,10 +150,11 @@ object Surrogate {
     * projected, so `size` runs behind a local single-evaluation fence
     * (GeoFunctions header) — once per feature, not again in the scan-side
     * filter; the shared measure stays unfenced for its other callers.
-    * The W∩D fragments are persisted — the
-    * denominator and every target's numerator consume them, and the
-    * reference materializes this same grid-independent intermediate
-    * (SAVE_DW_FILE/USE_DW_FILE, data_weight.c:19-160). A piece of measure
+    * The W∩D fragments are persisted, without the unclipped `feature`
+    * that nothing reads after the clip — the denominator and every
+    * target's numerator consume them, and the reference materializes this
+    * same grid-independent intermediate (SAVE_DW_FILE/USE_DW_FILE,
+    * data_weight.c:19-160). A piece of measure
     * m contributes val·m/base, or m itself when no weight is given. */
   private def fragCounty(features: DataFrame, weight: Option[String],
                          base: String, size: Column => Column,
@@ -165,7 +166,8 @@ object Surrogate {
       .where(col(base) > 0)
       .withColumn("__wval",
         weight.map(col(_).cast("double")).getOrElse(lit(0.0)))
-    val frags = clip(wts).transform(graft.spark.PersistTracker.persist)
+    val frags = clip(wts).drop(feature)
+      .transform(graft.spark.PersistTracker.persist)
     val contrib = (m: Column) =>
       weight.map(_ => col("__wval") * (m / col(base))).getOrElse(m)
     County(frags,
@@ -301,16 +303,15 @@ object Surrogate {
           domain, res, weight, curved)
         val pieces = c.rows.withColumnRenamed("frag_len", "__wd_len")
           .withColumn("__piece", explode(col("frag_line")))
-          .drop("line", "frag_line")
+          .drop("frag_line")
         (c, SpatialJoin.linePolyFragments(pieces,
           outPolys.select(col("out_id"), col("geom")), domain, res,
           lineCol = "__piece", curved = curved), col("frag_len"))
       },
       poly = {
         val c = polyCounty(layer, counties, domain, res, weight)
-        // the original weight geometry drops before the cover explode
         (c, SpatialJoin.polyPolyFragments(
-          c.rows.drop("geom").withColumnRenamed("frag_area", "__wd_area"),
+          c.rows.withColumnRenamed("frag_area", "__wd_area"),
           outPolys.select(col("out_id"), col("geom").as("ogeom")),
           domain, res, aGeom = "frag_geom", bGeom = "ogeom",
           keepFragGeom = false), col("frag_area"))

@@ -23,7 +23,7 @@ class GeographyReportPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("q300 broadcasts the county cover and keeps pip native") {
-    val df = EntryRound5bb.queries("q300_geography_report")(
+    val df = SparkEntry.queries("q300_geography_report")(
       spark, graft.TestData.sf("0.001"))
     val plan = df.queryExecution.executedPlan.toString
     graft.spark.PersistTracker.drain()

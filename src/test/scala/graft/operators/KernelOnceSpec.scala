@@ -12,8 +12,9 @@ import graft.fixtures.TpchGeo
 /** The single-evaluation fence on the exact kernels (GeoFunctions header),
   * checked on executed plans: no join condition and no filter calls a clip
   * kernel, each clip kernel runs in exactly one projection per fragment
-  * stage, and the fragment county stage measures each weight feature in
-  * one projection and in no filter. */
+  * stage, the fragment county stage measures each weight feature in one
+  * projection and in no filter, and each fragment stage measures its
+  * clipped pieces in one projection and in no filter. */
 class KernelOnceSpec extends AnyFunSuite with BeforeAndAfterAll {
   import KernelOnceSpec._
 
@@ -60,9 +61,11 @@ class KernelOnceSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** Each clip kernel is called in `projections(k)` projections (0 when
     * absent) and in no filter or join condition; the weight measure
     * kernel, when given, is called on the feature in one projection and
-    * in no filter. */
+    * in no filter; measure kernel `k` of `pieces` is called on clipped
+    * pieces in `pieces(k)` projections and in no filter. */
   private def assertOnce(p: Seq[SparkPlan], projections: Map[String, Int],
-                         weight: Option[String]): Unit = {
+                         weight: Option[String],
+                         pieces: Map[String, Int]): Unit = {
     val guards = p.collect {
       case f: FilterExec => f.condition
       case j: BaseJoinExec if j.condition.nonEmpty => j.condition.get
@@ -78,6 +81,9 @@ class KernelOnceSpec extends AnyFunSuite with BeforeAndAfterAll {
       check(k, calls(k)(_).nonEmpty, projections.getOrElse(k, 0)))
     weight.foreach(k =>
       check(s"$k of the weight feature", calls(k)(_).exists(!onPiece(_)), 1))
+    pieces.foreach { case (k, n) =>
+      check(s"$k of a clipped piece", calls(k)(_).exists(onPiece), n)
+    }
   }
 
   private def counties = TpchGeo.counties(spark)
@@ -88,7 +94,7 @@ class KernelOnceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assertOnce(plan(Surrogate.polySurrogate(tracts, counties, g, d, z,
         srgCode = 1, weight = Some("p_size"))),
       Map("poly_clip_geom" -> 1, "poly_cell_clip_area" -> 1),
-      Some("poly_area"))
+      Some("poly_area"), Map("poly_area" -> 1))
   }
 
   test("lineSurrogate clips each candidate and each (piece, cell) once") {
@@ -96,7 +102,7 @@ class KernelOnceSpec extends AnyFunSuite with BeforeAndAfterAll {
         TpchGeo.roads(spark, SurrogatePlanSpec.SfDir), counties, g, d, z,
         srgCode = 2)),
       Map("line_clip_segs" -> 1, "line_cell_clip_len" -> 1),
-      Some("line_len"))
+      Some("line_len"), Map("line_len" -> 1))
   }
 
   test("curved lineSurrogate clips each candidate and each (piece, cell) once") {
@@ -104,7 +110,7 @@ class KernelOnceSpec extends AnyFunSuite with BeforeAndAfterAll {
         TpchGeo.roadsLL(spark, SurrogatePlanSpec.SfDir), TpchGeo.countiesLL(spark),
         TpchGeo.gridLL, TpchGeo.domainLL, z, srgCode = 3, curved = true)),
       Map("line_clip_segs" -> 1, "line_cell_clip_len_curved" -> 1),
-      Some("great_circle_len"))
+      Some("great_circle_len"), Map("great_circle_len" -> 1))
   }
 
   test("polySurrogateToPolys clips once in each of its two fragment stages") {
@@ -117,13 +123,13 @@ class KernelOnceSpec extends AnyFunSuite with BeforeAndAfterAll {
     }).toDF("out_id", "geom")
     assertOnce(plan(Surrogate.polySurrogateToPolys(tracts, counties, quads,
         d, z, srgCode = 4)),
-      Map("poly_clip_geom" -> 2), Some("poly_area"))
+      Map("poly_clip_geom" -> 2), Some("poly_area"), Map("poly_area" -> 2))
   }
 
   test("areaPercent clips each (polygon, cell) once") {
     assertOnce(plan(Allocate.areaPercent(
         tracts.withColumn("category", col("p_partkey") % 10), "category", g)),
-      Map("poly_cell_clip_area" -> 1), None)
+      Map("poly_cell_clip_area" -> 1), None, Map.empty)
   }
 }
 

@@ -22,7 +22,7 @@ class StarJoinPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("q280 plans 3 broadcast joins and no sort-merge join") {
-    val df = graft.EntryRound5au.queries("q280_star_join")(
+    val df = graft.SparkEntry.queries("q280_star_join")(
       spark, graft.TestData.sf("0.001"))
     val plan = df.queryExecution.executedPlan.toString
     val nBroadcast = "BroadcastHashJoin".r.findAllIn(plan).size

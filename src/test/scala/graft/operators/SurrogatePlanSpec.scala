@@ -85,6 +85,23 @@ class SurrogatePlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got == LineShape)
   }
 
+  test("the persisted W∩D fragments carry no weight geometry") {
+    val builds: Seq[(String, () => DataFrame)] = Seq(
+      "polySurrogate" -> (() => Surrogate.polySurrogate(
+        TpchGeo.tracts(spark, SfDir), counties, g, d, z, srgCode = 2,
+        weight = Some("p_size"))),
+      "lineSurrogate" -> (() => Surrogate.lineSurrogate(
+        TpchGeo.roads(spark, SfDir), counties, g, d, z, srgCode = 3)))
+    builds.foreach { case (name, build) =>
+      val cached = executed(build()).collect {
+        case m: InMemoryTableScanExec => m.relation.output.map(_.name)
+      }
+      assert(cached.nonEmpty, s"$name persists nothing")
+      cached.foreach(cols => assert(!cols.contains("geom") && !cols.contains("line"),
+        s"$name caches ${cols.mkString(", ")}"))
+    }
+  }
+
   test("no surrogate or post-pass sorts globally: no range exchange, no global sort") {
     def points = Surrogate.pointSurrogate(
       TpchGeo.points(spark, SfDir), counties, g, d, z, srgCode = 1)

@@ -81,7 +81,7 @@ class PerplexityCutSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("q177 plan: no corpus-sized single-partition window") {
-    val df = graft.EntryRound5j.queries("q177_perplexity_filter")(
+    val df = graft.SparkEntry.queries("q177_perplexity_filter")(
       spark, graft.TestData.sf("0.001"))
     val optimized = df.queryExecution.optimizedPlan
     graft.spark.PersistTracker.drain()
