@@ -19,6 +19,10 @@ import org.apache.spark.sql.SparkSession
   *   SPARK_GRAFT_PLANS  — if set, writes <dir>/<query>.txt with the
   *                        explain("formatted") output of each query.
   *
+  * A query that runs connected components ends its line with
+  * `cc_rounds=<n>`: the passes its last rep took (`TextOps.lastCcRounds`,
+  * the probe Bench reports as `cc_rounds`).
+  *
   * Methodology matches Bench exactly: noop sink (full-row evaluation, no
   * Catalyst column pruning of the computed columns), per-query cache
   * isolation, one untimed warmup of the flagship entry. */
@@ -40,15 +44,19 @@ object BenchExtra {
       else SparkEntry.queries.keys.toSeq.sorted
     val out = names.map { name =>
       val fn = SparkEntry.queries(name)
+      var ccRounds = -1L
       val times = (0 until reps).map { _ =>
         graft.spark.PersistTracker.drain()
         spark.sharedState.cacheManager.clearCache()
+        graft.text.TextOps.lastCcRounds.set(-1L)
         val t0 = System.nanoTime()
         val ok =
           try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
           catch { case e: Throwable =>
             System.err.println(s"[benchextra] $name failed: $e"); false }
-        Option.when(ok)((System.nanoTime() - t0) / 1e9)
+        val t = Option.when(ok)((System.nanoTime() - t0) / 1e9)
+        ccRounds = graft.text.TextOps.lastCcRounds.get()
+        t
       }
       plansDir.foreach { d =>
         graft.spark.PersistTracker.drain()
@@ -62,11 +70,12 @@ object BenchExtra {
         val w = new java.io.PrintWriter(new java.io.File(dir, s"$name.txt"))
         try w.write(plan) finally w.close()
       }
-      name -> times
+      (name, times, ccRounds)
     }
-    out.foreach { case (n, ts) =>
+    out.foreach { case (n, ts, cc) =>
       println(f"[benchextra] $n%-28s " +
-        ts.map(_.fold(f"${"FAIL"}%8s")(t => f"$t%8.3f")).mkString(" "))
+        ts.map(_.fold(f"${"FAIL"}%8s")(t => f"$t%8.3f")).mkString(" ") +
+        (if (cc >= 0) s" cc_rounds=$cc" else ""))
     }
     graft.spark.PersistTracker.drain()
     spark.stop()

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Link-weighted PageRank over the domain graph, in exact integer
-  * arithmetic: ranks live in micro-units of a fixed scale S, every
+  * arithmetic: ranks live in micro-units of a fixed `Scale`, every
   * per-edge contribution is `pr(u)·w(u→v) div outw(u)` (integer div) and
   * every reduction is an integer sum — so a fixed iteration count yields
   * BIT-IDENTICAL ranks on any engine and any partitioning (the q79
@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * floating-point PageRank would diverge across engines in the last ulp).
   *
   * Damping 0.85 as the canonical constant (Page et al. 1999), applied as
-  * `(15·(S div n)) div 100 + (85·Σcontrib) div 100`. Nodes without
+  * `(15·(Scale div n)) div 100 + (85·Σcontrib) div 100`. Nodes without
   * out-edges simply contribute nothing (their mass decays — the standard
   * simplification when the graph is known to be total, as the fixture's
   * is; a redistribution variant would add one tiny aggregate per pass).
@@ -26,81 +26,58 @@ import org.apache.spark.sql.functions._
   */
 object DomainRank {
 
-  def pageRank(edges: DataFrame, iters: Int = 5,
-               scale: Long = 1000000000000L): DataFrame = {
-    val nodes = edges.select(col("src_domain").as("domain"))
-      .unionByName(edges.select(col("dst_domain").as("domain")))
-      .distinct()
-      .localCheckpoint()
-    val n = nodes.count()
-    require(n > 0, "empty graph")
-    // a node's rank is bounded by the total mass `scale` (integer div only
-    // destroys mass), so pr·w fits a Long iff scale·maxW does — one tiny
-    // aggregate makes the bit-exactness claim safe instead of silently
-    // wrapping on a skewed mega-domain edge
-    val maxW = edges.agg(max(col("n_links").cast("long"))).head().getLong(0)
-    require(maxW <= 0 || scale <= Long.MaxValue / maxW,
-      s"scale=$scale x max edge weight $maxW would overflow Long — " +
-        "lower the scale or pre-bucket edge weights")
-    val base = scale / n
-    val ew = edges
-      .join(edges.groupBy("src_domain").agg(sum("n_links").as("ow")),
-        "src_domain")
-      .select(col("src_domain"), col("dst_domain"),
-        col("n_links").cast("long").as("w"), col("ow").cast("long").as("ow"))
-      .localCheckpoint()
-    var pr = nodes.withColumn("pr", lit(base))
-    var k = 0
-    while (k < iters) {
-      val contrib = ew
-        .join(pr.withColumnRenamed("domain", "src_domain"), "src_domain")
-        .select(col("dst_domain").as("domain"),
-          expr("(pr * w) div ow").as("c"))
-        .groupBy("domain").agg(sum("c").as("c"))
-      pr = nodes.join(contrib, Seq("domain"), "left")
-        .select(col("domain"),
-          (lit((15L * base) / 100L) +
-            expr("(85 * coalesce(c, CAST(0 AS BIGINT))) div 100")).as("pr"))
-        .localCheckpoint()
-      k += 1
-    }
-    pr
-  }
+  /** The micro-unit scale: the total rank mass a graph starts with. */
+  final val Scale = 1000000000000L
+
+  /** Global PageRank over `edges(src_domain, dst_domain, n_links)` →
+    * `(domain, pr)`: the personalized recurrence with every node a seed. */
+  def pageRank(edges: DataFrame, iters: Int): DataFrame =
+    rank(edges.select(col("src_domain").as("src"), col("dst_domain").as("dst"),
+        col("n_links").as("w")), None, iters)
+      .withColumnRenamed("id", "domain")
 
   /** Personalized PageRank over `(src, dst, w)` edges: the teleport mass
     * goes ONLY to the seed set (the crawl-frontier prioritizer — "rank
-    * pages by their closeness to these trusted seeds"), in the same exact
-    * integer micro-unit arithmetic as pageRank, so a fixed iteration count
-    * is bit-identical on any engine/partitioning. Initial mass: scale div
-    * |seeds| on each seed, 0 elsewhere; per pass, a seed receives
-    * `(15·(scale div |seeds|)) div 100` teleport plus the damped inbound
-    * sum, a non-seed only the damped inbound sum.
+    * pages by their closeness to these trusted seeds"). Initial mass:
+    * Scale div |seeds| on each seed, 0 elsewhere; per pass, a seed
+    * receives `(15·(Scale div |seeds|)) div 100` teleport plus the damped
+    * inbound sum, a non-seed only the damped inbound sum.
     *
     * Seeds are a literal list (broadcast by construction — a seed set is
-    * dozens of trusted hubs, not a table); state and passes have the same
-    * 100-TB shape as pageRank: one (id, pr) row per node, keyed join +
-    * keyed sum per pass, per-pass localCheckpoint. */
+    * dozens of trusted hubs, not a table). */
   def personalizedPageRank(edges: DataFrame, seeds: Seq[Long],
-                           iters: Int = 4,
-                           scale: Long = 1000000000000L): DataFrame = {
+                           iters: Int): DataFrame = {
     require(seeds.nonEmpty, "personalized PageRank needs at least one seed")
+    rank(edges, Some(seeds), iters)
+  }
+
+  /** `edges(src, dst, w)` → `(id, pr)` after `iters` passes; `seeds` None
+    * teleports to every node. */
+  private def rank(edges: DataFrame, seeds: Option[Seq[Long]],
+                   iters: Int): DataFrame = {
     val nodes = edges.select(col("src").as("id"))
       .unionByName(edges.select(col("dst").as("id")))
       .distinct()
       .localCheckpoint()
-    val maxW = edges.agg(max(col("w").cast("long"))).head().getLong(0)
-    require(maxW <= 0 || scale <= Long.MaxValue / maxW,
-      s"scale=$scale x max edge weight $maxW would overflow Long")
+    // a node's rank is bounded by the total mass `Scale` (integer div only
+    // destroys mass), so pr·w fits a Long iff Scale·maxW does — one tiny
+    // aggregate makes the bit-exactness claim safe instead of silently
+    // wrapping on a skewed mega-domain edge
+    val maxRow = edges.agg(max(col("w").cast("long"))).head()
+    require(!maxRow.isNullAt(0), "empty graph")
+    val maxW = maxRow.getLong(0)
+    require(maxW <= 0 || Scale <= Long.MaxValue / maxW,
+      s"Scale=$Scale x max edge weight $maxW would overflow Long — " +
+        "pre-bucket edge weights")
+    val base = Scale / seeds.fold(nodes.count())(_.size.toLong)
+    val isSeed = seeds.fold(lit(true))(ss => col("id").isin(ss: _*))
     val ew = edges
       .join(edges.groupBy("src").agg(sum("w").as("ow")), "src")
       .select(col("src"), col("dst"), col("w").cast("long").as("w"),
         col("ow").cast("long").as("ow"))
       .localCheckpoint()
-    val base = scale / seeds.size
-    val isSeed = col("id").isin(seeds: _*)
     var pr = nodes.withColumn("pr", when(isSeed, lit(base)).otherwise(lit(0L)))
-    var k = 0
-    while (k < iters) {
+    for (_ <- 0 until iters) {
       val contrib = ew
         .join(pr.withColumnRenamed("id", "src"), "src")
         .select(col("dst").as("id"), expr("(pr * w) div ow").as("c"))
@@ -110,7 +87,6 @@ object DomainRank {
           (when(isSeed, lit((15L * base) / 100L)).otherwise(lit(0L)) +
             expr("(85 * coalesce(c, CAST(0 AS BIGINT))) div 100")).as("pr"))
         .localCheckpoint()
-      k += 1
     }
     pr
   }

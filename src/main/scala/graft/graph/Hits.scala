@@ -33,7 +33,7 @@ object Hits {
 
   /** `edges(src_domain, dst_domain, n_links)` → `(domain, auth, hub)` in
     * micro-units of the per-vector maximum after `iters` full rounds. */
-  def hits(edges: DataFrame, iters: Int = 2): DataFrame = {
+  def hits(edges: DataFrame, iters: Int): DataFrame = {
     require(iters > 0, s"iters must be positive, got $iters")
     val nodes = edges.select(col("src_domain").as("domain"))
       .unionByName(edges.select(col("dst_domain").as("domain")))
@@ -77,8 +77,7 @@ object Hits {
     // zero rows are re-attached once, at the end.
     var hub = nodes.withColumn("h", lit(Scale)).localCheckpoint()
     var auth: DataFrame = null
-    var k = 0
-    while (k < iters) {
+    for (_ <- 0 until iters) {
       val a = ew.join(hub.withColumnRenamed("domain", "src_domain"),
             "src_domain")
         .select(col("dst_domain").as("domain"), (col("h") * col("w")).as("c"))
@@ -89,7 +88,6 @@ object Hits {
         .select(col("src_domain").as("domain"), (col("a") * col("w")).as("c"))
         .groupBy("domain").agg(sum("c").as("h"))
       hub = rescale(h, "h")
-      k += 1
     }
     nodes.join(auth, Seq("domain"), "left").join(hub, Seq("domain"), "left")
       .select(col("domain"), coalesce(col("a"), lit(0L)).as("auth"),

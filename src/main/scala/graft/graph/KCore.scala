@@ -10,39 +10,35 @@ import org.apache.spark.sql.functions._
   * peeling order is the standard coreness preprocessing for the denser
   * graph analytics (triangles, HITS) downstream.
   *
-  * Iterative peel: each round computes degrees over the surviving edge
-  * set (one keyed aggregate), drops nodes under k, and filters edges to
-  * survivors (two semi-joins) — all rows (long, long), payload-free, the
-  * Pregel-style shape of Bfs/CC. Rounds = peel depth of the graph (the
-  * intrinsic lower bound for degree-driven peeling); per-round
-  * `localCheckpoint` cuts lineage and one tiny count drives termination
-  * (the guarded-driver-action contract shared by Bfs and CC). */
+  * Iterative peel on the [[Fixpoint]] loop: each round computes degrees
+  * over the surviving edges (one keyed aggregate) and marks an edge `keep`
+  * when both its ends have degree ≥ k (two keyed joins) — all rows
+  * (long, long), payload-free. The probe counts the edges that lost an
+  * end; the next round drops them. Rounds = peel depth of the graph (the
+  * intrinsic lower bound for degree-driven peeling). */
 object KCore {
 
   /** `edges(src, dst)` (directed/duplicated input ok; self-loops dropped)
     * → `(id, deg)` — every node of the k-core with its in-core degree. */
   def core(edges: DataFrame, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
-    var e = edges
+    def degrees(e: DataFrame): DataFrame =
+      e.select(col("a").as("id")).unionAll(e.select(col("b").as("id")))
+        .groupBy("id").agg(count(lit(1)).as("deg"))
+    val e = edges
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .where(col("a") =!= col("b"))
       .distinct()
+      .withColumn("keep", lit(true))
       .localCheckpoint(true)
-    var removed = 1L
-    var degs: DataFrame = null
-    while (removed > 0) {
-      degs = e.select(col("a").as("id"))
-        .unionAll(e.select(col("b").as("id")))
-        .groupBy("id").agg(count(lit(1)).as("deg"))
-        .localCheckpoint(true)
-      val keep = degs.where(col("deg") >= k).select("id")
-      removed = degs.count() - keep.count()
-      if (removed > 0)
-        e = e.join(keep.withColumnRenamed("id", "a"), Seq("a"), "left_semi")
-          .join(keep.withColumnRenamed("id", "b"), Seq("b"), "left_semi")
-          .localCheckpoint(true)
-    }
-    degs.where(col("deg") >= k)
+    val peeled = Fixpoint.iterate(e, Int.MaxValue) { s =>
+      val live = s.where(col("keep"))
+      val deg = degrees(live)
+      live.join(deg.select(col("id").as("a"), col("deg").as("da")), "a")
+        .join(deg.select(col("id").as("b"), col("deg").as("db")), "b")
+        .select(col("a"), col("b"), (col("da") >= k && col("db") >= k).as("keep"))
+    }(_.where(!col("keep")).count()).state
+    degrees(peeled)
   }
 }

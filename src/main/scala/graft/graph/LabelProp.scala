@@ -19,10 +19,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale: per round one shuffle of (node, label) longs for the vote
   * group-by and one min-struct aggregate per node — ids only, never
-  * payloads; per-round localCheckpoint cuts the iterative lineage (the
-  * CC/PageRank/SSSP discipline). Round count is a fixed small k (LPA
-  * empirically stabilizes in ~5 rounds on web graphs), so the plan is k
-  * bounded stages, not a convergence loop with driver probes.
+  * payloads; per-round localCheckpoint cuts the iterative lineage. Round
+  * count is a fixed small k (LPA empirically stabilizes in ~5 rounds on
+  * web graphs), so the plan is k bounded stages, not a [[Fixpoint]] loop
+  * with per-round probes.
   */
 object LabelProp {
 

@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   * without 64 separate BFS jobs.
   *
   * Rounds = max finite landmark eccentricity; per-round state is
-  * (node, bits) — 16 bytes a row — with `localCheckpoint` + one guarded
-  * driver aggregate per round (the Bfs/CC discipline).
+  * (node, bits) — 16 bytes a row — flooded by the [[Fixpoint]] loop,
+  * whose one probe per round is the popcount that N(t) records.
   */
 object MultiBfs {
 
@@ -40,27 +40,20 @@ object MultiBfs {
       .unionAll(e.select(col("dst").as("id")))
       .unionAll(bitOf.select(col("id")))
       .distinct()
-    var reach = nodes.join(bitOf, Seq("id"), "left")
-      .select(col("id"), coalesce(col("b"), lit(0L)).as("bits"))
+    val reach = nodes.join(bitOf, Seq("id"), "left")
+      .select(col("id"), coalesce(col("b"), lit(0L)).as("label"))
       .localCheckpoint(true)
 
     def popcountSum(df: DataFrame): Long =
-      df.select(sum(expr("bit_count(bits)")).cast("long")).head.getLong(0)
+      df.select(sum(bit_count(col("label"))).cast("long")).head.getLong(0)
 
+    // bits only grow, so a round changed something iff N(t) grew
     val counts = scala.collection.mutable.ArrayBuffer(popcountSum(reach))
-    var changed = 1L
-    while (changed > 0) {
-      val pushed = reach.join(e, col("id") === col("src"))
-        .groupBy(col("dst").as("id"))
-        .agg(expr("bit_or(bits)").as("nb"))
-      val next = reach.join(pushed, Seq("id"), "left")
-        .select(col("id"),
-          expr("bits | coalesce(nb, 0L)").as("bits"))
-        .localCheckpoint(true)
+    Fixpoint.iterate(reach, Int.MaxValue)(Fixpoint.flood(e, bit_or)) { next =>
       val c = popcountSum(next)
-      changed = c - counts.last
+      val changed = c - counts.last
       if (changed > 0) counts += c
-      reach = next
+      changed
     }
     counts.zipWithIndex
       .map { case (n, t) => (t.toLong, n) }.toSeq

@@ -14,38 +14,30 @@ import org.apache.spark.sql.functions._
   * DIRECTED single-successor pointers to a fixpoint.
   *
   * Requires an acyclic pointer map (a true redirect forest); a cycle
-  * would never resolve, so rounds are capped and a `require` fails
-  * loudly if pointers remain unresolved. Each round shuffles (long,
-  * long) pairs only, with per-round localCheckpoint (the CC/PageRank
-  * discipline). */
+  * would never resolve, so the [[Fixpoint]] rounds are capped and a
+  * `require` fails loudly if pointers remain unresolved. Each round
+  * shuffles (long, long) pairs only. */
 object PointerDoubling {
 
   /** `ptr(src, dst)` (at most one outgoing pointer per src) → `(src,
     * terminal)` for every src, where terminal has no outgoing pointer. */
   def resolve(ptr: DataFrame, maxRounds: Int = 20): DataFrame = {
-    val spark = ptr.sparkSession
-    var f = ptr.select(col("src").cast("long").as("src"),
+    val f = ptr.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"))
       .localCheckpoint(true)
     val dup = f.groupBy("src").count().where(col("count") > 1).count()
     require(dup == 0, s"$dup src nodes carry more than one pointer — not a functional graph")
-    var r = 0
-    var open = 1L
-    while (r < maxRounds && open > 0) {
-      // f(u) ← f(f(u)) where defined — one self equi-join per round
-      val hop = f.as("a").join(
-          f.select(col("src").as("mid"), col("dst").as("d2")).as("b"),
+    // f(u) ← f(f(u)) where defined — one self equi-join per round
+    val r = Fixpoint.iterate(f, maxRounds) { g =>
+      g.as("a").join(
+          g.select(col("src").as("mid"), col("dst").as("d2")).as("b"),
           col("a.dst") === col("b.mid"), "left")
         .select(col("a.src").as("src"),
           coalesce(col("d2"), col("a.dst")).as("dst"),
           col("d2").isNotNull.as("moved"))
-        .localCheckpoint(true)
-      open = hop.where(col("moved")).count()
-      f = hop.select("src", "dst")
-      r += 1
-    }
-    require(open == 0,
+    }(_.where(col("moved")).count())
+    require(r.converged,
       s"pointer chains unresolved after $maxRounds doubling rounds — cycle or depth > 2^$maxRounds")
-    f
+    r.state.select("src", "dst")
   }
 }

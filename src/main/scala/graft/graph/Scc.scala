@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Strongly connected components of the DIRECTED link graph — the audit
@@ -17,12 +17,13 @@ import org.apache.spark.sql.functions._
   *      (all roots flood simultaneously — one job, many components);
   *   3. removes finished SCCs and repeats on the remainder.
   *
-  * Every exchange is (long, long); floods are keyed max/any aggregates
-  * with per-round `localCheckpoint` and one guarded driver count — the
-  * Bfs/CC/KCore discipline. Inner rounds ≤ graph diameter (small for web
-  * graphs); outer rounds = SCC "peel depth". Worst case (a directed path)
-  * degenerates to O(n) inner rounds — the documented trade for keeping
-  * every round a pure equi-join, which is what survives 10^9 edges.
+  * Every exchange is (long, long); both floods are [[Fixpoint.flood]]
+  * max-aggregates (the backward one over a boolean), and all three loops are
+  * [[Fixpoint.iterate]] calls. Inner rounds ≤ graph diameter (small
+  * for web graphs); outer rounds = SCC "peel depth". Worst case (a
+  * directed path) degenerates to O(n) inner rounds — the documented trade
+  * for keeping every round a pure equi-join, which is what survives 10^9
+  * edges.
   */
 object Scc {
 
@@ -31,67 +32,45 @@ object Scc {
     * normalized to the MIN member id. Singleton nodes (no cycle through
     * them) form singleton SCCs. */
   def components(edges: DataFrame): DataFrame = {
-    var e = edges.select(col("src").cast("long").as("src"),
+    val e = edges.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"))
       .where(col("src") =!= col("dst"))
       .distinct()
       .localCheckpoint(true)
-    var nodes = e.select(col("src").as("id"))
+    // (id, color): color is NULL until the node's SCC is found
+    val nodes = e.select(col("src").as("id"))
       .unionAll(e.select(col("dst").as("id")))
       .distinct()
+      .select(col("id"), lit(null).cast("long").as("color"))
       .localCheckpoint(true)
-    var result: DataFrame = null
+    def converge(edges: DataFrame, init: DataFrame, agg: Column => Column): DataFrame =
+      Fixpoint.iterate(init, Int.MaxValue)(Fixpoint.flood(edges, agg))(
+        Fixpoint.relabelled).state
 
-    var remaining = nodes.count()
-    while (remaining > 0) {
+    val result = Fixpoint.iterate(nodes, Int.MaxValue) { done =>
+      val live = done.where(col("color").isNull).select("id")
+      val le = e.join(live.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
+        .join(live.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
+        .localCheckpoint(true)
       // 1. forward max-flood: color(v) = max id reaching v (incl. itself)
-      var color = nodes.withColumn("color", col("id"))
+      val color = converge(le, live.select(col("id"), col("id").as("label")), max)
+        .select(col("id"), col("label").as("color"))
+      // 2. backward flood from the roots along same-color edges: a node is
+      //    in its root's SCC iff it reaches a node already in
+      val back = le
+        .join(color.select(col("id").as("src"), col("color").as("cs")), "src")
+        .join(color.select(col("id").as("dst"), col("color").as("cd")), "dst")
+        .where(col("cs") === col("cd"))
+        .select(col("dst").as("src"), col("src").as("dst"))
         .localCheckpoint(true)
-      var changed = 1L
-      while (changed > 0) {
-        val pushed = color.join(e, col("id") === col("src"))
-          .groupBy(col("dst").as("id"))
-          .agg(max("color").as("pc"))
-        // old color carried through the checkpoint: the convergence test
-        // is a narrow filter, not a second join per pass
-        val next = color.join(pushed, Seq("id"), "left")
-          .select(col("id"),
-            greatest(col("color"), coalesce(col("pc"), col("color")))
-              .as("color"),
-            col("color").as("__old"))
-          .localCheckpoint(true)
-        changed = next.where(col("color") =!= col("__old")).count()
-        color = next.select("id", "color")
-      }
-      // 2. backward flood from roots within each color class
-      var in = color.where(col("color") === col("id"))
-        .select(col("id"), col("color")).localCheckpoint(true)
-      var grew = 1L
-      var inCount = in.count()
-      while (grew > 0) {
-        val pulled = in.join(e, col("id") === col("dst"))
-          .select(col("src").as("id"), col("color"))
-        val cand = pulled.join(color.withColumnsRenamed(
-            Map("id" -> "id2", "color" -> "c2")),
-            col("id") === col("id2") && col("color") === col("c2"))
-          .select(col("id"), col("color"))
-        in = in.unionAll(cand).distinct().localCheckpoint(true)
-        // one count per pass (the previous size is remembered, not
-        // re-counted over the same checkpointed frame)
-        val c = in.count()
-        grew = c - inCount
-        inCount = c
-      }
-      val found = in // (id, color): finished SCC membership this round
-      result = if (result == null) found else result.unionAll(found)
-      // 3. peel finished nodes and their edges
-      val done = found.select("id").localCheckpoint(true)
-      nodes = nodes.join(done, Seq("id"), "left_anti").localCheckpoint(true)
-      e = e.join(done.withColumnRenamed("id", "src"), Seq("src"), "left_anti")
-        .join(done.withColumnRenamed("id", "dst"), Seq("dst"), "left_anti")
-        .localCheckpoint(true)
-      remaining = nodes.count()
-    }
+      val in = converge(back,
+          color.select(col("id"), (col("id") === col("color")).as("label")), max)
+        .where(col("label"))
+        .join(color, "id")
+      // 3. the found SCCs take their color; the rest stay for the next round
+      done.join(in.select(col("id"), col("color").as("found")), Seq("id"), "left")
+        .select(col("id"), coalesce(col("color"), col("found")).as("color"))
+    }(_.where(col("color").isNull).count()).state
     // normalize component ids to the min member id
     val norm = result.groupBy("color").agg(min("id").as("scc"))
     result.join(norm, "color").select(col("id"), col("scc"))

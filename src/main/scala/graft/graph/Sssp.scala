@@ -10,13 +10,11 @@ import org.apache.spark.sql.functions._
   * (old dist, dist + w).
   *
   * `maxRounds` bounds results to paths of <= maxRounds edges; once a
-  * round improves nothing the loop exits early, and a converged result
-  * equals the true shortest distances (extra relaxation rounds are
-  * no-ops). Rows are (long id, long dist) only — weights and ids, never
-  * payloads — with a per-round localCheckpoint to cut the iterative
-  * lineage, exactly the CC/PageRank discipline. The one driver `count`
-  * per round (improvement probe) is the documented guarded action that
-  * drives termination. */
+  * round improves nothing the [[Fixpoint]] loop stops early, and a
+  * converged result equals the true shortest distances (extra relaxation
+  * rounds are no-ops). Rows are (long id, long dist) only — weights and
+  * ids, never payloads. The old distance rides through the checkpoint,
+  * so the improvement probe is a narrow filter. */
 object Sssp {
 
   /** `edges(src, dst, w)` (non-negative long weights) + `seeds(id)` →
@@ -25,23 +23,15 @@ object Sssp {
     require(maxRounds >= 0, s"maxRounds must be >= 0: $maxRounds")
     val e = edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
       .localCheckpoint(true)
-    var dist = seeds.select(col("id")).distinct()
+    val dist = seeds.select(col("id")).distinct()
       .withColumn("dist", lit(0L)).localCheckpoint(true)
-    var r = 0
-    var improved = 1L
-    while (r < maxRounds && improved > 0) {
-      val cand = e.join(dist.withColumnRenamed("id", "src"), "src")
+    Fixpoint.iterate(dist, maxRounds) { d =>
+      val cand = e.join(d.select(col("id").as("src"), col("dist")), "src")
         .select(col("dst").as("id"), (col("dist") + col("w")).as("dist"))
-      val next = dist.unionByName(cand)
-        .groupBy("id").agg(min(col("dist")).as("dist"))
-        .localCheckpoint(true)
-      improved = next.as("n")
-        .join(dist.select(col("id"), col("dist").as("old")), Seq("id"), "left_outer")
-        .where(col("old").isNull || col("dist") < col("old"))
-        .count()
-      dist = next
-      r += 1
-    }
-    dist
+      d.select(col("id"), col("dist"), col("dist").as("__old"))
+        .unionByName(cand, allowMissingColumns = true)
+        .groupBy("id").agg(min("dist").as("dist"), max("__old").as("__old"))
+    }(_.where(col("__old").isNull || col("dist") < col("__old")).count())
+      .state.select("id", "dist")
   }
 }

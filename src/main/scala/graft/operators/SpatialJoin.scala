@@ -14,7 +14,7 @@ import graft.spark.GeoFunctions._
   *      (explode) and equi-join on cell id — Catalyst plans a hash join.
   *      The polygon side (counties, grids, masks: dimension tables) is
   *      always broadcast; a data-driven broadcast-or-shuffle choice is
-  *      ROADMAP direction 4's job. This is the PBSM / partition-based
+  *      ROADMAP direction 6's job. This is the PBSM / partition-based
   *      spatial join of the literature, and exactly what the PG
   *      formulation's GIST index join achieves on one node
   *      (pg_srgtools/pgscripts/template_polygon_noFF_withWA.csh:39-49).

@@ -80,16 +80,12 @@ object StreamingQueries {
       mem.addData(second.toIndexedSeq: _*)
       q.processAllAvailable()
       // the memory sink's view pins attribute ids, which breaks the
-      // numer⋈denom self-join — materialize the (tiny) streamed aggregate
-      // into fresh local relations per side
-      def fresh() = s.createDataFrame(
-        java.util.Arrays.asList(s.table(qname).collect(): _*),
-        s.table(qname).schema)
-      val denom = fresh().groupBy("fips").agg(sum("numer").as("denom"))
-      val out = Surrogate.ratio(
-        fresh().where(col("col").isNotNull && col("row").isNotNull), denom, 300)
-      q.stop()
-      out
+      // numer⋈denom self-join — the (tiny) streamed aggregate is drained
+      // into a local relation, which each side of the join re-instances
+      val cells = drainMemorySink(s, q, qname)
+      val denom = cells.groupBy("fips").agg(sum("numer").as("denom"))
+      Surrogate.ratio(
+        cells.where(col("col").isNotNull && col("row").isNotNull), denom, 300)
     },
       // the streaming twin must land on the SAME table as the batch oracle
       pagesSrgOracle),
@@ -120,11 +116,7 @@ object StreamingQueries {
       q.processAllAvailable()
       mem.addData(second.toIndexedSeq: _*)
       q.processAllAvailable()
-      val out = s.createDataFrame(
-        java.util.Arrays.asList(s.table(qname).collect(): _*),
-        s.table(qname).schema)
-      q.stop()
-      out.orderBy("ix", "iy")
+      drainMemorySink(s, q, qname).orderBy("ix", "iy")
     },
       // the streamed decay state must equal this batch computation — the
       // q115 oracle reshaped to the /512 lattice IS the gate
@@ -165,11 +157,7 @@ object StreamingQueries {
       q.processAllAvailable()
       mem.addData(second.toIndexedSeq: _*)
       q.processAllAvailable()
-      val out = s.createDataFrame(
-        java.util.Arrays.asList(s.table(qname).collect(): _*),
-        s.table(qname).schema)
-      q.stop()
-      out.orderBy("url", "digest")
+      drainMemorySink(s, q, qname).orderBy("url", "digest")
     },
       // the streamed state must equal this batch aggregation of the q105
       // capture fixture
@@ -303,11 +291,7 @@ object StreamingQueries {
       q.processAllAvailable()
       mem.addData(second.toIndexedSeq: _*)
       q.processAllAvailable()
-      val out = s.createDataFrame(
-        java.util.Arrays.asList(s.table(qname).collect(): _*),
-        s.table(qname).schema)
-      q.stop()
-      out.orderBy("domain")
+      drainMemorySink(s, q, qname).orderBy("domain")
     },
       """WITH f AS (SELECT 'host' || CAST(doc_id % 97 AS STRING) AS domain,
         |    CAST(CASE WHEN (doc_id % 97) % 3 <> 0 THEN 1 ELSE 0 END
@@ -349,11 +333,8 @@ object StreamingQueries {
       lm.addData(second.toIndexedSeq: _*)
       rm.addData(first.toIndexedSeq: _*)
       q.processAllAvailable()
-      val out = s.createDataFrame(
-        java.util.Arrays.asList(s.table(qname).collect(): _*),
-        s.table(qname).schema)
-      q.stop()
-      out.groupBy((col("id") % 97).as("host"))
+      drainMemorySink(s, q, qname)
+        .groupBy((col("id") % 97).as("host"))
         .agg(count(lit(1)).as("n_pairs"))
     },
       """WITH l AS (SELECT doc_id AS id, (doc_id * 7) % 1000 AS lt
@@ -398,11 +379,7 @@ object StreamingQueries {
       // sentinel: watermark past every real session's end
       mem.addData((-1L, ev.map(_._2).max + 86400L * 1000000L))
       q.processAllAvailable()
-      val out = s.createDataFrame(
-        java.util.Arrays.asList(s.table(qname).collect(): _*),
-        s.table(qname).schema)
-      q.stop()
-      out.where(col("user_id") >= 0)
+      drainMemorySink(s, q, qname).where(col("user_id") >= 0)
     },
       // session_window's EXCLUSIVE gap rule: a new session starts when the
       // gap is >= 30 min (events merge only while next < prev + gap);
@@ -490,11 +467,8 @@ object StreamingQueries {
       q.processAllAvailable()
       mem.addData(second.toIndexedSeq: _*)
       q.processAllAvailable()
-      val out = s.createDataFrame(
-        java.util.Arrays.asList(s.table(qname).collect(): _*),
-        s.table(qname).schema)
-      q.stop()
-      out.groupBy("url", "digest").agg(count(lit(1)).as("n_emitted"))
+      drainMemorySink(s, q, qname)
+        .groupBy("url", "digest").agg(count(lit(1)).as("n_emitted"))
         .groupBy()
         .agg(count(lit(1)).as("n_distinct_pairs"),
           sum("n_emitted").as("n_emitted_total"),

@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{DataFrame, Column}
 import org.apache.spark.sql.functions._
+import graft.graph.Fixpoint
 
 /** Text-analysis and deduplication operators for large-scale training-data
   * pipelines over the web-page/document table.
@@ -201,54 +202,37 @@ object TextOps {
 
   // -------------------------------------------------- dedup group canonical
 
-  /** Connected components over near-dup pairs: each doc labeled with the
-    * min id reachable through the pair graph — turning PAIRS into dedup
-    * GROUPS (keep rep_id, drop the rest), the semantics a dedup pipeline
-    * actually needs.
-    *
-    * Distributed min-label propagation: every pass joins labels across
-    * edges and keeps the elementwise min; passes ≤ the max distance from a
-    * node to its component's min. Near-dup components are dense and
-    * shallow (dup clusters, not paths), so a handful of passes suffice;
-    * every pass localCheckpoints so lineage stays flat (same discipline as
-    * Knn). Edge and label tables only carry (id, id) longs — document text
-    * never shuffles. */
   /** Bench probe: rounds the most recent CC invocation in this JVM took
     * (label-propagation passes, or star rounds when the star path ran).
     * Read by Bench so a fixture change that doubles convergence rounds is
     * visible in the bench line instead of hiding inside wall-clock. */
   val lastCcRounds = new java.util.concurrent.atomic.AtomicLong(-1L)
 
+  /** Connected components over near-dup pairs: each doc labeled with the
+    * min id reachable through the pair graph — turning PAIRS into dedup
+    * GROUPS (keep rep_id, drop the rest), the semantics a dedup pipeline
+    * actually needs.
+    *
+    * Distributed min-label propagation ([[Fixpoint.flood]] with `min`):
+    * passes ≤ the max distance from a node to its component's min.
+    * Near-dup components are dense and shallow (dup clusters, not paths),
+    * so a handful of passes suffice. Edge and label tables only carry
+    * (id, id) longs — document text never shuffles. */
   def connectedComponents(nodes: DataFrame, pairs: DataFrame): DataFrame = {
     // both edge directions from ONE pass over the (expensive) pair plan —
     // a union of two selects would execute the pair join twice
     val edges = pairs.select(explode(array(
-        struct(col("id_a").as("u"), col("id_b").as("v")),
-        struct(col("id_b").as("u"), col("id_a").as("v")))).as("e"))
-      .select(col("e.u").as("u"), col("e.v").as("v"))
+        struct(col("id_a").as("src"), col("id_b").as("dst")),
+        struct(col("id_b").as("src"), col("id_a").as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .localCheckpoint(true)
-    var labels = nodes.select(col("id"), col("id").as("rep"))
+    val labels = nodes.select(col("id"), col("id").as("label"))
       .localCheckpoint(true)
-    var changed = 1L
-    var pass = 0
-    while (changed > 0 && pass < 50) {
-      val nbr = edges.join(labels.select(col("id").as("v"), col("rep")), "v")
-        .groupBy(col("u").as("id")).agg(min("rep").as("__nrep"))
-      // old label carried through the checkpoint so the convergence test
-      // is a narrow filter over the materialized pass — the previous
-      // re-join of updated with labels cost one extra exchange per pass
-      val updated = labels.join(nbr, Seq("id"), "left")
-        .select(col("id"),
-          least(col("rep"), coalesce(col("__nrep"), col("rep"))).as("rep"),
-          col("rep").as("__old"))
-        .localCheckpoint(true)
-      changed = updated.where(col("rep") =!= col("__old")).count()
-      labels = updated.select("id", "rep")
-      pass += 1
-    }
-    lastCcRounds.set(pass.toLong)
-    if (changed == 0)
-      labels.select(col("id").as("doc_id"), col("rep").as("rep_id"))
+    val r = Fixpoint.iterate(labels, 50)(Fixpoint.flood(edges, min))(
+      Fixpoint.relabelled)
+    lastCcRounds.set(r.rounds.toLong)
+    if (r.converged)
+      r.state.select(col("id").as("doc_id"), col("label").as("rep_id"))
     else
       // pathological long-chain topology: switch to the O(log n)-round
       // alternating star algorithm rather than truncate or fail
@@ -268,9 +252,13 @@ object TextOps {
     * Each round is two (node)-keyed aggregations + joins over an edge set
     * that only ever carries (long, long) pairs; rounds end when the edge
     * set reaches a fixpoint (stars centered on component minima). */
-  def connectedComponentsStar(nodes: DataFrame, pairs: DataFrame): DataFrame = {
+  def connectedComponentsStar(nodes: DataFrame, pairs: DataFrame): DataFrame =
+    connectedComponentsStar(nodes, pairs, 64)
+
+  private[graft] def connectedComponentsStar(nodes: DataFrame, pairs: DataFrame,
+                                             maxRounds: Int): DataFrame = {
     // canonical directed edges child→parent, self-loops dropped
-    var edges = pairs
+    val edges = pairs
       .select(greatest(col("id_a"), col("id_b")).as("u"),
               least(col("id_a"), col("id_b")).as("v"))
       .where(col("u") =!= col("v"))
@@ -314,20 +302,15 @@ object TextOps {
     }
 
     var sig = signature(edges)
-    var round = 0
-    var stable = false
-    while (!stable && round < 64) {
-      val next = smallStar(largeStar(edges)).localCheckpoint(true)
-      val nsig = signature(next)
-      stable = nsig == sig
-      sig = nsig
-      edges = next
-      round += 1
+    val r = Fixpoint.iterate(edges, maxRounds)(e => smallStar(largeStar(e))) { next =>
+      val prev = sig
+      sig = signature(next)
+      if (sig == prev) 0L else 1L
     }
-    require(stable, s"connectedComponentsStar did not stabilize in $round rounds")
-    lastCcRounds.set(round.toLong)
+    require(r.converged, s"connectedComponentsStar did not stabilize in ${r.rounds} rounds")
+    lastCcRounds.set(r.rounds.toLong)
     nodes.select(col("id"))
-      .join(edges.select(col("u").as("id"), col("v").as("__rep")), Seq("id"), "left")
+      .join(r.state.select(col("u").as("id"), col("v").as("__rep")), Seq("id"), "left")
       .select(col("id").as("doc_id"),
         coalesce(col("__rep"), col("id")).as("rep_id"))
   }

@@ -75,12 +75,12 @@ class Round5eSpec extends AnyFunSuite with BeforeAndAfterAll {
     import s.implicits._
     val edges = Seq((1L, 2L, 1L)).toDF("src", "dst", "w")
     val S = 1000000000000L
-    val got = graft.graph.DomainRank.personalizedPageRank(edges, Seq(1L), iters = 1, scale = S)
+    val got = graft.graph.DomainRank.personalizedPageRank(edges, Seq(1L), iters = 1)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // seed 1: teleport only = 15S div 100; node 2: damped full seed mass
     assert(got === Map(1L -> (15L * S) / 100L, 2L -> (85L * S) / 100L))
     // more passes never create mass
-    val tot4 = graft.graph.DomainRank.personalizedPageRank(edges, Seq(1L), iters = 4, scale = S)
+    val tot4 = graft.graph.DomainRank.personalizedPageRank(edges, Seq(1L), iters = 4)
       .agg(sum("pr")).head().getLong(0)
     assert(tot4 <= S)
   }

@@ -69,4 +69,15 @@ class DomainRankSpec extends AnyFunSuite with BeforeAndAfterAll {
     // integer mass is conserved up to div truncation: never created
     assert(a.values.sum <= 1000000000000L)
   }
+
+  test("an empty edge set fails naming the empty graph, personalized or not") {
+    val s = spark
+    import s.implicits._
+    val g = intercept[IllegalArgumentException](DomainRank.pageRank(
+      Seq.empty[(String, String, Long)].toDF("src_domain", "dst_domain", "n_links"), 4))
+    assert(g.getMessage.contains("empty graph"), g.getMessage)
+    val p = intercept[IllegalArgumentException](DomainRank.personalizedPageRank(
+      Seq.empty[(Long, Long, Long)].toDF("src", "dst", "w"), Seq(1L), 4))
+    assert(p.getMessage.contains("empty graph"), p.getMessage)
+  }
 }

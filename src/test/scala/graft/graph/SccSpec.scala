@@ -62,4 +62,8 @@ class SccSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(run(g) === ref(g), s"seed=$seed")
     }
   }
+
+  test("an edge set of self-loops only has no components") {
+    assert(run(Seq((5L, 5L))).isEmpty)
+  }
 }
