@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ExprBridge
 import graft.spark.expressions.TrailingDigits
+import graft.spark.GeoFunctions.fence
 
 /** The Common-Crawl-style web-page table of the north star:
   * `pages(url STRING, warc_ts TIMESTAMP, html BINARY, text STRING, lang STRING)`
@@ -256,14 +257,16 @@ object Pages {
   /** Batched geotag stage: parse the page id out of the url (metadata), map
     * to planar (x, y) on the integer lattice. Whole-stage codegen, no UDF:
     * the id parse is the native `urlId` kernel, the rest column arithmetic.
-    * Catalyst pushes the lattice filter below the `__id` projection,
-    * inlining the parse into both of its conjuncts, and a Filter shares no
-    * subexpressions between conjuncts: the parse runs three times per row.
-    * With `java.util.regex` (a String copy and a Matcher each time) that
-    * was most of the stage. Coordinates on a 500-lattice line (county /
-    * cell boundaries) are excluded up front, like TpchGeo.points. */
+    * The parse sits behind the single-evaluation fence (GeoFunctions
+    * header), so it runs once per row in one projection. Left bare,
+    * Catalyst inlines it into each place that reads the id: both lattice
+    * conjuncts, the cell-join key and the point-in-polygon condition, each
+    * copy allocating its own UTF8String. The fence also keeps filters on
+    * the page columns above geotag from being pushed into the scan.
+    * Coordinates on a 500-lattice line (county / cell boundaries) are
+    * excluded up front, like TpchGeo.points. */
   def geotag(p: DataFrame): DataFrame =
-    p.withColumn("__id", urlId(col("url")))
+    p.withColumn("__id", fence(urlId(col("url"))))
       .withColumn("xi", expr("(__id * 48271) % 8000"))
       .withColumn("yi", expr("(__id * 16807) % 8000"))
       .where(expr("xi % 500 != 0 AND yi % 500 != 0"))

@@ -19,8 +19,8 @@ import graft.spark.GeoFunctions._
   *
   * Every surrogate is one COUNTY STAGE × one TARGET STAGE, then the ratio
   * tail. The county stage is written once per weight kind
-  * (WEIGHT_FILE_TYPE, dispatched by `byKind`) and yields the W∩D rows, the
-  * denominator and the contribution of a measure taken on those rows
+  * (WEIGHT_FILE_TYPE, dispatched by `byKind`) and yields the W∩D rows,
+  * their measure and the contribution of a measure taken on those rows
   * (sumpoly.c:53-266):
   *   point:   val                  (1 in count mode)
   *   line:    val·len(piece)/len(parent_line)   (len(piece) in length mode)
@@ -30,19 +30,27 @@ import graft.spark.GeoFunctions._
   * Targets: the regular grid (closed-form cells for points, `cellClip` for
   * fragments), output polygons (a second clip / point-in-polygon), cell
   * polygons carrying COL/ROW (variable grid), and the EGrid (closed-form
-  * diamonds for points, cell polygons otherwise). The regular-grid point
-  * path shares only the point tag: its denominator re-aggregates its own
-  * persisted per-cell matrix, so the point table is scanned once.
+  * diamonds for points, cell polygons otherwise).
   *
-  * Scale notes: numerator/denominator are hash aggregations with map-side
-  * partial combine (sparse by construction — the reference needed a custom
-  * sparse struct, sumpoly.c:283-334; Spark gets it free). The county
-  * dimension joins broadcast. The grid never materializes: cells are
-  * closed-form column arithmetic for points, bbox-cover explode for
-  * fragments. Denominators re-join numerators broadcast (one row per
-  * county). The only wide exchanges are the two groupBys, both keyed
-  * (fips[,cell]) — minimal for the semantics. Output rows come in no
-  * particular order; the SMOKE sinks sort what they write.
+  * Scale notes: the grid targets compute numerators, denominator and qasum
+  * in one pass over each county's rows, as reportSurrogate does. Their
+  * rows are per (fips, cell), plus a NULL cell per county for what reaches
+  * the denominator but no cell: off-grid points, and for fragments one
+  * sentinel row per W∩D fragment carrying the fragment's own contribution,
+  * so a fragment off the grid still counts. `tail` then takes denom as a
+  * window sum over the county and qasum as a running window sum; both
+  * windows share one hash partitioning on fips.
+  * Fragment rows are repartitioned on fips ahead of their (fips, cell)
+  * aggregate, so the aggregate and both windows need no further exchange:
+  * one shuffle per call, and nothing is persisted. Points keep their
+  * map-side partial aggregate (the point table is the big input) and
+  * shuffle once more on fips for the windows. The grid never
+  * materializes: cells are closed-form column arithmetic for points,
+  * bbox-cover explode for fragments. The output-polygon targets and the
+  * EGrid's points join the W∩D rows a second time, so they persist them
+  * and hand `ratio` / `ratioPoly` their numerators and denominators apart.
+  * Output rows come in no particular order; the SMOKE sinks sort what
+  * they write.
   */
 object Surrogate {
 
@@ -63,13 +71,13 @@ object Surrogate {
 
   // --------------------------------------------------------- ratio tail
 
-  /** Grid tail: numerators ⋈ denominators → frac, threshold skip, qasum.
-    * numer: (fips, col, row, numer); denom: (fips, denom). */
+  /** Grid tail: numerators and denominators given apart → frac, threshold
+    * skip, qasum. numer: (fips, col, row, numer); denom: (fips, denom). */
   def ratio(numer: DataFrame, denom: DataFrame, srgCode: Int,
             denomThreshold: Double = 1e-5,
             keepSkipped: Boolean = false): DataFrame =
-    ratioTail(numer, denom, srgCode, denomThreshold, keepSkipped,
-      Seq(col("row"), col("col")), OUT_COLS)
+    gridTail(apart(numer, denom, "col", "row"), srgCode, denomThreshold,
+      keepSkipped)
 
   /** Tail for OUTPUT_FILE_TYPE=Polygon surrogates (surrogate.c:455-470
     * writes `code fips out_poly_id frac`). The qasum accumulation order is
@@ -82,12 +90,26 @@ object Surrogate {
   def ratioPoly(numer: DataFrame, denom: DataFrame, srgCode: Int,
                 denomThreshold: Double = 1e-5,
                 keepSkipped: Boolean = false): DataFrame =
-    ratioTail(numer, denom, srgCode, denomThreshold, keepSkipped,
-      Seq(col("out_id").cast("string")), POLY_OUT_COLS)
+    tail(apart(numer, denom, "out_id"), Seq("out_id"),
+      Seq(col("out_id").cast("string")), POLY_OUT_COLS, srgCode,
+      denomThreshold, keepSkipped)
 
-  private def ratioTail(numer: DataFrame, denom: DataFrame, srgCode: Int,
-                        denomThreshold: Double, keepSkipped: Boolean,
-                        order: Seq[Column], outCols: Seq[String]): DataFrame = {
+  /** Tail rows of numerators and denominators given apart: each numer row
+    * with `dpart` 0, and each denom row under a NULL key with `numer` 0. */
+  private def apart(numer: DataFrame, denom: DataFrame,
+                    keys: String*): DataFrame = {
+    val n = numer.select(
+      (col("fips") +: keys.map(col)) :+ col("numer") :+ lit(0.0).as("dpart"): _*)
+    n.unionByName(denom.select(
+      (col("fips") +: keys.map(k => lit(null).cast(n.schema(k).dataType).as(k))) :+
+        lit(0.0).as("numer") :+ col("denom").as("dpart"): _*))
+  }
+
+  /** The one ratio tail. rows: (fips, keys…, numer, dpart); denom is
+    * Σ dpart over the county, rows with a NULL key only feed it. */
+  private def tail(rows: DataFrame, keys: Seq[String], order: Seq[Column],
+                   outCols: Seq[String], srgCode: Int,
+                   denomThreshold: Double, keepSkipped: Boolean): DataFrame = {
     // #SKIPPED semantics (surrogate.c:434-452): below-threshold counties
     // normally never emit rows; with keepSkipped they flow through — frac
     // and all — so Smoke.toLines can render them with the `#SKIPPED `
@@ -96,30 +118,48 @@ object Surrogate {
     val denomPass =
       if (keepSkipped) col("denom") =!= 0.0
       else col("denom") >= denomThreshold
-    val joined = numer.join(broadcast(denom), "fips")
-      .where(denomPass && col("numer") =!= 0.0)
-      .withColumn("frac", col("numer") / col("denom"))
-    val w = Window.partitionBy("fips").orderBy(order: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val county = Window.partitionBy("fips")
     // no global sort: row order is the sink's job (Smoke.write orders the
     // counties it collects, each rendered in this window's order), and a
     // range sort here would cost a sampling job and a wide exchange on
     // every call
-    joined
-      .withColumn("qasum", sum("frac").over(w))
+    rows.withColumn("denom", sum("dpart").over(county))
+      .where(keys.map(col(_).isNotNull).reduce(_ && _) && denomPass &&
+        col("numer") =!= 0.0)
+      .withColumn("frac", col("numer") / col("denom"))
+      .withColumn("qasum", sum("frac").over(county.orderBy(order: _*)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .withColumn("srg_code", lit(srgCode))
       .select(outCols.map(col): _*)
   }
 
+  /** `tail` over grid rows (fips, col, row, numer, dpart), qasum in
+    * (row, col) order. */
+  private def gridTail(rows: DataFrame, srgCode: Int, denomThreshold: Double,
+                       keepSkipped: Boolean): DataFrame =
+    tail(rows, Seq("col", "row"), Seq(col("row"), col("col")), OUT_COLS,
+      srgCode, denomThreshold, keepSkipped)
+
   // ------------------------------------------------------- county stages
 
-  /** A county stage's result: the W∩D rows, Σ contribution per county,
-    * and the contribution of a measure taken on those rows. */
-  private case class County(rows: DataFrame, denom: DataFrame,
+  /** A county stage's result: the W∩D rows, the measure taken on each of
+    * them, and the contribution of a measure taken on those rows. */
+  private case class County(rows: DataFrame, measure: Column,
                             contrib: Column => Column) {
     /** Σ contribution of `measure` per `keys` — every target's numerator. */
     def numer(df: DataFrame, measure: Column, keys: String*): DataFrame =
       df.groupBy(keys.map(col): _*).agg(sum(contrib(measure)).as("numer"))
+
+    /** Σ contribution of the W∩D rows per county. */
+    def denom: DataFrame =
+      rows.groupBy("fips").agg(sum(contrib(measure)).as("denom"))
+
+    /** The stage with its W∩D rows persisted, for a target that reads them
+      * twice: its second join for the numerator and `denom`. The reference
+      * materializes this same grid-independent intermediate
+      * (SAVE_DW_FILE/USE_DW_FILE, data_weight.c:19-160). */
+    def persisted: County =
+      copy(rows = rows.transform(graft.spark.PersistTracker.persist))
   }
 
   /** Points tagged with their county; weight `__w`. */
@@ -133,16 +173,11 @@ object Surrogate {
       .select(col("fips"), col("x"), col("y"), w.as("__w"))
   }
 
-  /** Point county stage: the tag persisted, because the denominator (every
-    * point in its county, whether or not it reaches a target) and the
-    * numerator both consume it. A point contributes its weight. */
+  /** Point county stage: a point contributes its weight. */
   private def pointCounty(points: DataFrame, counties: DataFrame,
                           domain: CellDomain, res: Int,
-                          weight: Option[String]): County = {
-    val tagged = pointTag(points, counties, domain, res, weight)
-      .transform(graft.spark.PersistTracker.persist)
-    County(tagged, tagged.groupBy("fips").agg(sum("__w").as("denom")), identity)
-  }
+                          weight: Option[String]): County =
+    County(pointTag(points, counties, domain, res, weight), col("__w"), identity)
 
   /** Fragment county stage (line and polygon weights): drop zero weights,
     * measure each `feature` with `size` into `base`, drop empty ones, and
@@ -150,12 +185,9 @@ object Surrogate {
     * projected, so `size` runs behind a local single-evaluation fence
     * (GeoFunctions header) — once per feature, not again in the scan-side
     * filter; the shared measure stays unfenced for its other callers.
-    * The W∩D fragments are persisted, without the unclipped `feature`
-    * that nothing reads after the clip — the denominator and every
-    * target's numerator consume them, and the reference materializes this
-    * same grid-independent intermediate (SAVE_DW_FILE/USE_DW_FILE,
-    * data_weight.c:19-160). A piece of measure
-    * m contributes val·m/base, or m itself when no weight is given. */
+    * The W∩D fragments leave without the unclipped `feature`, which
+    * nothing reads after the clip. A piece of measure m contributes
+    * val·m/base, or m itself when no weight is given. */
   private def fragCounty(features: DataFrame, weight: Option[String],
                          base: String, size: Column => Column,
                          feature: String, fragMeasure: String)
@@ -166,13 +198,9 @@ object Surrogate {
       .where(col(base) > 0)
       .withColumn("__wval",
         weight.map(col(_).cast("double")).getOrElse(lit(0.0)))
-    val frags = clip(wts).drop(feature)
-      .transform(graft.spark.PersistTracker.persist)
     val contrib = (m: Column) =>
       weight.map(_ => col("__wval") * (m / col(base))).getOrElse(m)
-    County(frags,
-      frags.groupBy("fips").agg(sum(contrib(col(fragMeasure))).as("denom")),
-      contrib)
+    County(clip(wts).drop(feature), col(fragMeasure), contrib)
   }
 
   /** Polygon county stage: W ⋈ D with clipped fragments (polyIsect,
@@ -202,21 +230,49 @@ object Surrogate {
   /** (W∩D) ⋈ G with the grid never materialized: explode each row's
     * closed-form cover cells as `__cellid`, measure the exact per-cell clip
     * into `measure`, keep the cells it really touches, and name them by
-    * COL/ROW (the reference's fillPolyIntInfo, sumpoly.c:385-423). */
+    * COL/ROW (the reference's fillPolyIntInfo, sumpoly.c:385-423).
+    * `sentinel`, when given, is the measure of a row's own sentinel: one
+    * more exploded row with a NULL `__cellid` (so NULL COL/ROW) that
+    * carries it; rows where it is NULL emit none. */
   private[operators] def cellClip(df: DataFrame, cover: Column,
                                   clip: Column => Column, measure: String,
-                                  grid: GridSpec): DataFrame =
-    df.withColumn("__cellid", explode(cover))
-      .withColumn(measure, clip(col("__cellid")))
+                                  grid: GridSpec,
+                                  sentinel: Option[Column] = None): DataFrame = {
+    val id = col("__cellid")
+    val cells = sentinel.fold(cover)(s =>
+      when(s.isNull, cover).otherwise(concat(array(lit(null).cast("long")), cover)))
+    df.withColumn("__cellid", explode(cells))
+      .withColumn(measure,
+        sentinel.fold(clip(id))(s => when(id.isNull, s).otherwise(clip(id))))
       .where(col(measure) > 0)
-      .withColumn("col", cellIdCol(col("__cellid"), grid))
-      .withColumn("row", cellIdRow(col("__cellid"), grid))
+      .withColumn("col", cellIdCol(id, grid))
+      .withColumn("row", cellIdRow(id, grid))
+  }
 
   /** cellClip of the polygon rings in `geom`; per-cell area in `__carea`. */
   private[operators] def polyCellClip(df: DataFrame, geom: String,
-                                      grid: GridSpec): DataFrame =
+                                      grid: GridSpec,
+                                      sentinel: Option[Column] = None): DataFrame =
     cellClip(df, polyGridCoverCells(col(geom), grid),
-      polyCellClipArea(col(geom), _, grid), "__carea", grid)
+      polyCellClipArea(col(geom), _, grid), "__carea", grid, sentinel)
+
+  /** Grid tail of a fragment county stage: `cells` holds each fragment's
+    * clipped cell rows and its sentinel, both measured in `measure`. The
+    * rows are repartitioned on fips ahead of the (fips, cell) aggregate,
+    * so the aggregate and the tail's windows share that one exchange; the
+    * NULL cell sums the sentinels, which make up the whole denominator. */
+  private def fragTail(c: County, cells: DataFrame, measure: String,
+                       srgCode: Int, denomThreshold: Double,
+                       keepSkipped: Boolean): DataFrame = {
+    val perCell = cells
+      .select(col("fips"), col("col"), col("row"),
+        c.contrib(col(measure)).as("numer"))
+      .repartition(col("fips"))
+      .groupBy("fips", "col", "row").agg(sum("numer").as("numer"))
+    gridTail(perCell.withColumn("dpart",
+        when(col("col").isNull, col("numer")).otherwise(0.0)),
+      srgCode, denomThreshold, keepSkipped)
+  }
 
   // --------------------------------------------------- regular-grid target
 
@@ -227,23 +283,20 @@ object Surrogate {
                      srgCode: Int, weight: Option[String] = None,
                      denomThreshold: Double = 1e-5,
                      keepSkipped: Boolean = false): DataFrame = {
-    // ONE pass over the (huge) point table: aggregate per (fips, cell) with
-    // a NULL cell for off-grid points. The denominator — every point in its
-    // county whether or not on the grid (sum1Poly over W∩D, windowed to the
-    // counties' bbox not the grid's, srg_main.c:227-230) — then re-aggregates
-    // the tiny per-cell table instead of rescanning the input.
+    // ONE pass over the (huge) point table: aggregate per (fips, cell),
+    // map-side partial combine first, with a NULL cell for off-grid points.
+    // Every point counts in its county's denominator whether or not it is
+    // on the grid (sum1Poly over W∩D, windowed to the counties' bbox not
+    // the grid's, srg_main.c:227-230), so each row's numer is also its
+    // part of the denominator — the sparse (county × cell) matrix the
+    // reference builds (PolyIntStruct, sumpoly.c:283-334) is read once.
     val onGrid = inGrid(gridCol(col("x"), grid), gridRow(col("y"), grid), grid)
-    // persist the sparse (county × cell) matrix — the reference materializes
-    // it too (PolyIntStruct, sumpoly.c:283-334); without it the broadcast
-    // branch of the numer⋈denom join would re-run the full input scan
     val perCell = pointTag(points, counties, domain, res, weight)
       .withColumn("col", when(onGrid, gridCol(col("x"), grid)))
       .withColumn("row", when(onGrid, gridRow(col("y"), grid)))
       .groupBy("fips", "col", "row").agg(sum("__w").as("numer"))
-      .transform(graft.spark.PersistTracker.persist)
-    val denom = perCell.groupBy("fips").agg(sum("numer").as("denom"))
-    val numer = perCell.where(col("col").isNotNull && col("row").isNotNull)
-    ratio(numer, denom, srgCode, denomThreshold, keepSkipped)
+    gridTail(perCell.withColumn("dpart", col("numer")), srgCode,
+      denomThreshold, keepSkipped)
   }
 
   /** Polygon-weight surrogate (census tracts): area mode when weight None.
@@ -254,9 +307,8 @@ object Surrogate {
                     denomThreshold: Double = 1e-5,
                     keepSkipped: Boolean = false): DataFrame = {
     val c = polyCounty(weights, counties, domain, res, weight)
-    val numer = c.numer(polyCellClip(c.rows, "frag_geom", grid),
-      col("__carea"), "fips", "col", "row")
-    ratio(numer, c.denom, srgCode, denomThreshold, keepSkipped = keepSkipped)
+    fragTail(c, polyCellClip(c.rows, "frag_geom", grid, Some(c.measure)),
+      "__carea", srgCode, denomThreshold, keepSkipped)
   }
 
   /** Line-weight surrogate (roads): length mode when weight None.
@@ -271,13 +323,14 @@ object Surrogate {
                     curved: Boolean = false,
                     keepSkipped: Boolean = false): DataFrame = {
     val c = lineCounty(lines, counties, domain, res, weight, curved)
-    // per clipped piece × cell: Liang–Barsky length inside the cell
-    val pieces = c.rows.withColumn("__piece", explode(col("frag_line")))
+    // per clipped piece × cell: Liang–Barsky length inside the cell; the
+    // fragment's sentinel rides on its first piece only
+    val pieces = c.rows.select(col("*"),
+      posexplode(col("frag_line")).as(Seq("__pos", "__piece")))
     val cells = cellClip(pieces, lineGridCoverCells(col("__piece"), grid),
       lineCellClipLength(col("__piece"), _, grid, curved),
-      "__clen", grid)
-    val numer = c.numer(cells, col("__clen"), "fips", "col", "row")
-    ratio(numer, c.denom, srgCode, denomThreshold, keepSkipped = keepSkipped)
+      "__clen", grid, Some(when(col("__pos") === 0, c.measure)))
+    fragTail(c, cells, "__clen", srgCode, denomThreshold, keepSkipped)
   }
 
   // ------------------------------------------------- output-polygon target
@@ -294,13 +347,13 @@ object Surrogate {
       : (DataFrame, DataFrame) = {
     val (c, hits, measure) = byKind(kind)(
       point = {
-        val c = pointCounty(layer, counties, domain, res, weight)
+        val c = pointCounty(layer, counties, domain, res, weight).persisted
         (c, SpatialJoin.pointInPoly(c.rows,
           outPolys.select(col("out_id"), col("geom")), domain, res), col("__w"))
       },
       line = {
         val c = lineCounty(layer, counties.select(col("fips"), col("geom")),
-          domain, res, weight, curved)
+          domain, res, weight, curved).persisted
         val pieces = c.rows.withColumnRenamed("frag_len", "__wd_len")
           .withColumn("__piece", explode(col("frag_line")))
           .drop("frag_line")
@@ -309,7 +362,7 @@ object Surrogate {
           lineCol = "__piece", curved = curved), col("frag_len"))
       },
       poly = {
-        val c = polyCounty(layer, counties, domain, res, weight)
+        val c = polyCounty(layer, counties, domain, res, weight).persisted
         (c, SpatialJoin.polyPolyFragments(
           c.rows.withColumnRenamed("frag_area", "__wd_area"),
           outPolys.select(col("out_id"), col("geom").as("ogeom")),
@@ -412,7 +465,7 @@ object Surrogate {
       // materializes" discipline. ≤ keeps edge points in BOTH adjacent
       // diamonds — the same EDGE-in outcome the ray-cast gives.
       val halfX = grid.xcell / 2.0; val halfY = grid.ycell / 2.0
-      val c = pointCounty(weightLayer, counties, domain, res, weight)
+      val c = pointCounty(weightLayer, counties, domain, res, weight).persisted
       val rm1 = floor((col("y") - lit(grid.yorig)) / halfY).cast("int")
       val cand = c.rows
         .withColumn("__rm1", explode(sequence(rm1 - 1, rm1 + 1)))

@@ -5,8 +5,9 @@ import org.apache.spark.storage.StorageLevel
 
 /** Lifecycle registry for operator-internal persists.
   *
-  * Operators persist shared intermediates (W∩D fragments, sparse per-cell
-  * matrices, shingle sets) because two aggregations consume them. The
+  * Operators persist shared intermediates (the W∩D rows of the
+  * output-polygon surrogates, allocate's input fragments, shingle sets)
+  * because two aggregations or joins consume them. The
   * DataFrames they return stay lazy, so the operator itself can never know
   * when the consuming actions finish — without a registry, a catalog run
   * (SrgTool) accumulates cached blocks whose DISK portion is not evicted by

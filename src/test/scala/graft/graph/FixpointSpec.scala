@@ -1,9 +1,5 @@
 package graft.graph
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
@@ -25,32 +21,8 @@ class FixpointSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
-  /** Spark jobs started between two marker jobs around `body`. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger(-1)
-    val closed = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.job.description")) match {
-          case Some("fixpoint-open") => jobs.set(0)
-          case Some("fixpoint-close") => closed.countDown()
-          case _ => if (jobs.get >= 0) jobs.incrementAndGet()
-        }
-    }
-    def marker(name: String): Unit = {
-      sc.setJobDescription(name)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-    }
-    sc.addSparkListener(listener)
-    try {
-      marker("fixpoint-open")
-      body
-      marker("fixpoint-close")
-      assert(closed.await(60, TimeUnit.SECONDS), "closing marker job not seen")
-      jobs.get
-    } finally sc.removeSparkListener(listener)
-  }
+  /** Spark jobs started by `body`. */
+  private def jobsOf(body: => Unit): Int = graft.Jobs.of(spark)(body)._2
 
   // Jobs per call plus the collect of its result, on each operator's spec
   // fixture, as the hand-written loops started them before the operators

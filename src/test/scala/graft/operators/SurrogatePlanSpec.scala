@@ -3,6 +3,7 @@ package graft.operators
 import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.execution.{GenerateExec, QueryExecution, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -86,12 +87,15 @@ class SurrogatePlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("the persisted W∩D fragments carry no weight geometry") {
+    // the grid targets persist nothing; the output-polygon targets persist
+    // their W∩D rows for a second join
+    def outPolys = counties.select(col("fips").as("out_id"), col("geom"))
     val builds: Seq[(String, () => DataFrame)] = Seq(
-      "polySurrogate" -> (() => Surrogate.polySurrogate(
-        TpchGeo.tracts(spark, SfDir), counties, g, d, z, srgCode = 2,
+      "polySurrogateToPolys" -> (() => Surrogate.polySurrogateToPolys(
+        TpchGeo.tracts(spark, SfDir), counties, outPolys, d, z, srgCode = 2,
         weight = Some("p_size"))),
-      "lineSurrogate" -> (() => Surrogate.lineSurrogate(
-        TpchGeo.roads(spark, SfDir), counties, g, d, z, srgCode = 3)))
+      "lineSurrogateToPolys" -> (() => Surrogate.lineSurrogateToPolys(
+        TpchGeo.roads(spark, SfDir), counties, outPolys, d, z, srgCode = 3)))
     builds.foreach { case (name, build) =>
       val cached = executed(build()).collect {
         case m: InMemoryTableScanExec => m.relation.output.map(_.name)
@@ -149,7 +153,12 @@ object SurrogatePlanSpec {
 
   // Each cached relation's plan is walked once per scan of it, so the
   // exchanges inside a persisted intermediate count once per consumer.
-  val PointShape = Shape(shuffles = 4, broadcasts = 3, generates = 2, cacheScans = 2)
-  val PolyShape = Shape(shuffles = 3, broadcasts = 3, generates = 5, cacheScans = 2)
-  val LineShape = Shape(shuffles = 3, broadcasts = 3, generates = 6, cacheScans = 2)
+  // The grid surrogates persist nothing: the fragment paths shuffle once,
+  // on fips, ahead of their (fips, cell) aggregate and both tail windows;
+  // the point path keeps its partial aggregate and shuffles once more on
+  // fips for the windows. The one broadcast is the county side of the
+  // county join.
+  val PointShape = Shape(shuffles = 2, broadcasts = 1, generates = 1, cacheScans = 0)
+  val PolyShape = Shape(shuffles = 1, broadcasts = 1, generates = 3, cacheScans = 0)
+  val LineShape = Shape(shuffles = 1, broadcasts = 1, generates = 4, cacheScans = 0)
 }
