@@ -91,6 +91,16 @@ object SpatialAllocator {
     def projInfo(): Smoke.ProjInfo =
       gdEntry().map(e => Smoke.projInfoFor(e.coord)).getOrElse(Smoke.ProjInfo())
 
+    // each layer's file type is read once: it picks the layer's reader, and
+    // its one parse picks every geometry dispatch on the layer (OVERLAY's
+    // input defaults to points, every other input to polygons)
+    val weightType = cfg.getOrElse("WEIGHT_FILE_TYPE", "Polygon")
+    val weightKind = WeightKind.fromFileType(weightType)
+    val inputType = cfg.getOrElse("INPUT_FILE_TYPE",
+      if (cfg.get("MIMS_PROCESSING").contains("OVERLAY")) "Point" else "Polygon")
+    val inputKind = WeightKind.fromFileType(inputType)
+    lazy val maxSeg = cfg.getOrElse("MAX_LINE_SEG", "0").toDouble
+
     def readLayer(path: String, ftype: String): DataFrame = ftype match {
       case "PointFile" =>
         Sources.pointFile(spark, path,
@@ -122,7 +132,7 @@ object SpatialAllocator {
 
     // reproject a layer from its declared CRS (<PFX>_MAP_PRJN [+ _ELLIPSOID])
     // into the grid CRS; a layer with no declared CRS is already there
-    def reprojected(df: DataFrame, pfx: String, ftype: String): DataFrame =
+    def reprojected(df: DataFrame, pfx: String, kind: WeightKind): DataFrame =
       cfg.get(s"${pfx}_MAP_PRJN") match {
         // targetProj() only resolves when a source CRS is declared — it
         // may consult the GRIDDESC entry, which need not exist otherwise
@@ -138,26 +148,27 @@ object SpatialAllocator {
             val full = cfg.get(s"${pfx}_ELLIPSOID")
               .map(e => s"$spec,$e").getOrElse(spec)
             val from = projOf(full)
-            val maxSeg = cfg.getOrElse("MAX_LINE_SEG", "0").toDouble
-            ftype match {
-              case "Point" | "PointFile" => Reproject.points(df, from, to)
-              case "Line" => Reproject.lines(df, from, to, maxSeg)
-              case _ => Reproject.polygons(df, from, to, maxSeg)
-            }
+            Reproject.layer(kind, df, from, to, maxSeg)
         }
         case None => df
       }
 
     def weightLayer(): DataFrame = {
-      val ftype = cfg.getOrElse("WEIGHT_FILE_TYPE", "Polygon")
-      val base = reprojected(
-        readLayer(req("WEIGHT_FILE_NAME"), ftype), "WEIGHT_FILE", ftype)
+      val base = reprojected(readLayer(req("WEIGHT_FILE_NAME"), weightType),
+        "WEIGHT_FILE", weightKind)
       val filtered = applyFilter(base)
       cfg.get("WEIGHT_FUNCTION") match {
         case Some(f) => filtered.withColumn("weight_function", WeightExpr.compile(f))
         case None => filtered
       }
     }
+
+    // OUTPUT_POLY_FILE, read the same way by every mode: any layer format,
+    // reprojected from OUTPUT_POLY_MAP_PRJN, its OUTPUT_POLY_ATTRS as out_id
+    def outputPolys(): DataFrame =
+      reprojected(readLayer(req("OUTPUT_POLY_FILE"), "Polygon"),
+          "OUTPUT_POLY", WeightKind.PolyW)
+        .withColumnRenamed(cfg.getOrElse("OUTPUT_POLY_ATTRS", "out_id"), "out_id")
 
     def applyFilter(df: DataFrame): DataFrame =
       cfg.get("FILTER_FILE").filter(_ != "NONE") match {
@@ -176,6 +187,32 @@ object SpatialAllocator {
           case None => df
         }
       }
+
+    // WRF curvilinear grid from GRID_DOT_FILE (variableGridReader.c:
+    // 216-470): lon/lat dots project via the grid CRS; READ_XYDOT=1 dots
+    // are projected offsets shifted by X_ORIG/Y_ORIG (explicit envs win,
+    // else the GRIDDESC entry's origin, never a silent 0 against a
+    // georeferenced catalog). The returned GridSpec is CONSISTENT with the
+    // dot lattice and feeds the SMOKE header.
+    def variableGrid(): (GridSpec, DataFrame) = {
+      val dotText = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(req("GRID_DOT_FILE"))), "UTF-8")
+      val readXY = cfg.get("READ_XYDOT").contains("1")
+      val proj = if (readXY) None else Some(targetProj().getOrElse(
+        throw new IllegalArgumentException(
+          "VariableGrid lon/lat dots need a grid CRS: set " +
+            "OUTPUT_FILE_MAP_PRJN or a GRIDDESC entry")))
+      def orig(env: String, pick: GridSpec => Double): Double =
+        cfg.get(env).map(_.toDouble)
+          .orElse(if (cfg.contains("OUTPUT_GRID_NAME"))
+                    gdEntry().map(e => pick(e.grid)) else None)
+          .getOrElse(0.0)
+      Sources.variableDotGrid(spark, dotText,
+        (lon, lat) => proj.map(_.forward(lon, lat)).getOrElse((lon, lat)),
+        readXY = readXY,
+        xorig = orig("X_ORIG", _.xorig), yorig = orig("Y_ORIG", _.yorig),
+        name = cfg.getOrElse("OUTPUT_GRID_NAME", "VARGRID"))
+    }
 
     // gridded .ncf sink shared by the IoapiFile output paths: long rows
     // (var, tstep, layer, row, col, value) under the GRIDDESC header
@@ -198,8 +235,27 @@ object SpatialAllocator {
 
     val result: Option[DataFrame] = req("MIMS_PROCESSING") match {
       case "SURROGATE" =>
-        val counties = reprojected(
-            readLayer(req("DATA_FILE_NAME"), "Polygon"), "DATA_FILE", "Polygon")
+        // OUTPUT_FILE_TYPE, parsed once and checked before any layer is
+        // read: the SMOKE header tag (allocate.c:765-779) and the target.
+        // Polygon puts the surrogate onto OUTPUT POLYGONS instead of grid
+        // cells (surrogate.c:455-470 — data lines carry the output polygon
+        // id, remainder rows use id "0"); EGrid swaps ONLY the surrogate
+        // computation (staggered diamonds from the same GRIDDESC entry,
+        // COL/ROW from the diamond id) — the sinks below, .ncf included,
+        // are shared
+        val outType = cfg.getOrElse("OUTPUT_FILE_TYPE", "RegularGrid")
+        lazy val dots = variableGrid()
+        val (tag, target): (String, Surrogate.Target) = outType match {
+          case "RegularGrid" => ("#GRID", Surrogate.Grid(grid()))
+          case "EGrid" => ("#GRID", Surrogate.EGrid(grid()))
+          case "VariableGrid" => ("#VARIABLE_GRID", Surrogate.CellPolys(dots._2))
+          case "Polygon" => ("#POLYGON", Surrogate.Polys(outputPolys()))
+          case other => throw new IllegalArgumentException(
+            s"OUTPUT_FILE_TYPE=$other " +
+              "(RegularGrid | EGrid | VariableGrid | Polygon)")
+        }
+        val counties = reprojected(readLayer(req("DATA_FILE_NAME"), "Polygon"),
+            "DATA_FILE", WeightKind.PolyW)
           .withColumnRenamed(cfg.getOrElse("DATA_ID_ATTR", "fips"), "fips")
         val code = cfg.getOrElse("SURROGATE_ID", "100").toInt
         val thr = cfg.getOrElse("DENOMINATOR_THRESHOLD", "0.00001").toDouble
@@ -216,123 +272,50 @@ object SpatialAllocator {
           denominator = cfg.getOrElse("WRITE_SRG_DENOMINATOR", qaBase) == "YES",
           qasum = qaBase == "YES")
         val hdrOn = !Seq("NO", "N").contains(cfg.getOrElse("WRITE_HEADER", "YES"))
-        // OUTPUT_FILE_TYPE=Polygon: surrogate onto OUTPUT POLYGONS instead
-        // of grid cells (surrogate.c:455-470 — data lines carry the output
-        // polygon id, remainder rows use id "0")
-        if (cfg.get("OUTPUT_FILE_TYPE").contains("Polygon")) {
-          val outPolys = reprojected(
-              readLayer(req("OUTPUT_POLY_FILE"), "Polygon"),
-              "OUTPUT_POLY", "Polygon")
-            .withColumnRenamed(
-              cfg.getOrElse("OUTPUT_POLY_ATTRS", "out_id"), "out_id")
-          val srgFull = Surrogate.byKind(cfg.getOrElse("WEIGHT_FILE_TYPE", "Polygon"))(
-            point = Surrogate.pointSurrogateToPolys(w, counties, outPolys,
-              domain, zres, code, weight, thr, keepSkipped = true),
-            line = Surrogate.lineSurrogateToPolys(w, counties, outPolys,
-              domain, zres, code, weight, thr,
-              curved = cfg.getOrElse("USE_CURVED_LINES", "NO") == "YES",
-              keepSkipped = true),
-            poly = Surrogate.polySurrogateToPolys(w, counties, outPolys,
-              domain, zres, code, weight, thr, keepSkipped = true))
-          val srg = srgFull.where(col("denom") >= thr)
-          cfg.get("SURROGATE_FILE").foreach { out =>
-            // Polygon output needs no grid: without OUTPUT_GRID_NAME the
-            // header is omitted rather than embedding an unrelated grid
-            val haveGrid = cfg.contains("OUTPUT_GRID_NAME")
-            val g = if (haveGrid) grid() else GridSpec("NOGRID", 0, 0, 0, 0, 0, 0)
-            val p = if (haveGrid) projInfo() else Smoke.ProjInfo()
-            Smoke.write(srgFull, g, p, out,
-              withQa = qaFields.any, denomThreshold = thr,
-              headerTag = "#POLYGON", fields = qaFields,
-              writeHeader = hdrOn && haveGrid)
-          }
-          Some(srg)
-        } else {
         // keepSkipped: below-threshold counties must REACH the sink so the
         // SURROGATE_FILE renders their #SKIPPED rows (surrogate.c:434-452);
         // everything downstream of the text file sees only live counties.
-        // EGrid output swaps ONLY the surrogate computation (staggered
-        // diamonds from the same GRIDDESC entry, COL/ROW from the diamond
-        // id) — the sinks below, .ncf included, are shared
-        val curved = cfg.getOrElse("USE_CURVED_LINES", "NO") == "YES"
-        val wkind = cfg.getOrElse("WEIGHT_FILE_TYPE", "Polygon")
-        // WRF curvilinear grid from GRID_DOT_FILE (variableGridReader.c:
-        // 216-470): lon/lat dots project via the grid CRS; READ_XYDOT=1
-        // dots are projected offsets shifted by X_ORIG/Y_ORIG (explicit
-        // envs win, else the GRIDDESC entry's origin, never a silent 0
-        // against a georeferenced catalog). The returned GridSpec is
-        // CONSISTENT with the dot lattice and feeds the SMOKE header.
-        val vargrid: Option[(GridSpec, org.apache.spark.sql.DataFrame)] =
-          if (!cfg.get("OUTPUT_FILE_TYPE").contains("VariableGrid")) None
-          else Some {
-            val dotText = new String(java.nio.file.Files.readAllBytes(
-              java.nio.file.Paths.get(req("GRID_DOT_FILE"))), "UTF-8")
-            val readXY = cfg.get("READ_XYDOT").contains("1")
-            val proj = if (readXY) None else Some(targetProj().getOrElse(
-              throw new IllegalArgumentException(
-                "VariableGrid lon/lat dots need a grid CRS: set " +
-                  "OUTPUT_FILE_MAP_PRJN or a GRIDDESC entry")))
-            def orig(env: String, pick: GridSpec => Double): Double =
-              cfg.get(env).map(_.toDouble)
-                .orElse(if (cfg.contains("OUTPUT_GRID_NAME"))
-                          gdEntry().map(e => pick(e.grid)) else None)
-                .getOrElse(0.0)
-            Sources.variableDotGrid(spark, dotText,
-              (lon, lat) => proj.map(_.forward(lon, lat)).getOrElse((lon, lat)),
-              readXY = readXY,
-              xorig = orig("X_ORIG", _.xorig), yorig = orig("Y_ORIG", _.yorig),
-              name = cfg.getOrElse("OUTPUT_GRID_NAME", "VARGRID"))
-          }
-        val srgFull =
-          if (cfg.get("OUTPUT_FILE_TYPE").contains("EGrid"))
-            Surrogate.surrogateToEGrid(w, counties, grid(), domain, zres,
-              code, kind = wkind, weight, thr, curved = curved,
-              keepSkipped = true)
-          else if (vargrid.isDefined)
-            Surrogate.surrogateToCellPolys(w, counties, vargrid.get._2,
-              domain, zres, code, kind = wkind, weight, thr,
-              curved = curved, keepSkipped = true)
-          else Surrogate.byKind(wkind)(
-            point = Surrogate.pointSurrogate(w, counties, grid(), domain,
-              zres, code, weight, thr, keepSkipped = true),
-            // USE_CURVED_LINES=YES switches every length measure to
-            // great-circle (polyops.c:440-447, SA_ch03_vector.md:316)
-            line = Surrogate.lineSurrogate(w, counties, grid(), domain,
-              zres, code, weight, thr, curved = curved, keepSkipped = true),
-            poly = Surrogate.polySurrogate(w, counties, grid(), domain,
-              zres, code, weight, thr, keepSkipped = true))
+        // USE_CURVED_LINES=YES switches every length measure to
+        // great-circle (polyops.c:440-447, SA_ch03_vector.md:316)
+        val srgFull = Surrogate.create(weightKind, w, counties, target,
+          domain, zres, code, weight, thr,
+          curved = cfg.getOrElse("USE_CURVED_LINES", "NO") == "YES",
+          keepSkipped = true)
         val srg = srgFull.where(col("denom") >= thr)
         cfg.get("SURROGATE_FILE").foreach { out =>
-          // header tag tracks OUTPUT_FILE_TYPE (allocate.c:765-779); the
-          // VariableGrid header carries the DOT-lattice grid spec, never
-          // an unrelated regular grid whose dims the body could exceed
-          val tag = cfg.getOrElse("OUTPUT_FILE_TYPE", "RegularGrid") match {
-            case "RegularGrid" | "EGrid" => "#GRID"
-            case "VariableGrid" => "#VARIABLE_GRID"
-            case other => throw new IllegalArgumentException(
-              s"OUTPUT_FILE_TYPE=$other " +
-                "(RegularGrid | EGrid | VariableGrid | Polygon)")
+          // the grid the header describes: the VariableGrid header carries
+          // the DOT-lattice grid spec, never an unrelated regular grid whose
+          // dims the body could exceed; Polygon output needs no grid, so
+          // without OUTPUT_GRID_NAME its header is omitted rather than
+          // embedding an unrelated grid
+          val haveGrid = cfg.contains("OUTPUT_GRID_NAME")
+          val sinkGrid = target match {
+            case Surrogate.CellPolys(_) => Some(dots._1)
+            case Surrogate.Polys(_) if !haveGrid => None
+            case _ => Some(grid())
           }
-          val sinkGrid = vargrid.map(_._1).getOrElse(grid())
-          val sinkProj =
-            if (vargrid.isDefined && !cfg.contains("OUTPUT_GRID_NAME"))
-              Smoke.ProjInfo()
-            else projInfo()
-          Smoke.write(srgFull, sinkGrid, sinkProj, out,
+          Smoke.write(srgFull,
+            sinkGrid.getOrElse(GridSpec("NOGRID", 0, 0, 0, 0, 0, 0)),
+            if (haveGrid) projInfo() else Smoke.ProjInfo(), out,
             withQa = qaFields.any, denomThreshold = thr, headerTag = tag,
-            fields = qaFields, writeHeader = hdrOn)
+            fields = qaFields, writeHeader = hdrOn && sinkGrid.isDefined)
         }
         // srg2ncf in one pass (util/srg2ncf/convert_txt2ncf.f) — the .ncf
         // header carries the GRIDDESC projection, and only live counties
         // accumulate (the Fortran skips '#' comment lines)
         cfg.get("SURROGATE_NETCDF_FILE").foreach { p =>
           // convert_txt2ncf's grid is the REGULAR output grid; variable-
-          // grid col/row indices would land in the wrong envelope
-          require(!cfg.get("OUTPUT_FILE_TYPE").contains("VariableGrid"),
-            "SURROGATE_NETCDF_FILE requires a RegularGrid/EGrid output " +
-              "(a #VARIABLE_GRID file has curvilinear cell indices)")
+          // grid col/row indices would land in the wrong envelope, and
+          // output polygons have none
+          val g = target match {
+            case Surrogate.Grid(g) => g
+            case Surrogate.EGrid(g) => g
+            case _ => throw new IllegalArgumentException(
+              "SURROGATE_NETCDF_FILE requires a RegularGrid/EGrid output " +
+                s"(OUTPUT_FILE_TYPE=$outType has no regular cell indices)")
+          }
           val c = gdEntry().map(_.coord)
-          graft.sources.Ioapi.srg2ncf(srg, grid(), p,
+          graft.sources.Ioapi.srg2ncf(srg, g, p,
             gdtyp = c.map(_.ctype).getOrElse(6),
             pAlp = c.map(_.alpha).getOrElse(0.0),
             pBet = c.map(_.beta).getOrElse(0.0),
@@ -341,7 +324,6 @@ object SpatialAllocator {
             ycent = c.map(_.ycent).getOrElse(0.0))
         }
         Some(srg)
-        }
 
       case "ALLOCATE" if cfg.get("INPUT_FILE_TYPE").contains("IoapiFile") =>
         // allocateIoapi.c: gridded I/O API data regrids onto the output
@@ -400,9 +382,7 @@ object SpatialAllocator {
               sdate = hdr.sdate, stime = hdr.stime, tstep = hdr.tstep))
           Some(out)
         } else {
-          val output = readLayer(req("OUTPUT_POLY_FILE"), "Polygon")
-            .withColumnRenamed(cfg.getOrElse("OUTPUT_POLY_ATTRS", "out_id"), "out_id")
-          val out = Allocate.gridToPoly(gridded, hdr.grid, output,
+          val out = Allocate.gridToPoly(gridded, hdr.grid, outputPolys(),
             "out_id", "value", Seq("var"))
           cfg.get("OUTPUT_FILE_NAME").foreach(p =>
             out.coalesce(1).write.mode("overwrite").parquet(p))
@@ -410,9 +390,8 @@ object SpatialAllocator {
         }
 
       case "ALLOCATE" =>
-        val inFtype = cfg.getOrElse("INPUT_FILE_TYPE", "Polygon")
         val input = applyFilter(reprojected(
-          readLayer(req("INPUT_FILE_NAME"), inFtype), "INPUT_FILE", inFtype))
+          readLayer(req("INPUT_FILE_NAME"), inputType), "INPUT_FILE", inputKind))
         val modeSpecs = req("ALLOCATE_ATTRS").split(",").map { kv =>
           val Array(a, m) = kv.trim.split("="); (a, m)
         }.toSeq
@@ -482,10 +461,7 @@ object SpatialAllocator {
             }
             Some(out)
           } else {
-            val output = spark.read.parquet(req("OUTPUT_POLY_FILE"))
-              .withColumnRenamed(
-                cfg.getOrElse("OUTPUT_POLY_ATTRS", "out_id"), "out_id")
-            val out = Allocate.allocate(input, output, modes, domain, zres)
+            val out = Allocate.allocate(input, outputPolys(), modes, domain, zres)
             cfg.get("OUTPUT_FILE_NAME").foreach(p =>
               out.coalesce(1).write.mode("overwrite").parquet(p))
             Some(out)
@@ -493,9 +469,8 @@ object SpatialAllocator {
         }
 
       case "OVERLAY" =>
-        val inType = cfg.getOrElse("INPUT_FILE_TYPE", "Point")
         val input = reprojected(
-          readLayer(req("INPUT_FILE_NAME"), inType), "INPUT_FILE", inType)
+          readLayer(req("INPUT_FILE_NAME"), inputType), "INPUT_FILE", inputKind)
         // OVERLAY_TYPE dispatch (SA_ch03_vector.md:342-351): the mask is a
         // bbox literal, a named grid's outline, an ASCII polygon file, a
         // polygon layer — reprojected via OVERLAY_MAP_PRJN like any layer
@@ -519,12 +494,12 @@ object SpatialAllocator {
               .readAllBytes(java.nio.file.Paths.get(shape)), "UTF-8"))
           case _ => readLayer(shape, "Polygon")
         }
-        val mask = reprojected(mask0, "OVERLAY", "Polygon")
-        val out = inType match {
-          case "Point" | "PointFile" =>
+        val mask = reprojected(mask0, "OVERLAY", WeightKind.PolyW)
+        val out = inputKind match {
+          case WeightKind.PointW =>
             SpatialJoin.overlayPoints(input, mask, domain, zres)
-          case "Line" => SpatialJoin.overlayLines(input, mask)
-          case _ => SpatialJoin.overlayPolys(input, mask)
+          case WeightKind.LineW => SpatialJoin.overlayLines(input, mask)
+          case WeightKind.PolyW => SpatialJoin.overlayPolys(input, mask)
         }
         // OVERLAY_OUT_CELLID (overlay.c:155-190): append grid COL/ROW
         val withCell =
@@ -556,24 +531,16 @@ object SpatialAllocator {
         Some(selected)
 
       case "FILTER_SHAPE" =>
-        val input = readLayer(req("INPUT_FILE_NAME"),
-          cfg.getOrElse("INPUT_FILE_TYPE", "Polygon"))
-        val out = applyFilter(input)
+        val out = applyFilter(readLayer(req("INPUT_FILE_NAME"), inputType))
         cfg.get("OUTPUT_FILE_NAME").foreach(p =>
           out.write.mode("overwrite").parquet(p))
         Some(out)
 
       case "CONVERT_SHAPE" =>
-        val input = readLayer(req("INPUT_FILE_NAME"),
-          cfg.getOrElse("INPUT_FILE_TYPE", "Polygon"))
-        val from = projOf(cfg.getOrElse("INPUT_FILE_MAP_PRJN", "latlon"))
-        val to = projOf(cfg.getOrElse("OUTPUT_FILE_MAP_PRJN", "latlon"))
-        val maxSeg = cfg.getOrElse("MAX_LINE_SEG", "0").toDouble
-        val out = cfg.getOrElse("INPUT_FILE_TYPE", "Polygon") match {
-          case "Point" => Reproject.points(input, from, to)
-          case "Line" => Reproject.lines(input, from, to, maxSeg)
-          case _ => Reproject.polygons(input, from, to, maxSeg)
-        }
+        val out = Reproject.layer(inputKind,
+          readLayer(req("INPUT_FILE_NAME"), inputType),
+          projOf(cfg.getOrElse("INPUT_FILE_MAP_PRJN", "latlon")),
+          projOf(cfg.getOrElse("OUTPUT_FILE_MAP_PRJN", "latlon")), maxSeg)
         cfg.get("OUTPUT_FILE_NAME").foreach(p =>
           out.write.mode("overwrite").parquet(p))
         Some(out)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.cells.CellDomain
 import graft.grid.GridSpec
-import graft.operators.{Surrogate, PostOps}
+import graft.operators.{Surrogate, PostOps, WeightKind}
 import graft.io.Smoke
 
 /** The Java SurrogateTool meta-pipeline (SurrogateTool.java:33;
@@ -17,10 +17,10 @@ import graft.io.Smoke
   * none of them re-runs a surrogate's lineage. */
 object SrgTool {
 
-  sealed trait WeightKind
-  case object PointW extends WeightKind
-  case object LineW extends WeightKind
-  case object PolyW extends WeightKind
+  // a spec's weight kind, under the names catalog callers use
+  val PointW: WeightKind = WeightKind.PointW
+  val LineW: WeightKind = WeightKind.LineW
+  val PolyW: WeightKind = WeightKind.PolyW
 
   /** One generation row of the tool's surrogate-specification CSV. */
   final case class SrgSpec(code: Int, name: String, kind: WeightKind,
@@ -69,17 +69,9 @@ object SrgTool {
     // skip '#' comment lines). No table is sorted: Smoke.write sorts the
     // lines it writes.
     val generatedFull: Map[Int, DataFrame] = specs.map { s =>
-      val df = s.kind match {
-        case PointW => Surrogate.pointSurrogate(s.weights, counties,
-          grid, domain, res, s.code, s.weightAttr, denomThreshold,
-          keepSkipped = true)
-        case LineW => Surrogate.lineSurrogate(s.weights, counties,
-          grid, domain, res, s.code, s.weightAttr, denomThreshold,
-          keepSkipped = true)
-        case PolyW => Surrogate.polySurrogate(s.weights, counties,
-          grid, domain, res, s.code, s.weightAttr, denomThreshold,
-          keepSkipped = true)
-      }
+      val df = Surrogate.create(s.kind, s.weights, counties,
+        Surrogate.Grid(grid), domain, res, s.code, s.weightAttr,
+        denomThreshold, keepSkipped = true)
       s.code -> df.localCheckpoint()
     }.toMap
     val generated: Map[Int, DataFrame] = generatedFull.map { case (c, df) =>

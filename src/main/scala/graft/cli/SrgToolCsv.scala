@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.cells.CellDomain
 import graft.grid.GridSpec
 import graft.functions.{MergeEquation, WeightExpr}
-import graft.operators.Filters
+import graft.operators.{Filters, Reproject, WeightKind}
 import graft.sources.{GridDesc, Shapefile}
 
 /** The SurrogateTool's CSV control-file contract (SurrogateTool.java:33;
@@ -20,9 +20,11 @@ import graft.sources.{GridDesc, Shapefile}
   *
   * Layer resolution: a catalog entry `name,dir,…` reads `dir/name.shp`
   * through the binary Shapefile reader when present, else
-  * `dir/name.parquet`. Weight kind derives from the layer's schema
-  * (x/y ⇒ Point, line ⇒ Line, geom ⇒ Polygon), mirroring the reference's
-  * shape-type dispatch. External `file|name` refs are unsupported. */
+  * `dir/name.parquet`. A layer's kind derives from its schema
+  * (`WeightKind.of`: line ⇒ Line, else geom ⇒ Polygon, else Point),
+  * mirroring the reference's shape-type dispatch; it picks both the
+  * layer's reprojection and its surrogate. External `file|name` refs are
+  * unsupported. */
 object SrgToolCsv {
 
   /** spark-submit parity with `java gov.epa.surrogate.SurrogateTool
@@ -188,11 +190,7 @@ object SrgToolCsv {
           (if (e.ellipsoid.nonEmpty) "," + e.ellipsoid else "")
         val from = SpatialAllocator.projOf(spec)
         if (from == gridProj) raw
-        else if (raw.columns.contains("geom"))
-          graft.operators.Reproject.polygons(raw, from, gridProj, maxSeg)
-        else if (raw.columns.contains("line"))
-          graft.operators.Reproject.lines(raw, from, gridProj, maxSeg)
-        else graft.operators.Reproject.points(raw, from, gridProj)
+        else Reproject.layer(WeightKind.of(raw), raw, from, gridProj, maxSeg)
       }
     }
 
@@ -233,11 +231,7 @@ object SrgToolCsv {
           w = w.withColumn("weight_function", WeightExpr.compile(s.weightFunction))
           Some("weight_function")
         } else Some(s.weightAttr).filter(a => a.nonEmpty && a != "NONE")
-      val kind: SrgTool.WeightKind =
-        if (w.columns.contains("line")) SrgTool.LineW
-        else if (w.columns.contains("geom")) SrgTool.PolyW
-        else SrgTool.PointW
-      SrgTool.SrgSpec(s.code, s.name, kind, w, weightAttr)
+      SrgTool.SrgSpec(s.code, s.name, WeightKind.of(w), w, weightAttr)
     }
 
     val equations = toRun.filter(_.mergeFunction.nonEmpty)

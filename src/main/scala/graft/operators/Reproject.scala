@@ -51,4 +51,13 @@ object Reproject {
   def lines(df: DataFrame, from: Proj, to: Proj,
             maxSeg: Double = 0.0, lineCol: String = "line"): DataFrame =
     df.withColumn(lineCol, lineUdf(from, to, maxSeg)(col(lineCol)))
+
+  /** Reproject a layer of the given kind: its x/y points, its `line`
+    * polylines or its `geom` rings. */
+  def layer(kind: WeightKind, df: DataFrame, from: Proj, to: Proj,
+            maxSeg: Double): DataFrame = kind match {
+    case WeightKind.PointW => points(df, from, to)
+    case WeightKind.LineW => lines(df, from, to, maxSeg)
+    case WeightKind.PolyW => polygons(df, from, to, maxSeg)
+  }
 }

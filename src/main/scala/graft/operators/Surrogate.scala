@@ -18,19 +18,21 @@ import graft.spark.GeoFunctions._
   *   qasum               = running Σ frac per county in target order
   *
   * Every surrogate is one COUNTY STAGE × one TARGET STAGE, then the ratio
-  * tail. The county stage is written once per weight kind
-  * (WEIGHT_FILE_TYPE, dispatched by `byKind`) and yields the W∩D rows,
-  * their measure and the contribution of a measure taken on those rows
-  * (sumpoly.c:53-266):
+  * tail, and `create` is its one entry: a layer's `WeightKind` picks the
+  * county stage, a `Target` the target stage. The county stage yields the
+  * W∩D rows, their measure and the contribution of a measure taken on
+  * those rows (sumpoly.c:53-266):
   *   point:   val                  (1 in count mode)
   *   line:    val·len(piece)/len(parent_line)   (len(piece) in length mode)
   *   polygon: val·area(piece)/area(parent_poly) (area(piece) in area mode)
   * ratio is always vs the ORIGINAL weight feature (sumpoly.c:667,672).
   *
-  * Targets: the regular grid (closed-form cells for points, `cellClip` for
-  * fragments), output polygons (a second clip / point-in-polygon), cell
-  * polygons carrying COL/ROW (variable grid), and the EGrid (closed-form
-  * diamonds for points, cell polygons otherwise).
+  * Targets (srgcreate's OUTPUT_FILE_TYPE): `Grid`, the regular grid
+  * (closed-form cells for points, `cellClip` for fragments, through
+  * `pointSurrogate` / `lineSurrogate` / `polySurrogate`); `Polys`, output
+  * polygons (a second clip / point-in-polygon); `CellPolys`, cell polygons
+  * carrying COL/ROW (variable grid); and `EGrid`, the staggered diamonds
+  * (closed-form for points, cell polygons otherwise).
   *
   * Scale notes: the grid targets compute numerators, denominator and qasum
   * in one pass over each county's rows, as reportSurrogate does. Their
@@ -46,9 +48,11 @@ import graft.spark.GeoFunctions._
   * map-side partial aggregate (the point table is the big input) and
   * shuffle once more on fips for the windows. The grid never
   * materializes: cells are closed-form column arithmetic for points,
-  * bbox-cover explode for fragments. The output-polygon targets and the
-  * EGrid's points join the W∩D rows a second time, so they persist them
-  * and hand `ratio` / `ratioPoly` their numerators and denominators apart.
+  * bbox-cover explode for fragments. The other three targets join the
+  * W∩D rows a second time, against the output or cell polygons or the
+  * diamonds, so `create` persists those rows for them and hands `ratio`
+  * (cells) or `ratioPoly` (output polygons) the numerators and
+  * denominators apart.
   * Output rows come in no particular order; the SMOKE sinks sort what
   * they write.
   */
@@ -60,14 +64,18 @@ object Surrogate {
   val POLY_OUT_COLS: Seq[String] =
     Seq("srg_code", "fips", "out_id", "frac", "numer", "denom", "qasum")
 
-  /** The WEIGHT_FILE_TYPE dispatch every surrogate entry shares:
-    * Point | PointFile, Line, and anything else as Polygon. */
-  private[graft] def byKind[A](kind: String)(point: => A, line: => A,
-                                             poly: => A): A = kind match {
-    case "Point" | "PointFile" => point
-    case "Line" => line
-    case _ => poly
-  }
+  /** Where a surrogate's fractions land: srgcreate's OUTPUT_FILE_TYPE. */
+  sealed trait Target
+  /** RegularGrid: the grid's COL/ROW cells, never materialized. */
+  final case class Grid(grid: GridSpec) extends Target
+  /** Polygon: output polygons (out_id, geom); rows carry POLY_OUT_COLS. */
+  final case class Polys(outPolys: DataFrame) extends Target
+  /** VariableGrid: cell polygons (col, row, geom), e.g. the WRF
+    * curvilinear grid-dot cells (variableGridReader.c:216-470). */
+  final case class CellPolys(cells: DataFrame) extends Target
+  /** EGrid: the staggered WRF-NMM diamonds generated from the grid's
+    * GRIDDESC entry (EGridReader.c). */
+  final case class EGrid(grid: GridSpec) extends Target
 
   // --------------------------------------------------------- ratio tail
 
@@ -333,25 +341,78 @@ object Surrogate {
     fragTail(c, cells, "__clen", srgCode, denomThreshold, keepSkipped)
   }
 
-  // ------------------------------------------------- output-polygon target
+  // -------------------------------------------------------- every target
+
+  /** The surrogate of a `kind` weight layer over `counties` (fips, geom)
+    * onto `target`. weight names the layer's weight attribute; None is
+    * count / length / area mode. `curved` = the USE_CURVED_LINES env
+    * contract, read by line layers only. With keepSkipped, counties below
+    * denomThreshold keep their rows for the #SKIPPED lines of the SMOKE
+    * sink. The grid and cell targets give OUT_COLS rows (their qasum in
+    * (row, col) order), the output polygons POLY_OUT_COLS rows. */
+  def create(kind: WeightKind, layer: DataFrame, counties: DataFrame,
+             target: Target, domain: CellDomain, res: Int, srgCode: Int,
+             weight: Option[String] = None, denomThreshold: Double = 1e-5,
+             curved: Boolean = false,
+             keepSkipped: Boolean = false): DataFrame = {
+    import WeightKind._
+    // cell polygons carrying COL/ROW are output polygons keyed by (col,
+    // row): the standard grid SMOKE format and (row, col) qasum apply
+    def onCells(cells: DataFrame): DataFrame = {
+      val keyed = cells.select(
+        struct(col("col"), col("row")).as("out_id"), col("geom"))
+      val (nById, denom) = toPolys(kind, layer, counties, keyed,
+        domain, res, weight, curved)
+      val numer = nById
+        .withColumn("col", col("out_id.col"))
+        .withColumn("row", col("out_id.row"))
+        .select("fips", "col", "row", "numer")
+      ratio(numer, denom, srgCode, denomThreshold, keepSkipped)
+    }
+    (target, kind) match {
+      case (Grid(g), PointW) => pointSurrogate(layer, counties, g, domain,
+        res, srgCode, weight, denomThreshold, keepSkipped)
+      case (Grid(g), LineW) => lineSurrogate(layer, counties, g, domain,
+        res, srgCode, weight, denomThreshold, curved, keepSkipped)
+      case (Grid(g), PolyW) => polySurrogate(layer, counties, g, domain,
+        res, srgCode, weight, denomThreshold, keepSkipped)
+      case (Polys(outPolys), _) =>
+        val (numer, denom) = toPolys(kind, layer, counties, outPolys,
+          domain, res, weight, curved)
+        ratioPoly(numer, denom, srgCode, denomThreshold, keepSkipped)
+      case (CellPolys(cells), _) => onCells(cells)
+      case (EGrid(g), PointW) =>
+        val c = pointCounty(layer, counties, domain, res, weight).persisted
+        ratio(c.numer(diamondPoints(c.rows, g), col("__w"),
+            "fips", "col", "row"), c.denom,
+          srgCode, denomThreshold, keepSkipped)
+      // line/polygon weights clip against the materialized diamonds —
+      // exactly the cell-polygon target; eGrid already carries COL/ROW.
+      // COL/ROW derive from the diamond id ((polyID-1)%ncols+1,
+      // surrogate.c:389-432), so the standard grid SMOKE format applies
+      case (EGrid(g), _) => onCells(graft.sources.Sources.eGrid(
+        layer.sparkSession, g.name, g.xorig, g.yorig, g.xcell, g.ycell,
+        g.ncols, g.nrows))
+    }
+  }
 
   /** (numer per (fips, out_id), denom) of a weight kind against an
     * output-polygon layer outPolys: (out_id, geom). The W∩D rows meet the
     * output layer in a second join — the same two-intersection shape as the
     * reference's polyIsect(W∩D, G) with G a polygon layer instead of the
     * grid: points take an INNER second point-in-polygon, fragments clip
-    * again. */
-  private def toPolys(kind: String, layer: DataFrame, counties: DataFrame,
-                      outPolys: DataFrame, domain: CellDomain, res: Int,
-                      weight: Option[String], curved: Boolean)
-      : (DataFrame, DataFrame) = {
-    val (c, hits, measure) = byKind(kind)(
-      point = {
+    * again. Contributions match the grid target's exactly (vs the ORIGINAL
+    * weight measure); every length measure uses the same `curved` mode. */
+  private def toPolys(kind: WeightKind, layer: DataFrame,
+                      counties: DataFrame, outPolys: DataFrame,
+                      domain: CellDomain, res: Int, weight: Option[String],
+                      curved: Boolean): (DataFrame, DataFrame) = {
+    val (c, hits, measure) = kind match {
+      case WeightKind.PointW =>
         val c = pointCounty(layer, counties, domain, res, weight).persisted
         (c, SpatialJoin.pointInPoly(c.rows,
           outPolys.select(col("out_id"), col("geom")), domain, res), col("__w"))
-      },
-      line = {
+      case WeightKind.LineW =>
         val c = lineCounty(layer, counties.select(col("fips"), col("geom")),
           domain, res, weight, curved).persisted
         val pieces = c.rows.withColumnRenamed("frag_len", "__wd_len")
@@ -360,132 +421,44 @@ object Surrogate {
         (c, SpatialJoin.linePolyFragments(pieces,
           outPolys.select(col("out_id"), col("geom")), domain, res,
           lineCol = "__piece", curved = curved), col("frag_len"))
-      },
-      poly = {
+      case WeightKind.PolyW =>
         val c = polyCounty(layer, counties, domain, res, weight).persisted
         (c, SpatialJoin.polyPolyFragments(
           c.rows.withColumnRenamed("frag_area", "__wd_area"),
           outPolys.select(col("out_id"), col("geom").as("ogeom")),
           domain, res, aGeom = "frag_geom", bGeom = "ogeom",
           keepFragGeom = false), col("frag_area"))
-      })
+    }
     (c.numer(hits, measure, "fips", "out_id"), c.denom)
   }
 
-  /** Point-weight surrogate onto OUTPUT POLYGONS instead of grid cells
-    * (srgcreate OUTPUT_FILE_TYPE=Polygon). outPolys: (out_id, geom). */
-  def pointSurrogateToPolys(points: DataFrame, counties: DataFrame,
-                            outPolys: DataFrame,
-                            domain: CellDomain, res: Int, srgCode: Int,
-                            weight: Option[String] = None,
-                            denomThreshold: Double = 1e-5,
-                            keepSkipped: Boolean = false): DataFrame = {
-    val (numer, denom) = toPolys("Point", points, counties, outPolys,
-      domain, res, weight, curved = false)
-    ratioPoly(numer, denom, srgCode, denomThreshold, keepSkipped = keepSkipped)
-  }
-
-  /** Polygon-weight surrogate onto OUTPUT POLYGONS; contributions match
-    * polySurrogate exactly (vs the ORIGINAL weight area). */
-  def polySurrogateToPolys(weights: DataFrame, counties: DataFrame,
-                           outPolys: DataFrame,
-                           domain: CellDomain, res: Int, srgCode: Int,
-                           weight: Option[String] = None,
-                           denomThreshold: Double = 1e-5,
-                           keepSkipped: Boolean = false): DataFrame = {
-    val (numer, denom) = toPolys("Polygon", weights, counties, outPolys,
-      domain, res, weight, curved = false)
-    ratioPoly(numer, denom, srgCode, denomThreshold, keepSkipped = keepSkipped)
-  }
-
-  /** Line-weight surrogate onto OUTPUT POLYGONS; every length measure uses
-    * the same `curved` mode (USE_CURVED_LINES). */
-  def lineSurrogateToPolys(lines: DataFrame, counties: DataFrame,
-                           outPolys: DataFrame,
-                           domain: CellDomain, res: Int, srgCode: Int,
-                           weight: Option[String] = None,
-                           denomThreshold: Double = 1e-5,
-                           curved: Boolean = false,
-                           keepSkipped: Boolean = false): DataFrame = {
-    val (numer, denom) = toPolys("Line", lines, counties, outPolys,
-      domain, res, weight, curved)
-    ratioPoly(numer, denom, srgCode, denomThreshold, keepSkipped = keepSkipped)
-  }
-
-  // ------------------------------------------ cell-polygon and EGrid targets
-
-  /** Surrogate onto an ARBITRARY cell-polygon layer carrying COL/ROW —
-    * the WRF curvilinear grid-dot variable grid
-    * (variableGridReader.c:216-470, OUTPUT_FILE_TYPE=VariableGrid). The
-    * standard grid SMOKE format and (row, col)-ordered qasum apply.
-    * cells: (col, row, geom). */
-  def surrogateToCellPolys(weightLayer: DataFrame, counties: DataFrame,
-                           cells: DataFrame,
-                           domain: CellDomain, res: Int, srgCode: Int,
-                           kind: String,
-                           weight: Option[String] = None,
-                           denomThreshold: Double = 1e-5,
-                           curved: Boolean = false,
-                           keepSkipped: Boolean = false): DataFrame = {
-    val keyed = cells.select(
-      struct(col("col"), col("row")).as("out_id"), col("geom"))
-    val (nById, denom) = toPolys(kind, weightLayer, counties, keyed,
-      domain, res, weight, curved)
-    val numer = nById
-      .withColumn("col", col("out_id.col"))
-      .withColumn("row", col("out_id.row"))
-      .select("fips", "col", "row", "numer")
-    ratio(numer, denom, srgCode, denomThreshold, keepSkipped = keepSkipped)
-  }
-
-  /** srgcreate OUTPUT_FILE_TYPE=EGrid (EGridReader.c geometry): the
-    * surrogate runs against the staggered WRF-NMM diamonds generated from
-    * the SAME GRIDDESC entry, and COL/ROW derive from the diamond id
-    * ((polyID-1)%ncols+1, surrogate.c:389-432) so the standard grid SMOKE
-    * format applies — including the (row, col)-ordered qasum. */
-  def surrogateToEGrid(weightLayer: DataFrame, counties: DataFrame,
-                       grid: GridSpec, domain: CellDomain, res: Int,
-                       srgCode: Int, kind: String,
-                       weight: Option[String] = None,
-                       denomThreshold: Double = 1e-5,
-                       curved: Boolean = false,
-                       keepSkipped: Boolean = false): DataFrame = {
-    // line/polygon weights clip against the materialized diamonds —
-    // exactly the arbitrary-cell path; eGrid already carries COL/ROW
-    def onDiamonds = surrogateToCellPolys(weightLayer, counties,
-      graft.sources.Sources.eGrid(weightLayer.sparkSession, grid.name,
-        grid.xorig, grid.yorig, grid.xcell, grid.ycell, grid.ncols, grid.nrows),
-      domain, res, srgCode, kind, weight, denomThreshold, curved, keepSkipped)
-    byKind(kind)(point = {
-      // CLOSED-FORM diamond assignment — diamond membership is pure
-      // column arithmetic (|x−cx|·halfY + |y−cy|·halfX ≤ halfX·halfY,
-      // exact on the integer lattice — no division wobble), so points
-      // never touch a geometry kernel or a materialized diamond layer,
-      // matching the regular-grid point path's "the grid never
-      // materializes" discipline. ≤ keeps edge points in BOTH adjacent
-      // diamonds — the same EDGE-in outcome the ray-cast gives.
-      val halfX = grid.xcell / 2.0; val halfY = grid.ycell / 2.0
-      val c = pointCounty(weightLayer, counties, domain, res, weight).persisted
-      val rm1 = floor((col("y") - lit(grid.yorig)) / halfY).cast("int")
-      val cand = c.rows
-        .withColumn("__rm1", explode(sequence(rm1 - 1, rm1 + 1)))
-        .withColumn("row", (col("__rm1") + 1).cast("int"))
-        .withColumn("__off",
-          when(col("row") % 2 === 0, halfX).otherwise(lit(0.0)))
-        .withColumn("__cm1b",
-          floor((col("x") - lit(grid.xorig) - col("__off")) / grid.xcell)
-            .cast("int"))
-        .withColumn("__cm1", explode(array(col("__cm1b"), col("__cm1b") + 1)))
-        .withColumn("col", (col("__cm1") + 1).cast("int"))
-        .withColumn("__cx",
-          lit(grid.xorig) + col("__cm1") * grid.xcell + col("__off"))
-        .withColumn("__cy", lit(grid.yorig) + col("__rm1") * halfY)
-        .where(col("col").between(1, grid.ncols) &&
-          col("row").between(1, grid.nrows) &&
-          (abs(col("x") - col("__cx")) * halfY +
-           abs(col("y") - col("__cy")) * halfX) <= halfX * halfY)
-      ratio(c.numer(cand, col("__w"), "fips", "col", "row"), c.denom,
-        srgCode, denomThreshold, keepSkipped = keepSkipped)
-    }, line = onDiamonds, poly = onDiamonds)
+  /** County-tagged points × the EGrid diamonds (col, row) that hold them,
+    * in CLOSED FORM: diamond membership is pure column arithmetic
+    * (|x−cx|·halfY + |y−cy|·halfX ≤ halfX·halfY, exact on the integer
+    * lattice — no division wobble), so points never touch a geometry
+    * kernel or a materialized diamond layer, matching the regular-grid
+    * point path's "the grid never materializes" discipline. ≤ keeps edge
+    * points in BOTH adjacent diamonds — the same EDGE-in outcome the
+    * ray-cast gives. */
+  private def diamondPoints(points: DataFrame, grid: GridSpec): DataFrame = {
+    val halfX = grid.xcell / 2.0; val halfY = grid.ycell / 2.0
+    val rm1 = floor((col("y") - lit(grid.yorig)) / halfY).cast("int")
+    points
+      .withColumn("__rm1", explode(sequence(rm1 - 1, rm1 + 1)))
+      .withColumn("row", (col("__rm1") + 1).cast("int"))
+      .withColumn("__off",
+        when(col("row") % 2 === 0, halfX).otherwise(lit(0.0)))
+      .withColumn("__cm1b",
+        floor((col("x") - lit(grid.xorig) - col("__off")) / grid.xcell)
+          .cast("int"))
+      .withColumn("__cm1", explode(array(col("__cm1b"), col("__cm1b") + 1)))
+      .withColumn("col", (col("__cm1") + 1).cast("int"))
+      .withColumn("__cx",
+        lit(grid.xorig) + col("__cm1") * grid.xcell + col("__off"))
+      .withColumn("__cy", lit(grid.yorig) + col("__rm1") * halfY)
+      .where(col("col").between(1, grid.ncols) &&
+        col("row").between(1, grid.nrows) &&
+        (abs(col("x") - col("__cx")) * halfY +
+         abs(col("y") - col("__cy")) * halfX) <= halfX * halfY)
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.fixtures.{Pages, TpchGeo}
 import graft.fixtures.TpchGeo.{domain, grid, zres}
 import graft.functions.WeightExpr
-import graft.operators.{Allocate, Corridor, Filters, Knn, Reproject, SpatialJoin, Surrogate, Topology}
+import graft.operators.{Allocate, Corridor, Filters, Knn, Reproject, SpatialJoin, Surrogate, Topology, WeightKind}
 import graft.text.Html
 import graft.SparkEntry.scratch
 import TextQueries.hv
@@ -991,8 +991,9 @@ object SpatialQueries {
         (1 + qx + qy * 2,
           Seq(Seq(x0, y0, x0 + 3000, y0, x0 + 3000, y0 + 3000, x0, y0 + 3000)))
       }).toDF("out_id", "geom")
-      Surrogate.polySurrogateToPolys(TpchGeo.tracts(s, dir),
-        TpchGeo.counties(s), outPolys, domain, zres, srgCode = 170)
+      Surrogate.create(WeightKind.PolyW, TpchGeo.tracts(s, dir),
+        TpchGeo.counties(s), Surrogate.Polys(outPolys), domain, zres,
+        srgCode = 170)
     },
       s"""WITH tr AS (${TpchGeo.tractsSql}),
          |cn AS (${TpchGeo.countiesSql}),
@@ -1031,8 +1032,8 @@ object SpatialQueries {
     // adjacent diamonds in engine and oracle alike.
     Q("q73_srg_egrid", (s, dir) => {
       val eg = graft.grid.GridSpec("EG", 0, 0, 1000, 1000, 9, 17)
-      Surrogate.surrogateToEGrid(TpchGeo.points(s, dir), TpchGeo.counties(s),
-        eg, domain, zres, srgCode = 180, kind = "Point")
+      Surrogate.create(WeightKind.PointW, TpchGeo.points(s, dir),
+        TpchGeo.counties(s), Surrogate.EGrid(eg), domain, zres, srgCode = 180)
     },
       s"""WITH pts AS (${TpchGeo.pointsSql}),
          |tagged AS (SELECT ${TpchGeo.fipsOfSql("x", "y")} AS fips, x, y
@@ -1068,8 +1069,8 @@ object SpatialQueries {
         (a, b) => (a, b), readXY = true)
       val pts = TpchGeo.points(s, dir)
         .where(expr("(50 * x - y) % 50000 != 0"))
-      Surrogate.surrogateToCellPolys(pts, TpchGeo.counties(s), cells,
-        domain, zres, srgCode = 190, kind = "Point")
+      Surrogate.create(WeightKind.PointW, pts, TpchGeo.counties(s),
+        Surrogate.CellPolys(cells), domain, zres, srgCode = 190)
     },
       s"""WITH pts AS (${TpchGeo.pointsSql}),
          |p2 AS (SELECT x, y FROM pts WHERE (50 * x - y) % 50000 <> 0),

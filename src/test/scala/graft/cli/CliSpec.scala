@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import graft.fixtures.TpchGeo
+import graft.operators.{Allocate, Surrogate, WeightKind}
 
 /** End-to-end driver parity: the env-var contract (SpatialAllocator) and the
   * SurrogateTool meta-pipeline (SrgTool) on fixture layers. */
@@ -164,6 +165,75 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(conv.count() == TpchGeo.points(spark, sfDir).count())
   }
 
+  test("CONVERT_SHAPE reprojects a PointFile CSV's x/y as points") {
+    val dir = tmp("cli-convpf")
+    val csv = s"$dir/points.csv"
+    val pts = Seq((1, -97.0, 40.0), (2, -90.5, 35.25), (3, -104.75, 45.5))
+    Files.write(java.nio.file.Paths.get(csv), pts
+      .map { case (i, lon, lat) => s"$i,$lon,$lat" }
+      .mkString("id,lon,lat\n", "\n", "\n").getBytes("UTF-8"))
+    val lcc = "+proj=lcc,+lat_1=33,+lat_2=45,+lat_0=40,+lon_0=-97"
+    val out = SpatialAllocator.run(spark, Map(
+      "MIMS_PROCESSING" -> "CONVERT_SHAPE",
+      "INPUT_FILE_NAME" -> csv,
+      "INPUT_FILE_TYPE" -> "PointFile",
+      "INPUT_FILE_XCOL" -> "lon",
+      "INPUT_FILE_YCOL" -> "lat",
+      "INPUT_FILE_MAP_PRJN" -> "latlon",
+      "OUTPUT_FILE_MAP_PRJN" -> lcc)).get
+    val (from, to) = (SpatialAllocator.projOf("latlon"), SpatialAllocator.projOf(lcc))
+    val got = out.select("id", "x", "y").collect()
+      .map(r => r.getInt(0) -> (r.getDouble(1), r.getDouble(2))).toMap
+    assert(got.keySet == pts.map(_._1).toSet)
+    pts.foreach { case (i, lon, lat) =>
+      val (gx, gy) = from.inverse(lon, lat)
+      assert(got(i) == to.forward(gx, gy), s"point $i")
+    }
+  }
+
+  test("an unknown OUTPUT_FILE_TYPE fails naming the four targets, also without SURROGATE_FILE") {
+    val dir = tmp("cli-badout")
+    TpchGeo.counties(spark).write.mode("overwrite").parquet(s"$dir/counties")
+    TpchGeo.points(spark, sfDir).write.mode("overwrite").parquet(s"$dir/points")
+    val ncf = s"$dir/srg100.ncf"
+    val e = intercept[IllegalArgumentException](SpatialAllocator.run(spark, Map(
+      "MIMS_PROCESSING" -> "SURROGATE",
+      "OUTPUT_GRID_NAME" -> "TEST8",
+      "OUTPUT_FILE_TYPE" -> "Egrid",
+      "DATA_FILE_NAME" -> s"$dir/counties",
+      "WEIGHT_FILE_NAME" -> s"$dir/points",
+      "WEIGHT_FILE_TYPE" -> "Point",
+      "SURROGATE_NETCDF_FILE" -> ncf)))
+    Seq("Egrid", "RegularGrid", "EGrid", "VariableGrid", "Polygon")
+      .foreach(v => assert(e.getMessage.contains(v), e.getMessage))
+    assert(!Files.exists(java.nio.file.Paths.get(ncf)))
+  }
+
+  test("ALLOCATE reads a shapefile OUTPUT_POLY_FILE and names its OUTPUT_POLY_ATTRS out_id") {
+    import graft.sources.Shapefile
+    val dir = tmp("cli-alloc-shp")
+    TpchGeo.tracts(spark, sfDir).write.mode("overwrite").parquet(s"$dir/tracts")
+    Shapefile.writePolygons(TpchGeo.counties(spark), s"$dir/counties",
+      "geom", Seq(Shapefile.DbfCol("fips", 'C', 5)))
+    val out = SpatialAllocator.run(spark, Map(
+      "MIMS_PROCESSING" -> "ALLOCATE",
+      "INPUT_FILE_NAME" -> s"$dir/tracts",
+      "OUTPUT_POLY_FILE" -> s"$dir/counties",
+      "OUTPUT_POLY_ATTRS" -> "fips",
+      "ALLOCATE_ATTRS" -> "p_size=Aggregate")).get
+    def byId(df: org.apache.spark.sql.DataFrame): Map[String, Double] =
+      df.select(col("out_id").cast("string"), col("p_size")).collect()
+        .map(r => r.getString(0) -> r.getDouble(1)).toMap
+    val got = byId(out)
+    val want = byId(Allocate.allocate(TpchGeo.tracts(spark, sfDir),
+      TpchGeo.counties(spark).withColumnRenamed("fips", "out_id"),
+      Seq("p_size" -> Allocate.Aggregate), TpchGeo.domain, TpchGeo.zres))
+    assert(want.nonEmpty && got.keySet == want.keySet)
+    want.foreach { case (k, v) =>
+      assert(math.abs(got(k) - v) <= 1e-9 * math.abs(v), s"$k: ${got(k)} vs $v")
+    }
+  }
+
   test("SrgTool runs a 3-spec catalog concurrently with post-passes and SRGDESC") {
     val outDir = tmp("srgtool")
     val r = SrgTool.run(spark, TpchGeo.counties(spark),
@@ -294,9 +364,9 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
     val (_, cells) = graft.sources.Sources.variableDotGrid(spark,
       new String(Files.readAllBytes(java.nio.file.Paths.get(s"$dir/dots.txt")),
         "UTF-8"), (a, b) => (a, b), readXY = true)
-    val direct = graft.operators.Surrogate.surrogateToCellPolys(
-      TpchGeo.points(spark, sfDir), TpchGeo.counties(spark), cells,
-      TpchGeo.domain, TpchGeo.zres, 190, kind = "Point")
+    val direct = Surrogate.create(WeightKind.PointW,
+      TpchGeo.points(spark, sfDir), TpchGeo.counties(spark),
+      Surrogate.CellPolys(cells), TpchGeo.domain, TpchGeo.zres, 190)
     assert(out.collect().map(_.toString).sorted.toSeq ==
            direct.collect().map(_.toString).sorted.toSeq)
     import scala.jdk.CollectionConverters._
@@ -340,10 +410,10 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
       "WEIGHT_FILE_TYPE" -> "Point",
       "SURROGATE_ID" -> "180",
       "SURROGATE_FILE" -> smoke)).get
-    val direct = graft.operators.Surrogate.surrogateToEGrid(
+    val direct = Surrogate.create(WeightKind.PointW,
       TpchGeo.points(spark, sfDir), TpchGeo.counties(spark),
-      graft.grid.GridSpec("EG", 0, 0, 1000, 1000, 9, 17),
-      TpchGeo.domain, TpchGeo.zres, 180, kind = "Point")
+      Surrogate.EGrid(graft.grid.GridSpec("EG", 0, 0, 1000, 1000, 9, 17)),
+      TpchGeo.domain, TpchGeo.zres, 180)
     assert(out.collect().map(_.toString).sorted.toSeq ==
            direct.collect().map(_.toString).sorted.toSeq)
     assert(out.count() > 0)
@@ -417,9 +487,9 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
       "SURROGATE_ID" -> "170",
       "SURROGATE_FILE" -> smoke)).get
 
-    val direct = graft.operators.Surrogate.polySurrogateToPolys(
+    val direct = Surrogate.create(WeightKind.PolyW,
       TpchGeo.tracts(spark, sfDir), TpchGeo.counties(spark),
-      spark.read.parquet(s"$dir/outpolys"),
+      Surrogate.Polys(spark.read.parquet(s"$dir/outpolys")),
       TpchGeo.domain, TpchGeo.zres, 170)
     assert(out.collect().map(_.toString).sorted.toSeq ==
            direct.collect().map(_.toString).sorted.toSeq)

@@ -7,7 +7,7 @@ import org.scalatest.BeforeAndAfterAll
 import graft.cells.CellDomain
 import graft.grid.GridSpec
 
-/** The closed-form point→diamond assignment inside surrogateToEGrid must be
+/** The closed-form point→diamond assignment of the EGrid target must be
   * exactly the ray-cast pointInPoly result over the materialized diamonds —
   * including points ON diamond edges (both adjacent diamonds), odd grid
   * origins, dx ≠ dy, and points outside the grid. */
@@ -43,9 +43,9 @@ class EGridSurrogateSpec extends AnyFunSuite with BeforeAndAfterAll {
     val counties = Seq(("X", Seq(Seq(-2000.0, -2000, 90000, -2000,
       90000, 90000, -2000, 90000)))).toDF("fips", "geom")
 
-    // closed-form path (the Point branch of surrogateToEGrid)
-    val cf = Surrogate.surrogateToEGrid(pts, counties, g, domain, 4,
-        srgCode = 1, kind = "Point")
+    // closed-form path (the EGrid target's point branch)
+    val cf = Surrogate.create(WeightKind.PointW, pts, counties,
+        Surrogate.EGrid(g), domain, 4, srgCode = 1)
       .select("col", "row", "numer").collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
 

@@ -121,8 +121,8 @@ class KernelOnceSpec extends AnyFunSuite with BeforeAndAfterAll {
       (1 + qx + qy * 2,
         Seq(Seq(x0, y0, x0 + 3000, y0, x0 + 3000, y0 + 3000, x0, y0 + 3000)))
     }).toDF("out_id", "geom")
-    assertOnce(plan(Surrogate.polySurrogateToPolys(tracts, counties, quads,
-        d, z, srgCode = 4)),
+    assertOnce(plan(Surrogate.create(WeightKind.PolyW, tracts, counties,
+        Surrogate.Polys(quads), d, z, srgCode = 4)),
       Map("poly_clip_geom" -> 2), Some("poly_area"), Map("poly_area" -> 2))
   }
 

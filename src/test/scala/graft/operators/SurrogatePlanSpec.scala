@@ -91,11 +91,12 @@ class SurrogatePlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // their W∩D rows for a second join
     def outPolys = counties.select(col("fips").as("out_id"), col("geom"))
     val builds: Seq[(String, () => DataFrame)] = Seq(
-      "polySurrogateToPolys" -> (() => Surrogate.polySurrogateToPolys(
-        TpchGeo.tracts(spark, SfDir), counties, outPolys, d, z, srgCode = 2,
-        weight = Some("p_size"))),
-      "lineSurrogateToPolys" -> (() => Surrogate.lineSurrogateToPolys(
-        TpchGeo.roads(spark, SfDir), counties, outPolys, d, z, srgCode = 3)))
+      "polySurrogateToPolys" -> (() => Surrogate.create(WeightKind.PolyW,
+        TpchGeo.tracts(spark, SfDir), counties, Surrogate.Polys(outPolys),
+        d, z, srgCode = 2, weight = Some("p_size"))),
+      "lineSurrogateToPolys" -> (() => Surrogate.create(WeightKind.LineW,
+        TpchGeo.roads(spark, SfDir), counties, Surrogate.Polys(outPolys),
+        d, z, srgCode = 3)))
     builds.foreach { case (name, build) =>
       val cached = executed(build()).collect {
         case m: InMemoryTableScanExec => m.relation.output.map(_.name)
@@ -117,9 +118,10 @@ class SurrogatePlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       "polySurrogate" -> (() => tracts),
       "lineSurrogate" -> (() => Surrogate.lineSurrogate(
         TpchGeo.roads(spark, SfDir), counties, g, d, z, srgCode = 3)),
-      "pointSurrogateToPolys" -> (() => Surrogate.pointSurrogateToPolys(
+      "pointSurrogateToPolys" -> (() => Surrogate.create(WeightKind.PointW,
         TpchGeo.points(spark, SfDir), counties,
-        counties.withColumnRenamed("fips", "out_id"), d, z, srgCode = 4)),
+        Surrogate.Polys(counties.withColumnRenamed("fips", "out_id")),
+        d, z, srgCode = 4)),
       "PostOps.merge" -> (() => PostOps.merge(points, tracts, 0.5, 0.5, 5)),
       "PostOps.gapfill" -> (() => PostOps.gapfill(Seq(tracts, points), 6)))
     builds.foreach { case (name, build) =>

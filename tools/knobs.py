@@ -1,15 +1,16 @@
 #!/usr/bin/env python3
 """Settable-value census: the defaulted parameters of non-private defs.
 
-Usage: python3 tools/knobs.py FILE.scala [FILE.scala ...]   (run at repo root)
+Usage: python3 tools/knobs.py [FILE.scala ...]   (run at repo root)
 
 For every member-level `def` (indent <= 2 spaces, i.e. in an object or class
 body) that is not `private` or `private[...]`, lists the parameters that
 carry a default value, one line per def, then prints the total. A defaulted
 parameter is a value a caller may set or leave alone: the count is the size
 of the options surface the simplicity review compares before and after a
-change. Parameter lists may span lines; defaults may hold parentheses,
-brackets, braces and string literals.
+change. With no arguments the census covers every src/main .scala file, as
+tools/loc.py and tools/udfs.py do. Parameter lists may span lines; defaults
+may hold parentheses, brackets, braces and string literals.
 """
 import re
 import sys
@@ -116,6 +117,9 @@ def strip_comments(src):
 
 
 def main(paths):
+    if not paths:
+        from udfs import scala_files
+        paths = list(scala_files("src/main"))
     total = 0
     for path in paths:
         src = strip_comments(open(path).read())
