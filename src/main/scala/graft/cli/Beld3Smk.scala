@@ -139,10 +139,7 @@ object Beld3Smk {
 
     val outputs = merged.map { case (kind, m) =>
       val path = s"${prefix}_$kind.ncf"
-      val c = entry.coord
-      val h = Ioapi.headerFor(outGrid, m.vars, gdtyp = c.ctype,
-        pAlp = c.alpha, pBet = c.beta, pGam = c.gamma,
-        xcent = c.xcent, ycent = c.ycent,
+      val h = Ioapi.headerFor(outGrid, m.vars, entry.coord,
         sdate = m.sdate, stime = m.stime, tstep = m.tstep)
       Ioapi.write(toLong(m.df), h, path, numRecs = m.nrec)
       kind -> path

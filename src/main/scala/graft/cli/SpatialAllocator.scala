@@ -3,7 +3,7 @@ package graft.cli
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.cells.{CellDomain, CellIndex}
-import graft.grid.{GridSpec, Proj}
+import graft.grid.{Ellipsoid, GridSpec, Proj}
 import graft.operators._
 import graft.functions.WeightExpr
 import graft.sources.{Sources, GridDesc}
@@ -84,12 +84,13 @@ object SpatialAllocator {
     def grid(): GridSpec = gdEntry().map(_.grid)
       .getOrElse(graft.grid.GridCatalog.byName(req("OUTPUT_GRID_NAME")))
 
-    // the #GRID header / .ncf header must carry the grid's ACTUAL
-    // projection when a GRIDDESC supplies one (convert_txt2ncf.f:80-97
-    // reads P_ALP..YCENT from the surrogate header; allocate.c:750-833
-    // writes it) — defaults only when no catalog entry exists
-    def projInfo(): Smoke.ProjInfo =
-      gdEntry().map(e => Smoke.projInfoFor(e.coord)).getOrElse(Smoke.ProjInfo())
+    // the grid's one coordinate system, which every header of the run
+    // describes: the #GRID line and the .ncf's GDTYP, P_ALP..YCENT
+    // (allocate.c:750-833 writes the first; convert_txt2ncf.f:80-97 copies
+    // it into the second). The GRIDDESC entry's, else SMOKE's default
+    lazy val coord: GridDesc.CoordSys =
+      (if (cfg.contains("OUTPUT_GRID_NAME")) gdEntry().map(_.coord) else None)
+        .getOrElse(GridDesc.CoordSys.Default)
 
     // each layer's file type is read once: it picks the layer's reader, and
     // its one parse picks every geometry dispatch on the layer (OVERLAY's
@@ -122,21 +123,26 @@ object SpatialAllocator {
         else spark.read.parquet(path)
     }
 
+    // every CRS of the run is read here: <PFX>_MAP_PRJN with
+    // <PFX>_ELLIPSOID appended; None when the layer declares none
+    def crs(pfx: String): Option[Proj] = cfg.get(s"${pfx}_MAP_PRJN").map(spec =>
+      Proj.parse(cfg.get(s"${pfx}_ELLIPSOID").fold(spec)(e => s"$spec,$e")))
+
     // grid-CRS target for during-scan reprojection (PolyReader reprojects
     // every input layer into the output map projection at read time,
     // srg_main.c:171,227-230): OUTPUT_FILE_MAP_PRJN wins, else the
-    // GRIDDESC coordinate system
-    def targetProj(): Option[Proj] =
-      cfg.get("OUTPUT_FILE_MAP_PRJN").map(projOf)
-        .orElse(gdEntry().map(e => Proj.fromGriddesc(e.coord)))
+    // GRIDDESC coordinate system; OUTPUT_FILE_ELLIPSOID applies to both
+    def targetProj(): Option[Proj] = crs("OUTPUT_FILE").orElse(gdEntry().map(e =>
+      Proj.fromGriddesc(e.coord,
+        cfg.get("OUTPUT_FILE_ELLIPSOID").fold(Ellipsoid.Sphere)(Ellipsoid.parse))))
 
-    // reproject a layer from its declared CRS (<PFX>_MAP_PRJN [+ _ELLIPSOID])
-    // into the grid CRS; a layer with no declared CRS is already there
+    // reproject a layer from its declared CRS into the grid CRS; a layer
+    // with no declared CRS is already there
     def reprojected(df: DataFrame, pfx: String, kind: WeightKind): DataFrame =
-      cfg.get(s"${pfx}_MAP_PRJN") match {
+      crs(pfx) match {
         // targetProj() only resolves when a source CRS is declared — it
         // may consult the GRIDDESC entry, which need not exist otherwise
-        case Some(spec) => targetProj() match {
+        case Some(from) => targetProj() match {
           case None =>
             // a declared source CRS with no resolvable grid CRS would
             // silently mix projections — fail instead
@@ -144,11 +150,7 @@ object SpatialAllocator {
               s"${pfx}_MAP_PRJN is set but the grid CRS is unknown: set " +
                 "OUTPUT_FILE_MAP_PRJN or provide a GRIDDESC entry for " +
                 "OUTPUT_GRID_NAME")
-          case Some(to) =>
-            val full = cfg.get(s"${pfx}_ELLIPSOID")
-              .map(e => s"$spec,$e").getOrElse(spec)
-            val from = projOf(full)
-            Reproject.layer(kind, df, from, to, maxSeg)
+          case Some(to) => Reproject.layer(kind, df, from, to, maxSeg)
         }
         case None => df
       }
@@ -221,14 +223,7 @@ object SpatialAllocator {
                  sdate: Int = 2007001, stime: Int = 0,
                  tstep: Int = 10000): Unit = {
       import graft.sources.Ioapi
-      val g = grid(); val c = gdEntry().map(_.coord)
-      val h = Ioapi.headerFor(g, vars,
-        gdtyp = c.map(_.ctype).getOrElse(2),
-        pAlp = c.map(_.alpha).getOrElse(30.0),
-        pBet = c.map(_.beta).getOrElse(60.0),
-        pGam = c.map(_.gamma).getOrElse(-90.0),
-        xcent = c.map(_.xcent).getOrElse(-90.0),
-        ycent = c.map(_.ycent).getOrElse(40.0),
+      val h = Ioapi.headerFor(grid(), vars, coord,
         sdate = sdate, stime = stime, tstep = tstep)
       Ioapi.write(long, h, path, numRecs = numRecs)
     }
@@ -296,13 +291,14 @@ object SpatialAllocator {
           }
           Smoke.write(srgFull,
             sinkGrid.getOrElse(GridSpec("NOGRID", 0, 0, 0, 0, 0, 0)),
-            if (haveGrid) projInfo() else Smoke.ProjInfo(), out,
+            Smoke.projInfoFor(coord), out,
             withQa = qaFields.any, denomThreshold = thr, headerTag = tag,
             fields = qaFields, writeHeader = hdrOn && sinkGrid.isDefined)
         }
         // srg2ncf in one pass (util/srg2ncf/convert_txt2ncf.f) — the .ncf
-        // header carries the GRIDDESC projection, and only live counties
-        // accumulate (the Fortran skips '#' comment lines)
+        // header carries the grid's projection, as the SMOKE header does,
+        // and only live counties accumulate (the Fortran skips '#' comment
+        // lines)
         cfg.get("SURROGATE_NETCDF_FILE").foreach { p =>
           // convert_txt2ncf's grid is the REGULAR output grid; variable-
           // grid col/row indices would land in the wrong envelope, and
@@ -314,14 +310,7 @@ object SpatialAllocator {
               "SURROGATE_NETCDF_FILE requires a RegularGrid/EGrid output " +
                 s"(OUTPUT_FILE_TYPE=$outType has no regular cell indices)")
           }
-          val c = gdEntry().map(_.coord)
-          graft.sources.Ioapi.srg2ncf(srg, g, p,
-            gdtyp = c.map(_.ctype).getOrElse(6),
-            pAlp = c.map(_.alpha).getOrElse(0.0),
-            pBet = c.map(_.beta).getOrElse(0.0),
-            pGam = c.map(_.gamma).getOrElse(0.0),
-            xcent = c.map(_.xcent).getOrElse(0.0),
-            ycent = c.map(_.ycent).getOrElse(0.0))
+          graft.sources.Ioapi.srg2ncf(srg, g, p, coord)
         }
         Some(srg)
 
@@ -539,8 +528,8 @@ object SpatialAllocator {
       case "CONVERT_SHAPE" =>
         val out = Reproject.layer(inputKind,
           readLayer(req("INPUT_FILE_NAME"), inputType),
-          projOf(cfg.getOrElse("INPUT_FILE_MAP_PRJN", "latlon")),
-          projOf(cfg.getOrElse("OUTPUT_FILE_MAP_PRJN", "latlon")), maxSeg)
+          crs("INPUT_FILE").getOrElse(Proj.LatLon),
+          crs("OUTPUT_FILE").getOrElse(Proj.LatLon), maxSeg)
         cfg.get("OUTPUT_FILE_NAME").foreach(p =>
           out.write.mode("overwrite").parquet(p))
         Some(out)
@@ -549,90 +538,5 @@ object SpatialAllocator {
         throw new IllegalArgumentException(s"unknown MIMS_PROCESSING=$other")
     }
     result
-  }
-
-  /** "+proj=lcc,+lat_1=33,+lat_2=45,+lat_0=40,+lon_0=-97"-style minimal
-    * PROJ-ish spec (subset the engine implements). An `+ellps=NAME`,
-    * `+datum=NAME`, or non-spherical `+a=…,+b=…`/`+a=…,+rf=…` selects the
-    * ellipsoidal forms (lcc, tmerc, utm, merc, stere, polar stere, laea,
-    * aea — every family with a published Snyder ellipsoidal series);
-    * everything else stays on the reference's default sphere. Datum SHIFT
-    * (towgs84/nadgrids) stays out of scope per SURVEY §7.6 — the docs
-    * themselves do no sphere↔NAD83/WGS84 transformation. */
-  def projOf(spec: String): Proj = {
-    val kv = spec.split(",").map(_.trim.stripPrefix("+"))
-      .filter(_.contains("=")).map { s =>
-        val Array(k, v) = s.split("=", 2); k -> v
-      }.toMap
-    val ell: Option[graft.grid.Ellipsoid] =
-      (if (kv.contains("ellps") || kv.contains("datum") || kv.contains("a"))
-         Some(graft.grid.Ellipsoid.parse(spec))
-       else None).filter(!_.isSphere)
-    spec.split(",").head.trim.stripPrefix("+").stripPrefix("proj=") match {
-      case "latlon" | "latlong" => Proj.LatLon
-      case "lcc" if ell.isDefined =>
-        graft.grid.Ellipsoidal.LccE(kv("lat_1").toDouble, kv("lat_2").toDouble,
-          kv("lat_0").toDouble, kv("lon_0").toDouble, ell.get,
-          kv.getOrElse("x_0", "0").toDouble, kv.getOrElse("y_0", "0").toDouble)
-      case "lcc" => Proj.Lcc(kv("lat_1").toDouble, kv("lat_2").toDouble,
-        kv("lat_0").toDouble, kv("lon_0").toDouble)
-      case "merc" if ell.isDefined && kv.contains("lat_ts") =>
-        graft.grid.Ellipsoidal.MercE.atTs(kv("lat_ts").toDouble,
-          kv.getOrElse("lon_0", "0").toDouble, ell.get,
-          kv.getOrElse("x_0", "0").toDouble, kv.getOrElse("y_0", "0").toDouble)
-      case "merc" if ell.isDefined =>
-        graft.grid.Ellipsoidal.MercE(kv.getOrElse("lon_0", "0").toDouble, ell.get,
-          kv.getOrElse("k_0", "1").toDouble,
-          kv.getOrElse("x_0", "0").toDouble, kv.getOrElse("y_0", "0").toDouble)
-      case "merc" if kv.contains("lat_ts") =>
-        Proj.Merc2SP(kv("lat_ts").toDouble, kv.getOrElse("lon_0", "0").toDouble,
-          kv.getOrElse("x_0", "0").toDouble, kv.getOrElse("y_0", "0").toDouble)
-      case "merc" => Proj.Mercator(kv.getOrElse("lon_0", "0").toDouble,
-        kv.getOrElse("k_0", "1").toDouble,
-        kv.getOrElse("x_0", "0").toDouble, kv.getOrElse("y_0", "0").toDouble)
-      case "tmerc" if ell.isDefined =>
-        graft.grid.Ellipsoidal.TmercE(kv("lon_0").toDouble, ell.get,
-          kv.getOrElse("k_0", "0.9996").toDouble,
-          kv.getOrElse("x_0", "500000").toDouble, kv.getOrElse("y_0", "0").toDouble,
-          kv.getOrElse("lat_0", "0").toDouble)
-      case "tmerc" => Proj.Tmerc(kv("lon_0").toDouble,
-        kv.getOrElse("k_0", "0.9996").toDouble,
-        kv.getOrElse("x_0", "500000").toDouble, kv.getOrElse("y_0", "0").toDouble,
-        kv.getOrElse("lat_0", "0").toDouble)
-      case "utm" if ell.isDefined =>
-        graft.grid.Ellipsoidal.utmZoneE(kv("zone").toInt, ell.get)
-      case "utm" => Proj.utmZone(kv("zone").toInt)
-      case "stere" if ell.isDefined && kv.contains("lat_ts") =>
-        graft.grid.Ellipsoidal.PolarStereE(kv("lat_ts").toDouble,
-          kv.getOrElse("lon_0", "0").toDouble, ell.get,
-          kv.getOrElse("k_0", "1").toDouble,
-          kv.getOrElse("x_0", "0").toDouble, kv.getOrElse("y_0", "0").toDouble)
-      case "stere" if ell.isDefined =>
-        graft.grid.Ellipsoidal.StereE(kv("lat_0").toDouble, kv("lon_0").toDouble,
-          ell.get, kv.getOrElse("k_0", "1").toDouble,
-          kv.getOrElse("x_0", "0").toDouble, kv.getOrElse("y_0", "0").toDouble)
-      case "stere" if kv.contains("lat_ts") =>
-        Proj.PolarStere(kv("lat_ts").toDouble, kv.getOrElse("lon_0", "0").toDouble,
-          kv.getOrElse("k_0", "1").toDouble,
-          kv.getOrElse("x_0", "0").toDouble, kv.getOrElse("y_0", "0").toDouble)
-      case "stere" => Proj.Stere(kv("lat_0").toDouble, kv("lon_0").toDouble,
-        kv.getOrElse("k_0", "1").toDouble,
-        kv.getOrElse("x_0", "0").toDouble, kv.getOrElse("y_0", "0").toDouble)
-      case "laea" if ell.isDefined =>
-        graft.grid.Ellipsoidal.LaeaE(kv("lat_0").toDouble, kv("lon_0").toDouble,
-          ell.get, kv.getOrElse("x_0", "0").toDouble,
-          kv.getOrElse("y_0", "0").toDouble)
-      case "laea" => Proj.Laea(kv("lat_0").toDouble, kv("lon_0").toDouble,
-        kv.getOrElse("x_0", "0").toDouble, kv.getOrElse("y_0", "0").toDouble)
-      case "aea" if ell.isDefined =>
-        graft.grid.Ellipsoidal.AeaE(kv("lat_1").toDouble, kv("lat_2").toDouble,
-          kv("lat_0").toDouble, kv("lon_0").toDouble, ell.get,
-          kv.getOrElse("x_0", "0").toDouble, kv.getOrElse("y_0", "0").toDouble)
-      case "aea" => Proj.Aea(kv("lat_1").toDouble, kv("lat_2").toDouble,
-        kv("lat_0").toDouble, kv("lon_0").toDouble)
-      case "sinu" => Proj.Sinu(kv("lon_0").toDouble,
-        kv.getOrElse("x_0", "0").toDouble, kv.getOrElse("y_0", "0").toDouble)
-      case other => throw new IllegalArgumentException(s"unsupported proj $other")
-    }
   }
 }

@@ -153,12 +153,6 @@ object SrgTool {
         lines.mkString("", "\n", "\n").getBytes("UTF-8"))
     }
 
-    // release the per-surrogate cached intermediates (W∩D fragments,
-    // per-cell matrices) — a catalog run generates many; without this the
-    // cached DISK blocks accumulate for the whole session. Nothing reads
-    // them again: the returned tables are the normalized checkpoints.
-    if (outDir.isDefined) graft.spark.PersistTracker.drain()
-
     Result(normalized, qaSum, qaNot1, descRows)
   }
 }

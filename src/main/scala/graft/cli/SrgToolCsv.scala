@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.cells.CellDomain
-import graft.grid.GridSpec
+import graft.grid.{Ellipsoid, GridSpec, Proj}
 import graft.functions.{MergeEquation, WeightExpr}
 import graft.operators.{Filters, Reproject, WeightKind}
 import graft.sources.{GridDesc, Shapefile}
@@ -163,12 +163,10 @@ object SrgToolCsv {
     val gdText = new String(Files.readAllBytes(resolve(req("GRIDDESC"))), "UTF-8")
     val gdEntry = GridDesc.parse(gdText).grids(gridName)
     val grid: GridSpec = gdEntry.grid
-    // OUTPUT_FILE_ELLIPSOID (SA_ch05_surrogate.md control variables)
-    // selects the ellipsoidal GRIDDESC forms; default is the I/O API sphere
-    val outEll = ctl.get("OUTPUT_FILE_ELLIPSOID")
-      .map(graft.grid.Ellipsoid.parse)
-      .getOrElse(graft.grid.Ellipsoid.Sphere)
-    val gridProj: graft.grid.Proj = graft.grid.Proj.fromGriddesc(gdEntry.coord, outEll)
+    // OUTPUT_FILE_ELLIPSOID (SA_ch05_surrogate.md control variables) is
+    // the grid's ellipsoid; default is the I/O API sphere
+    val gridProj = Proj.fromGriddesc(gdEntry.coord,
+      ctl.get("OUTPUT_FILE_ELLIPSOID").fold(Ellipsoid.Sphere)(Ellipsoid.parse))
     val maxSeg = ctl.get("MAX_LINE_SEG").map(_.toDouble).getOrElse(0.0)
 
     def layer(name: String): DataFrame = {
@@ -188,7 +186,7 @@ object SrgToolCsv {
       else {
         val spec = e.projection +
           (if (e.ellipsoid.nonEmpty) "," + e.ellipsoid else "")
-        val from = SpatialAllocator.projOf(spec)
+        val from = Proj.parse(spec)
         if (from == gridProj) raw
         else Reproject.layer(WeightKind.of(raw), raw, from, gridProj, maxSeg)
       }

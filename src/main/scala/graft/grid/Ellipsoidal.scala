@@ -24,7 +24,7 @@ final case class Ellipsoid(a: Double, b: Double) {
 object Ellipsoid {
   private def rf(a: Double, invF: Double) = Ellipsoid(a, a * (1.0 - 1.0 / invF))
 
-  val Sphere = Ellipsoid(6370997.0, 6370997.0) // the reference default
+  val Sphere = Ellipsoid(Proj.R, Proj.R) // the reference default
   val GRS80 = rf(6378137.0, 298.257222101)
   val WGS84 = rf(6378137.0, 298.257223563)
   val Clarke1866 = Ellipsoid(6378206.4, 6356583.8)
@@ -205,9 +205,6 @@ object Ellipsoidal {
     }
     val name = "tmerc_e"
   }
-
-  def utmZoneE(zone: Int, ell: Ellipsoid): TmercE =
-    TmercE(-183.0 + 6.0 * zone, ell)
 
   /** Sinusoidal, ellipsoidal (Snyder eq. 30-8/30-9 forward, 30-10..30-21
     * inverse): x = a·Δλ·cosφ/√(1−e²sin²φ), y = M(φ); the inverse recovers

@@ -5,11 +5,15 @@ package graft.grid
   * SA_ch03_vector.md:406-582): geographic (1), Lambert conformal conic (2),
   * Mercator 1SP (3) and 2SP (4), oblique stereographic (5), UTM (6), polar
   * stereographic (7), transverse Mercator (8), Lambert azimuthal equal-area
-  * (9), Albers equal-area conic (10), sinusoidal (11). Spherical forms
-  * (radius 6370997 m, the I/O API sphere — "the I/O API assumes that the
-  * earth's ellipsoid is a sphere", SA_ch03_vector.md:384), Snyder 1987
-  * closed forms — adequate because surrogate ratios are invariant to the
-  * ellipsoid as long as both layers use the same CRS.
+  * (9), Albers equal-area conic (10), sinusoidal (11).
+  *
+  * Each family has two forms, Snyder 1987 closed forms both: the exact
+  * spherical one here, at a sphere's radius R (default 6370997 m, the I/O
+  * API sphere — "the I/O API assumes that the earth's ellipsoid is a
+  * sphere", SA_ch03_vector.md:384), and the ellipsoidal series in
+  * `Ellipsoidal`. The family table below (`lcc` … `sinu`) picks one of
+  * the two from the layer's `Ellipsoid`, as PROJ does inside each family;
+  * `parse` and `fromGriddesc` read a CRS through that table only.
   */
 trait Proj { // extended by grid.Ellipsoidal's forms too
   /** lon/lat degrees → projected x/y meters */
@@ -39,7 +43,8 @@ object Proj {
 
   /** Lambert conformal conic, 2 standard parallels, spherical
     * (Snyder 1987 eq. 15-1..15-5; matches PROJ +proj=lcc +R=6370997). */
-  final case class Lcc(lat1: Double, lat2: Double, lat0: Double, lon0: Double)
+  final case class Lcc(lat1: Double, lat2: Double, lat0: Double, lon0: Double,
+                       x0: Double = 0.0, y0: Double = 0.0, R: Double = Proj.R)
       extends Proj {
     private val p1 = math.toRadians(lat1)
     private val p2 = math.toRadians(lat2)
@@ -56,11 +61,12 @@ object Proj {
       val phi = math.toRadians(lat)
       val rho = R * F / math.pow(math.tan(math.Pi / 4 + phi / 2), n)
       val th = n * (math.toRadians(lon) - l0)
-      (rho * math.sin(th), rho0 - rho * math.cos(th))
+      (rho * math.sin(th) + x0, rho0 - rho * math.cos(th) + y0)
     }
     def inverse(x: Double, y: Double): (Double, Double) = {
-      val rho = math.signum(n) * math.sqrt(x * x + (rho0 - y) * (rho0 - y))
-      val th = math.atan2(x, rho0 - y)
+      val xn = x - x0; val yn = y - y0
+      val rho = math.signum(n) * math.sqrt(xn * xn + (rho0 - yn) * (rho0 - yn))
+      val th = math.atan2(xn, rho0 - yn)
       val phi = 2 * math.atan(math.pow(R * F / rho, 1 / n)) - math.Pi / 2
       (math.toDegrees(l0 + th / n), math.toDegrees(phi))
     }
@@ -70,7 +76,8 @@ object Proj {
   /** Spherical Mercator 1SP about lon0 (GRIDDESC type 3: lon_0, k_0, false
     * origin). */
   final case class Mercator(lon0: Double, k0: Double = 1.0,
-                            x0: Double = 0.0, y0: Double = 0.0) extends Proj {
+                            x0: Double = 0.0, y0: Double = 0.0,
+                            R: Double = Proj.R) extends Proj {
     private val l0 = math.toRadians(lon0)
     def forward(lon: Double, lat: Double): (Double, Double) = {
       val x = R * k0 * (math.toRadians(lon) - l0) + x0
@@ -88,8 +95,9 @@ object Proj {
   /** Spherical Mercator 2SP (GRIDDESC type 4): true scale at lat_ts —
     * equivalent to 1SP with k0 = cos(lat_ts) on a sphere (Snyder eq. 7-1). */
   final case class Merc2SP(latTs: Double, lon0: Double,
-                           x0: Double = 0.0, y0: Double = 0.0) extends Proj {
-    private val inner = Mercator(lon0, math.cos(math.toRadians(latTs)), x0, y0)
+                           x0: Double = 0.0, y0: Double = 0.0,
+                           R: Double = Proj.R) extends Proj {
+    private val inner = Mercator(lon0, math.cos(math.toRadians(latTs)), x0, y0, R)
     def forward(lon: Double, lat: Double): (Double, Double) = inner.forward(lon, lat)
     def inverse(x: Double, y: Double): (Double, Double) = inner.inverse(x, y)
     val name = "merc2sp"
@@ -98,7 +106,8 @@ object Proj {
   /** Oblique/equatorial stereographic, spherical (Snyder eq. 21-2..21-4,
     * inverse 20-14..20-15; GRIDDESC type 5: lat_0, lon_0, false origin). */
   final case class Stere(lat0: Double, lon0: Double, k0: Double = 1.0,
-                         x0: Double = 0.0, y0: Double = 0.0) extends Proj {
+                         x0: Double = 0.0, y0: Double = 0.0,
+                         R: Double = Proj.R) extends Proj {
     private val p0 = math.toRadians(lat0)
     private val l0 = math.toRadians(lon0)
     private val sinP0 = math.sin(p0)
@@ -127,7 +136,8 @@ object Proj {
     * eq. 21-7/21-8 with 21-33; GRIDDESC type 7: lat_ts, lon_0, k_0, false
     * origin). lat_ts < 0 selects the south-polar aspect. */
   final case class PolarStere(latTs: Double, lon0: Double, k0: Double = 1.0,
-                              x0: Double = 0.0, y0: Double = 0.0) extends Proj {
+                              x0: Double = 0.0, y0: Double = 0.0,
+                              R: Double = Proj.R) extends Proj {
     private val south = latTs < 0
     private val l0 = math.toRadians(lon0)
     private val pts = math.toRadians(math.abs(latTs))
@@ -156,7 +166,8 @@ object Proj {
     * inverse 20-14..20-15 with 24-16; GRIDDESC type 9: lat_0, lon_0, false
     * origin). */
   final case class Laea(lat0: Double, lon0: Double,
-                        x0: Double = 0.0, y0: Double = 0.0) extends Proj {
+                        x0: Double = 0.0, y0: Double = 0.0,
+                        R: Double = Proj.R) extends Proj {
     private val p0 = math.toRadians(lat0)
     private val l0 = math.toRadians(lon0)
     private val sinP0 = math.sin(p0)
@@ -183,7 +194,8 @@ object Proj {
 
   /** Albers equal-area conic, 2 standard parallels, spherical (Snyder
     * eq. 14-1..14-11; GRIDDESC type 10: lat_1, lat_2, lon_0, lat_0). */
-  final case class Aea(lat1: Double, lat2: Double, lat0: Double, lon0: Double)
+  final case class Aea(lat1: Double, lat2: Double, lat0: Double, lon0: Double,
+                       x0: Double = 0.0, y0: Double = 0.0, R: Double = Proj.R)
       extends Proj {
     private val p1 = math.toRadians(lat1)
     private val p2 = math.toRadians(lat2)
@@ -196,11 +208,12 @@ object Proj {
       val phi = math.toRadians(lat)
       val rho = R * math.sqrt(C - 2.0 * n * math.sin(phi)) / n
       val th = n * (math.toRadians(lon) - l0)
-      (rho * math.sin(th), rho0 - rho * math.cos(th))
+      (rho * math.sin(th) + x0, rho0 - rho * math.cos(th) + y0)
     }
     def inverse(x: Double, y: Double): (Double, Double) = {
-      val rho = math.sqrt(x * x + (rho0 - y) * (rho0 - y)) * math.signum(n)
-      val th = math.atan2(x * math.signum(n), (rho0 - y) * math.signum(n))
+      val xn = x - x0; val yn = y - y0
+      val rho = math.sqrt(xn * xn + (rho0 - yn) * (rho0 - yn)) * math.signum(n)
+      val th = math.atan2(xn * math.signum(n), (rho0 - yn) * math.signum(n))
       val phi = math.asin((C - (rho * n / R) * (rho * n / R)) / (2.0 * n))
       (normLon(math.toDegrees(l0 + th / n)), math.toDegrees(phi))
     }
@@ -209,8 +222,8 @@ object Proj {
 
   /** Sinusoidal, spherical (Snyder eq. 30-1/30-2; GRIDDESC type 11: lon_0,
     * false origin). */
-  final case class Sinu(lon0: Double, x0: Double = 0.0, y0: Double = 0.0)
-      extends Proj {
+  final case class Sinu(lon0: Double, x0: Double = 0.0, y0: Double = 0.0,
+                        R: Double = Proj.R) extends Proj {
     private val l0 = math.toRadians(lon0)
     def forward(lon: Double, lat: Double): (Double, Double) = {
       val phi = math.toRadians(lat)
@@ -228,7 +241,7 @@ object Proj {
     * of natural origin). */
   final case class Tmerc(lon0: Double, k0: Double = 0.9996,
                          x0: Double = 500000.0, y0: Double = 0.0,
-                         lat0: Double = 0.0) extends Proj {
+                         lat0: Double = 0.0, R: Double = Proj.R) extends Proj {
     private val l0 = math.toRadians(lon0)
     private val m0 = math.toRadians(lat0) // spherical meridian distance = R·phi
     def forward(lon: Double, lat: Double): (Double, Double) = {
@@ -249,50 +262,119 @@ object Proj {
     val name = "tmerc"
   }
 
-  def utmZone(zone: Int): Tmerc = Tmerc(-183.0 + 6.0 * zone)
+  // ------------------------------------------------------------ family table
+  // One function per GRIDDESC family (types 2-11; type 1 is LatLon): on a
+  // sphere the exact spherical form at that sphere's radius, else the
+  // Snyder ellipsoidal series. The spherical forms stay because the series
+  // drift from them (the TM series by centimetres 2° off its central
+  // meridian, and it diverges far from it), and they are what PROJ uses on
+  // a sphere.
+
+  def lcc(lat1: Double, lat2: Double, lat0: Double, lon0: Double,
+          x0: Double, y0: Double, ell: Ellipsoid): Proj =
+    if (ell.isSphere) Lcc(lat1, lat2, lat0, lon0, x0, y0, ell.a)
+    else Ellipsoidal.LccE(lat1, lat2, lat0, lon0, ell, x0, y0)
+
+  def merc(lon0: Double, k0: Double, x0: Double, y0: Double, ell: Ellipsoid): Proj =
+    if (ell.isSphere) Mercator(lon0, k0, x0, y0, ell.a)
+    else Ellipsoidal.MercE(lon0, ell, k0, x0, y0)
+
+  def merc2sp(latTs: Double, lon0: Double, x0: Double, y0: Double,
+              ell: Ellipsoid): Proj =
+    if (ell.isSphere) Merc2SP(latTs, lon0, x0, y0, ell.a)
+    else Ellipsoidal.MercE.atTs(latTs, lon0, ell, x0, y0)
+
+  def stere(lat0: Double, lon0: Double, k0: Double, x0: Double, y0: Double,
+            ell: Ellipsoid): Proj =
+    if (ell.isSphere) Stere(lat0, lon0, k0, x0, y0, ell.a)
+    else Ellipsoidal.StereE(lat0, lon0, ell, k0, x0, y0)
+
+  /** UTM: transverse Mercator on the zone's central meridian, k0 0.9996. */
+  def utm(zone: Double, x0: Double, y0: Double, ell: Ellipsoid): Proj =
+    tmerc(-183.0 + 6.0 * zone, 0.9996, x0, y0, 0.0, ell)
+
+  def polarStere(latTs: Double, lon0: Double, k0: Double, x0: Double,
+                 y0: Double, ell: Ellipsoid): Proj =
+    if (ell.isSphere) PolarStere(latTs, lon0, k0, x0, y0, ell.a)
+    else Ellipsoidal.PolarStereE(latTs, lon0, ell, k0, x0, y0)
+
+  def tmerc(lon0: Double, k0: Double, x0: Double, y0: Double, lat0: Double,
+            ell: Ellipsoid): Proj =
+    if (ell.isSphere) Tmerc(lon0, k0, x0, y0, lat0, ell.a)
+    else Ellipsoidal.TmercE(lon0, ell, k0, x0, y0, lat0)
+
+  def laea(lat0: Double, lon0: Double, x0: Double, y0: Double,
+           ell: Ellipsoid): Proj =
+    if (ell.isSphere) Laea(lat0, lon0, x0, y0, ell.a)
+    else Ellipsoidal.LaeaE(lat0, lon0, ell, x0, y0)
+
+  def aea(lat1: Double, lat2: Double, lat0: Double, lon0: Double,
+          x0: Double, y0: Double, ell: Ellipsoid): Proj =
+    if (ell.isSphere) Aea(lat1, lat2, lat0, lon0, x0, y0, ell.a)
+    else Ellipsoidal.AeaE(lat1, lat2, lat0, lon0, ell, x0, y0)
+
+  def sinu(lon0: Double, x0: Double, y0: Double, ell: Ellipsoid): Proj =
+    if (ell.isSphere) Sinu(lon0, x0, y0, ell.a)
+    else Ellipsoidal.SinuE(lon0, ell, x0, y0)
+
+  /** A PROJ-style spec, comma-separated, '+' optional:
+    * "+proj=lcc,+lat_1=33,+lat_2=45,+lat_0=40,+lon_0=-97[,+x_0=…,+y_0=…]",
+    * with an optional ellipsoid ("+ellps=NAME", "+datum=NAME", or
+    * "+a=…[,+b=…|,+rf=…]", see `Ellipsoid.parse`; without one, the
+    * reference's default sphere). The reference hands the same tokens to
+    * PROJ (mims_spatl_proj.c:109-360). Datum SHIFT (towgs84/nadgrids)
+    * stays out of scope per SURVEY §7.6 — the docs themselves do no
+    * sphere↔NAD83/WGS84 transformation. */
+  def parse(spec: String): Proj = {
+    val kv = spec.split(",").map(_.trim.stripPrefix("+"))
+      .filter(_.contains("=")).map { s =>
+        val Array(k, v) = s.split("=", 2); k -> v
+      }.toMap
+    def num(k: String): Double = kv(k).toDouble
+    def opt(k: String, default: Double): Double = kv.get(k).fold(default)(_.toDouble)
+    val ell =
+      if (Seq("ellps", "datum", "a").exists(kv.contains)) Ellipsoid.parse(spec)
+      else Ellipsoid.Sphere
+    val (x0, y0) = (opt("x_0", 0.0), opt("y_0", 0.0))
+    spec.split(",").head.trim.stripPrefix("+").stripPrefix("proj=") match {
+      case "latlon" | "latlong" => LatLon
+      case "lcc" => lcc(num("lat_1"), num("lat_2"), num("lat_0"), num("lon_0"), x0, y0, ell)
+      case "merc" if kv.contains("lat_ts") =>
+        merc2sp(num("lat_ts"), opt("lon_0", 0.0), x0, y0, ell)
+      case "merc" => merc(opt("lon_0", 0.0), opt("k_0", 1.0), x0, y0, ell)
+      case "stere" if kv.contains("lat_ts") =>
+        polarStere(num("lat_ts"), opt("lon_0", 0.0), opt("k_0", 1.0), x0, y0, ell)
+      case "stere" => stere(num("lat_0"), num("lon_0"), opt("k_0", 1.0), x0, y0, ell)
+      // PROJ fixes UTM's false origin, so +x_0/+y_0 do not move it
+      case "utm" => utm(kv("zone").toInt, 500000.0, 0.0, ell)
+      case "tmerc" => tmerc(num("lon_0"), opt("k_0", 0.9996),
+        opt("x_0", 500000.0), y0, opt("lat_0", 0.0), ell)
+      case "laea" => laea(num("lat_0"), num("lon_0"), x0, y0, ell)
+      case "aea" => aea(num("lat_1"), num("lat_2"), num("lat_0"), num("lon_0"), x0, y0, ell)
+      case "sinu" => sinu(num("lon_0"), x0, y0, ell)
+      case other => throw new IllegalArgumentException(s"unsupported proj $other")
+    }
+  }
 
   /** GRIDDESC ctype dispatch (SA_ch03_vector.md Table 1, types 1-11; the
     * reference's mimsSetProjection builds the same PROJ args,
-    * mims_spatl_proj.c:109-360). */
-  def fromGriddesc(c: graft.sources.GridDesc.CoordSys): Proj = c.ctype match {
-    case 1  => LatLon
-    case 2  => Lcc(c.alpha, c.beta, c.ycent, c.xcent)
-    case 3  => Mercator(c.alpha, if (c.beta == 0.0) 1.0 else c.beta, c.gamma, c.xcent)
-    case 4  => Merc2SP(c.alpha, c.beta, c.gamma, c.xcent)
-    case 5  => Stere(c.alpha, c.beta, 1.0, c.gamma, c.xcent)
-    case 6  => Tmerc(-183.0 + 6.0 * c.alpha, 0.9996, c.beta, c.gamma)
-    case 7  => PolarStere(c.alpha, c.beta, if (c.gamma == 0.0) 1.0 else c.gamma,
-                          c.xcent, c.ycent)
-    case 8  => Tmerc(c.beta, if (c.gamma == 0.0) 1.0 else c.gamma,
-                     c.xcent, c.ycent, c.alpha)
-    case 9  => Laea(c.alpha, c.beta, c.gamma, c.xcent)
-    case 10 => Aea(c.alpha, c.beta, c.ycent, c.xcent)
-    case 11 => Sinu(c.alpha, c.beta, c.gamma)
-    case t  => throw new IllegalArgumentException(s"GRIDDESC ctype $t not supported (1-11)")
-  }
-
-  /** GRIDDESC dispatch with an explicit ellipsoid (the CLI's
-    * OUTPUT_FILE_ELLIPSOID / catalog ELLIPSOID column): non-spherical
-    * ellipsoids select the Snyder ellipsoidal forms for every family that
-    * has one; the sphere stays on the exact spherical closed forms. */
+    * mims_spatl_proj.c:109-360) on the grid's ellipsoid (the I/O API
+    * sphere unless OUTPUT_FILE_ELLIPSOID / the catalog names another). */
   def fromGriddesc(c: graft.sources.GridDesc.CoordSys, ell: Ellipsoid): Proj =
-    if (ell.isSphere) fromGriddesc(c)
-    else c.ctype match {
+    c.ctype match {
       case 1  => LatLon
-      case 2  => Ellipsoidal.LccE(c.alpha, c.beta, c.ycent, c.xcent, ell)
-      case 3  => Ellipsoidal.MercE(c.alpha, ell,
-                   if (c.beta == 0.0) 1.0 else c.beta, c.gamma, c.xcent)
-      case 4  => Ellipsoidal.MercE.atTs(c.alpha, c.beta, ell, c.gamma, c.xcent)
-      case 5  => Ellipsoidal.StereE(c.alpha, c.beta, ell, 1.0, c.gamma, c.xcent)
-      case 6  => Ellipsoidal.TmercE(-183.0 + 6.0 * c.alpha, ell, 0.9996,
-                   c.beta, c.gamma)
-      case 7  => Ellipsoidal.PolarStereE(c.alpha, c.beta, ell,
-                   if (c.gamma == 0.0) 1.0 else c.gamma, c.xcent, c.ycent)
-      case 8  => Ellipsoidal.TmercE(c.beta, ell,
-                   if (c.gamma == 0.0) 1.0 else c.gamma, c.xcent, c.ycent, c.alpha)
-      case 9  => Ellipsoidal.LaeaE(c.alpha, c.beta, ell, c.gamma, c.xcent)
-      case 10 => Ellipsoidal.AeaE(c.alpha, c.beta, c.ycent, c.xcent, ell)
-      case 11 => Ellipsoidal.SinuE(c.alpha, ell, c.beta, c.gamma)
+      case 2  => lcc(c.alpha, c.beta, c.ycent, c.xcent, 0.0, 0.0, ell)
+      case 3  => merc(c.alpha, if (c.beta == 0.0) 1.0 else c.beta, c.gamma, c.xcent, ell)
+      case 4  => merc2sp(c.alpha, c.beta, c.gamma, c.xcent, ell)
+      case 5  => stere(c.alpha, c.beta, 1.0, c.gamma, c.xcent, ell)
+      case 6  => utm(c.alpha, c.beta, c.gamma, ell)
+      case 7  => polarStere(c.alpha, c.beta, if (c.gamma == 0.0) 1.0 else c.gamma,
+                            c.xcent, c.ycent, ell)
+      case 8  => tmerc(c.beta, if (c.gamma == 0.0) 1.0 else c.gamma,
+                       c.xcent, c.ycent, c.alpha, ell)
+      case 9  => laea(c.alpha, c.beta, c.gamma, c.xcent, ell)
+      case 10 => aea(c.alpha, c.beta, c.ycent, c.xcent, 0.0, 0.0, ell)
+      case 11 => sinu(c.alpha, c.beta, c.gamma, ell)
       case t  => throw new IllegalArgumentException(s"GRIDDESC ctype $t not supported (1-11)")
     }
 

@@ -7,6 +7,7 @@ import graft.fixtures.{Pages, TpchGeo}
 import graft.fixtures.TpchGeo.{domain, grid, zres}
 import graft.functions.WeightExpr
 import graft.operators.{Allocate, Corridor, Filters, Knn, Reproject, SpatialJoin, Surrogate, Topology, WeightKind}
+import graft.sources.GridDesc
 import graft.text.Html
 import graft.SparkEntry.scratch
 import TextQueries.hv
@@ -824,7 +825,8 @@ object SpatialQueries {
         .select("var", "tstep", "row", "col", "value")
       val path = scratch(s, "ncf", dir) + ".ncf"
       Ioapi.write(gridded, Ioapi.headerFor(grid,
-        Seq(Ioapi.VarDef("W1", "units1"), Ioapi.VarDef("W2", "units2"))), path)
+        Seq(Ioapi.VarDef("W1", "units1"), Ioapi.VarDef("W2", "units2")),
+        GridDesc.CoordSys.Default), path)
       val (_, back) = Ioapi.read(s, path, dropZeros = true)
       Allocate.gridToPoly(back, grid,
           TpchGeo.tracts(s, dir), "p_partkey", "value", Seq("var"))
@@ -864,7 +866,7 @@ object SpatialQueries {
           col("value") * 1.5).otherwise(col("value")))
       val pOrig = scratch(s, "diff_orig", dir) + ".ncf"
       val pNew = scratch(s, "diff_new", dir) + ".ncf"
-      val hdr = Ioapi.headerFor(grid, Seq(Ioapi.VarDef("D1")))
+      val hdr = Ioapi.headerFor(grid, Seq(Ioapi.VarDef("D1")), GridDesc.CoordSys.Default)
       Ioapi.write(base, hdr, pOrig)
       Ioapi.write(perturbed, hdr, pNew)
       val (hA, dfA) = Ioapi.read(s, pOrig)
@@ -897,7 +899,8 @@ object SpatialQueries {
       val srg = Surrogate.pointSurrogate(TpchGeo.points(s, dir),
         TpchGeo.counties(s), grid, domain, zres, srgCode = 100)
       val path = scratch(s, "srg2ncf", dir) + ".ncf"
-      Ioapi.srg2ncf(srg, grid, path, vtype = graft.sources.NetCDF.NC_DOUBLE)
+      Ioapi.srg2ncf(srg, grid, path, GridDesc.CoordSys.Default,
+        vtype = graft.sources.NetCDF.NC_DOUBLE)
       val (_, back) = Ioapi.read(s, path, dropZeros = true)
       back.select("col", "row", "value").orderBy("row", "col")
     },
@@ -960,7 +963,7 @@ object SpatialQueries {
       val path = scratch(s, "ocean", dir) + ".ncf"
       Ioapi.write(long, Ioapi.headerFor(grid,
         cats.map(c => Ioapi.VarDef(s"CAT_$c", "fraction",
-          vtype = NetCDF.NC_DOUBLE))), path, numRecs = 1)
+          vtype = NetCDF.NC_DOUBLE)), GridDesc.CoordSys.Default), path, numRecs = 1)
       val (_, back) = Ioapi.read(s, path, dropZeros = true)
       back.select(col("col"), col("row"),
           substring(col("var"), 5, 1).as("category"),

@@ -15,6 +15,13 @@ object GridDesc {
                             beta: Double, gamma: Double,
                             xcent: Double, ycent: Double)
 
+  object CoordSys {
+    /** A grid's coordinate system when no GRIDDESC entry names one:
+      * SMOKE's default Lambert conic (standard parallels 30 and 60 °N,
+      * centred at 100 °W, 40 °N), the one `Smoke.ProjInfo()` writes. */
+    val Default: CoordSys = CoordSys("LAM_40N100W", 2, 30.0, 60.0, -100.0, -100.0, 40.0)
+  }
+
   final case class Entry(grid: GridSpec, coord: CoordSys, nthik: Int)
 
   final case class Catalog(coords: Map[String, CoordSys], grids: Map[String, Entry])

@@ -48,13 +48,13 @@ object Ioapi {
     def grid: GridSpec = GridSpec(gdnam, xorig, yorig, xcell, ycell, ncols, nrows)
   }
 
-  def headerFor(grid: GridSpec, vars: Seq[VarDef], gdtyp: Int = 2,
-                pAlp: Double = 30.0, pBet: Double = 60.0, pGam: Double = -90.0,
-                xcent: Double = -90.0, ycent: Double = 40.0,
+  /** The header of a gridded file on `grid`, whose map projection is
+    * `coord` (GDTYP = its ctype, P_ALP..YCENT = its parameters). */
+  def headerFor(grid: GridSpec, vars: Seq[VarDef], coord: GridDesc.CoordSys,
                 sdate: Int = 2007001, stime: Int = 0, tstep: Int = 10000,
                 nlays: Int = 1): Header =
-    Header(grid.name, ftype = 1, sdate, stime, tstep, gdtyp,
-      pAlp, pBet, pGam, xcent, ycent,
+    Header(grid.name, ftype = 1, sdate, stime, tstep, coord.ctype,
+      coord.alpha, coord.beta, coord.gamma, coord.xcent, coord.ycent,
       grid.xorig, grid.yorig, grid.xcell, grid.ycell,
       grid.ncols, grid.nrows, nlays, nthik = 1,
       vgtyp = -9999, vgtop = BADVAL,
@@ -308,9 +308,7 @@ object Ioapi {
     * variable FRACTION gridded file; VAL_IN(col,row) accumulates frac over
     * counties (the Fortran's `VAL_IN(I,J) = VAL_IN(I,J) + VAL`). */
   def srg2ncf(srg: DataFrame, grid: GridSpec, path: String,
-              gdtyp: Int = 6, pAlp: Double = 0, pBet: Double = 0,
-              pGam: Double = 0, xcent: Double = 0, ycent: Double = 0,
-              vtype: Int = NC_FLOAT): Unit = {
+              coord: GridDesc.CoordSys, vtype: Int = NC_FLOAT): Unit = {
     val gridded = srg.groupBy("col", "row")
       .agg(sum("frac").as("value"))
       .withColumn("var", lit("FRACTION"))
@@ -319,9 +317,7 @@ object Ioapi {
     // vtype NC_FLOAT matches the Fortran's M3REAL; NC_DOUBLE (M3DBLE) keeps
     // the fractions bit-exact through the file
     val h = headerFor(grid,
-      Seq(VarDef("FRACTION", "fraction", "Surrogate fraction", vtype)),
-      gdtyp = gdtyp, pAlp = pAlp, pBet = pBet, pGam = pGam,
-      xcent = xcent, ycent = ycent)
+      Seq(VarDef("FRACTION", "fraction", "Surrogate fraction", vtype)), coord)
     write(gridded, h, path, numRecs = 1)
   }
 

@@ -9,11 +9,11 @@ import org.apache.spark.storage.StorageLevel
   * output-polygon surrogates, allocate's input fragments, shingle sets)
   * because two aggregations or joins consume them. The
   * DataFrames they return stay lazy, so the operator itself can never know
-  * when the consuming actions finish — without a registry, a catalog run
-  * (SrgTool) accumulates cached blocks whose DISK portion is not evicted by
-  * memory pressure: unbounded local-disk growth in long sessions.
+  * when the consuming actions finish — without a registry, a session that
+  * runs many queries accumulates cached blocks whose DISK portion is not
+  * evicted by memory pressure: unbounded local-disk growth.
   *
-  * Drivers (SrgTool.run, Verify, Bench) call `drain()` once their actions
+  * Drivers (Verify, Bench) call `drain()` once their actions
   * complete. Post-drain reuse of a result recomputes — correct, just not
   * cached. */
 object PersistTracker {

@@ -2,7 +2,7 @@ package graft.cells
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.geom.Geo.BBox
-import graft.grid.{GridSpec, GridCatalog, Proj}
+import graft.grid.{Ellipsoid, GridSpec, GridCatalog, Proj}
 
 class CellIndexSpec extends AnyFunSuite {
   val dom = CellDomain(0, 0, 8000, 8000)
@@ -79,7 +79,7 @@ class CellIndexSpec extends AnyFunSuite {
     val (mx, my) = m.forward(-86.0, 35.0)
     val (mlon, mlat) = m.inverse(mx, my)
     assert(math.abs(mlon + 86.0) < 1e-9 && math.abs(mlat - 35.0) < 1e-9)
-    val t = Proj.utmZone(16)
+    val t = Proj.utm(16, 500000, 0, Ellipsoid.Sphere)
     val (tx, ty) = t.forward(-86.0, 35.0)
     val (tlon, tlat) = t.inverse(tx, ty)
     assert(math.abs(tlon + 86.0) < 1e-9 && math.abs(tlat - 35.0) < 1e-9)

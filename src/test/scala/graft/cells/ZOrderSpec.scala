@@ -36,7 +36,7 @@ class ZOrderSpec extends AnyFunSuite with BeforeAndAfterAll {
     val s = spark
     import s.implicits._
     import graft.table.SnapshotTable
-    val root = java.nio.file.Files.createTempDirectory("zorder").toString
+    val root = graft.Scratch.dir("zorder").toString
     val t = new SnapshotTable(root)
     val pts = s.range(0, 4096).toDF("i")
       .select((col("i") % 64).as("ix"), (col("i") / 64).cast("long").as("iy"))
@@ -55,7 +55,7 @@ class ZOrderSpec extends AnyFunSuite with BeforeAndAfterAll {
     // contrast: the same data laid out by ix only gives WIDE iy envelopes —
     // z-order must beat or match it on the box read
     val t2 = new SnapshotTable(
-      java.nio.file.Files.createTempDirectory("rowmajor").toString)
+      graft.Scratch.dir("rowmajor").toString)
     t2.commit(pts.repartitionByRange(16, col("ix")), "append", "row-major")
     assert(pruned.size <= t2.prunedFilesWhere(box).size)
   }

@@ -20,7 +20,7 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   private def tmp(name: String): String =
-    Files.createTempDirectory(name).toString
+    graft.Scratch.dir(name).toString
 
   test("SpatialAllocator SURROGATE mode matches the direct operator and writes SMOKE") {
     val dataDir = tmp("cli-data")
@@ -181,13 +181,47 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
       "INPUT_FILE_YCOL" -> "lat",
       "INPUT_FILE_MAP_PRJN" -> "latlon",
       "OUTPUT_FILE_MAP_PRJN" -> lcc)).get
-    val (from, to) = (SpatialAllocator.projOf("latlon"), SpatialAllocator.projOf(lcc))
+    val (from, to) = (graft.grid.Proj.parse("latlon"), graft.grid.Proj.parse(lcc))
     val got = out.select("id", "x", "y").collect()
       .map(r => r.getInt(0) -> (r.getDouble(1), r.getDouble(2))).toMap
     assert(got.keySet == pts.map(_._1).toSet)
     pts.foreach { case (i, lon, lat) =>
       val (gx, gy) = from.inverse(lon, lat)
       assert(got(i) == to.forward(gx, gy), s"point $i")
+    }
+  }
+
+  test("CONVERT_SHAPE reads INPUT_FILE_ELLIPSOID and OUTPUT_FILE_ELLIPSOID with the map projections") {
+    import graft.grid.{Ellipsoid, Ellipsoidal}
+    val dir = tmp("cli-convell")
+    val lcc = "+proj=lcc,+lat_1=33,+lat_2=45,+lat_0=40,+lon_0=-97"
+    val nad83 = Ellipsoidal.LccE(33, 45, 40, -97, Ellipsoid.GRS80)
+    val pts = Seq((1, -90.5, 35.25), (2, -104.75, 45.5), (3, -97.0, 40.0))
+    def csv(name: String, xy: ((Double, Double)) => (Double, Double)): String = {
+      val path = s"$dir/$name.csv"
+      Files.write(java.nio.file.Paths.get(path), pts
+        .map { case (i, lon, lat) => val (x, y) = xy((lon, lat)); s"$i,$x,$y" }
+        .mkString("id,x,y\n", "\n", "\n").getBytes("UTF-8"))
+      path
+    }
+    def convert(path: String, crs: (String, String)*): Map[Int, (Double, Double)] =
+      SpatialAllocator.run(spark, Map(
+        "MIMS_PROCESSING" -> "CONVERT_SHAPE",
+        "INPUT_FILE_NAME" -> path,
+        "INPUT_FILE_TYPE" -> "PointFile") ++ crs).get
+        .select("id", "x", "y").collect()
+        .map(r => r.getInt(0) -> (r.getDouble(1), r.getDouble(2))).toMap
+    // NAD83 LCC metres → lon/lat, and lon/lat → NAD83 LCC metres
+    val toLonLat = convert(csv("lcc", (nad83.forward _).tupled),
+      "INPUT_FILE_MAP_PRJN" -> lcc, "INPUT_FILE_ELLIPSOID" -> "+datum=NAD83",
+      "OUTPUT_FILE_MAP_PRJN" -> "latlon")
+    val toLcc = convert(csv("lonlat", identity),
+      "INPUT_FILE_MAP_PRJN" -> "latlon",
+      "OUTPUT_FILE_MAP_PRJN" -> lcc, "OUTPUT_FILE_ELLIPSOID" -> "+datum=NAD83")
+    pts.foreach { case (i, lon, lat) =>
+      val (x, y) = nad83.forward(lon, lat)
+      assert(toLonLat(i) == nad83.inverse(x, y), s"point $i to lon/lat")
+      assert(toLcc(i) == (x, y), s"point $i to LCC")
     }
   }
 
@@ -267,7 +301,7 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
       yield ("PM", t, 1, r, c, ((t * 7 + (r - 1) * 8 + c) % 20).toDouble))
       .toDF("var", "tstep", "layer", "row", "col", "value")
     val ncf = s"$dir/gridded.ncf"
-    Ioapi.write(gridded, Ioapi.headerFor(TpchGeo.grid, Seq(Ioapi.VarDef("PM"))), ncf)
+    Ioapi.write(gridded, Ioapi.headerFor(TpchGeo.grid, Seq(Ioapi.VarDef("PM")), graft.sources.GridDesc.CoordSys.Default), ncf)
     TpchGeo.tracts(spark, sfDir)
       .withColumnRenamed("p_partkey", "out_id")
       .write.mode("overwrite").parquet(s"$dir/tracts")
@@ -451,8 +485,8 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
       "CELL_DOMAIN" -> "0,0,1048576,1048576",
       "SURROGATE_ID" -> "100")).get
 
-    val from = SpatialAllocator.projOf("proj=latlon")
-    val to = SpatialAllocator.projOf("proj=merc")
+    val from = graft.grid.Proj.parse("proj=latlon")
+    val to = graft.grid.Proj.parse("proj=merc")
     val gridM = graft.grid.GridSpec("TESTM", 0, 0, 112000, 112000, 8, 8)
     val dom = graft.cells.CellDomain(0, 0, 1048576, 1048576)
     val direct = graft.operators.Surrogate.pointSurrogate(
@@ -633,7 +667,8 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val dir = tmp("cli-diffioapi")
     val g = graft.grid.GridSpec("TD", 0, 0, 1000, 1000, 2, 2)
-    val h = Ioapi.headerFor(g, Seq(Ioapi.VarDef("V", vtype = NetCDF.NC_DOUBLE)))
+    val h = Ioapi.headerFor(g, Seq(Ioapi.VarDef("V", vtype = NetCDF.NC_DOUBLE)),
+      graft.sources.GridDesc.CoordSys.Default)
     val base = Seq(("V", 0, 1, 1, 1, 10.0), ("V", 0, 1, 1, 2, 20.0),
                    ("V", 0, 1, 2, 1, 0.0),  ("V", 0, 1, 2, 2, 40.0))
       .toDF("var", "tstep", "layer", "row", "col", "value")
@@ -676,7 +711,8 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
                    ("V", 0, 1, 2, 1, 30.0), ("V", 0, 1, 2, 2, 44.0))
       .toDF("var", "tstep", "layer", "row", "col", "value")
     Ioapi.write(data, Ioapi.headerFor(fine,
-      Seq(Ioapi.VarDef("V", vtype = NetCDF.NC_DOUBLE))), s"$dir/fine.ncf", numRecs = 1)
+      Seq(Ioapi.VarDef("V", vtype = NetCDF.NC_DOUBLE)), graft.sources.GridDesc.CoordSys.Default),
+      s"$dir/fine.ncf", numRecs = 1)
 
     val out = SpatialAllocator.run(spark, Map(
       "MIMS_PROCESSING" -> "ALLOCATE",
@@ -710,7 +746,8 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
       .toDF("var", "tstep", "layer", "row", "col", "value")
     Ioapi.write(data, Ioapi.headerFor(fine,
       Seq(Ioapi.VarDef("V1", vtype = NetCDF.NC_DOUBLE),
-          Ioapi.VarDef("V2", vtype = NetCDF.NC_DOUBLE))), s"$dir/in.ncf", numRecs = 1)
+          Ioapi.VarDef("V2", vtype = NetCDF.NC_DOUBLE)), graft.sources.GridDesc.CoordSys.Default),
+      s"$dir/in.ncf", numRecs = 1)
 
     val base = Map(
       "MIMS_PROCESSING" -> "ALLOCATE",
@@ -752,7 +789,7 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
       r <- 1 to 4; c <- 1 to 2
     } yield ("LU", 0, 1, r, c, v(c, r))).toDF("var", "tstep", "layer", "row", "col", "value")
     def hdrFor(g: graft.grid.GridSpec, vn: String) = Ioapi.headerFor(g,
-      Seq(Ioapi.VarDef(vn, vtype = NetCDF.NC_DOUBLE)))
+      Seq(Ioapi.VarDef(vn, vtype = NetCDF.NC_DOUBLE)), graft.sources.GridDesc.CoordSys.Default)
     def renamed(df: org.apache.spark.sql.DataFrame, vn: String) =
       df.withColumn("var", lit(vn))
     // v_a = 60 everywhere except tile2's upper-right out-cell patch = 61;
@@ -806,7 +843,7 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
     val right = graft.grid.GridSpec("T2", 1000, 0, 500, 500, 2, 4)
     // two records per tile; non-default source timing must carry through
     def hdrFor(g: graft.grid.GridSpec, vn: String) = Ioapi.headerFor(g,
-      Seq(Ioapi.VarDef(vn, vtype = NetCDF.NC_DOUBLE)),
+      Seq(Ioapi.VarDef(vn, vtype = NetCDF.NC_DOUBLE)), graft.sources.GridDesc.CoordSys.Default,
       sdate = 2011123, stime = 10000, tstep = 20000)
     def rows(vn: String, v: (Int, Int, Int) => Double) = (for {
       t <- 0 to 1; r <- 1 to 4; c <- 1 to 2
@@ -872,5 +909,30 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got.keySet == want.keySet && got.nonEmpty)
     got.foreach { case (k, v) =>
       assert(math.abs(v - want(k)) < 1e-6, s"$k") } // float32 storage
+  }
+
+  test("SURROGATE without GRIDDESC writes the SMOKE header's projection into the .ncf") {
+    import graft.sources.Ioapi
+    val dir = tmp("cli-ncfproj")
+    TpchGeo.counties(spark).write.mode("overwrite").parquet(s"$dir/counties")
+    TpchGeo.points(spark, sfDir).write.mode("overwrite").parquet(s"$dir/points")
+    val (smoke, ncf) = (s"$dir/srg100.txt", s"$dir/srg100.ncf")
+    SpatialAllocator.run(spark, Map(
+      "MIMS_PROCESSING" -> "SURROGATE",
+      "OUTPUT_GRID_NAME" -> "TEST8",
+      "DATA_FILE_NAME" -> s"$dir/counties",
+      "DATA_ID_ATTR" -> "fips",
+      "WEIGHT_FILE_NAME" -> s"$dir/points",
+      "WEIGHT_FILE_TYPE" -> "Point",
+      "SURROGATE_ID" -> "100",
+      "SURROGATE_FILE" -> smoke,
+      "SURROGATE_NETCDF_FILE" -> ncf))
+    // #GRID name xorig yorig xcell ycell ncols nrows nthik proj units
+    //       alpha beta gamma xcent ycent
+    val hdr = Files.readAllLines(java.nio.file.Paths.get(smoke)).get(0).split("\t")
+    val (h, _) = Ioapi.read(spark, ncf)
+    assert(hdr(9) == "LAMBERT" && h.gdtyp == 2, s"${hdr(9)} vs GDTYP ${h.gdtyp}")
+    assert(Seq(h.pAlp, h.pBet, h.pGam, h.xcent, h.ycent) ==
+      hdr.slice(11, 16).map(_.toDouble).toSeq)
   }
 }

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class DiffSurrSpec extends AnyFunSuite {
 
   private def srgFile(lines: String*): String = {
-    val p = Files.createTempFile("diffsurr", ".txt")
+    val p = graft.Scratch.dir("diffsurr").resolve("diffsurr.txt")
     Files.write(p, (("#GRID\tTEST\t0\t0\t1\t1\t4\t4\t1\t2\t3\t4\t5\t6\t7" +: lines)
       .mkString("\n") + "\n").getBytes("UTF-8"))
     p.toString

@@ -36,7 +36,7 @@ class SrgToolCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
     600 -> "3d905f1cdbb560e03578d056ba7d109524567429fde7a8055efab799119ca49b")
 
   test("catalog runs each surrogate once: bounded job count, SMOKE files unchanged") {
-    val outDir = Files.createTempDirectory("srgtool-catalog").toString
+    val outDir = graft.Scratch.dir("srgtool-catalog").toString
     val specs = Seq(
       SrgTool.SrgSpec(100, "points", SrgTool.PointW, TpchGeo.points(spark, sfDir)),
       SrgTool.SrgSpec(120, "tracts", SrgTool.PolyW, TpchGeo.tracts(spark, sfDir),

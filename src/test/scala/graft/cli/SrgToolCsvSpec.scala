@@ -50,7 +50,7 @@ class SrgToolCsvSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("full catalog run: CSVs + shapefiles -> SMOKE files + SRGDESC") {
-    val dir = Files.createTempDirectory("srgtoolcsv")
+    val dir = graft.Scratch.dir("srgtoolcsv")
     val out = dir.resolve("output")
     def write(name: String, text: String): Unit =
       Files.write(dir.resolve(name), text.getBytes("UTF-8"))
@@ -210,12 +210,12 @@ class SrgToolCsvSpec extends AnyFunSuite with BeforeAndAfterAll {
       r.srg(100).collect().map(row => (row.getAs[String]("fips"),
         row.getAs[Int]("col"), row.getAs[Int]("row")) -> row.getAs[Double]("frac")).toMap
 
-    val dPlanar = Files.createTempDirectory("srgnad83_planar")
+    val dPlanar = graft.Scratch.dir("srgnad83_planar")
     writeRun(dPlanar, "", "+datum=NAD83", planar = true)
     val rPlanar = SrgToolCsv.run(spark,
       dPlanar.resolve("control_variables.csv").toString, TpchGeo.domain, TpchGeo.zres)
 
-    val dNad = Files.createTempDirectory("srgnad83_ll")
+    val dNad = graft.Scratch.dir("srgnad83_ll")
     writeRun(dNad, "proj=latlong", "+datum=NAD83", planar = false)
     val rNad = SrgToolCsv.run(spark,
       dNad.resolve("control_variables.csv").toString, TpchGeo.domain, TpchGeo.zres)
@@ -227,7 +227,7 @@ class SrgToolCsvSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("a generation list with every row at GENERATE=NO is rejected as empty") {
-    val dir = Files.createTempDirectory("srgtoolcsv_empty")
+    val dir = graft.Scratch.dir("srgtoolcsv_empty")
     def write(name: String, text: String): Unit =
       Files.write(dir.resolve(name), text.getBytes("UTF-8"))
     write("control_variables.csv",

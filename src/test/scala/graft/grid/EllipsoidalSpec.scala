@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class EllipsoidalSpec extends AnyFunSuite {
 
   private val lccN = Ellipsoidal.LccE(33, 45, 40, -97, Ellipsoid.GRS80)
-  private val utm16 = Ellipsoidal.utmZoneE(16, Ellipsoid.WGS84)
+  private val utm16 = Proj.utm(16, 500000, 0, Ellipsoid.WGS84)
 
   test("ellipsoidal LCC roundtrip at 1e-9 deg (CONUS window)") {
     for (lon <- -125 to -66 by 7; lat <- 24 to 50 by 5) {
@@ -106,16 +106,15 @@ class EllipsoidalSpec extends AnyFunSuite {
   }
 
   test("projOf dispatches to ellipsoidal forms on +ellps / non-spherical +a,+b") {
-    import graft.cli.SpatialAllocator.projOf
-    assert(projOf("+proj=lcc,+lat_1=33,+lat_2=45,+lat_0=40,+lon_0=-97,+ellps=GRS80")
+    assert(Proj.parse("+proj=lcc,+lat_1=33,+lat_2=45,+lat_0=40,+lon_0=-97,+ellps=GRS80")
       .isInstanceOf[Ellipsoidal.LccE])
-    assert(projOf("+proj=utm,+zone=16,+ellps=WGS84")
+    assert(Proj.parse("+proj=utm,+zone=16,+ellps=WGS84")
       .isInstanceOf[Ellipsoidal.TmercE])
-    assert(projOf("+proj=tmerc,+lon_0=-87,+a=6378206.4,+b=6356583.8")
+    assert(Proj.parse("+proj=tmerc,+lon_0=-87,+a=6378206.4,+b=6356583.8")
       .isInstanceOf[Ellipsoidal.TmercE])
     // spherical +a=+b (the reference catalogs' "+a=6370997.0,+b=6370997.0")
     // stays on the exact spherical closed forms
-    assert(projOf("+proj=lcc,+lat_1=33,+lat_2=45,+lat_0=40,+lon_0=-97,+a=6370997.0,+b=6370997.0")
+    assert(Proj.parse("+proj=lcc,+lat_1=33,+lat_2=45,+lat_0=40,+lon_0=-97,+a=6370997.0,+b=6370997.0")
       .isInstanceOf[Proj.Lcc])
   }
 
@@ -291,19 +290,65 @@ class EllipsoidalSpec extends AnyFunSuite {
   }
 
   test("projOf dispatches the new ellipsoidal families") {
-    import graft.cli.SpatialAllocator.projOf
-    assert(projOf("+proj=aea,+lat_1=29.5,+lat_2=45.5,+lat_0=23,+lon_0=-96,+ellps=GRS80")
+    assert(Proj.parse("+proj=aea,+lat_1=29.5,+lat_2=45.5,+lat_0=23,+lon_0=-96,+ellps=GRS80")
       .isInstanceOf[Ellipsoidal.AeaE])
-    assert(projOf("+proj=laea,+lat_0=45,+lon_0=-100,+datum=NAD83")
+    assert(Proj.parse("+proj=laea,+lat_0=45,+lon_0=-100,+datum=NAD83")
       .isInstanceOf[Ellipsoidal.LaeaE])
-    assert(projOf("+proj=stere,+lat_0=40,+lon_0=-97,+ellps=WGS84")
+    assert(Proj.parse("+proj=stere,+lat_0=40,+lon_0=-97,+ellps=WGS84")
       .isInstanceOf[Ellipsoidal.StereE])
-    assert(projOf("+proj=stere,+lat_ts=60,+lon_0=-100,+ellps=WGS84")
+    assert(Proj.parse("+proj=stere,+lat_ts=60,+lon_0=-100,+ellps=WGS84")
       .isInstanceOf[Ellipsoidal.PolarStereE])
-    assert(projOf("+proj=merc,+lat_ts=30,+lon_0=-90,+ellps=intl")
+    assert(Proj.parse("+proj=merc,+lat_ts=30,+lon_0=-90,+ellps=intl")
       .isInstanceOf[Ellipsoidal.MercE])
     // spherical +a=+b stays on exact spherical forms
-    assert(projOf("+proj=aea,+lat_1=29.5,+lat_2=45.5,+lat_0=23,+lon_0=-96,+a=6370000.0,+b=6370000.0")
+    assert(Proj.parse("+proj=aea,+lat_1=29.5,+lat_2=45.5,+lat_0=23,+lon_0=-96,+a=6370000.0,+b=6370000.0")
       .isInstanceOf[Proj.Aea])
+  }
+
+  test("a sphere other than 6370997 m projects at its own radius (+a=+b, +a alone, OUTPUT_FILE_ELLIPSOID)") {
+    // on a sphere every projected coordinate scales with the radius; the
+    // WRF sphere (6370000 m) is 1.6e-4 smaller, ~250 m at these points
+    val lcc = "+proj=lcc,+lat_1=33,+lat_2=45,+lat_0=40,+lon_0=-97"
+    val aea = "+proj=aea,+lat_1=29.5,+lat_2=45.5,+lat_0=23,+lon_0=-96"
+    val k = 6370000.0 / Proj.R
+    val wrf = Ellipsoid.parse("+a=6370000.0,+b=6370000.0")
+    val cases = Seq(
+      Proj.parse(lcc) -> Proj.parse(lcc + ",+a=6370000,+b=6370000"),
+      Proj.parse(lcc) -> Proj.parse(lcc + ",+a=6370000"),
+      Proj.parse(aea) -> Proj.parse(aea + ",+a=6370000.0,+b=6370000.0"),
+      // SrgToolCsv's OUTPUT_FILE_ELLIPSOID reaches the GRIDDESC forms
+      Proj.parse(lcc) -> Proj.fromGriddesc(
+        graft.sources.GridDesc.CoordSys("LAM", 2, 33, 45, -97, -97, 40), wrf))
+    for ((ref, p) <- cases; (lon, lat) <- Seq((-80.0, 30.0), (-120.0, 48.0))) {
+      val (xr, yr) = ref.forward(lon, lat)
+      val (x, y) = p.forward(lon, lat)
+      assert(math.abs(x - k * xr) < 1e-6 && math.abs(y - k * yr) < 1e-6,
+        s"${p.name} ($lon,$lat): ($x,$y) vs ${(k * xr, k * yr)}")
+      val (lo, la) = p.inverse(x, y)
+      assert(math.abs(lo - lon) < 1e-9 && math.abs(la - lat) < 1e-9)
+    }
+  }
+
+  test("+x_0/+y_0 shift lcc and aea on a sphere as on an ellipsoid") {
+    for (base <- Seq("+proj=lcc,+lat_1=33,+lat_2=45,+lat_0=40,+lon_0=-97",
+                     "+proj=aea,+lat_1=29.5,+lat_2=45.5,+lat_0=23,+lon_0=-96");
+         ell <- Seq("", ",+ellps=GRS80")) {
+      val p = Proj.parse(base + ell)
+      val shifted = Proj.parse(base + ",+x_0=1500000,+y_0=-250000" + ell)
+      val (x, y) = p.forward(-90, 37)
+      val (xs, ys) = shifted.forward(-90, 37)
+      assert(math.abs(xs - x - 1500000) < 1e-6 && math.abs(ys - y + 250000) < 1e-6,
+        s"$base$ell: ($xs,$ys) vs ($x,$y)")
+      val (lo, la) = shifted.inverse(xs, ys)
+      assert(math.abs(lo + 90) < 1e-9 && math.abs(la - 37) < 1e-9, s"$base$ell")
+    }
+  }
+
+  test("+proj=sinu with an ellipsoid selects the ellipsoidal sinusoidal") {
+    val p = Proj.parse("+proj=sinu,+lon_0=-100,+x_0=70,+y_0=80,+ellps=WGS84")
+    assert(p == Ellipsoidal.SinuE(-100, Ellipsoid.WGS84, 70, 80))
+    // the same CRS as GRIDDESC ctype 11 on that ellipsoid
+    assert(p == Proj.fromGriddesc(
+      graft.sources.GridDesc.CoordSys("SIN", 11, -100, 70, 80, 0, 0), Ellipsoid.WGS84))
   }
 }

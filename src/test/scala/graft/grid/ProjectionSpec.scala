@@ -113,7 +113,7 @@ class ProjectionSpec extends AnyFunSuite {
       "POL" -> "polar_stere", "TRM" -> "tmerc", "LAE" -> "laea",
       "ALB" -> "aea", "SIN" -> "sinu")
     expect.foreach { case (n, fam) =>
-      val p = Proj.fromGriddesc(cat.coords(n))
+      val p = Proj.fromGriddesc(cat.coords(n), Ellipsoid.Sphere)
       assert(p.name == fam, s"$n -> ${p.name}")
       if (n != "LL") {
         val (x, y) = p.forward(-96.5, 38.25)
@@ -122,7 +122,7 @@ class ProjectionSpec extends AnyFunSuite {
       }
     }
     // UTM zone 16 central meridian is -87
-    val utm = Proj.fromGriddesc(cat.coords("UTM16")).asInstanceOf[Proj.Tmerc]
+    val utm = Proj.fromGriddesc(cat.coords("UTM16"), Ellipsoid.Sphere).asInstanceOf[Proj.Tmerc]
     assert(utm.lon0 == -87.0)
   }
 }

@@ -87,6 +87,10 @@ class SmokeSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("the default coordinate system renders SMOKE's default #GRID projection") {
+    assert(Smoke.projInfoFor(graft.sources.GridDesc.CoordSys.Default) == Smoke.ProjInfo())
+  }
+
   test("projInfoFor maps GRIDDESC ctypes like allocate.c's cname table") {
     import graft.sources.GridDesc.CoordSys
     val lcc = Smoke.projInfoFor(CoordSys("LAM", 2, 33, 45, -97, -97, 40))
@@ -128,7 +132,7 @@ class SmokeSpec extends AnyFunSuite with BeforeAndAfterAll {
       graft.fixtures.TpchGeo.counties(spark),
       graft.fixtures.TpchGeo.grid, graft.fixtures.TpchGeo.domain,
       graft.fixtures.TpchGeo.zres, 100)
-    val dir = java.nio.file.Files.createTempDirectory("smokeparts").toString
+    val dir = graft.Scratch.dir("smokeparts").toString
     Smoke.writeParts(srg, GridCatalog.TEST8, Smoke.ProjInfo(), dir)
 
     val back = Smoke.parse(spark, spark.read.textFile(s"$dir/body"))
@@ -154,7 +158,7 @@ class SmokeSpec extends AnyFunSuite with BeforeAndAfterAll {
       (100, "47001", 1, 2, 0.25, 2.5, 10.0, 0.75),
       (100, "47002", 1, 1, 1.0,  4.0, 4.0, 1.0)
     ).toDF("srg_code", "fips", "col", "row", "frac", "numer", "denom", "qasum")
-    val f = java.nio.file.Files.createTempFile("srgrem", ".txt").toString
+    val f = graft.Scratch.dir("srgrem").resolve("srgrem.txt").toString
     Smoke.write(srg, GridCatalog.TEST8, Smoke.ProjInfo(), f)
     val ls = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(f))
     val body = (1 until ls.size).map(ls.get)
@@ -169,7 +173,7 @@ class SmokeSpec extends AnyFunSuite with BeforeAndAfterAll {
     val s = spark
     import s.implicits._
     def bytes(path: String) = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
-    def tmp(name: String) = java.nio.file.Files.createTempFile(name, ".txt").toString
+    def tmp(name: String) = graft.Scratch.dir(name).resolve(s"$name.txt").toString
     def scramble(df: org.apache.spark.sql.DataFrame, cols: String*) =
       df.repartition(5).sortWithinPartitions(cols.map(desc): _*)
     // 47001: Σfrac 0.75 → #REMAINDER; 47003: denominator below the
@@ -223,7 +227,7 @@ class SmokeSpec extends AnyFunSuite with BeforeAndAfterAll {
     "#SKIPPED   170\t47003\t3\t0.50000000\t!\t0.000000\t0.000000\t1.000000")
 
   test("write renders a polygon table as #POLYGON lines (surrogate.c:455-470)") {
-    val f = java.nio.file.Files.createTempFile("srgpoly", ".txt").toString
+    val f = graft.Scratch.dir("srgpoly").resolve("srgpoly.txt").toString
     Smoke.write(polyTable, GridCatalog.TEST8, Smoke.ProjInfo(), f,
       headerTag = "#POLYGON")
     val expected = (Smoke.header(GridCatalog.TEST8, Smoke.ProjInfo(), "#POLYGON")
@@ -233,7 +237,7 @@ class SmokeSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("writeParts on a polygon table round-trips its data rows") {
-    val dir = java.nio.file.Files.createTempDirectory("smokepolyparts").toString
+    val dir = graft.Scratch.dir("smokepolyparts").toString
     Smoke.writeParts(polyTable, GridCatalog.TEST8, Smoke.ProjInfo(), dir,
       headerTag = "#POLYGON")
     val parts = new java.io.File(s"$dir/body").listFiles()
@@ -257,7 +261,7 @@ class SmokeSpec extends AnyFunSuite with BeforeAndAfterAll {
       (100, "47002", 1, 1, 1.0, 4.0, 4.0, 1.0),
       (100, "47001", 2, 1, 1.0, 3.0, 3.0, 1.0)
     ).toDF("srg_code", "fips", "col", "row", "frac", "numer", "denom", "qasum")
-    val f = java.nio.file.Files.createTempFile("srg", ".txt").toString
+    val f = graft.Scratch.dir("srg").resolve("srg.txt").toString
     Smoke.write(srg, GridCatalog.TEST8, Smoke.ProjInfo(), f)
     val ls = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(f))
     assert(ls.get(0).startsWith("#GRID\tTEST8"))
@@ -283,7 +287,7 @@ class SmokeSpec extends AnyFunSuite with BeforeAndAfterAll {
     val srg = Surrogate.pointSurrogate(TpchGeo.points(spark, sf),
       TpchGeo.counties(spark), TpchGeo.grid, TpchGeo.domain, TpchGeo.zres,
       srgCode = 100, denomThreshold = thresh, keepSkipped = true)
-    val f = java.nio.file.Files.createTempDirectory("skipped")
+    val f = graft.Scratch.dir("skipped")
       .resolve("srg.txt").toString
     Smoke.write(srg, GridCatalog.TEST8, Smoke.ProjInfo(), f, withQa = true,
       denomThreshold = thresh)

@@ -20,7 +20,7 @@ class IoapiSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   private def tmp(name: String): String =
-    Files.createTempDirectory("ioapispec").resolve(name).toString
+    graft.Scratch.dir("ioapispec").resolve(name).toString
 
   private val grid = GridSpec("TSPEC", 100.0, -200.0, 50.0, 50.0, 4, 3)
 
@@ -55,8 +55,7 @@ class IoapiSpec extends AnyFunSuite with BeforeAndAfterAll {
     val p = tmp("sample.ncf")
     val h = headerFor(grid,
       Seq(VarDef("NO2", "ppmV", "nitrogen dioxide"), VarDef("O3", "ppmV", "ozone")),
-      gdtyp = 2, pAlp = 30, pBet = 60, pGam = -90, xcent = -90, ycent = 40,
-      nlays = 2)
+      GridDesc.CoordSys("LAM", 2, 30, 60, -90, -90, 40), nlays = 2)
     Ioapi.write(sampleGridded, h, p)
 
     val (h2, df) = Ioapi.read(spark, p)
@@ -81,7 +80,7 @@ class IoapiSpec extends AnyFunSuite with BeforeAndAfterAll {
     // collect-first order still in place, the 500M-row frame below would
     // OOM the driver before the require
     val huge = GridSpec("THUGE", 0, 0, 1, 1, 40000, 40000)
-    val h = headerFor(huge, Seq(VarDef("V", "u", "v")))
+    val h = headerFor(huge, Seq(VarDef("V", "u", "v")), GridDesc.CoordSys.Default)
     val big = spark.range(500L * 1000 * 1000)
       .select(lit("V").as("var"), lit(0).as("tstep"), lit(1).as("layer"),
         lit(1).as("row"), (col("id") % 40000 + 1).cast("int").as("col"),
@@ -101,7 +100,7 @@ class IoapiSpec extends AnyFunSuite with BeforeAndAfterAll {
     // with far more rows than the grid has slots must fail the bounded
     // collect instead of materializing
     val g2 = GridSpec("T2", 0, 0, 1, 1, 2, 2)
-    val h = headerFor(g2, Seq(VarDef("V", "u", "v")))
+    val h = headerFor(g2, Seq(VarDef("V", "u", "v")), GridDesc.CoordSys.Default)
     val many = spark.range(1000)
       .select(lit("V").as("var"), lit(0).as("tstep"), lit(1).as("layer"),
         lit(1).as("row"), lit(1).as("col"), lit(1.0).as("value"))
@@ -114,7 +113,7 @@ class IoapiSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("dropZeros keeps the frame sparse") {
     import spark.implicits._
     val p = tmp("sparse.ncf")
-    val h = headerFor(grid, Seq(VarDef("X")))
+    val h = headerFor(grid, Seq(VarDef("X")), GridDesc.CoordSys.Default)
     Ioapi.write(Seq(("X", 0, 1, 2, 3, 42.0))
       .toDF("var", "tstep", "layer", "row", "col", "value"), h, p)
     val (_, dense) = Ioapi.read(spark, p)
@@ -130,7 +129,7 @@ class IoapiSpec extends AnyFunSuite with BeforeAndAfterAll {
     // must hold their sum (convert_txt2ncf.f's VAL_IN accumulation), not
     // whichever row happened to collect last
     val p = tmp("dup.ncf")
-    val h = headerFor(grid, Seq(VarDef("X", vtype = NetCDF.NC_DOUBLE)))
+    val h = headerFor(grid, Seq(VarDef("X", vtype = NetCDF.NC_DOUBLE)), GridDesc.CoordSys.Default)
     val dup = Seq(
       ("X", 0, 1, 2, 3, 1.25), ("X", 0, 1, 2, 3, 2.5), ("X", 0, 1, 2, 3, 4.0),
       ("X", 0, 1, 1, 1, 7.0)
@@ -144,7 +143,7 @@ class IoapiSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("NC_INT duplicates sum in double and truncate once, like REAL VAL_IN") {
     import spark.implicits._
     val p = tmp("dupint.ncf")
-    val h = headerFor(grid, Seq(VarDef("N", vtype = NetCDF.NC_INT)))
+    val h = headerFor(grid, Seq(VarDef("N", vtype = NetCDF.NC_INT)), GridDesc.CoordSys.Default)
     // 0.6 + 0.6 must store 1 (truncate the SUM), not 0 + 0
     val dup = Seq(("N", 0, 1, 1, 1, 0.6), ("N", 0, 1, 1, 1, 0.6))
       .toDF("var", "tstep", "layer", "row", "col", "value")
@@ -160,7 +159,7 @@ class IoapiSpec extends AnyFunSuite with BeforeAndAfterAll {
       ("A", 3, 2, 0.75)
     ).toDF("fips", "col", "row", "frac")
     val p = tmp("srg.ncf")
-    Ioapi.srg2ncf(srg, grid, p)
+    Ioapi.srg2ncf(srg, grid, p, GridDesc.CoordSys.Default)
     val (h, df) = Ioapi.read(spark, p, dropZeros = true)
     assert(h.vars.map(_.name) == Seq("FRACTION"))
     assert(h.tstep == 10000 && h.sdate == 2007001) // the Fortran's constants
@@ -169,7 +168,7 @@ class IoapiSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("headerDiff reproduces diffioapi's grouped checks") {
-    val h = headerFor(grid, Seq(VarDef("NO2")))
+    val h = headerFor(grid, Seq(VarDef("NO2")), GridDesc.CoordSys.Default)
     assert(headerDiff(h, h, 2, 2).isEmpty)
     assert(headerDiff(h, h.copy(ftype = 2), 2, 2).head.contains("File types"))
     assert(headerDiff(h, h.copy(pAlp = 31), 2, 2).head.contains("Map projections"))

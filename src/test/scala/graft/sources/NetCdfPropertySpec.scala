@@ -11,7 +11,7 @@ import graft.sources.NetCDF._
   * identical, across CDF-1 and CDF-2. Seeded, so failures reproduce. */
 class NetCdfPropertySpec extends AnyFunSuite {
 
-  private val dir = Files.createTempDirectory("ncprop")
+  private val dir = graft.Scratch.dir("ncprop")
 
   private def randomFile(rnd: Random): NcFile = {
     val nFixed = 1 + rnd.nextInt(3)

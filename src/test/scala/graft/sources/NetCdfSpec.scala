@@ -13,7 +13,7 @@ import graft.sources.NetCDF._
 class NetCdfSpec extends AnyFunSuite {
 
   private def tmp(name: String): String =
-    Files.createTempDirectory("ncspec").resolve(name).toString
+    graft.Scratch.dir("ncspec").resolve(name).toString
 
   /** Build a minimal CDF-1 file byte-by-byte per the spec:
     * dim x=3; :title = "hello"; int v(x) = 7, 8, 9. */

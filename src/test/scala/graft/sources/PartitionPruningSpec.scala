@@ -20,7 +20,7 @@ class PartitionPruningSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   test("tile-partitioned layer scans only the tiles the query touches") {
-    val dir = Files.createTempDirectory("tiles").toString
+    val dir = graft.Scratch.dir("tiles").toString
     // tracts partitioned by a 4×4 tile id derived from their origin
     TpchGeo.tracts(spark, graft.TestData.sf("0.001"))
       .withColumn("tile",

@@ -22,7 +22,7 @@ class ShapefileFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   private def tmpBase(tag: String): String =
-    Files.createTempDirectory("shpfuzz").resolve(tag).toString
+    graft.Scratch.dir("shpfuzz").resolve(tag).toString
 
   private sealed trait FSpec {
     def col: Shapefile.DbfCol

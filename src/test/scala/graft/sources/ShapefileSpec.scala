@@ -20,7 +20,7 @@ class ShapefileSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   private def tmpBase(name: String): String =
-    Files.createTempDirectory("shpspec").resolve(name).toString
+    graft.Scratch.dir("shpspec").resolve(name).toString
 
   /** Hand-build a one-polygon shapefile (unit square 0..10, ESRI clockwise,
     * closed) + a dbf with one N(0) field and one C field — bytes composed
@@ -162,7 +162,7 @@ class ShapefileSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("fractionalVeg reads a landuse-fraction CSV with x/y doubles") {
-    val f = java.nio.file.Files.createTempFile("veg", ".csv")
+    val f = graft.Scratch.dir("veg").resolve("veg.csv")
     java.nio.file.Files.write(f,
       "x,y,forest,water\n100,200,0.25,0.5\n300,400,0.75,0.0\n".getBytes("UTF-8"))
     val df = Sources.fractionalVeg(spark, f.toString)

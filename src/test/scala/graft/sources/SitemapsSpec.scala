@@ -58,7 +58,7 @@ class SitemapsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val s = spark
     import s.implicits._
     // stand-in documents table written to a temp dir, smallest shape
-    val dir = java.nio.file.Files.createTempDirectory("smspec").toString
+    val dir = graft.Scratch.dir("smspec").toString
     Seq((0L, "t0"), (97L, "t1"), (194L, "t2"), (1L, "u0"))
       .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

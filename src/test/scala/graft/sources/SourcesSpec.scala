@@ -33,7 +33,7 @@ class SourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("PointFile source reads delimited X/Y columns") {
-    val p = java.nio.file.Files.createTempFile("pts", ".csv")
+    val p = graft.Scratch.dir("pts").resolve("pts.csv")
     java.nio.file.Files.write(p,
       "site|lon|lat\nA|100.5|200.25\nB|300.0|400.75\n".getBytes)
     val df = Sources.pointFile(spark, p.toString, "lon", "lat", "PIPE")

@@ -16,7 +16,7 @@ class BloomIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.ui.enabled", "false")
       .appName("bloomindex-spec").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    root = java.nio.file.Files.createTempDirectory("bloomidx").toString
+    root = graft.Scratch.dir("bloomidx").toString
     val s = spark
     import s.implicits._
     (0L until 1000L).map(i => (i, s"v$i")).toDF("k", "v")

@@ -23,7 +23,7 @@ class ResumableCleanSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   test("clean pipeline resumes from committed stages; manifests carry metrics") {
-    val root = Files.createTempDirectory("graft_resume_clean").toString
+    val root = graft.Scratch.dir("graft_resume_clean").toString
     val docs = TextFixtures.dupCorpus(spark, sfDir)
     val bench = TextFixtures.benchmarkNgrams(spark, sfDir)
 

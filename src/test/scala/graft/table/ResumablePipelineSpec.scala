@@ -21,7 +21,7 @@ class ResumablePipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   test("flagship page pipeline resumes from committed snapshots") {
-    val root = Files.createTempDirectory("pipe").toString
+    val root = graft.Scratch.dir("pipe").toString
     var computed = Vector.empty[String]
 
     def runPipeline(): Seq[String] = {
@@ -63,7 +63,7 @@ class ResumablePipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("byte-identical text survives the snapshot round-trip") {
-    val root = Files.createTempDirectory("pipe2").toString
+    val root = graft.Scratch.dir("pipe2").toString
     val t = new SnapshotTable(root)
     val pages = Pages.pages(spark, sfDir).select("url", "text")
     val before = pages.collect().map(r => r.getString(0) -> r.getString(1)).toMap

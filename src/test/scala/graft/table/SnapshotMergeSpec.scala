@@ -19,7 +19,7 @@ class SnapshotMergeSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   private def tmpRoot(): String =
-    Files.createTempDirectory("snapmerge").toString
+    graft.Scratch.dir("snapmerge").toString
 
   /** 0..999 range-partitioned into 8 files with disjoint id ranges. */
   private def seed(t: SnapshotTable): Snapshot = {

@@ -19,7 +19,7 @@ class SnapshotTableSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   private def tmpRoot(): String =
-    Files.createTempDirectory("snaptab").toString
+    graft.Scratch.dir("snaptab").toString
 
   test("commit / read / time travel / lineage + metrics") {
     import spark.implicits._

@@ -1,16 +1,17 @@
 #!/usr/bin/env python3
 """Settable-value census: the defaulted parameters of non-private defs.
 
-Usage: python3 tools/knobs.py [FILE.scala ...]   (run at repo root)
+Usage: python3 tools/knobs.py [FILE_OR_DIR_PREFIX ...]   (run at repo root)
 
 For every member-level `def` (indent <= 2 spaces, i.e. in an object or class
 body) that is not `private` or `private[...]`, lists the parameters that
 carry a default value, one line per def, then prints the total. A defaulted
 parameter is a value a caller may set or leave alone: the count is the size
 of the options surface the simplicity review compares before and after a
-change. With no arguments the census covers every src/main .scala file, as
-tools/loc.py and tools/udfs.py do. Parameter lists may span lines; defaults
-may hold parentheses, brackets, braces and string literals.
+change. The census covers every src/main .scala file; arguments restrict it
+to files under those prefixes, as in tools/loc.py and tools/udfs.py.
+Parameter lists may span lines; defaults may hold parentheses, brackets,
+braces and string literals.
 """
 import re
 import sys
@@ -116,12 +117,12 @@ def strip_comments(src):
     return "".join(out)
 
 
-def main(paths):
-    if not paths:
-        from udfs import scala_files
-        paths = list(scala_files("src/main"))
+def main(only):
+    from udfs import scala_files
     total = 0
-    for path in paths:
+    for path in scala_files("src/main"):
+        if only and not any(path.startswith(o) for o in only):
+            continue
         src = strip_comments(open(path).read())
         offset = 0
         for n, line in enumerate(src.split("\n"), 1):
