@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.sql.{SparkSession, DataFrame}
 import graft.registry._
 
@@ -34,8 +36,28 @@ object SparkEntry {
 
   /** Process-unique scratch path for the binary-envelope queries:
     * concurrent Verify/Bench runs over the same sfDir must not race on
-    * one /tmp file (the applicationId is unique per SparkContext). */
-  private[graft] def scratch(s: SparkSession, tag: String, dir: String): String =
-    s"/tmp/graft_${tag}_${dir.replaceAll("[^A-Za-z0-9]", "_")}_" +
-      s.sparkContext.applicationId
+    * one /tmp file (the applicationId is unique per SparkContext, the pid
+    * per live process). Each path, and a `.ncf` file beside it, is
+    * deleted at JVM exit. */
+  private[graft] def scratch(s: SparkSession, tag: String, dir: String): String = {
+    val p = s"/tmp/graft_${tag}_${dir.replaceAll("[^A-Za-z0-9]", "_")}_" +
+      s"${s.sparkContext.applicationId}_${ProcessHandle.current.pid}"
+    scratchMade.add(p)
+    p
+  }
+
+  private lazy val scratchMade = {
+    val made = new ConcurrentLinkedQueue[String]()
+    sys.addShutdownHook(made.forEach { p =>
+      delete(Paths.get(p)); delete(Paths.get(p + ".ncf"))
+    })
+    made
+  }
+
+  private def delete(root: Path): Unit = scala.util.Try {
+    val paths = Files.walk(root)
+    try paths.sorted(java.util.Comparator.reverseOrder[Path]())
+      .forEach(p => Files.deleteIfExists(p))
+    finally paths.close()
+  }
 }

@@ -89,7 +89,9 @@ object Ellipsoid {
 
   /** Catalog-column ellipsoid spec (mims_spatl_proj.c:109-360 hands these
     * tokens to PROJ): "+ellps=NAME", "+datum=NAME", or explicit
-    * "+a=…,+b=…" / "+a=…,+rf=…", comma-separated, '+' optional. */
+    * "+a=…,+b=…" / "+a=…,+rf=…", comma-separated, '+' optional. "+R=r" is
+    * the sphere of radius r and, as in PROJ, takes precedence over the
+    * other keys. */
   def parse(spec: String): Ellipsoid = {
     val kv = spec.split(",").iterator.map(_.trim.stripPrefix("+"))
       .filter(_.nonEmpty).map { tok =>
@@ -98,18 +100,19 @@ object Ellipsoid {
           case Array(k)    => k -> ""
         }
       }.toMap
-    (kv.get("ellps"), kv.get("datum"), kv.get("a")) match {
-      case (Some(n), _, _) => byName.getOrElse(n,
+    (kv.get("R"), kv.get("ellps"), kv.get("datum"), kv.get("a")) match {
+      case (Some(r), _, _, _) => Ellipsoid(r.toDouble, r.toDouble)
+      case (_, Some(n), _, _) => byName.getOrElse(n,
         throw new IllegalArgumentException(s"unknown ellipse '$n' (Table 3 names)"))
-      case (_, Some(d), _) => byDatum.getOrElse(d,
+      case (_, _, Some(d), _) => byDatum.getOrElse(d,
         throw new IllegalArgumentException(s"unknown datum '$d' (Table 2 names)"))
-      case (_, _, Some(a)) =>
+      case (_, _, _, Some(a)) =>
         val av = a.toDouble
         kv.get("b").map(b => Ellipsoid(av, b.toDouble))
           .orElse(kv.get("rf").map(r => rf(av, r.toDouble)))
           .getOrElse(Ellipsoid(av, av)) // +a alone = sphere of radius a
       case _ => throw new IllegalArgumentException(
-        s"ellipsoid spec '$spec' needs +ellps=, +datum=, or +a=")
+        s"ellipsoid spec '$spec' needs +R=, +ellps=, +datum=, or +a=")
     }
   }
 }

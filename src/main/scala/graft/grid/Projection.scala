@@ -320,7 +320,7 @@ object Proj {
   /** A PROJ-style spec, comma-separated, '+' optional:
     * "+proj=lcc,+lat_1=33,+lat_2=45,+lat_0=40,+lon_0=-97[,+x_0=…,+y_0=…]",
     * with an optional ellipsoid ("+ellps=NAME", "+datum=NAME", or
-    * "+a=…[,+b=…|,+rf=…]", see `Ellipsoid.parse`; without one, the
+    * "+a=…[,+b=…|,+rf=…]", "+R=r", see `Ellipsoid.parse`; without one, the
     * reference's default sphere). The reference hands the same tokens to
     * PROJ (mims_spatl_proj.c:109-360). Datum SHIFT (towgs84/nadgrids)
     * stays out of scope per SURVEY §7.6 — the docs themselves do no
@@ -333,7 +333,7 @@ object Proj {
     def num(k: String): Double = kv(k).toDouble
     def opt(k: String, default: Double): Double = kv.get(k).fold(default)(_.toDouble)
     val ell =
-      if (Seq("ellps", "datum", "a").exists(kv.contains)) Ellipsoid.parse(spec)
+      if (Seq("R", "ellps", "datum", "a").exists(kv.contains)) Ellipsoid.parse(spec)
       else Ellipsoid.Sphere
     val (x0, y0) = (opt("x_0", 0.0), opt("y_0", 0.0))
     spec.split(",").head.trim.stripPrefix("+").stripPrefix("proj=") match {
@@ -345,8 +345,11 @@ object Proj {
       case "stere" if kv.contains("lat_ts") =>
         polarStere(num("lat_ts"), opt("lon_0", 0.0), opt("k_0", 1.0), x0, y0, ell)
       case "stere" => stere(num("lat_0"), num("lon_0"), opt("k_0", 1.0), x0, y0, ell)
-      // PROJ fixes UTM's false origin, so +x_0/+y_0 do not move it
-      case "utm" => utm(kv("zone").toInt, 500000.0, 0.0, ell)
+      // PROJ fixes UTM's false origin, so +x_0/+y_0 do not move it;
+      // +south zones take a false northing of 10,000,000 m
+      case "utm" =>
+        val south = spec.split(",").exists(_.trim.stripPrefix("+") == "south")
+        utm(kv("zone").toInt, 500000.0, if (south) 10000000.0 else 0.0, ell)
       case "tmerc" => tmerc(num("lon_0"), opt("k_0", 0.9996),
         opt("x_0", 500000.0), y0, opt("lat_0", 0.0), ell)
       case "laea" => laea(num("lat_0"), num("lon_0"), x0, y0, ell)

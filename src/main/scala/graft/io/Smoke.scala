@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession, Row}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import java.util.Locale
 import graft.grid.GridSpec
@@ -20,7 +20,8 @@ import graft.grid.GridSpec
   * Polygon output (#POLYGON, surrogate.c:455-470) is the same format with
   * the out_poly_id string where the grid has `col row`, and `0` where the
   * grid remainder has `0 0`. One renderer serves both: the table's
-  * `out_id` column says which shape it is. The sink owns the row order.
+  * `out_id` column says which shape it is. The sink owns the row order:
+  * it renders every file on the driver from one collect of its table.
   */
 object Smoke {
 
@@ -76,22 +77,22 @@ object Smoke {
       (if (f.denominator) "\t%f".formatLocal(Locale.US, den) else "") +
       (if (f.qasum) "\t%f".formatLocal(Locale.US, qs) else "")
 
-  /** Each county's SMOKE lines in file order, with its (srg_code, fips)
-    * key: the data rows, then the #REMAINDER row when
-    * |1−Σfrac| > 1e-5 and Σfrac > 1e-5 (surrogate.c:291-360); a county
-    * below `denomThreshold` renders every row `#SKIPPED ` and no remainder
-    * (surrogate.c:434-452). An `out_id` column marks polygon output
-    * (surrogate.c:455-470): its rows order by the id string (the ratioPoly
-    * qasum order), the id is the target field and the remainder's is "0"
-    * (surrogate.c:326-334).
+  /** Surrogate table → SMOKE lines, rendered on the driver from one
+    * collect: counties in (srg_code, fips) order, each one's data rows,
+    * then its #REMAINDER row when |1−Σfrac| > 1e-5 and Σfrac > 1e-5
+    * (surrogate.c:291-360); a county below `denomThreshold` renders every
+    * row `#SKIPPED ` and no remainder (surrogate.c:434-452). An `out_id`
+    * column marks polygon output (surrogate.c:455-470): its rows order by
+    * the id string (the ratioPoly qasum order), the id is the target field
+    * and the remainder's is "0" (surrogate.c:326-334).
     * Grid rows order by (row, col) with target `col row` and remainder
     * target `0 0`. Input schema: (srg_code, fips, col, row | out_id, frac,
-    * numer, denom, qasum). One in-memory group per county: counties are
-    * small (≤ cells-per-county rows). */
-  private def countyLines(srg: DataFrame, denomThreshold: Double,
-                          fields: QaFields): Dataset[(Int, String, Seq[String])] = {
-    val spark = srg.sparkSession
-    import spark.implicits._
+    * numer, denom, qasum). Counties are small (≤ cells-per-county rows).
+    *
+    * @param denomThreshold counties below it render as #SKIPPED rows
+    * @param fields the `! numer denom qasum` comment fields to append */
+  def toLines(srg: DataFrame, denomThreshold: Double = 1e-5,
+              fields: QaFields = QaFields.All): Seq[String] = {
     val poly = srg.columns.contains("out_id")
     def target(c: Int, r: Int, id: String): String =
       if (poly) id else "%5d\t%5d".formatLocal(Locale.US, c, r)
@@ -99,51 +100,34 @@ object Smoke {
     val key =
       if (poly) Seq(lit(0), lit(0), col("out_id").cast("string"))
       else Seq(col("row").cast("int"), col("col").cast("int"), lit(""))
-    srg.select(Seq(col("srg_code").cast("int"), col("fips").cast("string")) ++
+    val rows = srg.select(Seq(col("srg_code").cast("int"), col("fips").cast("string")) ++
         key ++ Seq(col("frac").cast("double"), col("numer").cast("double"),
         col("denom").cast("double"), col("qasum").cast("double")): _*)
-      .as[(Int, String, Int, Int, String, Double, Double, Double, Double)]
-      .groupByKey(t => (t._1, t._2))
-      .mapGroups { (k: (Int, String),
-                    it: Iterator[(Int, String, Int, Int, String, Double, Double, Double, Double)]) =>
-        val (code, fips) = k
-        val rows = it.toVector.sortBy(t => (t._3, t._4, t._5))
+      .collect()
+    rows.groupBy(r => (r.getInt(0), r.getString(1))).toSeq.sortBy(_._1)
+      .flatMap { case ((code, fips), county) =>
+        val rs = county.sortBy(r => (r.getInt(2), r.getInt(3), r.getString(4)))
         def line(prefix: String, tgt: String, frac: Double, num: Double,
                  den: Double, qs: Double): String =
           "%s%5d\t%s\t%s\t%10.8f".formatLocal(Locale.US, prefix, code, fips,
             tgt, frac) + qaSuffix(num, den, qs, fields)
-        val den = rows.head._8
-        val qasum = rows.last._9
+        val den = rs.head.getDouble(7)
+        val qasum = rs.last.getDouble(8)
         val skipped = den < denomThreshold
         val prefix = if (skipped) "#SKIPPED " else ""
-        val lines = rows.map { case (_, _, r, c, id, frac, num, d, qs) =>
-          line(prefix, target(c, r, id), frac, num, d, qs)
-        }
+        val lines = rs.map(r => line(prefix, target(r.getInt(3), r.getInt(2), r.getString(4)),
+          r.getDouble(5), r.getDouble(6), r.getDouble(7), r.getDouble(8)))
         val rem =
           if (!skipped && math.abs(1.0 - qasum) > 1e-5 && qasum > 1e-5)
             Seq(line("#REMAINDER ", if (poly) "0" else target(0, 0, ""),
-              1.0 - qasum, den - rows.iterator.map(_._7).sum, den, 1.0 - qasum))
+              1.0 - qasum, den - rs.iterator.map(_.getDouble(6)).sum, den, 1.0 - qasum))
           else Seq.empty
-        (code, fips, lines ++ rem)
+        lines ++ rem
       }
   }
 
-  /** Surrogate table → SMOKE lines, county by county (see `countyLines`).
-    *
-    * @param denomThreshold counties below it render as #SKIPPED rows
-    * @param fields the `! numer denom qasum` comment fields to append */
-  def toLines(srg: DataFrame, denomThreshold: Double = 1e-5,
-              fields: QaFields = QaFields.All): Dataset[String] = {
-    val spark = srg.sparkSession
-    import spark.implicits._
-    countyLines(srg, denomThreshold, fields).flatMap(_._3)
-  }
-
-  /** Write a complete SMOKE file: header + body, grid or polygon output
-    * (see `countyLines`). Counties come in (srg_code, fips) order, each one's
-    * rows in the order `countyLines` gives them. The single-file collect is
-    * for byte-exact parity at test scale; at table scale `writeParts`
-    * keeps the body distributed.
+  /** Write a complete SMOKE file: header + `toLines`'s body, grid or
+    * polygon output.
     *
     * @param withQa false writes no comment fields, as `QaFields.None`
     * @param headerTag #GRID for Regular/EGrid output, #VARIABLE_GRID,
@@ -152,33 +136,10 @@ object Smoke {
             withQa: Boolean = true, denomThreshold: Double = 1e-5,
             headerTag: String = "#GRID", fields: QaFields = QaFields.All,
             writeHeader: Boolean = true): Unit = {
-    val body = countyLines(srg, denomThreshold,
-        if (withQa) fields else QaFields.None)
-      .collect().sortBy(t => (t._1, t._2)).flatMap(_._3).toSeq
+    val body = toLines(srg, denomThreshold, if (withQa) fields else QaFields.None)
     val all = if (writeHeader) header(g, p, headerTag) +: body else body
     java.nio.file.Files.write(java.nio.file.Paths.get(path),
       all.mkString("", "\n", "\n").getBytes("UTF-8"))
-  }
-
-  /** Distributed SMOKE sink for table-scale output: the same body as
-    * `write`, as text part files under `dir/body/` (one per default
-    * parallelism slot), header in `dir/HEADER`. Counties are
-    * range-partitioned and sorted within each part, so the part files read
-    * in name order hold `write`'s body. */
-  def writeParts(srg: DataFrame, g: GridSpec, p: ProjInfo, dir: String,
-                 denomThreshold: Double = 1e-5,
-                 headerTag: String = "#GRID",
-                 fields: QaFields = QaFields.All): Unit = {
-    val spark = srg.sparkSession
-    import spark.implicits._
-    countyLines(srg, denomThreshold, fields)
-      .repartitionByRange(spark.sparkContext.defaultParallelism,
-        col("_1"), col("_2"))
-      .sortWithinPartitions("_1", "_2")
-      .flatMap(_._3)
-      .write.mode("overwrite").text(s"$dir/body")
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/HEADER"),
-      (header(g, p, headerTag) + "\n").getBytes("UTF-8"))
   }
 
   /** SMOKE source: parse lines back to (srg_code, fips, col, row, frac

@@ -19,21 +19,29 @@ object PostOps {
   /** MERGE (merge/MergeCounties.java:26-141): out = f1·srg1 + f2·srg2 over
     * the UNION of (fips,col,row) cells, a missing side contributing 0
     * (one-sided copy, :117-141). Counties absent from EITHER input are
-    * dropped entirely (docs SA_ch05_surrogate.md:427-438). */
+    * dropped entirely (docs SA_ch05_surrogate.md:427-438).
+    *
+    * One union and one exchange: both sides, scaled and tagged by side,
+    * move once on fips; the cell sum, the county's side flags and qasum
+    * all run inside that partitioning. A cell sums at most one term per
+    * side, so the sum is the two-term addition in either order. */
   def merge(a: DataFrame, b: DataFrame, f1: Double, f2: Double,
             outCode: Int): DataFrame = {
-    val al = a.select(col("fips"), col("col"), col("row"), col("frac").as("__fa"))
-    val bl = b.select(col("fips"), col("col"), col("row"), col("frac").as("__fb"))
-    val joined = al.join(bl, Seq("fips", "col", "row"), "full_outer")
-    // counties must exist in both inputs (county-level semi joins)
-    val inBoth = a.select("fips").distinct()
-      .join(b.select("fips").distinct(), "fips")
-    val w = Window.partitionBy("fips").orderBy("row", "col")
+    def side(df: DataFrame, f: Double, inA: Int): DataFrame =
+      df.select(col("fips"), col("col"), col("row"), (col("frac") * f).as("frac"),
+        lit(inA).as("__a"), lit(1 - inA).as("__b"))
+    val county = Window.partitionBy("fips")
+    val w = county.orderBy("row", "col")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    joined.join(broadcast(inBoth), "fips")
-      .withColumn("frac",
-        coalesce(col("__fa"), lit(0.0)) * f1 + coalesce(col("__fb"), lit(0.0)) * f2)
-      .where(col("frac") =!= 0.0)
+    side(a, f1, 1).unionByName(side(b, f2, 0))
+      .repartition(col("fips"))
+      .groupBy("fips", "col", "row")
+      // sum is nullable; coalesce keeps frac non-nullable, as the inputs' frac
+      .agg(coalesce(sum("frac"), lit(0.0)).as("frac"),
+        max("__a").as("__a"), max("__b").as("__b"))
+      // counties must exist in both inputs
+      .withColumn("__both", max("__a").over(county) * max("__b").over(county))
+      .where(col("__both") === 1 && col("frac") =!= 0.0)
       .withColumn("srg_code", lit(outCode))
       .withColumn("qasum", sum("frac").over(w))
       .select("srg_code", "fips", "col", "row", "frac", "qasum")
@@ -50,8 +58,8 @@ object PostOps {
       df.select(col("fips"), col("col"), col("row"), col("frac"),
                 col("srg_code").as("filled_from"), lit(i).as("__prio"))
     }.reduce(_ unionByName _)
-    val best = tagged.groupBy("fips").agg(min("__prio").as("__prio"))
-    tagged.join(broadcast(best), Seq("fips", "__prio"))
+    tagged.withColumn("__best", min("__prio").over(Window.partitionBy("fips")))
+      .where(col("__prio") === col("__best"))
       .withColumn("srg_code", lit(outCode))
       .select("srg_code", "fips", "col", "row", "frac", "filled_from")
   }
@@ -126,11 +134,15 @@ object PostOps {
 
   /** diffsurr (diffsurr.c:45-234): align two surrogate tables on
     * (fips, col, row) and report rows where |frac_a − frac_b| > tol or one
-    * side is missing — also the engine's own regression harness. */
+    * side is missing — also the engine's own regression harness. The two
+    * sides are unioned and each cell keeps the one frac of each side. */
   def diffSurr(a: DataFrame, b: DataFrame, tol: Double = 1e-5): DataFrame = {
-    val al = a.select(col("fips"), col("col"), col("row"), col("frac").as("frac_a"))
-    val bl = b.select(col("fips"), col("col"), col("row"), col("frac").as("frac_b"))
-    al.join(bl, Seq("fips", "col", "row"), "full_outer")
+    val none = lit(null).cast("double")
+    def side(df: DataFrame, fa: Column, fb: Column): DataFrame =
+      df.select(col("fips"), col("col"), col("row"), fa.as("frac_a"), fb.as("frac_b"))
+    side(a, col("frac"), none).unionByName(side(b, none, col("frac")))
+      .groupBy("fips", "col", "row")
+      .agg(max("frac_a").as("frac_a"), max("frac_b").as("frac_b"))
       .where(col("frac_a").isNull || col("frac_b").isNull ||
              abs(col("frac_a") - col("frac_b")) > tol)
   }

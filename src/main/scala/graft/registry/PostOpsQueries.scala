@@ -16,12 +16,11 @@ object PostOpsQueries {
 
   private val pointSrgRel = s"(${srgPointStmt})"
 
-  // localCheckpoint(true): merge/gapfill reference each input TWICE (the
-  // cell data path plus the county-membership path), so without a
-  // within-query materialization every post-processing query rebuilds the
-  // whole upstream surrogate pipeline (spatial join + aggregation) twice.
-  // Eager localCheckpoint materializes through the codegen path once per
-  // query call; the county-bounded tables are small.
+  // localCheckpoint(true): q46 reads each table twice (once in each of its
+  // two gapfill cascades), and without a within-query materialization each read
+  // rebuilds the whole upstream surrogate pipeline (spatial join +
+  // aggregation). Eager localCheckpoint materializes through the codegen
+  // path once per query call; the county-bounded tables are small.
   private def srg100(s: SparkSession, dir: String): DataFrame =
     Surrogate.pointSurrogate(TpchGeo.points(s, dir), TpchGeo.counties(s),
       grid, domain, zres, srgCode = 100)

@@ -351,4 +351,26 @@ class EllipsoidalSpec extends AnyFunSuite {
     assert(p == Proj.fromGriddesc(
       graft.sources.GridDesc.CoordSys("SIN", 11, -100, 70, 80, 0, 0), Ellipsoid.WGS84))
   }
+
+  test("+R=r is the sphere of radius r, ahead of +ellps (PROJ's precedence)") {
+    val lcc = "+proj=lcc,+lat_1=33,+lat_2=45,+lat_0=40,+lon_0=-97"
+    val bits = (p: Proj) => {
+      val (x, y) = p.forward(-80, 30)
+      (java.lang.Double.doubleToRawLongBits(x), java.lang.Double.doubleToRawLongBits(y))
+    }
+    val ab = bits(Proj.parse(lcc + ",+a=6370000,+b=6370000"))
+    assert(bits(Proj.parse(lcc + ",+R=6370000")) == ab)
+    assert(bits(Proj.parse(lcc + ",+R=6370000,+ellps=GRS80")) == ab)
+    assert(bits(Proj.parse(lcc + ",+R=6370000")) != bits(Proj.parse(lcc)))
+    assert(Ellipsoid.parse("+R=6370000") == Ellipsoid(6370000.0, 6370000.0))
+  }
+
+  test("+proj=utm,+south takes a false northing of 10,000,000 m") {
+    val (x, y) = Proj.parse("+proj=utm,+zone=56,+south").forward(151.2, -33.9)
+    val (xn, yn) = Proj.parse("+proj=utm,+zone=56").forward(151.2, -33.9)
+    assert(math.round(y) == 6230546L, s"y = $y")
+    assert(x == xn && y == yn + 10000000.0)
+    val (lon, lat) = Proj.parse("+proj=utm,+zone=56,+south").inverse(x, y)
+    assert(math.abs(lon - 151.2) < 1e-9 && math.abs(lat + 33.9) < 1e-9)
+  }
 }

@@ -38,7 +38,7 @@ class SmokeSpec extends AnyFunSuite with BeforeAndAfterAll {
       .sortBy(_._1)
     assert(rows.toSeq == Seq((2, 0.75, 1.0), (10, 0.25, 0.25)))
     // toLines renders polygon output when the table has an out_id column
-    val lines = Smoke.toLines(srg).collect()
+    val lines = Smoke.toLines(srg)
     assert(!lines.exists(_.startsWith("#REMAINDER")), lines.mkString("\n"))
   }
 
@@ -53,7 +53,7 @@ class SmokeSpec extends AnyFunSuite with BeforeAndAfterAll {
       (170, "B", "12", 1.0, 1e-7, 1e-7, 1.0)
     ).toDF("srg_code", "fips", "out_id", "frac", "numer", "denom", "qasum")
     // toLines renders polygon output when the table has an out_id column
-    val lines = Smoke.toLines(srg).collect().sorted
+    val lines = Smoke.toLines(srg).sorted
     assert(lines.exists(_.startsWith("  170\tA\t12\t0.50000000\t!")))
     assert(lines.exists(_.startsWith("#REMAINDER   170\tA\t0\t0.25000000\t!")))
     assert(lines.exists(_.startsWith("#SKIPPED   170\tB\t12\t1.00000000\t!")))
@@ -65,13 +65,13 @@ class SmokeSpec extends AnyFunSuite with BeforeAndAfterAll {
     val srg = Seq((100, "A", 1, 1, 0.5, 2.0, 4.0, 0.5))
       .toDF("srg_code", "fips", "col", "row", "frac", "numer", "denom", "qasum")
     def line(f: Smoke.QaFields) =
-      Smoke.toLines(srg, fields = f).collect().head
+      Smoke.toLines(srg, fields = f).head
     assert(line(Smoke.QaFields.All).endsWith("\t!\t2.000000\t4.000000\t0.500000"))
     // qasum only: numerator/denominator fields are EMPTY, not zero
     assert(line(Smoke.QaFields(false, false, true)).endsWith("0.50000000\t!\t0.500000"))
     assert(line(Smoke.QaFields(true, false, false)).endsWith("0.50000000\t!\t2.000000"))
     // all off: no comment at all
-    assert(Smoke.toLines(srg, fields = Smoke.QaFields.None).collect().head
+    assert(Smoke.toLines(srg, fields = Smoke.QaFields.None).head
       .endsWith("0.50000000"))
   }
 
@@ -111,7 +111,7 @@ class SmokeSpec extends AnyFunSuite with BeforeAndAfterAll {
       (100, "47002", 1, 1, 1.0,  1e-7, 1e-7, 1.0)
     ).toDF("srg_code", "fips", "col", "row", "frac", "numer", "denom", "qasum")
 
-    val lines = Smoke.toLines(srg).collect().sorted.toSeq
+    val lines = Smoke.toLines(srg).sorted.toSeq
     assert(lines.contains(
       "  100\t47001\t    2\t    1\t0.50000000\t!\t5.000000\t10.000000\t0.500000"))
     assert(lines.contains(
@@ -125,6 +125,8 @@ class SmokeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r.getAs[Double]("frac") == 0.5 && r.getAs[Double]("denom") == 10.0)
   }
 
+  // the title keeps the name of a removed distributed writer; the case
+  // drives the file sink
   test("distributed writeParts round-trips through Smoke.parse") {
     import spark.implicits._
     val srg = graft.operators.Surrogate.pointSurrogate(
@@ -132,10 +134,10 @@ class SmokeSpec extends AnyFunSuite with BeforeAndAfterAll {
       graft.fixtures.TpchGeo.counties(spark),
       graft.fixtures.TpchGeo.grid, graft.fixtures.TpchGeo.domain,
       graft.fixtures.TpchGeo.zres, 100)
-    val dir = graft.Scratch.dir("smokeparts").toString
-    Smoke.writeParts(srg, GridCatalog.TEST8, Smoke.ProjInfo(), dir)
+    val f = graft.Scratch.dir("smokeparts").resolve("srg.txt").toString
+    Smoke.write(srg, GridCatalog.TEST8, Smoke.ProjInfo(), f)
 
-    val back = Smoke.parse(spark, spark.read.textFile(s"$dir/body"))
+    val back = Smoke.parse(spark, spark.read.textFile(f))
     assert(back.count() == srg.count())
     val a = srg.select("srg_code", "fips", "col", "row", "frac")
       .orderBy("fips", "row", "col").collect().map(_.toString).toSeq
@@ -146,9 +148,8 @@ class SmokeSpec extends AnyFunSuite with BeforeAndAfterAll {
     a.zip(b).foreach { case (x, y) =>
       assert(x.split(",").take(4).sameElements(y.split(",").take(4)), s"$x vs $y")
     }
-    assert(Smoke.parseHeader(new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$dir/HEADER")), "UTF-8").trim)
-      == GridCatalog.TEST8)
+    assert(Smoke.parseHeader(java.nio.file.Files.readAllLines(
+      java.nio.file.Paths.get(f)).get(0)) == GridCatalog.TEST8)
   }
 
   test("write flushes #REMAINDER after its county's data rows (surrogate.c order)") {
@@ -236,23 +237,35 @@ class SmokeSpec extends AnyFunSuite with BeforeAndAfterAll {
       "UTF-8") == expected)
   }
 
+  // the title keeps the name of a removed distributed writer
   test("writeParts on a polygon table round-trips its data rows") {
-    val dir = graft.Scratch.dir("smokepolyparts").toString
-    Smoke.writeParts(polyTable, GridCatalog.TEST8, Smoke.ProjInfo(), dir,
+    val out = graft.Scratch.dir("smokepolyparts").resolve("srgpoly.txt").toString
+    Smoke.write(polyTable, GridCatalog.TEST8, Smoke.ProjInfo(), out,
       headerTag = "#POLYGON")
-    val parts = new java.io.File(s"$dir/body").listFiles()
-      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-    val lines = parts.toSeq.flatMap(f => scala.jdk.CollectionConverters.ListHasAsScala(
-      java.nio.file.Files.readAllLines(f.toPath)).asScala)
-    // the part files in name order hold write's body
+    val all = scala.jdk.CollectionConverters.ListHasAsScala(
+      java.nio.file.Files.readAllLines(java.nio.file.Paths.get(out))).asScala.toSeq
+    val lines = all.tail
     assert(lines == polyBody, lines.mkString("\n"))
+    // Smoke.parse reads grid rows only (`col row` targets), so the polygon
+    // data rows are split here
     val data = lines.filterNot(_.startsWith("#")).map(_.split("\t"))
       .map(f => (f(0).trim.toInt, f(1), f(2), f(3).toDouble)).toSet
     val live = polyTable.where("denom >= 1e-5").collect()
       .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getDouble(3))).toSet
     assert(data == live)
-    assert(new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$dir/HEADER")), "UTF-8").startsWith("#POLYGON\tTEST8\t"))
+    assert(all.head.startsWith("#POLYGON\tTEST8\t"))
+  }
+
+  test("write renders a checkpointed table from one job") {
+    val srg = graft.operators.Surrogate.pointSurrogate(
+      graft.fixtures.TpchGeo.points(spark, graft.TestData.sf("0.001")),
+      graft.fixtures.TpchGeo.counties(spark),
+      graft.fixtures.TpchGeo.grid, graft.fixtures.TpchGeo.domain,
+      graft.fixtures.TpchGeo.zres, 100).localCheckpoint()
+    val f = graft.Scratch.dir("smokejobs").resolve("srg.txt").toString
+    val (_, jobs) = graft.Jobs.of(spark)(
+      Smoke.write(srg, GridCatalog.TEST8, Smoke.ProjInfo(), f))
+    assert(jobs == 1, s"Smoke.write started $jobs jobs")
   }
 
   test("write produces a deterministically ordered file") {

@@ -9,6 +9,7 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.datasources.v2.V2TableWriteExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -132,6 +133,26 @@ class SurrogatePlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       val sorts = ns.collect { case x: SortExec if x.global => x }
       assert(ranges.isEmpty && sorts.isEmpty,
         s"$name: ${(ranges ++ sorts).mkString("\n")}")
+    }
+  }
+
+  test("merge, gapfill and diffSurr over checkpointed inputs: no join, no broadcast, one shuffle") {
+    val points = Surrogate.pointSurrogate(
+      TpchGeo.points(spark, SfDir), counties, g, d, z, srgCode = 1).localCheckpoint()
+    val tracts = Surrogate.polySurrogate(
+      TpchGeo.tracts(spark, SfDir), counties, g, d, z, srgCode = 2,
+      weight = Some("p_size")).localCheckpoint()
+    val builds: Seq[(String, () => DataFrame)] = Seq(
+      "PostOps.merge" -> (() => PostOps.merge(points, tracts, 0.5, 0.5, 5)),
+      "PostOps.gapfill" -> (() => PostOps.gapfill(Seq(tracts, points), 6)),
+      "PostOps.diffSurr" -> (() => PostOps.diffSurr(tracts, points)))
+    builds.foreach { case (name, build) =>
+      val ns = executed(build())
+      val joins = ns.collect { case j: BaseJoinExec => j }
+      val broadcasts = ns.collect { case x: BroadcastExchangeExec => x }
+      val shuffles = ns.collect { case x: ShuffleExchangeExec => x }
+      assert(joins.isEmpty && broadcasts.isEmpty && shuffles.size == 1,
+        s"$name: ${(joins ++ broadcasts ++ shuffles).mkString("\n")}")
     }
   }
 }
