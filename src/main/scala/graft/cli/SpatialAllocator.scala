@@ -382,7 +382,11 @@ object SpatialAllocator {
         val input = applyFilter(reprojected(
           readLayer(req("INPUT_FILE_NAME"), inputType), "INPUT_FILE", inputKind))
         val modeSpecs = req("ALLOCATE_ATTRS").split(",").map { kv =>
-          val Array(a, m) = kv.trim.split("="); (a, m)
+          kv.trim.split("=", -1) match {
+            case Array(a, m) => (a, m)
+            case _ => throw new IllegalArgumentException(
+              s"ALLOCATE_ATTRS entry '${kv.trim}' is not attr=Mode")
+          }
         }.toSeq
         val toIoapi = cfg.get("OUTPUT_FILE_TYPE").contains("IoapiFile")
         // NC_DOUBLE (M3DBLE) keeps allocated doubles bit-exact in the file
@@ -420,7 +424,9 @@ object SpatialAllocator {
               case "Average" => Allocate.Average
               case "DiscreteOverlap" => Allocate.DiscreteOverlap
               case "DiscreteCentroid" => Allocate.DiscreteCentroid
-              case other => throw new IllegalArgumentException(s"mode $other")
+              case other => throw new IllegalArgumentException(
+                s"ALLOCATE_ATTRS mode '$other' for $a: expected Aggregate, " +
+                  "Average, DiscreteOverlap, DiscreteCentroid or AreaPercent")
             })
           }
           if (toIoapi) {

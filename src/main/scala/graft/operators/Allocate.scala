@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Column}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.KnownNotNull
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graft.ExprBridge
 import graft.cells.CellDomain
 import graft.grid.GridSpec
 import graft.spark.GeoFunctions._
@@ -20,9 +21,12 @@ import graft.spark.GeoFunctions._
   *   AreaPercent      per (output cell, category): Σ area(frag)/area(cell)
   *                     (typeAreaPercent, sumpoly.c:1179-1323)
   *
-  * All modes consume the same fragment relation from
-  * SpatialJoin.polyPolyFragments — one spatial join feeds every aggregate,
-  * like the reference's single polyIsect followed by per-attribute dispatch.
+  * Every mode that reads fragments is one expression of ONE aggregate over
+  * one SpatialJoin.polyPolyFragments result — the reference's single
+  * polyIsect followed by per-attribute dispatch (allocate.c:367): one
+  * exchange on the output id, nothing persisted, no window and no join
+  * back. DiscreteCentroid reads no fragments: it is its own
+  * point-in-polygon join of the output centroids.
   */
 object Allocate {
 
@@ -33,73 +37,60 @@ object Allocate {
   case object DiscreteCentroid extends Mode
 
   /** input: (geom, attrs…); output layer: (outId, geom). Returns one row per
-    * output polygon with each requested attribute aggregated by its mode. */
+    * output polygon with each requested attribute aggregated by its mode:
+    * `outId`, then the Aggregate, Average, DiscreteOverlap and
+    * DiscreteCentroid attributes, each group in `modes` order. With
+    * fragment modes the rows are the output polygons some input overlaps
+    * (a centroid that hits no input is NULL); with DiscreteCentroid alone
+    * they are the output polygons whose centroid hits an input. */
   def allocate(input: DataFrame, output: DataFrame,
                modes: Seq[(String, Mode)],
                domain: CellDomain, res: Int,
                outId: String = "out_id"): DataFrame = {
+    val attrs = modes.map(_._1)
+    require(modes.nonEmpty, "allocate: no attribute modes given")
+    require(attrs.distinct.size == attrs.size, "allocate: an attribute takes " +
+      s"one mode, named twice: ${attrs.diff(attrs.distinct).distinct.mkString(", ")}")
+    def named(m: Mode) = modes.collect { case (a, `m`) => a }
+    val (avgs, disc) = (named(Average), named(DiscreteOverlap))
     val inp = input.withColumn("__iarea", polygonArea(col("geom")))
-    val out = output.withColumnRenamed("geom", "bgeom")
-    // persisted: consumed once per aggregation mode (the reference likewise
-    // feeds every allocate mode from one polyIsect result, allocate.c:367)
-    val frags = SpatialJoin.polyPolyFragments(inp, out, domain, res,
-        keepFragGeom = false)
-      .transform(graft.spark.PersistTracker.persist)
-    val needArea = modes.exists(_._2 == Average)
-    val outAreas =
-      if (needArea) output.select(col(outId),
-        polygonArea(col("geom")).as("__oarea"))
-      else null
+    val contrib = (a: String) =>
+      sum(col(a).cast("double") * (col("frag_area") / col("__iarea")))
+    // argmax of the overlap: the largest frag_area, ties to the smallest
+    // first discrete attribute (NULL first), every discrete attribute from
+    // that one fragment; the key, not the row order, decides the pick
+    val aggs = named(Aggregate).map(a => contrib(a).as(a)) ++
+      avgs.map(a => (contrib(a) / first("__oarea")).as(a)) ++
+      (if (disc.isEmpty) Nil else Seq(min_by(struct(disc.map(col): _*),
+        struct(-col("frag_area"), col(disc.head))).as("__disc")))
 
-    val contribOf: String => Column = a =>
-      col(a).cast("double") * (col("frag_area") / col("__iarea"))
-
-    // continuous modes fold into one groupBy; discrete-overlap is an argmax
-    val contAggs = modes.collect {
-      case (a, Aggregate) => sum(contribOf(a)).as(a)
-      case (a, Average)   => sum(contribOf(a)).as(s"__sum_$a")
-    }
-    var result: DataFrame = null
-    if (contAggs.nonEmpty) {
-      var df = frags.groupBy(outId).agg(contAggs.head, contAggs.tail: _*)
-      modes.collect { case (a, Average) =>
-        df = df.join(broadcast(outAreas), outId)
-          .withColumn(a, col(s"__sum_$a") / col("__oarea"))
-          .drop(s"__sum_$a", "__oarea")
-      }
-      result = df
-    }
-
-    val discAttrs = modes.collect { case (a, DiscreteOverlap) => a }
-    if (discAttrs.nonEmpty) {
-      // argmax over fragments by overlap measure; deterministic tie-break on
-      // the attribute value itself (the reference's loop order is its
-      // implicit tie-break; we need one that survives shuffling)
-      val w = Window.partitionBy(outId)
-        .orderBy(col("frag_area").desc, col(discAttrs.head).asc)
-      val top = frags.withColumn("__rn", row_number().over(w))
-        .where(col("__rn") === 1)
-        .select((outId +: discAttrs).map(col): _*)
-      result = if (result == null) top else result.join(top, outId)
-    }
-
-    val centAttrs = modes.collect { case (a, DiscreteCentroid) => a }
-    if (centAttrs.nonEmpty) {
-      val cent = output
-        .withColumn("__c", centroidUdf(col("geom")))
-        .select(col(outId), col("__c").getItem(0).as("x"),
-                col("__c").getItem(1).as("y"))
+    val centAttrs = named(DiscreteCentroid)
+    lazy val hit = {
       // the reference assumes exactly one containing input (sumpoly.c:1069);
-      // with overlapping inputs we reduce deterministically via min so the
-      // result is stable under shuffle
-      val aggs = centAttrs.map(a => min(col(a)).as(a))
-      val hit = SpatialJoin.pointInPoly(cent, inp.select(
-          (Seq("geom") ++ centAttrs).map(col): _*),
-        domain, res)
-        .groupBy(col(outId)).agg(aggs.head, aggs.tail: _*)
-      result = if (result == null) hit else result.join(hit, Seq(outId), "left")
+      // with overlapping inputs min reduces deterministically
+      val (x, y) = vertexMeanCentroid(col("geom"))
+      val mins = centAttrs.map(a => min(col(a)).as(a))
+      SpatialJoin.pointInPoly(output.select(col(outId), x.as("x"), y.as("y")),
+          inp.select((Seq("geom") ++ centAttrs).map(col): _*), domain, res)
+        .groupBy(col(outId)).agg(mins.head, mins.tail: _*)
     }
-    result
+    lazy val agg = {
+      val out = (if (avgs.isEmpty) output
+                 else output.withColumn("__oarea", polygonArea(col("geom"))))
+        .withColumnRenamed("geom", "bgeom")
+      // min_by is nullable; a discrete attribute keeps its input nullability
+      val picked = disc.map { a =>
+        val v = col("__disc").getField(a)
+        (if (input.schema(a).nullable) v
+         else ExprBridge.column(KnownNotNull(ExprBridge.expression(v)))).as(a)
+      }
+      SpatialJoin.polyPolyFragments(inp, out, domain, res, keepFragGeom = false)
+        .groupBy(outId).agg(aggs.head, aggs.tail: _*)
+        .select((Seq(outId) ++ named(Aggregate) ++ avgs).map(col) ++ picked: _*)
+    }
+    if (aggs.isEmpty) hit
+    else if (centAttrs.isEmpty) agg
+    else agg.join(hit, Seq(outId), "left")
   }
 
   /** Gridded-table → polygon aggregation — the I/O API ALLOCATE /

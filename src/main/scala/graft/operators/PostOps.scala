@@ -64,17 +64,15 @@ object PostOps {
       .select("srg_code", "fips", "col", "row", "frac", "filled_from")
   }
 
-  /** Deterministic per-county Σfrac: computed as the LAST value of a running
-    * sum in (row, col) order rather than an unordered aggregate, so the
-    * float addition order is fixed — results are bit-identical across
-    * partitionings/cluster sizes (and match the reference, which also sums
-    * in output order, surrogate.c:413-414). */
-  private def countySum: Column = {
-    val run = Window.partitionBy("srg_code", "fips").orderBy("row", "col")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    max(sum(col("frac")).over(run))
-      .over(Window.partitionBy("srg_code", "fips"))
-  }
+  /** Deterministic per-county Σfrac: one window over the whole county,
+    * ordered by (row, col), so the float addition order is fixed — results
+    * are bit-identical across partitionings/cluster sizes (and match the
+    * reference, which also sums in output order, surrogate.c:413-414). The
+    * frame is the whole county, so a negative fraction (a merge with a
+    * negative coefficient) counts: the total, not the largest prefix sum. */
+  private def countySum: Column =
+    sum(col("frac")).over(Window.partitionBy("srg_code", "fips").orderBy("row", "col")
+      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
 
   /** NORMALIZE (normalize/NormalizeSurrogates.java, County.java:34-58): per
     * county, when |Σfrac − 1| > tol, rescale frac := frac/Σfrac; counties on

@@ -141,10 +141,22 @@ object GeoFunctions {
   def lineLength(line: Column, curved: Boolean): Column =
     exprCol(LineLength(exprOf(line), curved))
 
-  val centroidUdf = udf((rings: Seq[Seq[Double]]) => {
-    val (cx, cy) = Geo.vertexMeanCentroid(rings.map(_.toArray).toArray)
-    Array(cx, cy)
-  }).withName("poly_centroid")
+  /** Vertex-mean centroid (x, y) of a polygon's outer ring, the closing
+    * vertex dropped as Geo.vertexMeanCentroid does, in built-in array
+    * arithmetic: NULL for a NULL polygon, one with no rings or an empty
+    * outer ring. `get` reads out of bounds as NULL, and the mean runs only
+    * over a positive vertex count (`sequence(0, -1)` counts down). */
+  def vertexMeanCentroid(geom: Column): (Column, Column) = {
+    val ring = get(geom, lit(0))
+    val n = shiftright(size(ring), 1)
+    val last = n * 2 - 2
+    val closed = n > 1 && get(ring, lit(0)) === get(ring, last) &&
+      get(ring, lit(1)) === get(ring, last + 1)
+    val m = when(closed, n - 1).otherwise(n)
+    def mean(off: Int): Column = when(m > 0, aggregate(sequence(lit(0), m - 1),
+      lit(0.0), (acc, i) => acc + get(ring, i * 2 + off)) / m)
+    (mean(0), mean(1))
+  }
 
   /** Clipped geometry of polygon ∩ polygon as rings (for fragment rows).
     * Fenced: runs once per canonical candidate (see header). */

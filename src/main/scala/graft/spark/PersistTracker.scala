@@ -6,7 +6,7 @@ import org.apache.spark.storage.StorageLevel
 /** Lifecycle registry for operator-internal persists.
   *
   * Operators persist shared intermediates (the W∩D rows of the
-  * output-polygon surrogates, allocate's input fragments, shingle sets)
+  * output-polygon surrogates, shingle sets, triangle edge lists)
   * because two aggregations or joins consume them. The
   * DataFrames they return stay lazy, so the operator itself can never know
   * when the consuming actions finish — without a registry, a session that

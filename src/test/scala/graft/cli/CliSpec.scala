@@ -268,6 +268,24 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("ALLOCATE_ATTRS: an entry that is not attr=Mode or names an unknown mode fails naming it") {
+    val dir = tmp("cli-alloc-attrs")
+    TpchGeo.tracts(spark, sfDir).write.mode("overwrite").parquet(s"$dir/tracts")
+    def fails(attrs: String): String = intercept[IllegalArgumentException](
+      SpatialAllocator.run(spark, Map(
+        "MIMS_PROCESSING" -> "ALLOCATE",
+        "INPUT_FILE_NAME" -> s"$dir/tracts",
+        "OUTPUT_POLY_FILE" -> s"$dir/tracts",
+        "ALLOCATE_ATTRS" -> attrs))).getMessage
+    assert(fails("p_size").contains("'p_size' is not attr=Mode"))
+    assert(fails("p_size=Aggregate, p_partkey").contains("'p_partkey'"))
+    assert(fails("p_size=Aggregate=Average").contains("'p_size=Aggregate=Average'"))
+    val unknown = fails("p_size=Sum")
+    assert(unknown.contains("'Sum'") && unknown.contains("p_size"), unknown)
+    Seq("Aggregate", "Average", "DiscreteOverlap", "DiscreteCentroid", "AreaPercent")
+      .foreach(m => assert(unknown.contains(m), unknown))
+  }
+
   test("SrgTool runs a 3-spec catalog concurrently with post-passes and SRGDESC") {
     val outDir = tmp("srgtool")
     val r = SrgTool.run(spark, TpchGeo.counties(spark),

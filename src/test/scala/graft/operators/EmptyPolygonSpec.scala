@@ -78,6 +78,22 @@ class EmptyPolygonSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows(alloc(weights(withEmpty = true))) == want)
   }
 
+  test("Allocate.allocate: an output polygon with no rings has no centroid and allocates nothing") {
+    val s = spark
+    import s.implicits._
+    val out = Seq((1, square(0, 0, 4000)), (2, square(4000, 0, 4000)),
+      (3, square(0, 4000, 8000))).toDF("out_id", "geom")
+    val outWithEmpty = out.union(Seq((4, noRings)).toDF("out_id", "geom"))
+    val input = weights(withEmpty = false).withColumn("c", $"w" * 2)
+    Seq(Seq("w" -> Allocate.DiscreteCentroid),
+        Seq("c" -> Allocate.Aggregate, "w" -> Allocate.DiscreteCentroid)).foreach { modes =>
+      val alloc = (o: DataFrame) => Allocate.allocate(input, o, modes, d, z)
+      val want = rows(alloc(out))
+      assert(want.nonEmpty)
+      assert(rows(alloc(outWithEmpty)) == want, modes)
+    }
+  }
+
   test("polySurrogate: weight polygons and counties with no rings drop out") {
     val srg = (w: DataFrame, c: DataFrame) =>
       Surrogate.polySurrogate(w, c, g, d, z, srgCode = 7, weight = Some("w"))

@@ -155,6 +155,17 @@ class SurrogatePlanSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"$name: ${(joins ++ broadcasts ++ shuffles).mkString("\n")}")
     }
   }
+
+  test("allocate of fragment modes: no persist, no window, one shuffle") {
+    val input = AllocateSpec.mixedInput(TpchGeo.tracts(spark, SfDir))
+    val ns = executed(Allocate.allocate(input,
+      counties.withColumnRenamed("fips", "out_id"), AllocateSpec.MixedModes, d, z))
+    val cached = ns.collect { case m: InMemoryTableScanExec => m }
+    val windows = ns.filter(_.nodeName.startsWith("Window"))
+    val shuffles = ns.collect { case x: ShuffleExchangeExec => x }
+    assert(cached.isEmpty && windows.isEmpty && shuffles.size == 1,
+      (cached ++ windows ++ shuffles).mkString("\n"))
+  }
 }
 
 object SurrogatePlanSpec {

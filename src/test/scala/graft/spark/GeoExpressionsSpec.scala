@@ -65,4 +65,32 @@ class GeoExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(plan.contains("*(1) Filter (pip_status("), s"pip not in codegen span:\n$plan")
     assert(df.count() > 0)
   }
+
+  test("vertexMeanCentroid equals Geo.vertexMeanCentroid bit for bit; no ring is NULL") {
+    val s = spark
+    import s.implicits._
+    val rnd = new scala.util.Random(16)
+    def ring(n: Int, closed: Boolean): Seq[Double] = {
+      val pts = Seq.fill(n)(Seq(rnd.nextDouble() * 1e4 - 5e3, rnd.nextDouble() * 1e4))
+      (if (closed) pts :+ pts.head else pts).flatten
+    }
+    // outer rings of 1-12 vertices, closed or not, with 0-2 holes
+    val polys = (0 until 400).map { i =>
+      ring(1 + rnd.nextInt(12), closed = i % 2 == 0) +:
+        Seq.fill(i % 3)(ring(3 + rnd.nextInt(4), closed = i % 4 < 2))
+    }
+    val (x, y) = vertexMeanCentroid(col("geom"))
+    val got = polys.zipWithIndex.toDF("geom", "i").select(col("i"), x, y).collect()
+    def raw(d: Double) = java.lang.Double.doubleToRawLongBits(d)
+    got.foreach { r =>
+      val poly = polys(r.getInt(0))
+      val (cx, cy) = graft.geom.Geo.vertexMeanCentroid(poly.map(_.toArray).toArray)
+      assert((raw(r.getDouble(1)), raw(r.getDouble(2))) == ((raw(cx), raw(cy))), poly)
+    }
+    assert(got.length == 400)
+    // a polygon with no rings, an empty outer ring or no geometry at all
+    val none = Seq(Some(Seq.empty[Seq[Double]]), Some(Seq(Seq.empty[Double])), None)
+      .toDF("geom").select(x.as("x"), y.as("y")).collect()
+    assert(none.forall(r => r.isNullAt(0) && r.isNullAt(1)), none.toSeq)
+  }
 }
